@@ -15,7 +15,9 @@ real corpus-dedup pipeline needs after any pair generator in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+
+from milan_spark.errors import MilanAnalysisError
 
 
 def _ckpt_counted(df: DataFrame) -> "tuple[DataFrame, int]":
@@ -27,8 +29,6 @@ def _ckpt_counted(df: DataFrame) -> "tuple[DataFrame, int]":
     on top of the materialization (measured ~6× a bounded probe at sf0.1);
     the observation is map-side accumulator metrics, free at any scale.
     Returns ``(checkpointed_df, row_count)``."""
-    from pyspark.sql import Observation
-
     obs = Observation()
     out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     return out, int(obs.get["n"] or 0)
@@ -57,8 +57,6 @@ def connected_components(
     (``Stream.iterate`` localCheckpoints), so plans stay flat regardless of
     iteration count.
     """
-    from pyspark.sql import Observation
-
     from milan_spark.stream import Stream
 
     fwd = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
@@ -596,6 +594,11 @@ def kcore(
     so the trajectory is deterministic under any partitioning; once peeling
     converges the remaining rounds are no-ops.
 
+    Stop rule: each round's job also counts the edges it reads, so a round
+    whose output count equals that input count removed nothing and ends the
+    loop, from round 1 on. Sound because a round is a row filter (two
+    semi-joins) of its input: equal counts mean the same rows.
+
     Output: (node, core_deg) — nodes in the ``rounds``-truncated k-core.
     """
     fwd = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
@@ -603,21 +606,18 @@ def kcore(
         fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .localCheckpoint(eager=False)
     )
-    prev = None
     for _ in range(rounds):
         deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         alive = deg.filter(F.col("deg") >= k).select("u")
-        # shrink-only set: an unchanged edge count means this round removed
-        # nothing, so every later round is a no-op — break result-identical
-        # to the fixed truncation. The count rides the round's own
-        # materialization job as an observation (no separate count() pass).
+        seen = Observation()
         edges, c = _ckpt_counted(
-            edges.join(alive, "u", "left_semi")
+            edges.observe(seen, F.count(F.lit(1)).alias("n"))
+            .join(alive, "u", "left_semi")
             .join(alive.withColumnRenamed("u", "v"), "v", "left_semi")
         )
-        if c == prev:
+        # test c == 0 first: an empty side lets AQE prune the observed scan
+        if c == 0 or c == seen.get["n"]:
             break
-        prev = c
     return edges.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("core_deg")
     )
@@ -642,21 +642,29 @@ def ktruss(
     triangle (lo, hi, w) credits its three undirected edges, and one
     combinable (u, v) count yields per-edge support (O(triangles) rows —
     the minimum any per-edge attribution can touch). Edges with no
-    support row are deleted implicitly by the inner filter-join (support
-    0 < k-2 for every k > 2). Lineage truncated per round; the edge set
-    only shrinks. Fixed round-count truncation is a pure set function of
-    the input on both engine and oracle, so the trajectory is exact.
+    support row are deleted implicitly (support 0 < k-2; ``k < 3`` is
+    rejected). Lineage truncated per round; the edge set only shrinks.
+    Fixed round-count truncation is a pure set function of the input on
+    both engine and oracle, so the trajectory is exact.
+
+    Stop rule: the canonical edge set is counted as it is materialized, and
+    each round checkpoints its kept (u, v, support) rows with their count. A
+    round that keeps every edge returns that checkpoint, so the final action
+    is a scan; only the round cap recomputes support.
 
     Output: (u, v, support) — canonical u < v edges of the truncated
     k-truss, support computed ON the final edge set (0 if triangle-free,
     possible only when truncation stopped before convergence).
     """
+    if k < 3:
+        raise MilanAnalysisError(
+            f"ktruss: k={k} < 3 is unsupported: triangle-free edges have no support row"
+        )
     a, b = F.col(a_col), F.col(b_col)
-    und = (
+    und, n = _ckpt_counted(
         pairs.filter(a != b)
         .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
 
     def support(edges: DataFrame) -> DataFrame:
@@ -696,26 +704,12 @@ def ktruss(
         )
         return credits.groupBy("u", "v").agg(F.count(F.lit(1)).alias("support"))
 
-    prev = None
-    sup = None
-    stabilized = False
     for _ in range(rounds):
-        sup = support(und)
-        # shrink-only: unchanged edge count ⇒ this round's filter removed
-        # nothing ⇒ fixpoint, and — since the edge set is the one `sup` was
-        # computed on — `sup` already IS the final support, so the break
-        # also saves the epilogue's full support pass (the expensive part:
-        # a whole degree/orient/intersect/credit pipeline per round). The
-        # count rides the materialization job as an observation.
-        und, c = _ckpt_counted(
-            und.join(sup.filter(F.col("support") >= k - 2), ["u", "v"], "left_semi")
-        )
-        if c == prev:
-            stabilized = True
-            break
-        prev = c
-    final_sup = sup if stabilized else support(und)
-    return und.join(final_sup, ["u", "v"], "left").select(
+        kept, c = _ckpt_counted(support(und).filter(F.col("support") >= k - 2))
+        if c == n:
+            return kept
+        und, n = kept.select("u", "v"), c
+    return und.join(support(und), ["u", "v"], "left").select(
         "u", "v", F.coalesce("support", F.lit(0).cast("long")).alias("support")
     )
 

@@ -1097,7 +1097,8 @@ WITH ord_pairs AS MATERIALIZED (
     "of the monotonically-shrinking edge list against the survivors; "
     "lineage truncated per round. Fixed round-count truncation on BOTH "
     "sides makes the trajectory engine-exact (peeling is a pure set "
-    "function of the previous round; converged rounds are no-ops). "
+    "function of the previous round; the first round that removes no edge "
+    "ends the loop, since every later round would be a no-op). "
     "Output: surviving nodes with their in-core degree, exact ints.",
     oracle=_kcore_oracle(3, 8),
 )
@@ -1297,12 +1298,15 @@ FROM e{R} e LEFT JOIN supf s ON e.u = s.u AND e.v = s.v"""
     "PageRank, triangles, communities, BFS/SSSP, core, truss). Support "
     "enumeration reuses triangle_count's degree-ordered O(m^1.5) shape "
     "with row-local array_intersect, exploded only to O(triangles) "
-    "credit rows -> one combinable (u, v) count. The measured cascade at "
-    "sf0.01 is 115,729 -> 69,588 -> 22,275 -> 2,565 -> 1,127 edges "
-    "(converged: round 5 is a no-op), so the fixed 4-round truncation "
-    "returns the true 12-truss here. Oracle enumerates triangles by id "
-    "order instead of degree order — support is orientation-independent, "
-    "two formulations, one answer.",
+    "credit rows -> one combinable (u, v) count. A round that peels no "
+    "edge ends the loop and returns its own checkpointed support, so the "
+    "final action is a scan: at sf0.001 (8,899 edges, none peeled) that "
+    "is round 1. At sf0.01 the cascade is 115,729 -> 69,588 -> 22,275 -> "
+    "2,565 -> 1,127 edges, so all 4 rounds peel and the round cap "
+    "recomputes support on the last edge set; that set is the true "
+    "12-truss (a 5th round would be a no-op). Oracle enumerates triangles "
+    "by id order instead of degree order — support is orientation-"
+    "independent, two formulations, one answer.",
     oracle=_ktruss_oracle(12, 4),
 )
 def ktruss_coparts_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,6 +3,7 @@ sparse retrieval, RRF fusion, and the grouping_sets DSL/IR node."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from milan_spark.operators.graph import kcore
@@ -33,6 +34,32 @@ def test_kcore_round_truncation(spark):
     one_round = _kcore(spark, edges, k=2, rounds=1)
     assert set(one_round) == {2, 3, 4, 5}
     assert _kcore(spark, edges, k=2, rounds=8) == {}
+
+
+def _build_jobs(spark, group, build):
+    """Run ``build()`` under its own job group; return (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_kcore_no_peel_stops_after_round_1(spark):
+    """The round that peels nothing ends the loop: K4 at k=3 keeps every
+    edge in round 1, so building with 8 rounds runs exactly the jobs of
+    building with 1 (an unseeded probe would also run round 2). The pendant
+    control peels in round 1 and needs round 2 to see the fixpoint."""
+    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    for name, edges, stops_after_1 in (("k4", k4, True), ("k4_pendant", k4 + [(4, 5)], False)):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        _, one = _build_jobs(spark, f"kcore_{name}_r1", lambda: kcore(df, k=3, rounds=1))
+        out, eight = _build_jobs(spark, f"kcore_{name}_r8", lambda: kcore(df, k=3, rounds=8))
+        assert one > 0
+        assert (eight == one) is stops_after_1, (name, one, eight)
+        assert {r["node"]: r["core_deg"] for r in out.collect()} == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
 def test_jaccard_topk_exact_scores(spark):
@@ -213,3 +240,24 @@ def test_ktruss_round_truncation(spark):
     # have a triangle; everything survives with its own support
     got = {(r["u"], r["v"]): r["support"] for r in ktruss(df, k=3, rounds=2).collect()}
     assert got == {(1, 2): 1, (1, 3): 1, (2, 3): 2, (2, 4): 1, (3, 4): 1}
+
+
+def test_ktruss_no_peel_returns_checkpoint_scan(spark):
+    """A round that peels nothing ends the operator and returns its own
+    checkpoint, support included, so the final action is one scan job."""
+    from milan_spark.operators.graph import ktruss
+
+    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    out = ktruss(spark.createDataFrame(k4, "src long, dst long"), k=4, rounds=4)
+    rows, jobs = _build_jobs(spark, "ktruss_no_peel_action", out.collect)
+    assert {(r["u"], r["v"]): r["support"] for r in rows} == {e: 2 for e in k4}
+    assert jobs == 1
+
+
+def test_ktruss_rejects_k_below_3(spark):
+    from milan_spark.errors import MilanAnalysisError
+    from milan_spark.operators.graph import ktruss
+
+    df = spark.createDataFrame([(1, 2)], "src long, dst long")
+    with pytest.raises(MilanAnalysisError, match="k=2"):
+        ktruss(df, k=2)
