@@ -147,7 +147,7 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "csv_roundtrip",
     "json_roundtrip",
     "rollup_revenue",
-    # §2 streaming twins (keyed value-state machines; tws by default)
+    # §2 streaming twins (keyed value-state machines; applyInPandasWithState by default)
     "streaming_left_enrichment_join",
     "streaming_tumbling_window_daily",
     "streaming_scan_threshold",

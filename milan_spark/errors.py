@@ -35,6 +35,13 @@ class MilanEmptyStreamError(RuntimeError):
     streams at sf1 for three rounds."""
 
 
+class MilanStreamTimeoutError(RuntimeError):
+    """A bounded (availableNow) streaming query was still running when its
+    harness stopped waiting (``streaming.run_to_memory(timeout_sec=...)``).
+    The query is stopped; its sink would hold only the microbatches that
+    finished, so no result is returned."""
+
+
 class MilanConcurrentCommitError(RuntimeError):
     """Two writers raced to commit the same version of a versioned table
     and this one lost (its manifest claim found the slot taken). The

@@ -66,8 +66,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _normalize_events_ts(sdf)
 
 
-def _stream_side(spark, sf_dir, event_type, cols):
-    ev = _events_stream(spark, sf_dir)
+def _stream_side(ev: DataFrame, event_type: str, cols) -> DataFrame:
+    """One event type of the events stream ``ev`` as a join side, sequenced
+    by ``event_id``. Both sides of a tagged-union join project the SAME
+    ``ev``, so each microbatch reads one FileStreamSource, not two."""
     return ev.filter(F.col("event_type") == event_type).select(
         *cols, F.col("event_id").alias("__seq")
     )
@@ -76,16 +78,16 @@ def _stream_side(spark, sf_dir, event_type, cols):
 @register(
     "streaming_left_enrichment_join",
     doc="Milan LeftJoin executed as its true streaming state machine "
-    "(transformWithStateInPandas value-state machine, legacy applyInPandasWithState behind MILAN_STREAM_STATE_API; ≈ LeftJoinKeyedCoProcessFunction.scala:41-80): "
+    "(applyInPandasWithState value-state machine, transformWithStateInPandas behind MILAN_STREAM_STATE_API=tws; ≈ LeftJoinKeyedCoProcessFunction.scala:41-80): "
     "purchases enriched with the user's latest at-or-earlier signup. Same "
     "oracle as the batch twin.",
     oracle=REGISTRY["left_enrichment_join"].oracle,
 )
 def streaming_left_enrichment_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    left = _stream_side(spark, sf_dir, "purchase", ["event_id", "user_id", "value"])
+    ev = _events_stream(spark, sf_dir)
+    left = _stream_side(ev, "purchase", ["event_id", "user_id", "value"])
     right = _stream_side(
-        spark,
-        sf_dir,
+        ev,
         "signup",
         [
             "user_id",
@@ -155,12 +157,13 @@ def streaming_scan_threshold_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=REGISTRY["full_enrichment_join"].oracle,
 )
 def streaming_full_enrichment_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = _events_stream(spark, sf_dir)
     left = _stream_side(
-        spark, sf_dir, "purchase",
+        ev, "purchase",
         [F.col("event_id").alias("p_event_id"), "user_id", F.col("value").alias("p_value")],
     )
     right = _stream_side(
-        spark, sf_dir, "error",
+        ev, "error",
         ["user_id", F.col("event_id").alias("e_event_id"), F.col("value").alias("e_value")],
     )
     out = stateful.full_enrichment_join(left, right, on="user_id")
@@ -237,10 +240,9 @@ def streaming_record_window_trailing_q(spark: SparkSession, sf_dir: str) -> Data
     oracle=REGISTRY["left_inner_enrichment_join"].oracle,
 )
 def streaming_left_inner_enrichment_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    left = _stream_side(spark, sf_dir, "click", ["event_id", "user_id", "value"])
-    right = _stream_side(
-        spark, sf_dir, "view", ["user_id", F.col("event_id").alias("view_event_id")]
-    )
+    ev = _events_stream(spark, sf_dir)
+    left = _stream_side(ev, "click", ["event_id", "user_id", "value"])
+    right = _stream_side(ev, "view", ["user_id", F.col("event_id").alias("view_event_id")])
     out = stateful.left_inner_enrichment_join(left, right, on="user_id")
     out = out.select("event_id", "user_id", "value", "view_event_id")
     return run_to_memory(out, "streaming_left_inner_enrichment_join")
@@ -585,7 +587,7 @@ def streaming_drop_duplicates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_hot_event_types",
     doc="Streaming hot-key detection (stateful.streaming_heavy_hitters): "
     "mergeable Misra-Gries summaries in keyed value state "
-    "(transformWithStateInPandas, legacy API behind a flag), "
+    "(applyInPandasWithState, transformWithStateInPandas behind a flag), "
     "O(buckets × capacity) state regardless of stream length or key "
     "cardinality. With capacity 64 ≥ the 5-value event_type domain no "
     "eviction fires, so the final snapshot's lower bounds ARE the exact "
@@ -1328,7 +1330,7 @@ def streaming_kinesis_emulated_roundtrip_q(spark: SparkSession, sf_dir: str) -> 
 
     q = local_queue("kinesis_rt_")
     s = _stream_side(
-        spark, sf_dir, "purchase",
+        _events_stream(spark, sf_dir), "purchase",
         ["user_id", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents")],
     ).drop("__seq")
     sink = KinesisDataSink("rollup_feed", q, "local", queue_limit=2000)

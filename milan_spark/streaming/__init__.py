@@ -27,39 +27,50 @@ Stateful per-record operators (enrichment joins, scans) live in
 
 from __future__ import annotations
 
-import os
 import tempfile
-from contextlib import contextmanager
 from typing import Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
-@contextmanager
-def _provider_scope(sdf: DataFrame):
-    """Start-time state-store provider scoping: a query whose plan contains a
-    TransformWithState node must start under the RocksDB provider; everything
-    else keeps the session default (and its lighter per-microbatch commit).
-    The provider — like shuffle partitions — is captured into the query's
-    cloned conf at ``start()``, so setting it around the start and restoring
-    immediately scopes it to exactly this query."""
+def _start(
+    w: DataStreamWriter, sdf: DataFrame, state_partitions: int | None = None
+) -> StreamingQuery:
+    """Start ``w``, a writer over ``sdf``; every sink starts here.
+
+    A query clones the session conf at ``start()`` and keeps two settings for
+    the life of its checkpoint, so both are set around the start and restored
+    right after (a restart from an existing checkpoint keeps its own):
+
+    - state stores (``spark.sql.shuffle.partitions``): ``state_partitions``,
+      else one per task slot up to 8. Each store costs a task and a commit
+      per microbatch (and a Python worker start in a state machine), so more
+      stores than slots run the state stage in extra waves. (The reference
+      sizes each operator by Flink parallelism, pinning sources to 1:
+      DataSourceUtil.scala:58-60.)
+    - the provider: a TransformWithState plan needs RocksDB; others keep the
+      session default and its lighter per-microbatch commit.
+    """
     from milan_spark.streaming.stateful import _ROCKSDB, needs_rocksdb
 
     spark = sdf.sparkSession
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    need = needs_rocksdb(sdf) and (prev is None or "RocksDB" not in prev)
-    if need:
-        spark.conf.set(key, _ROCKSDB)
+    n = state_partitions or min(8, spark.sparkContext.defaultParallelism)
+    confs = {"spark.sql.shuffle.partitions": str(n)}
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    if needs_rocksdb(sdf) and "RocksDB" not in (spark.conf.get(provider, None) or ""):
+        confs[provider] = _ROCKSDB
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
-        yield
+        return w.start()
     finally:
-        if need:
-            if prev is None:
-                spark.conf.unset(key)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
             else:
-                spark.conf.set(key, prev)
+                spark.conf.set(k, v)
 
 
 # per-microbatch StreamingQueryProgress dicts of the most recent
@@ -113,37 +124,26 @@ def run_to_memory(
     process-global sink then await expected counts; availableNow + await
     replaces the polling).
 
-    ``state_partitions`` sizes the query's state stores (a streaming query
-    pins its state-store count to ``spark.sql.shuffle.partitions`` at start,
-    for the life of the checkpoint). That count should be an explicit choice
-    sized to key cardinality and cluster width — not inherited from batch
-    shuffle sizing, which optimizes a different trade-off (every extra state
-    partition costs a store open/commit per microbatch). Default comes from
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` (8 — right for local test volumes; a
-    1000-executor deployment sets it to cores×executors before first start).
-    The reference makes the same decision per-operator via Flink parallelism,
-    pinning sources to 1 (DataSourceUtil.scala:58-60) — here every operator
-    stays fully parallel.
+    ``state_partitions`` sizes the query's state stores; the default is one
+    per task slot, up to 8 (see :func:`_start`). A query still running after
+    ``timeout_sec`` is stopped and raises ``MilanStreamTimeoutError``: the
+    memory table would hold only the microbatches that finished.
     """
-    spark = sdf.sparkSession
-    if state_partitions is None:
-        state_partitions = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        # the query clones the session conf at start(); restoring right after
-        # leaves batch sizing untouched
-        with _provider_scope(sdf):
-            q = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination(timeout_sec)
+    w = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    q = _start(w, sdf, state_partitions)
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        from milan_spark.errors import MilanStreamTimeoutError
+
+        raise MilanStreamTimeoutError(
+            f"streaming query {name!r} did not finish within {timeout_sec} s; "
+            "it was stopped, and its partial result is not returned"
+        )
     try:
         import json as _json
 
@@ -211,14 +211,12 @@ def file_sink(
         w = w.options(**options)
     if available_now:
         w = w.trigger(availableNow=True)
-    with _provider_scope(sdf):
-        return w.start()
+    return _start(w, sdf)
 
 
 def console_sink(sdf: DataFrame, *, output_mode: str = "append") -> StreamingQuery:
     """ref: ConsoleDataSink.scala:15."""
-    with _provider_scope(sdf):
-        return sdf.writeStream.format("console").outputMode(output_mode).start()
+    return _start(sdf.writeStream.format("console").outputMode(output_mode), sdf)
 
 
 def foreach_batch_sink(
@@ -233,8 +231,7 @@ def foreach_batch_sink(
     w = sdf.writeStream.foreachBatch(fn).outputMode(output_mode)
     if available_now:
         w = w.trigger(availableNow=True)
-    with _provider_scope(sdf):
-        return w.start()
+    return _start(w, sdf)
 
 
 def merge_parquet_batch(
@@ -335,5 +332,4 @@ def upsert_sink(
     )
     if available_now:
         w = w.trigger(availableNow=True)
-    with _provider_scope(sdf):
-        return w.start()
+    return _start(w, sdf)

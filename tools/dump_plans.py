@@ -7,6 +7,11 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.001 — plan SHAPE, not perf
 Iterative/multi-action operators (cycle fixpoints, persisted indexes) execute
 their rounds while BUILDING the frame; the dumped plan is the final frame's —
 still the artifact that shows retained partitioning/exchange placement.
+
+A query that ran a streaming query through ``streaming.run_to_memory`` returns
+its memory table, whose plan says nothing about the stream; for those the dump
+also lists each microbatch's ``sources`` and ``stateOperators``
+(``numShufflePartitions``, ``commitTimeMs``) from ``streaming.last_progress()``.
 """
 
 from __future__ import annotations
@@ -19,12 +24,30 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def progress_summary(progress: list[dict]) -> str:
+    """One block per microbatch: its sources and its state operators."""
+    lines = []
+    for p in progress:
+        lines.append(f"batch {p.get('batchId')}:")
+        for s in p.get("sources") or []:
+            kind = str(s.get("description")).split("[")[0]  # drop the local path
+            lines.append(f"  source {kind} numInputRows={s.get('numInputRows')}")
+        for op in p.get("stateOperators") or []:
+            lines.append(
+                f"  state {op.get('operatorName')} "
+                f"numShufflePartitions={op.get('numShufflePartitions')} "
+                f"commitTimeMs={op.get('commitTimeMs')}"
+            )
+    return "\n".join(lines) + "\n"
+
+
 def main() -> None:
     if len(sys.argv) < 4:
         print("usage: dump_plans.py <tag> <suffix> <query> [...]", file=sys.stderr)
         sys.exit(2)
     tag, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    from milan_spark import streaming
     from milan_spark.catalog import queries
     from milan_spark.session import get_spark
 
@@ -34,14 +57,22 @@ def main() -> None:
     spark = get_spark("milan_dump_plans")
     qs = queries()
     for name in names:
+        streaming._LAST_PROGRESS.clear()
         df = qs[name](spark, sf_dir)
+        progress = streaming.last_progress()
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain(mode="formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(f"# {name} ({suffix}) — {sf_dir}, captured by tools/dump_plans.py\n")
+            f.write(
+                f"# {name} ({suffix}) — {os.path.basename(sf_dir)}, "
+                "captured by tools/dump_plans.py\n"
+            )
             f.write(buf.getvalue())
+            if progress:
+                f.write("\n# streaming progress (streaming.last_progress())\n")
+                f.write(progress_summary(progress))
         print(f"wrote {path}")
 
 
