@@ -219,17 +219,24 @@ def main() -> None:
 
         stream_names = sorted(k for k in timings if k.startswith("streaming_"))
         if stream_names:
-            r = subprocess.run(
-                [sys.executable, os.path.abspath(__file__),
-                 "--warm-streaming-child", sf_dir, *stream_names],
-                capture_output=True, text=True,
-                env={**os.environ, "PYTHONPATH": here},
-            )
-            line = r.stdout.strip().splitlines()[-1] if r.stdout.strip() else "{}"
+            # the child gets what is left of the budget, so the JSON line
+            # still prints when a warm query hangs
+            remaining = budget - (time.perf_counter() - t0)
             try:
-                detail["warm"] = json.loads(line)
-            except json.JSONDecodeError:
-                detail["warm_error"] = r.stderr[-1500:]
+                r = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__),
+                     "--warm-streaming-child", sf_dir, *stream_names],
+                    capture_output=True, text=True, timeout=remaining,
+                    env={**os.environ, "PYTHONPATH": here},
+                )
+            except subprocess.TimeoutExpired as e:
+                detail["warm_error"] = f"timed out after {e.timeout:.0f} s"
+            else:
+                line = r.stdout.strip().splitlines()[-1] if r.stdout.strip() else "{}"
+                try:
+                    detail["warm"] = json.loads(line)
+                except json.JSONDecodeError:
+                    detail["warm_error"] = r.stderr[-1500:]
     elif os.environ.get("SPARK_GRAFT_BENCH_WARM_STREAMING", "1") != "0":
         detail["warm_skipped"] = (
             f"budget: {time.perf_counter() - t0:.0f}s elapsed + ~{est_warm:.0f}s "

@@ -24,7 +24,7 @@ from milan_spark.queries import analytics as _analytics  # noqa: F401
 from milan_spark.queries import joins as _joins  # noqa: F401
 from milan_spark.queries import scans as _scans  # noqa: F401
 from milan_spark.queries import windows as _windows  # noqa: F401
-from milan_spark.streaming import run_to_memory, windowed_agg
+from milan_spark.streaming import _start, run_to_memory, windowed_agg
 from milan_spark.streaming import stateful
 
 DEC = "decimal(18,6)"
@@ -2130,11 +2130,11 @@ def streaming_versioned_sink_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
     )
     writer = versioned_sink(path)
-    q = (
+    q = _start(
         ev.writeStream.foreachBatch(writer)
         .option("checkpointLocation", tempfile.mkdtemp(prefix="milan_vsink_ck_"))
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        ev,
     )
     q.awaitTermination(300)
     committed = versions(path)

@@ -27,6 +27,7 @@ Stateful per-record operators (enrichment joins, scans) live in
 
 from __future__ import annotations
 
+import json
 import tempfile
 from typing import Callable, Mapping, Sequence
 
@@ -35,13 +36,22 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def _start(
-    w: DataStreamWriter, sdf: DataFrame, state_partitions: int | None = None
+    w: DataStreamWriter,
+    sdf: DataFrame,
+    state_partitions: int | None = None,
+    *,
+    checkpoint: str | None = None,
 ) -> StreamingQuery:
     """Start ``w``, a writer over ``sdf``; every sink starts here.
 
-    A query clones the session conf at ``start()`` and keeps two settings for
-    the life of its checkpoint, so both are set around the start and restored
-    right after (a restart from an existing checkpoint keeps its own):
+    ``checkpoint`` is the checkpoint directory the caller named, already set
+    on ``w``; ``None`` means the checkpoint is private: Spark's own temp dir,
+    or one the sink made itself, so no later run can resume from it.
+
+    A query clones the session conf at ``start()`` and keeps these settings
+    for the life of its checkpoint, so they are set around the start and
+    restored right after (a restart from an existing checkpoint keeps its
+    own):
 
     - state stores (``spark.sql.shuffle.partitions``): ``state_partitions``,
       else one per task slot up to 8. Each store costs a task and a commit
@@ -51,8 +61,17 @@ def _start(
       DataSourceUtil.scala:58-60.)
     - the provider: a TransformWithState plan needs RocksDB; others keep the
       session default and its lighter per-microbatch commit.
+    - the checkpoint file manager: a private checkpoint writes its offsets,
+      commits and state deltas through the FileSystem manager, a temp file
+      plus one ``rename(2)``, still atomic with the one writer it has.
+      Spark's default FileContext manager forks a shell per file when
+      Hadoop's native library is missing (``readlink`` per rename, ``chmod``
+      per create). A file source's own log is opened on the query's thread,
+      racing the restore, so it may get either manager. A named checkpoint
+      keeps FileContext: its no-overwrite rename is what detects a second
+      writer on a checkpoint shared across restarts.
     """
-    from milan_spark.streaming.stateful import _ROCKSDB, needs_rocksdb
+    from milan_spark.streaming.stateful import _FS_CHECKPOINTS, _ROCKSDB, needs_rocksdb
 
     spark = sdf.sparkSession
     n = state_partitions or min(8, spark.sparkContext.defaultParallelism)
@@ -60,6 +79,11 @@ def _start(
     provider = "spark.sql.streaming.stateStore.providerClass"
     if needs_rocksdb(sdf) and "RocksDB" not in (spark.conf.get(provider, None) or ""):
         confs[provider] = _ROCKSDB
+    # a session-wide checkpoint root names the checkpoint of every query
+    # that sets none (``<root>/<queryName>``), so it is not private
+    root = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    if checkpoint is None and root is None:
+        confs["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINTS
     prev = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
@@ -144,19 +168,16 @@ def run_to_memory(
             f"streaming query {name!r} did not finish within {timeout_sec} s; "
             "it was stopped, and its partial result is not returned"
         )
-    try:
-        import json as _json
-
-        raw = []
-        for p in q.recentProgress or []:
-            if isinstance(p, dict):
-                raw.append(p)
-            else:  # StreamingQueryProgress object: .json is a str or method
-                j = getattr(p, "json", None)
-                raw.append(_json.loads(j if isinstance(j, str) else j()))
-        _LAST_PROGRESS[:] = raw
-    except Exception:
-        _LAST_PROGRESS[:] = []
+    # a progress record that fails to parse raises here: reading it as "no
+    # progress" would report every source as empty below
+    raw = []
+    for p in q.recentProgress or []:
+        if isinstance(p, dict):
+            raw.append(p)
+        else:  # StreamingQueryProgress object: .json is a str or method
+            j = getattr(p, "json", None)
+            raw.append(json.loads(j if isinstance(j, str) else j()))
+    _LAST_PROGRESS[:] = raw
     if require_input and _sources_never_advanced(_LAST_PROGRESS):
         # permanent tripwire for the silent-empty-source class of bug (the
         # round-5–8 sf1 regression: a staging symlink produced an empty
@@ -211,7 +232,8 @@ def file_sink(
         w = w.options(**options)
     if available_now:
         w = w.trigger(availableNow=True)
-    return _start(w, sdf)
+    named = (options or {}).get("checkpointLocation", checkpoint)
+    return _start(w, sdf, checkpoint=named)
 
 
 def console_sink(sdf: DataFrame, *, output_mode: str = "append") -> StreamingQuery:
@@ -332,4 +354,4 @@ def upsert_sink(
     )
     if available_now:
         w = w.trigger(availableNow=True)
-    return _start(w, sdf)
+    return _start(w, sdf, checkpoint=checkpoint)

@@ -38,6 +38,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from milan_spark.streaming import _start
+
 
 class CycleDiverged(RuntimeError):
     pass
@@ -149,11 +151,7 @@ def streaming_cycle(
             )
 
     src = spark.readStream.schema(schema).parquet(feedback_dir)
-    q = (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
+    q = _start(src.writeStream.foreachBatch(handle).option("checkpointLocation", ckpt), src)
     try:
         # returns when a microbatch produced no new files — the fixpoint
         q.processAllAvailable()

@@ -71,6 +71,10 @@ from milan_spark.session import SEQ_COL, ensure_protobuf, workers_can_import_pro
 
 STATE_API_ENV = "MILAN_STREAM_STATE_API"  # "tws" | "applyinpandas" | "auto"
 _ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_FS_CHECKPOINTS = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def use_tws(need_ttl: bool = False) -> bool:
@@ -193,10 +197,10 @@ def _drive(
 
         # transformWithState requires the RocksDB state store provider. The
         # provider is a session conf captured when a query STARTS, so it is
-        # scoped there, not here: the sink helpers (run_to_memory, file_sink,
-        # foreach_batch_sink, upsert_sink) set it for queries whose plan
-        # contains a TransformWithState node and restore it right after start
-        # (see needs_rocksdb) — native stateful operators keep the default
+        # scoped there, not here: ``streaming._start``, through which every
+        # sink starts, sets it for queries whose plan contains a
+        # TransformWithState node and restores it right after start (see
+        # needs_rocksdb) — native stateful operators keep the default
         # provider and its lighter per-microbatch commit. Direct
         # ``writeStream`` users must set the provider themselves; Spark fails
         # loudly at start if it is missing.

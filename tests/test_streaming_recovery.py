@@ -12,8 +12,6 @@ restart boundary, every record exactly once."""
 
 from __future__ import annotations
 
-import pytest
-
 import pandas as pd
 
 from pyspark.sql import functions as F
@@ -54,7 +52,6 @@ def _run_once(spark, src, out, ckpt):
     q.awaitTermination(300)
 
 
-@pytest.mark.slow
 def test_restart_resumes_state_no_reprocessing(spark, tmp_path):
     src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
     src.mkdir()
