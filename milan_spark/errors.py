@@ -42,6 +42,14 @@ class MilanStreamTimeoutError(RuntimeError):
     finished, so no result is returned."""
 
 
+class MilanRoundCapError(RuntimeError):
+    """An iterative operator used up its round cap before reaching its
+    fixpoint. What it holds after the last round is a partial answer (for
+    connected components, labels that are not yet component minima), so it
+    is not returned. Raise the cap, or pick an operator that needs fewer
+    rounds for the graph's shape."""
+
+
 class MilanConcurrentCommitError(RuntimeError):
     """Two writers raced to commit the same version of a versioned table
     and this one lost (its manifest claim found the slot taken). The

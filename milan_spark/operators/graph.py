@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
-from milan_spark.errors import MilanAnalysisError
+from milan_spark.errors import MilanAnalysisError, MilanRoundCapError
 
 
 def _ckpt_counted(df: DataFrame) -> "tuple[DataFrame, int]":
@@ -55,7 +55,9 @@ def connected_components(
     observation (count of improved labels), so no separate driver-blocking
     count job runs per round. Lineage is truncated every round
     (``Stream.iterate`` localCheckpoints), so plans stay flat regardless of
-    iteration count.
+    iteration count. If the last of ``max_iterations`` rounds still improved
+    a label, it raises :class:`MilanRoundCapError` instead of returning
+    labels that are not yet component minima.
     """
     from milan_spark.stream import Stream
 
@@ -97,6 +99,12 @@ def connected_components(
         return (holder["obs"].get["changed"] or 0) == 0
 
     out = Stream.from_dataframe(labels).iterate(body, max_iterations, converged)
+    # iterate() returns the last round whether or not ``converged`` held;
+    # that round's improved-label count tells which
+    if "obs" not in holder or (holder["obs"].get["changed"] or 0) > 0:
+        raise MilanRoundCapError(
+            f"connected_components: labels still changing after max_iterations={max_iterations}"
+        )
     return out.to_df().select(F.col("n").alias("node"), F.col("l").alias("label"))
 
 
@@ -131,7 +139,8 @@ def connected_components_star(
     probe — equal-size sets with an empty difference are equal, and a round
     that changed the count is proven non-converged for free. At the fixpoint
     the edges ARE the answer: every non-root points directly at its
-    component minimum.
+    component minimum. A loop that ends its ``max_rounds`` without an
+    unchanged round raises :class:`MilanRoundCapError`.
     """
     e, n_e = _ckpt_counted(
         pairs.select(
@@ -184,6 +193,10 @@ def connected_components_star(
         e, n_e = small, n_small
         if done:
             break
+    else:
+        raise MilanRoundCapError(
+            f"connected_components_star: edge set still changing after max_rounds={max_rounds}"
+        )
     return (
         all_nodes.join(e.select(F.col("u").alias("n"), F.col("v").alias("__l")), "n", "left")
         .select(F.col("n").alias("node"), F.coalesce("__l", "n").alias("label"))
@@ -306,6 +319,20 @@ def pagerank_scaled(
     return ranks.select("node", "rank")
 
 
+def _orient(und: DataFrame, hint=lambda df: df) -> "tuple[DataFrame, DataFrame]":
+    """Orient a canonical (u < v) edge set from each edge's lower-(degree,
+    id) endpoint ``lo`` to ``hi``; ``hint`` wraps the degree sides of the two
+    rank joins. Returns ``(deg, oriented)``: ``(n, count)`` and ``(lo, hi)``."""
+    deg = und.select(F.explode(F.array("u", "v")).alias("n")).groupBy("n").count()
+    du = deg.select(F.col("n").alias("u"), F.col("count").alias("du"))
+    dv = deg.select(F.col("n").alias("v"), F.col("count").alias("dv"))
+    lo_is_u = F.struct("du", "u") < F.struct("dv", "v")  # (degree, id) order
+    return deg, und.join(hint(du), "u").join(hint(dv), "v").select(
+        F.when(lo_is_u, F.col("u")).otherwise(F.col("v")).alias("lo"),
+        F.when(lo_is_u, F.col("v")).otherwise(F.col("u")).alias("hi"),
+    )
+
+
 def triangle_count(
     edges: DataFrame,
     src: str = "src",
@@ -334,6 +361,8 @@ def triangle_count(
     at sf0.1 vs 3.4 s for this shape — same asymptotics, 4× less wall on
     the dense co-order graph, and the gap grows with density.)
 
+    The orientation is ``_orient``, shared with :func:`ktruss`.
+
     ``edges`` is an undirected edge list, possibly with duplicates/self
     loops (both removed here). Output: single row (n_nodes, n_edges,
     n_wedges, n_triangles); n_wedges = Σ C(d_out, 2) computed from the
@@ -359,24 +388,9 @@ def triangle_count(
         .distinct()
         .persist()
     )
-    deg = (
-        und.select(F.col("u").alias("n"))
-        .unionAll(und.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
     hint = F.broadcast if small_graph else (lambda df: df)
-    # orient by (deg, id): low endpoint keeps the edge
-    du = deg.select(F.col("n").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("deg").alias("dv"))
-    ranked = und.join(hint(du), "u").join(hint(dv), "v")
-    lo_is_u = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = ranked.select(
-        F.when(lo_is_u, F.col("u")).otherwise(F.col("v")).alias("lo"),
-        F.when(lo_is_u, F.col("v")).otherwise(F.col("u")).alias("hi"),
-    ).persist()  # adjacency build + edge iteration both read it
+    deg, oriented = _orient(und, hint)
+    oriented = oriented.persist()  # adjacency build + edge iteration both read it
     adj = oriented.groupBy("lo").agg(F.collect_list("hi").alias("nbrs"))
     # per-edge |N_out(lo) ∩ N_out(hi)| — the intersection is row-local JVM
     # work; only the O(m) adjacency-carrying joins shuffle
@@ -601,11 +615,9 @@ def kcore(
 
     Output: (node, core_deg) — nodes in the ``rounds``-truncated k-core.
     """
-    fwd = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    edges = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=False)
-    )
+    a, b = F.col(a_col), F.col(b_col)
+    fwd, rev = F.struct(a.alias("u"), b.alias("v")), F.struct(b.alias("u"), a.alias("v"))
+    edges = pairs.select(F.inline(F.array(fwd, rev))).localCheckpoint(eager=False)
     for _ in range(rounds):
         deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         alive = deg.filter(F.col("deg") >= k).select("u")
@@ -635,13 +647,14 @@ def ktruss(
     for ``rounds`` synchronous rounds; returns the surviving edges with
     their support IN the surviving subgraph.
 
-    Support enumeration reuses :func:`triangle_count`'s degree-ordered
-    shape — orientation bounds out-degree at O(sqrt(m)), adjacency lists
-    ride O(m) equi-joins, and common neighbors are a row-local
-    ``array_intersect`` — but then EXPLODES the intersection: each
-    triangle (lo, hi, w) credits its three undirected edges, and one
-    combinable (u, v) count yields per-edge support (O(triangles) rows —
-    the minimum any per-edge attribution can touch). Edges with no
+    Support shares :func:`triangle_count`'s degree-ordered orientation
+    (``_orient``, out-degree O(sqrt(m))), then takes triangles from the
+    adjacency rows: each (lo, nbrs) row explodes ``nbrs`` as ``hi`` (every
+    oriented edge once) and meets hi's row in ONE equi-join, where common
+    neighbors are a row-local ``array_intersect`` exploded to (lo, hi, w).
+    One in-row explode credits each triangle's three edges, and one
+    combinable (u, v) count yields support (O(triangles) rows). A round's
+    plan has no ``Union`` and reads its edge checkpoint 6 times. Edges with no
     support row are deleted implicitly (support 0 < k-2; ``k < 3`` is
     rejected). Lineage truncated per round; the edge set only shrinks.
     Fixed round-count truncation is a pure set function of the input on
@@ -668,40 +681,16 @@ def ktruss(
     )
 
     def support(edges: DataFrame) -> DataFrame:
-        deg = (
-            edges.select(F.col("u").alias("n"))
-            .unionAll(edges.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        du = deg.select(F.col("n").alias("u"), F.col("deg").alias("du"))
-        dv = deg.select(F.col("n").alias("v"), F.col("deg").alias("dv"))
-        ranked = edges.join(du, "u").join(dv, "v")
-        lo_is_u = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-        )
-        oriented = ranked.select(
-            F.when(lo_is_u, F.col("u")).otherwise(F.col("v")).alias("lo"),
-            F.when(lo_is_u, F.col("v")).otherwise(F.col("u")).alias("hi"),
-        )
-        adj = oriented.groupBy("lo").agg(F.collect_list("hi").alias("nbrs"))
+        adj = _orient(edges)[1].groupBy("lo").agg(F.collect_list("hi").alias("nbrs"))
         tri = (
-            oriented.join(adj, "lo")
-            .join(
-                adj.select(F.col("lo").alias("hi"), F.col("nbrs").alias("nbrs_hi")),
-                "hi",
-            )
-            .select(
-                "lo",
-                "hi",
-                F.explode(F.array_intersect("nbrs", "nbrs_hi")).alias("w"),
-            )
+            adj.select("lo", "nbrs", F.explode("nbrs").alias("hi"))
+            .join(adj.withColumnsRenamed({"lo": "hi", "nbrs": "nbrs_hi"}), "hi")
+            .select("lo", "hi", F.explode(F.array_intersect("nbrs", "nbrs_hi")).alias("w"))
         )
-        credits = (
-            tri.select(F.least("lo", "hi").alias("u"), F.greatest("lo", "hi").alias("v"))
-            .unionAll(tri.select(F.least("lo", "w").alias("u"), F.greatest("lo", "w").alias("v")))
-            .unionAll(tri.select(F.least("hi", "w").alias("u"), F.greatest("hi", "w").alias("v")))
-        )
+        credits = tri.select(F.inline(F.array(*(
+            F.struct(F.least(x, y).alias("u"), F.greatest(x, y).alias("v"))
+            for x, y in (("lo", "hi"), ("lo", "w"), ("hi", "w"))
+        ))))
         return credits.groupBy("u", "v").agg(F.count(F.lit(1)).alias("support"))
 
     for _ in range(rounds):

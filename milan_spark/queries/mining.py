@@ -1296,9 +1296,12 @@ FROM e{R} e LEFT JOIN supf s ON e.u = s.u AND e.v = s.v"""
     "fewer than 10 triangles — the edge-cohesion analog of kcore_strong_"
     "coparts, completing the dense-subgraph family (components, "
     "PageRank, triangles, communities, BFS/SSSP, core, truss). Support "
-    "enumeration reuses triangle_count's degree-ordered O(m^1.5) shape "
-    "with row-local array_intersect, exploded only to O(triangles) "
-    "credit rows -> one combinable (u, v) count. A round that peels no "
+    "shares triangle_count's degree-ordered orientation; triangles come "
+    "from the adjacency rows (each row explodes its out-neighbors and "
+    "meets their rows in one join, row-local array_intersect), and one "
+    "in-row explode credits each triangle's three edges -> one combinable "
+    "(u, v) count. A round's plan has no Union and reads its edge "
+    "checkpoint 6 times. A round that peels no "
     "edge ends the loop and returns its own checkpointed support, so the "
     "final action is a scan: at sf0.001 (8,899 edges, none peeled) that "
     "is round 1. At sf0.01 the cascade is 115,729 -> 69,588 -> 22,275 -> "

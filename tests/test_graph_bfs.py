@@ -55,3 +55,25 @@ def test_star_cc_matches_min_label_on_adversarial_graphs(spark):
     assert lab2[40] == 0            # chain fully collapsed to its min
     assert lab2[205] == 100         # bridged cliques share one component
     assert lab2[901] == 900
+
+
+def test_cc_round_cap_raises_on_long_path(spark):
+    """A round cap that ends the loop before its fixpoint raises instead of
+    returning labels that are not component minima."""
+    import pytest
+
+    from milan_spark.errors import MilanRoundCapError
+    from milan_spark.operators.graph import (
+        connected_components,
+        connected_components_star,
+    )
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(24)], "id_a long, id_b long")
+    with pytest.raises(MilanRoundCapError, match="max_iterations=3"):
+        connected_components(df, max_iterations=3)
+    with pytest.raises(MilanRoundCapError, match="max_rounds=1"):
+        connected_components_star(df, max_rounds=1)
+    # enough rounds: both reach the fixpoint and agree
+    lab = {r["node"]: r["label"] for r in connected_components_star(df).collect()}
+    assert lab == {r["node"]: r["label"] for r in connected_components(df).collect()}
+    assert set(lab.values()) == {0}

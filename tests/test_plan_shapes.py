@@ -662,3 +662,27 @@ def test_read_pruned_pushes_residual_filter_to_scan(spark, tmp_path):
     )
     assert "PushedFilters" in p and "GreaterThanOrEqual(k,2000)" in p
     assert n_nodes(p, "Exchange") == 0  # narrow scan+filter, no shuffle
+
+
+def test_dump_plans_captures_each_materialized_round(spark):
+    """tools/dump_plans.py records the executed plan of every frame
+    ``_ckpt_counted`` materializes (an iterative operator's final plan is a
+    checkpoint scan), and leaves the engine unwrapped afterwards."""
+    import importlib.util
+    import os
+
+    from milan_spark.operators import graph
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "dump_plans.py")
+    spec = importlib.util.spec_from_file_location("dump_plans", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    real = graph._ckpt_counted
+    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    with tool.materialized_plans() as rounds:
+        graph.ktruss(spark.createDataFrame(k4, "src long, dst long"), k=4)
+    assert graph._ckpt_counted is real
+    assert len(rounds) == 2  # the canonical edge set, then the no-op round 1
+    assert all("== Final Plan ==" in p for p in rounds)
+    nodes, exchanges = tool.tree_counts(rounds[1])
+    assert nodes > exchanges > 0

@@ -261,3 +261,29 @@ def test_ktruss_rejects_k_below_3(spark):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     with pytest.raises(MilanAnalysisError, match="k=2"):
         ktruss(df, k=2)
+
+
+def test_ktruss_round_plans_have_one_branch(spark, monkeypatch):
+    """Every k-truss round is one branch per intermediate: degrees, credits
+    and triangles come from in-row explodes, not self-unions, so a round's
+    optimized plan has no Union and reads the edge checkpoint at most 6
+    times (3 per adjacency side)."""
+    from milan_spark.operators import graph
+
+    plans = []
+    real = graph._ckpt_counted
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real(df)
+
+    monkeypatch.setattr(graph, "_ckpt_counted", spy)
+    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    pend = [(4, 5), (4, 6), (5, 6)]
+    out = graph.ktruss(spark.createDataFrame(k4 + pend, "src long, dst long"), k=4, rounds=2)
+    assert {(r["u"], r["v"]): r["support"] for r in out.collect()} == {e: 2 for e in k4}
+    rounds = plans[1:]  # plans[0] is the canonical edge set
+    assert len(rounds) == 2
+    for plan in rounds:
+        assert "Union" not in plan, plan
+        assert 0 < plan.count("LogicalRDD") <= 6, plan

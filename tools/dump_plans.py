@@ -8,6 +8,13 @@ Iterative/multi-action operators (cycle fixpoints, persisted indexes) execute
 their rounds while BUILDING the frame; the dumped plan is the final frame's —
 still the artifact that shows retained partitioning/exchange placement.
 
+A graph operator that materializes its rounds through
+``operators.graph._ckpt_counted`` (k-truss, k-core, BFS, CC-star, ...) leaves
+only a checkpoint scan in its final plan, so the dump also lists the executed
+(adaptive final) plan of every frame ``_ckpt_counted`` materialized while the
+query was built, each headed by its tree node and exchange counts. The tool
+wraps ``_ckpt_counted`` for the duration of the build; the engine is unchanged.
+
 A query that ran a streaming query through ``streaming.run_to_memory`` returns
 its memory table, whose plan says nothing about the stream; for those the dump
 also lists each microbatch's ``sources`` and ``stateOperators``
@@ -18,8 +25,9 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -41,6 +49,57 @@ def progress_summary(progress: list[dict]) -> str:
     return "\n".join(lines) + "\n"
 
 
+def formatted(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue()
+
+
+def tree_counts(plan: str) -> tuple[int, int]:
+    """(nodes, exchange nodes) in the tree of a formatted plan: its final
+    plan when adaptive execution ran, else the whole tree. Exchange nodes are
+    those named ``*Exchange*`` (``Exchange``, ``BroadcastExchange``,
+    ``ReusedExchange``); query-stage wrappers count as plain nodes."""
+    tree = plan.split("\n\n\n")[0]
+    if "== Final Plan ==" in tree:
+        tree = tree.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    names = re.findall(r"^[\s:+\-*]*([A-Z]\w*)[^\n]*?\(\d+\)", tree, re.M)
+    return len(names), sum("Exchange" in n for n in names)
+
+
+@contextmanager
+def materialized_plans():
+    """Yield a list that collects, in order, the formatted executed plan of
+    every frame ``operators.graph._ckpt_counted`` materializes inside the
+    block."""
+    from milan_spark.operators import graph
+
+    plans: list[str] = []
+    real_ckpt = graph._ckpt_counted
+
+    def ckpt(df):
+        cls = type(df)  # the concrete (classic) DataFrame class
+        real_lc = cls.localCheckpoint
+
+        def lc(self, *args, **kwargs):
+            out = real_lc(self, *args, **kwargs)
+            plans.append(formatted(self))  # the query execution that just ran
+            return out
+
+        cls.localCheckpoint = lc
+        try:
+            return real_ckpt(df)
+        finally:
+            cls.localCheckpoint = real_lc
+
+    graph._ckpt_counted = ckpt
+    try:
+        yield plans
+    finally:
+        graph._ckpt_counted = real_ckpt
+
+
 def main() -> None:
     if len(sys.argv) < 4:
         print("usage: dump_plans.py <tag> <suffix> <query> [...]", file=sys.stderr)
@@ -58,18 +117,24 @@ def main() -> None:
     qs = queries()
     for name in names:
         streaming._LAST_PROGRESS.clear()
-        df = qs[name](spark, sf_dir)
+        with materialized_plans() as rounds:
+            df = qs[name](spark, sf_dir)
         progress = streaming.last_progress()
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain(mode="formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(
                 f"# {name} ({suffix}) — {os.path.basename(sf_dir)}, "
                 "captured by tools/dump_plans.py\n"
             )
-            f.write(buf.getvalue())
+            data_parent = os.path.dirname(os.path.abspath(sf_dir)) + "/"
+            f.write(formatted(df).replace(data_parent, ""))  # like the header
+            for i, plan in enumerate(rounds, 1):
+                nodes, exchanges = tree_counts(plan)
+                f.write(
+                    f"\n# materialized frame {i} of {len(rounds)} (_ckpt_counted): "
+                    f"{nodes} nodes, {exchanges} exchanges\n"
+                )
+                f.write(plan.replace(data_parent, ""))
             if progress:
                 f.write("\n# streaming progress (streaming.last_progress())\n")
                 f.write(progress_summary(progress))
