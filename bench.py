@@ -194,16 +194,6 @@ def main() -> None:
         "spread": {
             k: round(max(v) - min(v), 4) for k, v in samples.items() if v
         },
-        # round-9 instrument note: streaming_* state machines default to
-        # applyInPandasWithState (MILAN_STREAM_STATE_API=auto). The modern
-        # transformWithStateInPandas backend (auto-selected when an operator
-        # requests state TTL, or forced via MILAN_STREAM_STATE_API=tws) pays
-        # a measured ~1.4-1.5 s/query fixed start cost (fresh Python driver
-        # worker for state-schema validation + RocksDB init) that is pure
-        # overhead on this availableNow replay harness — a 100 TB backfill
-        # has the same short-lived-query shape. Both backends run the same
-        # per-key process fn; the oracle suite is green on each. SCALE.md.
-        "streaming_api": os.environ.get("MILAN_STREAM_STATE_API", "auto"),
     }
     # standing warm-isolated tier for streaming state queries (round-8
     # verdict: their end-of-session cold medians drift with catalog LENGTH,

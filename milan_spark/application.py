@@ -31,6 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from milan_spark.plans.nodes import Node, compile_node, from_json as _plan_from_json, to_json as _plan_to_json
+from milan_spark.streaming import _conf_scope
 
 BUNDLE_VERSION = 1
 
@@ -41,30 +42,14 @@ _STATE_PROVIDERS = {
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 
 
-class _state_store_scope:
-    """Set the state-store provider for queries STARTED inside the scope and
-    restore it after — a StreamingQuery clones the session conf at
-    ``start()``, so this is exact per-query scoping (the Spark realization
-    of the reference's per-operation ``stateStores`` configuration,
-    ``ApplicationConfiguration.scala:121-154``). ``choice=None`` is a
-    no-op passthrough."""
+def _provider_confs(choice: str | None) -> dict[str, str]:
+    """The session confs that put a query on state store ``choice``
+    (None: the session's own). Set around a query's ``start()`` with
+    ``streaming._conf_scope``, they scope to that query alone: the Spark
+    realization of the reference's per-operation ``stateStores``
+    configuration (``ApplicationConfiguration.scala:121-154``)."""
+    return {_PROVIDER_KEY: _STATE_PROVIDERS[choice]} if choice else {}
 
-    def __init__(self, spark: SparkSession, choice: str | None):
-        self.spark, self.choice = spark, choice
-
-    def __enter__(self):
-        if self.choice:
-            self.prev = self.spark.conf.get(_PROVIDER_KEY, None)
-            self.spark.conf.set(_PROVIDER_KEY, _STATE_PROVIDERS[self.choice])
-        return self
-
-    def __exit__(self, *exc):
-        if self.choice:
-            if self.prev is None:
-                self.spark.conf.unset(_PROVIDER_KEY)
-            else:
-                self.spark.conf.set(_PROVIDER_KEY, self.prev)
-        return False
 
 # source spec kinds → how run_* resolves them
 #   parquet: {"path": ...}
@@ -184,11 +169,6 @@ class Application:
                     f"sink on {sid!r}: unknown kind {entry.get('kind')!r} "
                     "(expected memory|file)"
                 )
-            if entry.get("state_store") not in (None, "memory", "rocksdb"):
-                raise ValueError(
-                    f"sink on {sid!r}: state_store "
-                    f"{entry.get('state_store')!r} unknown (expected memory|rocksdb)"
-                )
         for entry in self.lineage_sinks:
             sid = entry.get("stream_id")
             if sid not in node_ids:
@@ -203,15 +183,15 @@ class Application:
                 raise ValueError(
                     f"lineage sink on {sid!r}: unknown kind {entry.get('kind')!r}"
                 )
-        if self.state_store not in (None, "memory", "rocksdb"):
-            raise ValueError(
-                f"state_store {self.state_store!r} unknown (expected memory|rocksdb)"
-            )
-        if self.sink.get("state_store") not in (None, "memory", "rocksdb"):
-            raise ValueError(
-                f"sink state_store {self.sink.get('state_store')!r} unknown "
-                "(expected memory|rocksdb)"
-            )
+        stores = [("state_store", self.state_store),
+                  ("sink state_store", self.sink.get("state_store"))]
+        stores += [(f"sink on {e.get('stream_id')!r}: state_store", e.get("state_store"))
+                   for e in self.sinks]
+        for where, choice in stores:
+            if choice is not None and choice not in _STATE_PROVIDERS:
+                raise ValueError(
+                    f"{where} {choice!r} unknown (expected {'|'.join(_STATE_PROVIDERS)})"
+                )
 
     def _node_ids(self) -> set[str]:
         ids: set[str] = set()
@@ -396,7 +376,7 @@ class Application:
         self.validate()
         from milan_spark.plans.backend_streaming import compile_node_streaming
 
-        with _state_store_scope(spark, self.state_store):
+        with _conf_scope(spark, _provider_confs(self.state_store)):
             return self._run_streaming_inner(spark, compile_node_streaming)
 
     def _run_streaming_inner(self, spark: SparkSession, compile_node_streaming):
@@ -422,7 +402,7 @@ class Application:
             # per-operation stateStores configuration
             # (ApplicationConfiguration.scala:121-154, which attaches a
             # StateStore choice to individual operation names)
-            with _state_store_scope(spark, entry.get("state_store")):
+            with _conf_scope(spark, _provider_confs(entry.get("state_store"))):
                 if entry["kind"] == "memory":
                     from milan_spark.streaming import run_to_memory
 
@@ -456,14 +436,14 @@ class Application:
         if kind == "memory":
             from milan_spark.streaming import run_to_memory
 
-            with _state_store_scope(spark, self.sink.get("state_store")):
+            with _conf_scope(spark, _provider_confs(self.sink.get("state_store"))):
                 return run_to_memory(
                     sdf, self.sink["name"], output_mode=self.sink.get("output_mode", "append")
                 )
         if kind == "file":
             from milan_spark.streaming import file_sink
 
-            with _state_store_scope(spark, self.sink.get("state_store")):
+            with _conf_scope(spark, _provider_confs(self.sink.get("state_store"))):
                 return file_sink(
                     sdf,
                     self.sink["path"],

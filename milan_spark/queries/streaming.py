@@ -78,7 +78,7 @@ def _stream_side(ev: DataFrame, event_type: str, cols) -> DataFrame:
 @register(
     "streaming_left_enrichment_join",
     doc="Milan LeftJoin executed as its true streaming state machine "
-    "(applyInPandasWithState value-state machine, transformWithStateInPandas behind MILAN_STREAM_STATE_API=tws; ≈ LeftJoinKeyedCoProcessFunction.scala:41-80): "
+    "(applyInPandasWithState value-state machine ≈ LeftJoinKeyedCoProcessFunction.scala:41-80): "
     "purchases enriched with the user's latest at-or-earlier signup. Same "
     "oracle as the batch twin.",
     oracle=REGISTRY["left_enrichment_join"].oracle,
@@ -587,7 +587,7 @@ def streaming_drop_duplicates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_hot_event_types",
     doc="Streaming hot-key detection (stateful.streaming_heavy_hitters): "
     "mergeable Misra-Gries summaries in keyed value state "
-    "(applyInPandasWithState, transformWithStateInPandas behind a flag), "
+    "(applyInPandasWithState), "
     "O(buckets × capacity) state regardless of stream length or key "
     "cardinality. With capacity 64 ≥ the 5-value event_type domain no "
     "eviction fires, so the final snapshot's lower bounds ARE the exact "

@@ -10,88 +10,13 @@ the Pandas-UDF slow path.
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import SparkSession
-
-# Directory whose presence on sys.path/PYTHONPATH makes ``google.protobuf``
-# importable via the vendored gcloud runtime (see compat/pbshim).
-_PBSHIM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "compat", "pbshim")
-_VENDORED_PB = "/usr/lib/google-cloud-sdk/lib/third_party/cloudsdk/google/protobuf"
-
-
-def ensure_protobuf() -> bool:
-    """Make ``google.protobuf`` importable if at all possible; return whether
-    it is. ``transformWithStateInPandas`` requires it in the driver worker and
-    every executor worker, so this MUST run before the JVM starts (workers
-    inherit the JVM's environment): ``get_spark`` calls it ahead of
-    ``getOrCreate``. With a pip-installed protobuf this is a no-op; without
-    one, the pbshim directory (which redirects to the pure-python runtime the
-    Google Cloud SDK vendors) is appended to ``sys.path`` for this process
-    and to ``PYTHONPATH`` for the workers. Returns False when neither exists
-    — callers then fall back to ``applyInPandasWithState``.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        pass
-    if not os.path.isdir(_VENDORED_PB):
-        return False
-    if _PBSHIM_DIR not in sys.path:
-        sys.path.insert(0, _PBSHIM_DIR)
-    parts = os.environ.get("PYTHONPATH", "")
-    if _PBSHIM_DIR not in parts.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            _PBSHIM_DIR + (os.pathsep + parts if parts else "")
-        )
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 # Name of the monotonic arrival-order column used by order-sensitive operators
 # (scans, argmax ties, enrichment joins). Mirrors the reference's per-record
 # sequence numbers (milan-flink-compiler .../types/RecordWrapper.scala:23).
 SEQ_COL = "__seq"
-
-
-def workers_can_import_protobuf() -> bool:
-    """Whether every SPARK WORKER (not just this driver process) will be able
-    to import ``google.protobuf`` — the condition transformWithStateInPandas
-    actually needs. Driver-side importability is NOT enough in the shim case:
-    workers inherit the JVM's environment, frozen at JVM launch, so a session
-    created before :func:`ensure_protobuf` ran (e.g. a session handed to us
-    by an external harness) has workers that cannot see the shim even though
-    this process can. Decision:
-
-    - no protobuf at all -> False;
-    - a real installation (site-packages, not the shim) -> True: workers run
-      the same interpreter and share its site-packages;
-    - the vendored shim -> True only if the shim directory is on the
-      PYTHONPATH the JVM inherited (JVM running: read its env; JVM not yet
-      launched: the env var set by ensure_protobuf will be inherited).
-    """
-    if not ensure_protobuf():
-        return False
-    import google.protobuf as _pb
-
-    origin = (getattr(_pb, "__file__", "") or "") + str(getattr(_pb, "__path__", ""))
-    if "cloudsdk" not in origin and "pbshim" not in origin:
-        return True
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        return _PBSHIM_DIR in os.environ.get("PYTHONPATH", "").split(os.pathsep)
-    try:
-        jvm_pp = sc._jvm.java.lang.System.getenv("PYTHONPATH") or ""
-    except Exception:
-        return False
-    return _PBSHIM_DIR in jvm_pp.split(os.pathsep)
 
 
 def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -101,7 +26,6 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
     On a real cluster the master/memory settings are supplied by spark-submit;
     everything set here is cluster-safe.
     """
-    ensure_protobuf()  # before the JVM exists, so workers inherit the path
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         try:

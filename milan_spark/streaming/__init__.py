@@ -29,10 +29,35 @@ from __future__ import annotations
 
 import json
 import tempfile
-from typing import Callable, Mapping, Sequence
+from contextlib import contextmanager
+from typing import Callable, Iterator, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+_FS_CHECKPOINTS = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+@contextmanager
+def _conf_scope(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the block and restore the previous
+    values (or unset them) after it. A query clones the session conf at
+    ``start()``, so a scope around a start sets the confs of that query
+    alone. An empty ``confs`` is a passthrough."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _start(
@@ -59,8 +84,6 @@ def _start(
       stores than slots run the state stage in extra waves. (The reference
       sizes each operator by Flink parallelism, pinning sources to 1:
       DataSourceUtil.scala:58-60.)
-    - the provider: a TransformWithState plan needs RocksDB; others keep the
-      session default and its lighter per-microbatch commit.
     - the checkpoint file manager: a private checkpoint writes its offsets,
       commits and state deltas through the FileSystem manager, a temp file
       plus one ``rename(2)``, still atomic with the one writer it has.
@@ -71,30 +94,16 @@ def _start(
       keeps FileContext: its no-overwrite rename is what detects a second
       writer on a checkpoint shared across restarts.
     """
-    from milan_spark.streaming.stateful import _FS_CHECKPOINTS, _ROCKSDB, needs_rocksdb
-
     spark = sdf.sparkSession
     n = state_partitions or min(8, spark.sparkContext.defaultParallelism)
     confs = {"spark.sql.shuffle.partitions": str(n)}
-    provider = "spark.sql.streaming.stateStore.providerClass"
-    if needs_rocksdb(sdf) and "RocksDB" not in (spark.conf.get(provider, None) or ""):
-        confs[provider] = _ROCKSDB
     # a session-wide checkpoint root names the checkpoint of every query
     # that sets none (``<root>/<queryName>``), so it is not private
     root = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
     if checkpoint is None and root is None:
         confs["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINTS
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with _conf_scope(spark, confs):
         return w.start()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # per-microbatch StreamingQueryProgress dicts of the most recent

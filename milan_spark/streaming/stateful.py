@@ -33,33 +33,17 @@ store), identical to the reference's keyed state distribution; the JSON
 encode/decode is Arrow-batched per microbatch. At 100 TB the bottleneck is the
 state store, not this wrapper — same as Flink.
 
-Backends: every operator here runs on either of Spark's two arbitrary-state
-APIs through one backend-neutral driver (:func:`_drive`):
-
-- ``applyInPandasWithState`` — the DEFAULT for operators that use no
-  TWS-only feature: it has no per-start fixed cost, which matters for
-  replay/backfill (availableNow) runs that start a fresh query per job.
-- ``transformWithStateInPandas`` (Spark 4.x) — the modern API and the
-  closer analog of the reference's Flink keyed state: explicit state handles
-  created in ``init`` (this port uses a ValueState; list/map handles and TTL
-  compose on the same processor), RocksDB-backed, with state-schema metadata
-  and evolution. Selected automatically when an operator requests
-  ``state_ttl_ms`` (a TWS-only capability), or globally via
-  ``MILAN_STREAM_STATE_API=tws`` — the right default for long-running
-  production streams, where its ~1.4–1.5 s per-start driver cost (state
-  schema validation worker + RocksDB provider init) amortizes to zero.
-  Requires ``google.protobuf`` in the workers (``session.ensure_protobuf``
-  arranges it) and the RocksDB state store provider (set on the session at
-  build time).
-
-Both backends execute the SAME per-key ``process`` function, so semantics are
-identical by construction; the oracle suite runs green on each.
+State: every operator here runs as an ``applyInPandasWithState`` state
+machine through one driver (:func:`_drive`) with ``GroupStateTimeout.NoTimeout``
+— the ``mapGroupsWithState`` model of the Structured Streaming paper
+(SIGMOD'18). The enrichment joins and :func:`scan` take an optional
+``state_ttl_ms``: per-key state older than that reads as absent (see
+:func:`_drive`).
 """
 
 from __future__ import annotations
 
 import json
-import os
 from typing import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -67,100 +51,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from milan_spark.operators.joins import _normalize_on, _prefixed
-from milan_spark.session import SEQ_COL, ensure_protobuf, workers_can_import_protobuf
-
-STATE_API_ENV = "MILAN_STREAM_STATE_API"  # "tws" | "applyinpandas" | "auto"
-_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-_FS_CHECKPOINTS = (
-    "org.apache.spark.sql.execution.streaming.checkpointing."
-    "FileSystemBasedCheckpointFileManager"
-)
-
-
-def use_tws(need_ttl: bool = False) -> bool:
-    """Resolve the state-machine backend for one operator instance.
-
-    ``auto`` (the default) picks the LEGACY ``applyInPandasWithState`` path
-    unless the operator needs a TWS-only feature (``need_ttl``): the two
-    backends run the SAME per-key ``process`` function (results identical by
-    construction; the oracle suite is green on each), but
-    ``transformWithStateInPandas`` pays a measured ~1.4–1.5 s fixed cost at
-    EVERY stream start (a driver-side Python worker is spawned for
-    state-schema validation, plus the mandatory RocksDB provider's heavier
-    per-microbatch commit) that is pure overhead for replay/backfill-style
-    short-lived queries — the availableNow pattern this engine's harnesses
-    and any 100 TB backfill job run. Long-running production streams that
-    want TTL state hygiene (or state-schema evolution) opt into the modern
-    API per operator via ``state_ttl_ms`` or globally via
-    ``MILAN_STREAM_STATE_API=tws``.
-
-    ``tws`` additionally requires that every WORKER can import protobuf
-    (see ``session.workers_can_import_protobuf`` — an externally-created
-    session whose JVM predates the shim path must fall back, or the state
-    machine crashes at runtime)."""
-    mode = os.environ.get(STATE_API_ENV, "auto")
-    if mode == "applyinpandas":
-        return False
-    if mode == "auto" and not need_ttl:
-        return False
-    ok = workers_can_import_protobuf()
-    if not ok and mode == "auto" and ensure_protobuf():
-        # driver can import protobuf but the workers cannot (JVM launched
-        # before the shim path existed) — say why the modern API is skipped
-        import warnings
-
-        warnings.warn(
-            "transformWithStateInPandas unavailable: google.protobuf is "
-            "importable in this process but not in the Spark workers (the "
-            "session's JVM predates the shim PYTHONPATH). Falling back to "
-            "applyInPandasWithState; create the session via "
-            "milan_spark.session.get_spark to enable the modern API.",
-            stacklevel=3,
-        )
-    if mode == "tws" and not ok:
-        raise RuntimeError(
-            "MILAN_STREAM_STATE_API=tws but google.protobuf is unavailable "
-            "in the workers (transformWithStateInPandas needs it there)"
-        )
-    return ok
-
-
-def needs_rocksdb(sdf: DataFrame) -> bool:
-    """True when the streaming plan contains a TransformWithState node —
-    such queries must start under the RocksDB state store provider."""
-    try:
-        return "TransformWithState" in sdf._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return False
-
-
-def _fold_chunks(pdf_iter, in_cols, sort_by):
-    """Concatenate a state machine's input chunks into one sorted pdf.
-
-    transformWithStateInPandas delivers positional Arrow field names
-    (_0, _1, …) for some child plans (observed on unions); the column ORDER
-    is the input DataFrame's, so rename by position to keep per-key logic
-    schema-agnostic across backends."""
-    import pandas as pd
-
-    chunks = []
-    for p in pdf_iter:
-        if not len(p):
-            continue
-        if list(p.columns) != in_cols:
-            if len(p.columns) != len(in_cols):
-                raise ValueError(
-                    f"state-machine input has {len(p.columns)} columns, "
-                    f"expected {len(in_cols)} ({in_cols})"
-                )
-            p = p.set_axis(in_cols, axis=1)
-        chunks.append(p)
-    if not chunks:
-        return None
-    pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-    if sort_by:
-        pdf = pdf.sort_values(list(sort_by), kind="stable")
-    return pdf
+from milan_spark.session import SEQ_COL
 
 
 def _drive(
@@ -174,82 +65,49 @@ def _drive(
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """Run ``process(key, pdf, state_tuple_or_None) -> (new_state_tuple,
-    [pd.DataFrame])`` as a keyed value-state machine on the selected backend.
+    [pd.DataFrame])`` as a keyed value-state machine
+    (``applyInPandasWithState``).
 
     ``pdf`` arrives sorted by ``sort_by``; the returned state tuple must match
     ``state_schema`` and is persisted for the key (None leaves state
     untouched). Emission is append-mode.
 
-    ``state_ttl_ms`` (tws backend only) puts a processing-time TTL on the
-    per-key state: a key whose state was last written more than that many
-    milliseconds ago reads as absent — the state-hygiene contract a
-    long-running 100 TB enrichment stream needs so abandoned keys cannot
-    accrete forever. The legacy backend has no per-value TTL; asking for one
-    there raises rather than silently retaining state.
+    ``state_ttl_ms`` puts a processing-time TTL on the per-key state: the
+    state carries the batch time it was last written at (an extra
+    ``__written_ms`` field), and a key whose state was written more than
+    that many milliseconds before the current batch reads as absent. A key
+    that never arrives again keeps its entry in the store: reclaiming it
+    needs a processing-time timeout, and a timeout keeps an ``availableNow``
+    query running empty microbatches forever.
     """
-    in_cols = list(df.columns)
-
-    def _fold(pdf_iter):
-        return _fold_chunks(pdf_iter, in_cols, sort_by)
-
-    if use_tws(need_ttl=state_ttl_ms is not None):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        # transformWithState requires the RocksDB state store provider. The
-        # provider is a session conf captured when a query STARTS, so it is
-        # scoped there, not here: ``streaming._start``, through which every
-        # sink starts, sets it for queries whose plan contains a
-        # TransformWithState node and restores it right after start (see
-        # needs_rocksdb) — native stateful operators keep the default
-        # provider and its lighter per-microbatch commit. Direct
-        # ``writeStream`` users must set the provider themselves; Spark fails
-        # loudly at start if it is missing.
-
-        class _Machine(StatefulProcessor):
-            def init(self, handle):
-                self._s = handle.getValueState("s", state_schema, ttlDurationMs=state_ttl_ms)
-
-            def handleInputRows(self, key, rows, timer_values):
-                pdf = _fold(rows)
-                if pdf is None:
-                    return iter(())
-                st = tuple(self._s.get()) if self._s.exists() else None
-                st, frames = process(key, pdf, st)
-                if st is not None:
-                    self._s.update(tuple(st))
-                return iter(frames)
-
-            def close(self):
-                pass
-
-        return df.groupBy(*group_cols).transformWithStateInPandas(
-            statefulProcessor=_Machine(),
-            outputStructType=out_schema,
-            outputMode="Append",
-            # TTL needs a clock; everything else runs clock-free
-            timeMode="ProcessingTime" if state_ttl_ms else "None",
-        )
+    import pandas as pd
 
     if state_ttl_ms is not None:
-        raise ValueError(
-            "state_ttl_ms requires the transformWithStateInPandas backend "
-            f"(unset {STATE_API_ENV}=applyinpandas, or install protobuf)"
+        state_schema = StructType(
+            state_schema.fields + [StructField("__written_ms", LongType(), True)]
         )
 
     def fn(key, pdf_iter: Iterator["pd.DataFrame"], state: GroupState):
-        pdf = _fold(pdf_iter)
-        if pdf is None:
+        chunks = [p for p in pdf_iter if len(p)]
+        if not chunks:
             return
+        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
+        if sort_by:
+            pdf = pdf.sort_values(list(sort_by), kind="stable")
         st = tuple(state.get) if state.exists else None
+        if state_ttl_ms is not None:
+            now = state.getCurrentProcessingTimeMs()
+            if st is not None:
+                st = st[:-1] if now - st[-1] <= state_ttl_ms else None
         st, frames = process(key, pdf, st)
         if st is not None:
-            state.update(tuple(st))
-        for f in frames:
-            yield f
+            state.update(tuple(st) if state_ttl_ms is None else (*st, now))
+        yield from frames
 
     return df.groupBy(*group_cols).applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
+
 
 _STATE_1 = StructType([StructField("r", StringType(), True)])
 _STATE_2 = StructType(
@@ -365,91 +223,6 @@ def _run_state_machine(
     )
 
 
-def _left_inner_tws(
-    u: DataFrame,
-    n_keys: int,
-    match,
-    state_ttl_ms: int | None,
-) -> DataFrame:
-    """LeftInnerJoin on the modern API with its NATIVE state layout — the
-    exact analog of the reference's Flink state
-    (LeftInnerJoinKeyedCoProcessFunction.scala:40-103): a ValueState for the
-    latest right and a ListState for the buffered lefts. Unlike the generic
-    value-state machine (which carries the buffer as one JSON array and
-    rewrites it wholesale), buffered lefts append as individual RocksDB list
-    elements — O(1) per buffered arrival; the list is only rewritten when a
-    right consumes part of it."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    key_cols = [f"__key{i}" for i in range(n_keys)]
-    out_schema = _out_schema(_key_fields(u, n_keys))
-    in_cols = list(u.columns)
-    row_schema = StructType([StructField("p", StringType(), True)])
-
-    class _M(StatefulProcessor):
-        def init(self, handle):
-            self._r = handle.getValueState("r", row_schema, ttlDurationMs=state_ttl_ms)
-            self._buf = handle.getListState("buf", row_schema, ttlDurationMs=state_ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            pdf = _fold_chunks(rows, in_cols, ["__ord", "__side"])
-            if pdf is None:
-                return iter(())
-            last_r = self._r.get()[0] if self._r.exists() else None
-            buf = [t[0] for t in self._buf.get()] if self._buf.exists() else []
-            n_buf0, appended, consumed = len(buf), 0, False
-            out_l, out_r = [], []
-            for side, payload in zip(pdf["__side"], pdf["__payload"]):
-                if side == 1:
-                    if last_r is not None and match(payload, last_r):
-                        out_l.append(payload)
-                        out_r.append(last_r)
-                    else:
-                        buf.append(payload)
-                        if not consumed:
-                            # O(1) append path: the stored prefix is intact
-                            self._buf.appendValue((payload,))
-                            appended += 1
-                else:
-                    kept = []
-                    for l in buf:
-                        if match(l, payload):
-                            out_l.append(l)
-                            out_r.append(payload)
-                        else:
-                            kept.append(l)
-                    if len(kept) != len(buf):
-                        consumed = True
-                    buf = kept
-                    if last_r != payload:
-                        last_r = payload
-                        self._r.update((payload,))
-            if consumed:
-                # the stored list no longer matches: rewrite it once
-                if buf:
-                    self._buf.put([(l,) for l in buf])
-                else:
-                    self._buf.clear()
-            if not out_l:
-                return iter(())
-            res = {c: [key[i]] * len(out_l) for i, c in enumerate(key_cols)}
-            res["__l"] = out_l
-            res["__r"] = out_r
-            return iter([pd.DataFrame(res)])
-
-        def close(self):
-            pass
-
-    return u.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_M(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="ProcessingTime" if state_ttl_ms else "None",
-    )
-
-
 def left_enrichment_join(
     left: DataFrame,
     right: DataFrame,
@@ -522,9 +295,10 @@ def left_inner_enrichment_join(
     right_prefix: str = "r_",
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Streaming Milan LeftInnerJoin: lefts buffer (ListState) until the first
-    matching right; afterwards lefts pair immediately with the latest right.
-    Each left emits at most once (LeftInnerJoinKeyedCoProcessFunction.scala:40-103).
+    """Streaming Milan LeftInnerJoin: lefts buffer (a JSON list in the key's
+    value state, the reference's ListState) until the first matching right;
+    afterwards lefts pair immediately with the latest right. Each left emits
+    at most once (LeftInnerJoinKeyedCoProcessFunction.scala:40-103).
 
     Unlike the batch realization, a ``residual`` is supported here — a Python
     predicate ``(left_dict, right_dict) -> bool`` evaluated inside the state
@@ -535,28 +309,28 @@ def left_inner_enrichment_join(
     """
     left_on, right_on = _normalize_on(on, left_on, right_on)
     u = _tagged_union(left, right, left_on, right_on, left_seq, right_seq)
-    match = (lambda l, r: True) if residual is None else (
-        lambda l, r: bool(residual(json.loads(l), json.loads(r)))
-    )
+    # payloads stay JSON strings in state; only the residual decodes them
+    decode = json.loads if residual is not None else (lambda p: None)
+
+    def fits(l, r) -> bool:
+        return residual is None or bool(residual(json.loads(l), r))
 
     def step(st, side, payload):
         last_r, buf_json = st
-        buf = json.loads(buf_json) if buf_json else []
         if side == 1:
-            if last_r is not None and match(payload, last_r):
-                return (last_r, buf_json), [(payload, last_r)]
+            if last_r is not None and fits(payload, decode(last_r)):
+                return st, [(payload, last_r)]
+            buf = json.loads(buf_json) if buf_json else []
             buf.append(payload)
             return (last_r, json.dumps(buf)), []
-        emitted = [(l, payload) for l in buf if match(l, payload)]
-        kept = [l for l in buf if not match(l, payload)]
-        return (payload, json.dumps(kept) if kept else None), emitted
+        # one residual call per buffered left: it is either emitted or kept
+        r = decode(payload)
+        emitted, kept = [], []
+        for l in json.loads(buf_json) if buf_json else []:
+            (emitted if fits(l, r) else kept).append(l)
+        return (payload, json.dumps(kept) if kept else None), [(l, payload) for l in emitted]
 
-    if use_tws(need_ttl=state_ttl_ms is not None):
-        paired = _left_inner_tws(u, len(left_on), match, state_ttl_ms)
-    else:
-        paired = _run_state_machine(
-            u, len(left_on), step, _STATE_BUF, (None, None), state_ttl_ms
-        )
+    paired = _run_state_machine(u, len(left_on), step, _STATE_BUF, (None, None), state_ttl_ms)
     return _pair_project(paired, left, right, left_on, right_on, right_prefix, None)
 
 
@@ -600,8 +374,7 @@ def scan(
         )
         return (json.dumps(st),), frames
 
-    # tws cannot group by an expression alias (plan resolution drops it);
-    # materialize the synthetic global-group column instead
+    # a keyless fold runs as one group over a synthetic constant column
     if key_list:
         group_df, group_cols = sdf, key_list
     else:
@@ -656,8 +429,7 @@ def record_window_apply(
         )
         return (json.dumps(buf),), frames
 
-    # tws cannot group by an expression alias (plan resolution drops it);
-    # materialize the synthetic global-group column instead
+    # a keyless fold runs as one group over a synthetic constant column
     if key_list:
         group_df, group_cols = sdf, key_list
     else:

@@ -328,16 +328,17 @@ def test_per_sink_state_store_scoping(spark, tmp_path):
     # (ApplicationConfiguration.scala:121-154); here each sink entry may
     # carry its own provider — applied only around that query's start()
     # (queries clone the session conf at start), restored afterwards
-    from milan_spark.application import _PROVIDER_KEY, _state_store_scope
+    from milan_spark.application import _PROVIDER_KEY, _provider_confs
+    from milan_spark.streaming import _conf_scope
 
     prev = spark.conf.get(_PROVIDER_KEY, None)
-    with _state_store_scope(spark, "rocksdb"):
+    with _conf_scope(spark, _provider_confs("rocksdb")):
         assert "RocksDB" in spark.conf.get(_PROVIDER_KEY)
-        with _state_store_scope(spark, "memory"):
+        with _conf_scope(spark, _provider_confs("memory")):
             assert "HDFSBacked" in spark.conf.get(_PROVIDER_KEY)
         assert "RocksDB" in spark.conf.get(_PROVIDER_KEY)
     assert spark.conf.get(_PROVIDER_KEY, None) == prev
-    with _state_store_scope(spark, None):
+    with _conf_scope(spark, _provider_confs(None)):
         assert spark.conf.get(_PROVIDER_KEY, None) == prev
 
     app = Application.from_json(_multi_sink_bundle(str(tmp_path / "ps")).to_json())

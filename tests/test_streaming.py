@@ -117,6 +117,89 @@ def test_streaming_left_inner_residual_rematch(spark, sides):
     assert not any(r[0] == 4 for r in rows)
 
 
+def _side_streams(spark, root):
+    """(left, right) streams over the parquet files in ``root``/left and
+    ``root``/right."""
+    return tuple(
+        spark.readStream.schema(schema).parquet(str(root / sub))
+        for sub, schema in (("left", LEFT_SCHEMA), ("right", RIGHT_SCHEMA))
+    )
+
+
+def test_left_inner_residual_judges_each_buffered_left_once(spark, tmp_path):
+    """A right decides each buffered left with ONE residual call: emitted or
+    kept, never both. An alternating residual, asked twice per left, would
+    emit the left with both rights (or drop it unemitted)."""
+    import itertools
+
+    counter = itertools.count()
+    _write_chunks(tmp_path / "left", [[(1, 10, 1.5, 0)]], ["id", "k", "v", "__seq"])
+    _write_chunks(
+        tmp_path / "right", [[(10, "a", 0.1, 1), (10, "b", 0.2, 2)]], ["k", "name", "w", "__seq"]
+    )
+    ls, rs = _side_streams(spark, tmp_path)
+    got = run_to_memory(
+        stateful.left_inner_enrichment_join(
+            ls, rs, on="k", residual=lambda l, r: next(counter) % 2 == 0
+        ),
+        "s_li_alternating",
+    )
+    rows = [tuple(r) for r in got.select("id", "name").collect()]
+    assert len(rows) == 1 and rows[0][0] == 1, rows
+
+
+def test_scan_without_keys(spark, tmp_path):
+    """A keyless scan folds the whole stream as one group (a synthetic
+    constant group column) across microbatches."""
+    _write_chunks(tmp_path / "s", [[(0, 1)], [(1, 2)], [(2, 3)]], ["__seq", "x"])
+    sdf = (
+        spark.readStream.schema("__seq long, x long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "s"))
+    )
+
+    def fold(st, rec):
+        st = st + rec.x
+        return st, {"running": st}
+
+    out = stateful.scan(sdf, fold, initial_state=0, output_schema="running long")
+    got = sorted(r.running for r in run_to_memory(out, "s_scan_keyless").collect())
+    assert got == [1, 3, 6]
+
+
+def test_state_ttl_expires_idle_keys(spark, tmp_path):
+    """Processing-time state TTL: a right written in one run reads as ABSENT
+    once the TTL has passed by a later run on the same checkpoint, so a
+    left arriving then enriches to null; without a TTL the right is kept.
+    Both runs of each scenario must finish: a TTL adds no timer that would
+    keep an availableNow query scheduling empty microbatches."""
+    import time
+
+    def scenario(tag, ttl):
+        root = tmp_path / tag
+        out, ck = str(root / "out"), str(root / "ck")
+
+        def run():
+            ls, rs = _side_streams(spark, root)
+            joined = stateful.left_enrichment_join(ls, rs, on="k", state_ttl_ms=ttl)
+            assert file_sink(joined, out, checkpoint=ck).awaitTermination(120)
+
+        # run 1: only the right arrives, and its value lands in state
+        _write_chunks(root / "right", [[(10, "a0", 0.1, 1)]], ["k", "name", "w", "__seq"])
+        (root / "left").mkdir()
+        run()
+        time.sleep(1.5)  # > the TTL of the ttl scenario
+        # run 2 (same checkpoint): a left arrives and reads the state
+        _write_chunks(root / "left", [[(1, 10, 1.5, 2)]], ["id", "k", "v", "__seq"])
+        run()
+        rows = spark.read.parquet(out).collect()
+        assert len(rows) == 1
+        return rows[0]
+
+    assert scenario("ttl", 300).name is None, "state older than the TTL must read as absent"
+    assert scenario("nottl", None).name == "a0", "without a TTL the right must be retained"
+
+
 @pytest.mark.slow
 def test_streaming_scan_matches_batch(spark, sides):
     ls, _, lb, _ = sides
