@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
@@ -164,12 +165,7 @@ def main() -> None:
         pass_walls.append(time.perf_counter() - p0)
         passes_run += 1
 
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        n = len(s)
-        return s[n // 2] if n % 2 else round((s[n // 2 - 1] + s[n // 2]) / 2, 4)
-
-    timings = {k: (median(v) if v else -1.0) for k, v in samples.items()}
+    timings = {k: (round(statistics.median(v), 4) if v else -1.0) for k, v in samples.items()}
     total = round(sum(t for t in timings.values() if t >= 0), 4)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None

@@ -31,7 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from milan_spark.plans.nodes import Node, compile_node, from_json as _plan_from_json, to_json as _plan_to_json
-from milan_spark.streaming import _conf_scope
+from milan_spark.streaming import _conf_scope, await_finished
 
 BUNDLE_VERSION = 1
 
@@ -421,7 +421,7 @@ class Application:
                         )
                     )
         for q in started:
-            q.awaitTermination(300)
+            await_finished(q)
         sdf = compile_node_streaming(self.plan, spark, source_overrides=bound)
         if self.metrics:
             # streaming metric attachment: Dataset.observe with a NAME (the
@@ -453,8 +453,7 @@ class Application:
         if kind in ("kinesis", "sqs", "dynamodb_table"):
             from milan_spark.sources.queues import open_queue_sink
 
-            q = open_queue_sink(sdf, self.sink)
-            q.awaitTermination(300)
+            await_finished(open_queue_sink(sdf, self.sink))
             return sdf
         return sdf
 

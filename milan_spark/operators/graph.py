@@ -831,7 +831,9 @@ def strongly_connected_components(
     production recipe for a 100 TB edge list is trim (degree-0/1 peel) +
     contract, then this operator on the residual small-diameter core. Rounds
     are bounded by the longest shortest path (≤ diameter), far below
-    ``max_rounds`` on such graphs.
+    ``max_rounds`` on such graphs. A loop that ends its ``max_rounds``
+    without a round that adds no pair raises :class:`MilanRoundCapError`:
+    a partial closure would split components silently.
 
     Output: (node, scc_id) — singletons keep their own id.
     """
@@ -859,6 +861,10 @@ def strongly_connected_components(
             break
         reach = reach.unionByName(new).localCheckpoint(eager=False)
         delta = new
+    else:
+        raise MilanRoundCapError(
+            f"strongly_connected_components: closure still growing after max_rounds={max_rounds}"
+        )
     nodes = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
@@ -1096,8 +1102,9 @@ def scc_trim_contract(
        the cheap UNDIRECTED primitive — over only the reciprocal pairs).
        Edge endpoints map through the representative; self-loops vanish.
     3. **Closure** on what remains: :func:`strongly_connected_components`
-       over the contracted residual. Because representatives are component
-       minima, the closure's min-based ids ARE the original graph's ids.
+       over the contracted residual, capped at ``max_rounds``. Because
+       representatives are component minima, the closure's min-based ids
+       ARE the original graph's ids.
     4. Map back: every node's scc_id = closure id of its representative,
        defaulting to the representative itself (trimmed singletons and
        fully-contracted components never reach the closure).

@@ -24,7 +24,7 @@ from milan_spark.queries import analytics as _analytics  # noqa: F401
 from milan_spark.queries import joins as _joins  # noqa: F401
 from milan_spark.queries import scans as _scans  # noqa: F401
 from milan_spark.queries import windows as _windows  # noqa: F401
-from milan_spark.streaming import _start, run_to_memory, windowed_agg
+from milan_spark.streaming import _start, await_finished, run_to_memory, windowed_agg
 from milan_spark.streaming import stateful
 
 DEC = "decimal(18,6)"
@@ -1334,7 +1334,7 @@ def streaming_kinesis_emulated_roundtrip_q(spark: SparkSession, sf_dir: str) -> 
         ["user_id", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents")],
     ).drop("__seq")
     sink = KinesisDataSink("rollup_feed", q, "local", queue_limit=2000)
-    open_queue_sink(s, sink.to_spec()).awaitTermination(300)
+    await_finished(open_queue_sink(s, sink.to_spec()))
 
     src = KinesisDataSource(q, "local", "user_id long, cents long")
     feed = open_queue_source(spark, src.to_spec())
@@ -2136,7 +2136,7 @@ def streaming_versioned_sink_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True),
         ev,
     )
-    q.awaitTermination(300)
+    await_finished(q)
     committed = versions(path)
     assert committed, "versioned sink committed no batches (empty stream?)"
     # simulated restart replay: batch 0 again, with the full batch content —

@@ -18,6 +18,8 @@ from pyspark.sql import SparkSession
 # sequence numbers (milan-flink-compiler .../types/RecordWrapper.scala:23).
 SEQ_COL = "__seq"
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Create or reuse a SparkSession with engine defaults.
@@ -25,6 +27,16 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
     On a real cluster the master/memory settings are supplied by spark-submit;
     everything set here is cluster-safe.
+
+    Python workers fork from ``milan_spark.pydaemon``, Spark's own daemon
+    with one patch: on CPython < 3.13 every Python-UDF task in a reused
+    worker calls ``importlib.invalidate_caches()``, which re-reads the
+    directory of ``pyspark.zip``, the spark-core jar and py4j (16 reads,
+    ~200 ms a task on 4 cores); the patch skips a read whose archive's stat
+    is unchanged. CPython 3.13 makes that invalidation lazy, and the module
+    then only starts the stock daemon. ``spark.executorEnv.PYTHONPATH`` puts
+    this package's root on the workers' path so the daemon imports from any
+    working directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
@@ -53,6 +65,8 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.daemon.module", "milan_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

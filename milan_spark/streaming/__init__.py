@@ -80,7 +80,8 @@ def _start(
 
     - state stores (``spark.sql.shuffle.partitions``): ``state_partitions``,
       else one per task slot up to 8. Each store costs a task and a commit
-      per microbatch (and a Python worker start in a state machine), so more
+      per microbatch (in a state machine, a Python-UDF task on a reused
+      worker; see ``milan_spark.pydaemon`` for its fixed cost), so more
       stores than slots run the state stage in extra waves. (The reference
       sizes each operator by Flink parallelism, pinning sources to 1:
       DataSourceUtil.scala:58-60.)
@@ -104,6 +105,22 @@ def _start(
         confs["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINTS
     with _conf_scope(spark, confs):
         return w.start()
+
+
+def await_finished(q: StreamingQuery, timeout_sec: int = 300) -> None:
+    """Wait for ``q``, a bounded (availableNow) query, to end. A query still
+    running after ``timeout_sec`` is stopped and raises
+    ``MilanStreamTimeoutError``: its sink holds only the microbatches that
+    finished, which a caller must not read as the whole result."""
+    if q.awaitTermination(timeout_sec):
+        return
+    q.stop()
+    from milan_spark.errors import MilanStreamTimeoutError
+
+    raise MilanStreamTimeoutError(
+        f"streaming query {q.name or q.id!r} did not finish within {timeout_sec} s; "
+        "it was stopped, and its partial result is not returned"
+    )
 
 
 # per-microbatch StreamingQueryProgress dicts of the most recent
@@ -169,14 +186,7 @@ def run_to_memory(
         .trigger(availableNow=True)
     )
     q = _start(w, sdf, state_partitions)
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        from milan_spark.errors import MilanStreamTimeoutError
-
-        raise MilanStreamTimeoutError(
-            f"streaming query {name!r} did not finish within {timeout_sec} s; "
-            "it was stopped, and its partial result is not returned"
-        )
+    await_finished(q, timeout_sec)
     # a progress record that fails to parse raises here: reading it as "no
     # progress" would report every source as empty below
     raw = []

@@ -1,9 +1,13 @@
 """HITS (hits_scaled) and strongly-connected components vs hand-computed and
 pure-Python references — exact integer equality, the test tier every
-iterative graph operator here uses."""
+iterative graph operator here uses. A closure that hits its round cap
+raises."""
 
 from __future__ import annotations
 
+import pytest
+
+from milan_spark.errors import MilanRoundCapError
 from milan_spark.operators.graph import hits_scaled
 
 
@@ -174,3 +178,13 @@ def test_scc_trim_contract_fully_contracted_core(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {r["node"]: r["scc_id"] for r in scc_trim_contract(df).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 5: 5}
+
+
+def test_scc_closure_cap_raises(spark):
+    # a 10-node directed cycle: the closure needs 8 rounds that add pairs
+    cycle = [(i, (i + 1) % 10) for i in range(10)]
+    df = spark.createDataFrame(cycle, "src long, dst long")
+    with pytest.raises(MilanRoundCapError, match="max_rounds=2"):
+        strongly_connected_components(df, max_rounds=2)
+    got = {r["node"]: r["scc_id"] for r in strongly_connected_components(df).collect()}
+    assert got == {i: 0 for i in range(10)}

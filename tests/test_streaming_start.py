@@ -1,10 +1,10 @@
 """How every streaming sink starts (``streaming._start``): state stores sized
 to the session's task slots, an explicit ``state_partitions`` honoured, a
 private checkpoint written through the FileSystem checkpoint manager while a
-named one keeps FileContext, a timed-out bounded run stopped and reported by
-name, a progress record that fails to parse surfaced as such, and the
-tagged-union enrichment joins reading the events stream once per
-microbatch."""
+named one keeps FileContext, a timed-out bounded run (or any query that
+cannot finish) stopped and reported by name, a progress record that fails
+to parse surfaced as such, and the tagged-union enrichment joins reading the
+events stream once per microbatch."""
 
 from __future__ import annotations
 
@@ -145,6 +145,20 @@ def test_run_to_memory_timeout_stops_query_and_raises(spark):
         run_to_memory(
             _keyed_count(spark), "start_timeout", output_mode="complete", timeout_sec=0.001
         )
+    assert spark.streams.active == []
+
+
+def test_await_finished_stops_an_unbounded_query_and_raises(spark):
+    # a rate source on a processing-time trigger never finishes
+    sdf = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    w = (
+        sdf.writeStream.format("noop")
+        .queryName("start_unbounded")
+        .trigger(processingTime="1 second")
+    )
+    q = streaming._start(w, sdf)
+    with pytest.raises(MilanStreamTimeoutError, match="start_unbounded"):
+        streaming.await_finished(q, timeout_sec=2)
     assert spark.streams.active == []
 
 

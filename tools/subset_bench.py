@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -42,13 +43,12 @@ def main() -> None:
                 samples[name].append(round(time.perf_counter() - start, 4))
             release_cached(spark)
 
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        n = len(s)
-        return s[n // 2] if n % 2 else round((s[n // 2 - 1] + s[n // 2]) / 2, 4)
-
     out = {
-        n: {"median": median(v), "passes": v, "spread": round(max(v) - min(v), 4)}
+        n: {
+            "median": round(statistics.median(v), 4),
+            "passes": v,
+            "spread": round(max(v) - min(v), 4),
+        }
         for n, v in samples.items()
     }
     print(json.dumps(out, indent=1))
