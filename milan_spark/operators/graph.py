@@ -3,9 +3,11 @@
 The reference's only iteration construct is the feedback Cycle
 (``beginCycle``/``closeCycle``, lang/Stream.scala:143-147, IR
 StreamExpressions.scala:141); its event compiler rejects cycles outright.
-Here iteration is the batch fixpoint loop ``Stream.iterate`` (driver-driven,
-lineage-truncated per round) — the same realization the reference's Boda
-sample documents as the workaround (milan-samples/.../bodaboda/BodaApp.scala:60-69).
+Here every loop with a stop rule runs through ``milan_spark.fixpoint``
+(driver-driven, lineage-truncated per round, one counted checkpoint job per
+round) — the same realization the reference's Boda sample documents as the
+workaround (milan-samples/.../bodaboda/BodaApp.scala:60-69). Loops with a
+fixed round count and no stop rule are plain ``for`` loops.
 
 ``connected_components`` is the canonical use: collapsing near-duplicate
 *pairs* into dedup *clusters* (keep one document per component) — the step a
@@ -15,23 +17,18 @@ real corpus-dedup pipeline needs after any pair generator in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
-from milan_spark.errors import MilanAnalysisError, MilanRoundCapError
+from milan_spark import fixpoint
+from milan_spark.errors import MilanAnalysisError
 
 
-def _ckpt_counted(df: DataFrame) -> "tuple[DataFrame, int]":
-    """Materialize ``df`` once (eager ``localCheckpoint``) with its row count
-    riding the same job as a ``CollectMetrics`` observation — the house
-    convergence-probe pattern generalized: ONE job per round, never a
-    separate ``count()``/``isEmpty()``/``first()`` pass over a frame the
-    round materializes anyway. ``count()`` costs a full two-stage aggregate
-    on top of the materialization (measured ~6× a bounded probe at sf0.1);
-    the observation is map-side accumulator metrics, free at any scale.
-    Returns ``(checkpointed_df, row_count)``."""
-    obs = Observation()
-    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    return out, int(obs.get["n"] or 0)
+def symmetrize(df: DataFrame, a: Column, b: Column, u: str = "u", v: str = "v") -> DataFrame:
+    """Both directions of every (a, b) row as ``(u, v)`` rows, from one
+    in-row ``inline`` over ``[(a, b), (b, a)]``: a plan that reads ``df`` once,
+    where ``x ∪ swap(x)`` reads it twice."""
+    fwd, rev = F.struct(a.alias(u), b.alias(v)), F.struct(b.alias(u), a.alias(v))
+    return df.select(F.inline(F.array(fwd, rev)))
 
 
 def connected_components(
@@ -53,32 +50,24 @@ def connected_components(
     Cycle-node demonstration does. The
     convergence check rides the round's own job as a ``CollectMetrics``
     observation (count of improved labels), so no separate driver-blocking
-    count job runs per round. Lineage is truncated every round
-    (``Stream.iterate`` localCheckpoints), so plans stay flat regardless of
-    iteration count. If the last of ``max_iterations`` rounds still improved
-    a label, it raises :class:`MilanRoundCapError` instead of returning
-    labels that are not yet component minima.
+    count job runs per round. Lineage is truncated every round (eager
+    ``localCheckpoint``), so plans stay flat regardless of iteration count.
+    If the last of ``max_iterations`` rounds still improved a label,
+    :func:`milan_spark.fixpoint.fixpoint` raises :class:`MilanRoundCapError`
+    instead of returning labels that are not yet component minima.
     """
-    from milan_spark.stream import Stream
-
-    fwd = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    edges = fwd.unionByName(
-        fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
+    edges = symmetrize(pairs, F.col(a_col), F.col(b_col)).persist()
     # initialize with the FIRST propagation round already applied — the
     # distinct-nodes aggregate and round 1's message aggregate are the same
     # shuffle, so starting from min(self, min neighbor) saves one full
-    # iterate round (one join + one checkpoint job) for free
+    # round (one join + one checkpoint job) for free
     labels = (
         edges.groupBy(F.col("u").alias("n"))
         .agg(F.min("v").alias("__mv"))
         .select("n", F.least("n", "__mv").alias("l"))
     )
 
-    holder: dict[str, Observation] = {}
-
-    def body(s: Stream) -> Stream:
-        lab = s.df
+    def step(lab: DataFrame, _r: int) -> "tuple[DataFrame, bool]":
         msgs = (
             edges.join(lab, edges["v"] == lab["n"])
             .groupBy(edges["u"].alias("n"))
@@ -89,23 +78,15 @@ def connected_components(
             "n", F.least("l", "__ml").alias("l"), (F.col("__ml") < F.col("l")).alias("__imp")
         )
         obs = Observation()
-        holder["obs"] = obs
         new = new.observe(obs, F.sum(F.col("__imp").cast("long")).alias("changed"))
-        return Stream.from_dataframe(new.drop("__imp"))
+        new = new.drop("__imp").localCheckpoint(eager=True)
+        # the eager checkpoint ran the round's job; its observation is ready
+        return new, (obs.get["changed"] or 0) == 0
 
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        # the eager localCheckpoint in iterate() already ran the job; the
-        # observation result is available without another action
-        return (holder["obs"].get["changed"] or 0) == 0
-
-    out = Stream.from_dataframe(labels).iterate(body, max_iterations, converged)
-    # iterate() returns the last round whether or not ``converged`` held;
-    # that round's improved-label count tells which
-    if "obs" not in holder or (holder["obs"].get["changed"] or 0) > 0:
-        raise MilanRoundCapError(
-            f"connected_components: labels still changing after max_iterations={max_iterations}"
-        )
-    return out.to_df().select(F.col("n").alias("node"), F.col("l").alias("label"))
+    labels, _ = fixpoint.fixpoint(
+        step, labels, max_iterations, on_cap="raise", what="connected_components max_iterations"
+    )
+    return labels.select(F.col("n").alias("node"), F.col("l").alias("label"))
 
 
 def connected_components_star(
@@ -142,7 +123,7 @@ def connected_components_star(
     component minimum. A loop that ends its ``max_rounds`` without an
     unchanged round raises :class:`MilanRoundCapError`.
     """
-    e, n_e = _ckpt_counted(
+    e, n_e = fixpoint.checkpoint_counted(
         pairs.select(
             F.greatest(F.col(a_col), F.col(b_col)).alias("u"),
             F.least(F.col(a_col), F.col(b_col)).alias("v"),
@@ -156,10 +137,9 @@ def connected_components_star(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
-        und = e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
+    def step(state: "tuple[DataFrame, int]", _r: int) -> "tuple[tuple[DataFrame, int], bool]":
+        e, n_e = state
+        und = symmetrize(e, F.col("u"), F.col("v"))
         # large-star: m(u) = min(Γ(u) ∪ {u}); hang every HIGHER neighbor on m
         mn = und.groupBy("u").agg(F.min("v").alias("__mv"))
         mn = mn.select("u", F.least("u", "__mv").alias("m"))
@@ -179,7 +159,7 @@ def connected_components_star(
             .distinct()
         )
         mn2 = o.groupBy("u").agg(F.min("v").alias("m"))
-        small, n_small = _ckpt_counted(
+        small, n_small = fixpoint.checkpoint_counted(
             o.join(mn2, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(mn2.select("u", F.col("m").alias("v")))
@@ -189,14 +169,11 @@ def connected_components_star(
         # both frames are distinct sets: equal counts + one empty set
         # difference ⇒ equal sets, so the second exceptAll direction is
         # redundant, and a count change skips the probe job entirely
-        done = n_small == n_e and small.exceptAll(e).isEmpty()
-        e, n_e = small, n_small
-        if done:
-            break
-    else:
-        raise MilanRoundCapError(
-            f"connected_components_star: edge set still changing after max_rounds={max_rounds}"
-        )
+        return (small, n_small), n_small == n_e and small.exceptAll(e).isEmpty()
+
+    (e, _), _ = fixpoint.fixpoint(
+        step, (e, n_e), max_rounds, on_cap="raise", what="connected_components_star max_rounds"
+    )
     return (
         all_nodes.join(e.select(F.col("u").alias("n"), F.col("v").alias("__l")), "n", "left")
         .select(F.col("n").alias("node"), F.coalesce("__l", "n").alias("label"))
@@ -464,11 +441,7 @@ def label_propagation(
         .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
         .distinct()
     )
-    directed = (
-        und.select(F.col("u").alias("n"), F.col("v").alias("m"))
-        .unionAll(und.select(F.col("v").alias("n"), F.col("u").alias("m")))
-        .persist()
-    )
+    directed = symmetrize(und, F.col("u"), F.col("v"), "n", "m").persist()
     # Fused first round: with every node starting in its own community, all
     # neighbor labels are distinct, every count is 1, and the (count desc,
     # label asc) rule degenerates to MIN(neighbor) — one combinable
@@ -500,12 +473,7 @@ def bfs_prepared_edges(
     graph (the diameter estimator runs two): the cached blocks keep their
     outputPartitioning, so each round shuffles only the frontier, and the
     doubling+exchange cost is paid once per graph instead of per sweep."""
-    fwd = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    return (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("u")
-        .persist()
-    )
+    return symmetrize(pairs, F.col(a_col), F.col(b_col)).repartition("u").persist()
 
 
 def bfs_levels(
@@ -548,16 +516,15 @@ def bfs_levels(
 
     spark = pairs.sparkSession
     dist = spark.createDataFrame([(int(source), 0)], "n long, dist int")
-    frontier = dist.select("n")
-    # the two most recent level segments: in an undirected BFS a neighbor of
-    # a level-(r-1) node has level in {r-2, r-1, r} (adjacent levels differ
-    # by at most 1), so the already-seen filter only ever needs the LAST TWO
-    # levels — anti-joining the full reached set would shuffle O(V) rows per
-    # round where O(frontier) suffices; the saving grows with depth and scale
-    recent = [frontier]
-    for r in range(1, iterations + 1):
+    # state: dist and the two most recent level segments (the last is the
+    # frontier): a neighbor of a level-(r-1) node has level in {r-2, r-1, r},
+    # so the already-seen filter only ever needs the LAST TWO levels —
+    # anti-joining the full reached set would shuffle O(V) rows per round
+    # where O(frontier) suffices; the saving grows with depth and scale
+    def step(state: "tuple[DataFrame, list]", r: int) -> "tuple[tuple[DataFrame, list], bool]":
+        dist, recent = state
         cand = (
-            frontier.join(edges, frontier.n == edges.u)
+            recent[-1].join(edges, recent[-1].n == edges.u)
             .select(F.col("v").alias("n"))
             .distinct()
         )
@@ -571,17 +538,19 @@ def bfs_levels(
         # since exhausted rounds add no rows. Measured on
         # graph_diameter_double_sweep at sf0.1 (true ecc ≈ 3, fixed depth
         # 8): ~10 dead levels across the two sweeps skipped.
-        new, n_new = _ckpt_counted(
+        new, n_new = fixpoint.checkpoint_counted(
             cand.join(seen, "n", "left_anti")
-            .select("n", F.lit(r).cast("int").alias("dist"))
+            .select("n", F.lit(r + 1).cast("int").alias("dist"))
         )
+        if n_new == 0:
+            return state, True
         # dist stays a flat union of checkpointed level segments — depth
         # grows one union per level, cheap at any BFS depth
-        if n_new == 0:
-            return dist
-        dist = dist.unionByName(new)
-        frontier = new.select("n")
-        recent = [recent[-1], frontier]
+        return (dist.unionByName(new), [recent[-1], new.select("n")]), False
+
+    (dist, _), _ = fixpoint.fixpoint(
+        step, (dist, [dist.select("n")]), iterations, on_cap="return", what="bfs_levels iterations"
+    )
     return dist
 
 
@@ -615,21 +584,21 @@ def kcore(
 
     Output: (node, core_deg) — nodes in the ``rounds``-truncated k-core.
     """
-    a, b = F.col(a_col), F.col(b_col)
-    fwd, rev = F.struct(a.alias("u"), b.alias("v")), F.struct(b.alias("u"), a.alias("v"))
-    edges = pairs.select(F.inline(F.array(fwd, rev))).localCheckpoint(eager=False)
-    for _ in range(rounds):
+    edges = symmetrize(pairs, F.col(a_col), F.col(b_col)).localCheckpoint(eager=False)
+
+    def step(edges: DataFrame, _r: int) -> "tuple[DataFrame, bool]":
         deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         alive = deg.filter(F.col("deg") >= k).select("u")
-        seen = Observation()
-        edges, c = _ckpt_counted(
+        seen = Observation()  # the round's INPUT count, on the same job
+        out, c = fixpoint.checkpoint_counted(
             edges.observe(seen, F.count(F.lit(1)).alias("n"))
             .join(alive, "u", "left_semi")
             .join(alive.withColumnRenamed("u", "v"), "v", "left_semi")
         )
         # test c == 0 first: an empty side lets AQE prune the observed scan
-        if c == 0 or c == seen.get["n"]:
-            break
+        return out, c == 0 or c == seen.get["n"]
+
+    edges, _ = fixpoint.fixpoint(step, edges, rounds, on_cap="return", what="kcore rounds")
     return edges.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("core_deg")
     )
@@ -674,7 +643,7 @@ def ktruss(
             f"ktruss: k={k} < 3 is unsupported: triangle-free edges have no support row"
         )
     a, b = F.col(a_col), F.col(b_col)
-    und, n = _ckpt_counted(
+    und, n = fixpoint.checkpoint_counted(
         pairs.filter(a != b)
         .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
         .distinct()
@@ -693,11 +662,16 @@ def ktruss(
         ))))
         return credits.groupBy("u", "v").agg(F.count(F.lit(1)).alias("support"))
 
-    for _ in range(rounds):
-        kept, c = _ckpt_counted(support(und).filter(F.col("support") >= k - 2))
-        if c == n:
-            return kept
-        und, n = kept.select("u", "v"), c
+    def step(state: tuple, _r: int) -> "tuple[tuple, bool]":
+        und, n, _ = state
+        kept, c = fixpoint.checkpoint_counted(support(und).filter(F.col("support") >= k - 2))
+        return (kept.select("u", "v"), c, kept), c == n
+
+    (und, _, kept), done = fixpoint.fixpoint(
+        step, (und, n, None), rounds, on_cap="return", what="ktruss rounds"
+    )
+    if done:
+        return kept
     return und.join(support(und), ["u", "v"], "left").select(
         "u", "v", F.coalesce("support", F.lit(0).cast("long")).alias("support")
     )
@@ -844,9 +818,10 @@ def strongly_connected_components(
         .persist()
     )
     reach = e.localCheckpoint(eager=False)
-    delta = reach
-    for _ in range(max_rounds):
-        step = (
+
+    def step(state: "tuple[DataFrame, DataFrame]", _r: int) -> "tuple[tuple, bool]":
+        reach, delta = state
+        derived = (
             delta.withColumnRenamed("v", "m")
             .join(e.withColumnRenamed("u", "m"), "m")
             .select("u", "v")
@@ -856,15 +831,15 @@ def strongly_connected_components(
         # convergence probe rides the round's own materialization job as an
         # observation (house rule: one job per round, the count is not an
         # extra pass)
-        new, n_new = _ckpt_counted(step.join(reach, ["u", "v"], "left_anti"))
+        new, n_new = fixpoint.checkpoint_counted(derived.join(reach, ["u", "v"], "left_anti"))
         if n_new == 0:
-            break
-        reach = reach.unionByName(new).localCheckpoint(eager=False)
-        delta = new
-    else:
-        raise MilanRoundCapError(
-            f"strongly_connected_components: closure still growing after max_rounds={max_rounds}"
-        )
+            return state, True
+        return (reach.unionByName(new).localCheckpoint(eager=False), new), False
+
+    (reach, _), _ = fixpoint.fixpoint(
+        step, (reach, reach), max_rounds, on_cap="raise",
+        what="strongly_connected_components max_rounds",
+    )
     nodes = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
@@ -1016,9 +991,8 @@ def maximal_independent_set(
     raise the bound; converged runs have no NULLs).
     """
     big = 1 << 31
-    sym = edges.select(F.col(a_col).cast("long").alias("u"), F.col(b_col).cast("long").alias("v"))
     e0 = (
-        sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        symmetrize(edges, F.col(a_col).cast("long"), F.col(b_col).cast("long"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
@@ -1026,7 +1000,9 @@ def maximal_independent_set(
     cur_e = e0.localCheckpoint(eager=False)
     alive = nodes.localCheckpoint(eager=False)
     mis_frames = []
-    for r in range(rounds):
+
+    def step(state: "tuple[DataFrame, DataFrame]", r: int) -> "tuple[tuple, bool]":
+        alive, cur_e = state
         pr = (
             (F.col("node") * F.lit(hash_a) + F.lit(r * hash_b)) % F.lit(hash_m)
         ) * F.lit(big) + F.col("node")
@@ -1049,15 +1025,18 @@ def maximal_independent_set(
         removed = cand.unionByName(dominated).distinct()
         # the exhausted-alive-set probe rides the materialization job as an
         # observation (no separate isEmpty pass)
-        alive, n_alive = _ckpt_counted(alive.join(removed, "node", "left_anti"))
+        alive, n_alive = fixpoint.checkpoint_counted(alive.join(removed, "node", "left_anti"))
         cur_e = (
             cur_e.join(alive.select(F.col("node").alias("u")), "u", "left_semi")
             .join(alive.select(F.col("node").alias("v")), "v", "left_semi")
             .select("u", "v")
             .localCheckpoint(eager=False)
         )
-        if n_alive == 0:
-            break
+        return (alive, cur_e), n_alive == 0
+
+    (alive, _), _ = fixpoint.fixpoint(
+        step, (alive, cur_e), rounds, on_cap="return", what="maximal_independent_set rounds"
+    )
     mis = mis_frames[0]
     for frame in mis_frames[1:]:
         mis = mis.unionByName(frame)

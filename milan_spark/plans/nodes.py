@@ -28,6 +28,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from milan_spark import fixpoint
+from milan_spark.streaming import _conf_scope
+
 _ids = itertools.count()
 
 
@@ -135,13 +138,18 @@ def compile_node(
         """Milan Cycle as an IR node (StreamExpressions.scala:141; the Flink
         compiler builds a feedback edge from the same serialized node,
         GeneratorContext.scala:122-130,349-357). Batch realization = the
-        driver-side fixpoint ``Stream.iterate`` uses: inputs[0] is the
+        driver-side fixpoint of ``milan_spark.fixpoint``: inputs[0] is the
         initial state, inputs[1] the body plan containing one ``cycle_ref``
         leaf that binds to the previous iteration's result. Subtrees that do
         NOT depend on the cycle_ref (edge tables, lookup sides) compile once
         through the outer memo — wrap them in a ``cache`` node to persist
         them across iterations. ``localCheckpoint`` truncates lineage every
-        round so the analyzed plan stays O(body), not O(iterations·body)."""
+        round so the analyzed plan stays O(body), not O(iterations·body).
+
+        ``max_iterations`` is a truncation, not a cap error: a cycle whose
+        ``converge`` rule has not held by then returns its last round's
+        state, which is what oracles that replay the same round count
+        (``kcore_cycle_ir``, ``bfs_levels_cycle_ir``) compare against."""
         if len(n.inputs) != 2:
             raise ValueError(
                 f"cycle {n.node_id} needs exactly [initial, body] inputs"
@@ -179,29 +187,17 @@ def compile_node(
                 f"cycle {n.node_id}: unknown planner={planner!r} "
                 "(supported: 'adaptive', 'static')"
             )
-        init = compile_(n.inputs[0])
-        body = n.inputs[1]
-        cur = init
-        prev_count = None
+        # physical planning happens inside localCheckpoint (toRdd), so a conf
+        # scope around it pins the round's plan while leaving the rest of the
+        # session adaptive
+        confs = {"spark.sql.adaptive.enabled": "false"} if planner == "static" else {}
 
-        def round_checkpoint(df: DataFrame, eager: bool) -> DataFrame:
-            if planner == "static":
-                # physical planning happens inside localCheckpoint (toRdd),
-                # so scoping the conf here pins the round's plan while
-                # leaving the rest of the session adaptive
-                old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-                try:
-                    return df.localCheckpoint(eager=eager)
-                finally:
-                    spark.conf.set("spark.sql.adaptive.enabled", old)
-            return df.localCheckpoint(eager=eager)
-        for _ in range(int(n.params["max_iterations"])):
+        def step(state: "tuple[DataFrame, int | None]", _r: int) -> "tuple[tuple, bool]":
             it_memo: dict[str, DataFrame] = {}
 
             def cbody(m: Node) -> DataFrame:
                 if m.op == "cycle_ref":
-                    return cur
+                    return state[0]
                 if not _contains_cycle_ref(m):
                     return compile_(m)  # shared subtree: outer memo, one compile
                 if m.node_id in it_memo:
@@ -216,30 +212,27 @@ def compile_node(
                 it_memo[m.node_id] = df
                 return df
 
-            out = cbody(body)
-            if converge == "unchanged_count":
+            out = cbody(n.inputs[1])
+            with _conf_scope(spark, confs):
+                if converge is None:
+                    # fixed-iteration cycle: no per-round driver decision, so
+                    # no per-round barrier — the lazy checkpoint still
+                    # truncates lineage (each round's plan is O(body)) and
+                    # still computes each round exactly once (the checkpointed
+                    # RDD caches on first access), but the result-stage
+                    # scan+cache job that an eager checkpoint runs per round
+                    # is deferred into the consumer's single final action
+                    return (out.localCheckpoint(eager=False), None), False
                 # eager round: the driver must see the count to decide
-                # whether to continue, but the count rides the round's own
-                # materialization job as an observation (one job per round)
-                from pyspark.sql import Observation
+                # whether to continue; the count rides the round's own
+                # materialization job (one job per round)
+                nxt, c = fixpoint.checkpoint_counted(out)
+            return (nxt, c), c == state[1]
 
-                obs = Observation()
-                cur = round_checkpoint(
-                    out.observe(obs, F.count(F.lit(1)).alias("n")), eager=True
-                )
-                c = int(obs.get["n"] or 0)
-                if c == prev_count:
-                    break
-                prev_count = c
-            else:
-                # fixed-iteration cycle: no per-round driver decision, so no
-                # per-round barrier — the lazy checkpoint still truncates
-                # lineage (each round's plan is O(body)) and still computes
-                # each round exactly once (the checkpointed RDD caches on
-                # first access), but the result-stage scan+cache job that an
-                # eager checkpoint runs per round is deferred into the
-                # consumer's single final action
-                cur = round_checkpoint(out, eager=False)
+        (cur, _), _ = fixpoint.fixpoint(
+            step, (compile_(n.inputs[0]), None), int(n.params["max_iterations"]),
+            on_cap="return", what=f"cycle {n.node_id} max_iterations",
+        )
         return cur
 
     return compile_(node)

@@ -30,6 +30,7 @@ from milan_spark.errors import (
     require_columns,
     require_temporal,
 )
+from milan_spark.fixpoint import fixpoint
 from milan_spark.plans.nodes import Node
 from milan_spark.session import SEQ_COL
 
@@ -670,7 +671,10 @@ class Stream:
         [initial, body-with-cycle_ref] — so the program JSON round-trips and
         recompiles on the batch backend (the reference serializes cycles in
         its IR too, StreamExpressions.scala:141); a convergence predicate or
-        an opaque body keeps today's eager-only behavior."""
+        an opaque body keeps today's eager-only behavior.
+
+        Rounds run through ``milan_spark.fixpoint``; a ``converged`` that never
+        holds within ``max_iterations`` rounds raises :class:`MilanRoundCapError`."""
         node = Node("cycle", serializable=False, inputs=[self.node])
         if converged is None and self.node.is_serializable:
             # symbolic pass: run the body once against a cycle_ref-rooted
@@ -692,14 +696,17 @@ class Stream:
         # defers the per-round result-stage job into the consumer's single
         # final action
         eager = converged is not None
-        cur = self
-        for _ in range(max_iterations):
+
+        def step(cur: "Stream", _r: int) -> "tuple[Stream, bool]":
             nxt = body(cur)
             nxt = Stream(nxt.df.localCheckpoint(eager=eager), nxt.node)
-            if converged is not None and converged(cur.df, nxt.df):
-                return Stream(nxt.df, node)
-            cur = nxt
-        return Stream(cur.df, node)
+            return nxt, eager and converged(cur.df, nxt.df)
+
+        out, _ = fixpoint(
+            step, self, max_iterations, on_cap="raise" if eager else "return",
+            what="Stream.iterate max_iterations",
+        )
+        return Stream(out.df, node)
 
     # --- sinks (SURVEY §2.1) -----------------------------------------------
 

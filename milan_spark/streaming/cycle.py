@@ -32,17 +32,14 @@ concentrates on the driver.
 
 from __future__ import annotations
 
-import os
 import tempfile
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from milan_spark import fixpoint
+from milan_spark.errors import MilanRoundCapError
 from milan_spark.streaming import _start
-
-
-class CycleDiverged(RuntimeError):
-    pass
 
 
 def streaming_cycle(
@@ -67,9 +64,10 @@ def streaming_cycle(
     before writing (null-safe comparison, so NULL-bearing records dedupe
     too), so monotone bodies terminate by construction.
 
-    Note: :class:`CycleDiverged` is raised inside ``foreachBatch``, so Spark
-    surfaces it to the caller wrapped in a ``StreamingQueryException`` —
-    catch that and inspect its cause/message for ``CycleDiverged``.
+    Note: a hop past ``max_batches`` raises :class:`MilanRoundCapError` inside
+    ``foreachBatch``, so Spark surfaces it to the caller wrapped in a
+    ``StreamingQueryException`` — catch that and inspect its message for
+    ``max_batches``.
 
     ``stats``, if given, is filled in place with ``batches`` (hops run),
     ``history_file_reads`` (times the feedback dir was scanned for dedup —
@@ -112,7 +110,7 @@ def streaming_cycle(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batches["n"] >= max_batches:
-            raise CycleDiverged(
+            raise MilanRoundCapError(
                 f"streaming_cycle exceeded max_batches={max_batches}; "
                 "body is not converging"
             )
@@ -129,12 +127,12 @@ def streaming_cycle(
                 eq = o[c].eqNullSafe(h[c])
                 cond = eq if cond is None else (cond & eq)
             out = o.join(h, on=cond, how="left_anti").distinct()
-        # localCheckpoint decides emptiness and materializes BEFORE the write
-        # starts appending (reading the history while appending to it would
-        # race); an empty write would still create a part file — a "new file"
-        # that would re-trigger the source forever
-        rows = out.localCheckpoint(eager=True)
-        if rows.limit(1).count() > 0:
+        # one counted checkpoint decides emptiness and materializes BEFORE the
+        # write starts appending (reading the history while appending to it
+        # would race); an empty write would still create a part file — a "new
+        # file" that would re-trigger the source forever
+        rows, n_rows = fixpoint.checkpoint_counted(out)
+        if n_rows > 0:
             rows.write.mode("append").parquet(feedback_dir)
             if dedupe:
                 deltas.append(rows)
@@ -178,11 +176,10 @@ def streaming_min_label_components(
     (node, label) facts, so the loop drains once no smaller label can reach
     any node. Final answer = min label seen per node.
     """
-    from pyspark.sql import functions as F
+    from milan_spark.operators.graph import symmetrize
 
-    fwd = edges.select(F.col("u").alias("u"), F.col("v").alias("v"))
-    sym = fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.localCheckpoint(eager=True)  # static side, reused every hop
+    # static side, reused every hop
+    sym = symmetrize(edges, F.col("u"), F.col("v")).localCheckpoint(eager=True)
     seed = (
         sym.select(F.col("u").alias("node"))
         .distinct()

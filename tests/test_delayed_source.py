@@ -7,6 +7,7 @@ from __future__ import annotations
 import tempfile
 
 from milan_spark.sources import delayed_list_source
+from milan_spark.streaming import await_finished
 
 
 def test_delayed_segments_arrive_as_ordered_batches(spark, tmp_path):
@@ -36,7 +37,7 @@ def test_delayed_segments_arrive_as_ordered_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_finished(q, 120)
 
     batches = [rows for _bid, rows in sorted(seen)]
     assert batches == [

@@ -73,6 +73,11 @@ def test_cc_round_cap_raises_on_long_path(spark):
         connected_components(df, max_iterations=3)
     with pytest.raises(MilanRoundCapError, match="max_rounds=1"):
         connected_components_star(df, max_rounds=1)
+    # Stream.iterate whose ``converged`` never holds
+    from milan_spark.stream import Stream
+
+    with pytest.raises(MilanRoundCapError, match="max_iterations=2"):
+        Stream.from_dataframe(df).iterate(lambda s: s, 2, converged=lambda old, new: False)
     # enough rounds: both reach the fixpoint and agree
     lab = {r["node"]: r["label"] for r in connected_components_star(df).collect()}
     assert lab == {r["node"]: r["label"] for r in connected_components(df).collect()}

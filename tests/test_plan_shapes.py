@@ -666,23 +666,36 @@ def test_read_pruned_pushes_residual_filter_to_scan(spark, tmp_path):
 
 def test_dump_plans_captures_each_materialized_round(spark):
     """tools/dump_plans.py records the executed plan of every frame
-    ``_ckpt_counted`` materializes (an iterative operator's final plan is a
-    checkpoint scan), and leaves the engine unwrapped afterwards."""
+    ``fixpoint.checkpoint_counted`` materializes (an iterative operator's
+    final plan is a checkpoint scan), graph operators and counted cycle-IR
+    rounds alike, and leaves the engine unwrapped afterwards."""
     import importlib.util
     import os
 
+    from milan_spark import fixpoint
     from milan_spark.operators import graph
+    from milan_spark.plans.nodes import compile_node
+    from tests.test_cycle_ir import _growing_cycle
 
     path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "dump_plans.py")
     spec = importlib.util.spec_from_file_location("dump_plans", path)
     tool = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(tool)
-    real = graph._ckpt_counted
+    real = fixpoint.checkpoint_counted
     k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     with tool.materialized_plans() as rounds:
         graph.ktruss(spark.createDataFrame(k4, "src long, dst long"), k=4)
-    assert graph._ckpt_counted is real
+    assert fixpoint.checkpoint_counted is real
     assert len(rounds) == 2  # the canonical edge set, then the no-op round 1
     assert all("== Final Plan ==" in p for p in rounds)
     nodes, exchanges = tool.tree_counts(rounds[1])
     assert nodes > exchanges > 0
+
+    # a converge="unchanged_count" cycle counts every round it runs: {1} grows
+    # to {1..5} in 4 rounds, and round 5 sees the count unchanged
+    with tool.materialized_plans() as rounds:
+        out = compile_node(_growing_cycle(25, converge="unchanged_count"), spark)
+    assert fixpoint.checkpoint_counted is real
+    assert sorted(r["n"] for r in out.collect()) == [1, 2, 3, 4, 5]
+    assert len(rounds) == 5
+    assert all("== Final Plan ==" in p for p in rounds)

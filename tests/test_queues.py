@@ -27,7 +27,7 @@ from milan_spark.sources.queues import (
     read_queue_batch,
     read_table_state,
 )
-from milan_spark.streaming import run_to_memory
+from milan_spark.streaming import await_finished, run_to_memory
 
 EV = "/root/testdata/sf0.001/events.parquet"
 
@@ -58,7 +58,7 @@ def test_sqs_roundtrip_stream_and_batch_replay(spark):
     q = local_queue("sqs_rt_")
     sink = SqsDataSink("s1", q)
     src = SqsDataSource(q, SCHEMA)
-    open_queue_sink(_purchases_stream(spark), sink.to_spec()).awaitTermination(120)
+    await_finished(open_queue_sink(_purchases_stream(spark), sink.to_spec()), 120)
 
     expected = sorted(
         tuple(r)
@@ -80,7 +80,7 @@ def test_sqs_roundtrip_stream_and_batch_replay(spark):
 def test_kinesis_emulation_honors_queue_limit_chunking(spark):
     q = local_queue("kin_lim_")
     sink = KinesisDataSink("k1", q, "us-east-1", queue_limit=5)
-    open_queue_sink(_purchases_stream(spark), sink.to_spec()).awaitTermination(120)
+    await_finished(open_queue_sink(_purchases_stream(spark), sink.to_spec()), 120)
     d = q[len("local:"):]
     files = sorted(f for f in os.listdir(d) if f.endswith(".json"))
     assert len(files) > 1  # chunked: the bounded producer buffer
@@ -104,9 +104,9 @@ def test_dynamodb_table_sink_state_and_change_stream(spark):
         .agg(F.max_by(F.struct("event_id", "cents"), F.col("event_id")).alias("r"))
         .select("user_id", "r.event_id", "r.cents")
     )
-    open_queue_sink(
-        s, sink.to_spec(), output_mode="complete", available_now=True
-    ).awaitTermination(120)
+    await_finished(
+        open_queue_sink(s, sink.to_spec(), output_mode="complete", available_now=True), 120
+    )
 
     state = read_table_state(spark, t)
     expected = (
@@ -231,7 +231,7 @@ def test_queue_consumer_checkpoint_recovery(spark, tmp_path):
 
     def run_once():
         sdf = open_queue_source(spark, spec)
-        file_sink(sdf, out, checkpoint=ckpt).awaitTermination(120)
+        await_finished(file_sink(sdf, out, checkpoint=ckpt), 120)
 
     run_once()
     assert spark.read.parquet(out).count() == 2

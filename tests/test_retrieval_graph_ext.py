@@ -268,16 +268,17 @@ def test_ktruss_round_plans_have_one_branch(spark, monkeypatch):
     and triangles come from in-row explodes, not self-unions, so a round's
     optimized plan has no Union and reads the edge checkpoint at most 6
     times (3 per adjacency side)."""
+    from milan_spark import fixpoint
     from milan_spark.operators import graph
 
     plans = []
-    real = graph._ckpt_counted
+    real = fixpoint.checkpoint_counted
 
     def spy(df):
         plans.append(df._jdf.queryExecution().optimizedPlan().toString())
         return real(df)
 
-    monkeypatch.setattr(graph, "_ckpt_counted", spy)
+    monkeypatch.setattr(fixpoint, "checkpoint_counted", spy)
     k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     pend = [(4, 5), (4, 6), (5, 6)]
     out = graph.ktruss(spark.createDataFrame(k4 + pend, "src long, dst long"), k=4, rounds=2)

@@ -19,7 +19,13 @@ from pyspark.sql import functions as F
 from milan_spark.operators import joins as batch_joins
 from milan_spark.operators import scans as batch_scans
 from milan_spark.sources import table
-from milan_spark.streaming import file_sink, foreach_batch_sink, run_to_memory, windowed_agg
+from milan_spark.streaming import (
+    await_finished,
+    file_sink,
+    foreach_batch_sink,
+    run_to_memory,
+    windowed_agg,
+)
 from milan_spark.streaming import stateful
 
 LEFT_SCHEMA = "id long, k long, v double, __seq long"
@@ -255,7 +261,7 @@ def test_file_sink_roundtrip(spark, tmp_path):
         str(tmp_path / "out"),
         checkpoint=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(300)
+    await_finished(q, 300)
     got = spark.read.parquet(str(tmp_path / "out"))
     assert got.count() == ev.filter(F.col("event_type") == "purchase").count()
 
@@ -266,7 +272,7 @@ def test_foreach_batch_sink(spark, tmp_path):
     sdf = spark.readStream.schema(ev.schema).parquet(str(tmp_path / "in"))
     seen = []
     q = foreach_batch_sink(sdf, lambda df, epoch: seen.append(df.count()))
-    q.awaitTermination(300)
+    await_finished(q, 300)
     assert sum(seen) == 50
 
 

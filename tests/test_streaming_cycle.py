@@ -7,8 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from milan_spark.errors import MilanRoundCapError
 from milan_spark.streaming.cycle import (
-    CycleDiverged,
     streaming_cycle,
     streaming_min_label_components,
 )
@@ -41,7 +41,7 @@ def test_streaming_cycle_diverging_body_trips_fuse(spark, tmp_path):
         streaming_cycle(
             spark, seed, body, feedback_dir=str(tmp_path / "fb"), max_batches=5
         )
-    assert "max_batches" in str(ei.value) or isinstance(ei.value, CycleDiverged)
+    assert "max_batches" in str(ei.value) or isinstance(ei.value, MilanRoundCapError)
 
 
 @pytest.mark.slow

@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from milan_spark.operators import scans as batch_scans
-from milan_spark.streaming import file_sink
+from milan_spark.streaming import await_finished, file_sink
 from milan_spark.streaming import stateful
 
 SCHEMA = "k long, v long, __seq long"
@@ -49,7 +49,7 @@ def _run_once(spark, src, out, ckpt):
         sdf, _fold, initial_state=0, output_schema=OUT_SCHEMA, keys=["k"]
     )
     q = file_sink(scanned, str(out), checkpoint=str(ckpt))
-    q.awaitTermination(300)
+    await_finished(q, 300)
 
 
 def test_restart_resumes_state_no_reprocessing(spark, tmp_path):

@@ -7,9 +7,10 @@ import os
 import tempfile
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
-from milan_spark.streaming import upsert_sink
+from milan_spark.streaming import await_finished, upsert_sink
 
 
 def _stage_batches(spark, batches):
@@ -45,7 +46,7 @@ def test_upsert_sink_matches_sequential_merge(spark):
     )
     out = tempfile.mkdtemp(prefix="ups_out_") + "/t"
     q = upsert_sink(sdf, out, ["k"])
-    q.awaitTermination(120)
+    await_finished(q, 120)
     got = {(r.k, r.v) for r in spark.read.parquet(out).collect()}
     assert got == {(1, "A"), (2, "B"), (3, "c"), (4, "d")}
 
@@ -61,7 +62,7 @@ def test_upsert_sink_seq_resolves_in_batch_duplicates(spark):
     )
     out = tempfile.mkdtemp(prefix="ups_out_") + "/t"
     q = upsert_sink(sdf, out, ["k"], seq_col="seq")
-    q.awaitTermination(120)
+    await_finished(q, 120)
     got = {(r.k, r.v) for r in spark.read.parquet(out).collect()}
     assert got == {(1, "y"), (2, "b")}
 
@@ -93,7 +94,7 @@ def test_upsert_sink_recovers_stranded_old_dir(spark):
         .parquet(stage)
     )
     q = upsert_sink(sdf, out, ["k"])
-    q.awaitTermination(120)
+    await_finished(q, 120)
     got = {(r.k, r.v) for r in spark.read.parquet(out).collect()}
     # key 1 survives from the stranded prior table; 2 is updated; 3 inserted
     assert got == {(1, "a"), (2, "B"), (3, "c")}
@@ -111,7 +112,7 @@ def test_upsert_sink_ambiguous_batch_raises(spark):
     )
     out = tempfile.mkdtemp(prefix="ups_out_") + "/t"
     q = upsert_sink(sdf, out, ["k"])
-    with pytest.raises(Exception):
-        q.awaitTermination(120)
-        if q.exception() is not None:
-            raise RuntimeError(q.exception().desc)
+    # the failed batch surfaces as the query's exception; a query still
+    # running at the deadline raises MilanStreamTimeoutError instead
+    with pytest.raises(StreamingQueryException):
+        await_finished(q, 120)

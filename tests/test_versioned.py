@@ -408,7 +408,7 @@ def test_stream_appends_tails_commits_exactly_once(spark, tbl, tmp_path):
         publish_appends,
         stream_appends,
     )
-    from milan_spark.streaming import file_sink
+    from milan_spark.streaming import await_finished, file_sink
 
     staging = str(tmp_path / "staging")
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
@@ -422,7 +422,7 @@ def test_stream_appends_tails_commits_exactly_once(spark, tbl, tmp_path):
 
     def run_once():
         q = file_sink(stream_appends(spark, tbl, staging), out, checkpoint=ckpt)
-        q.awaitTermination(300)
+        await_finished(q, 300)
 
     run_once()
     assert _snap(spark.read.parquet(out)) == [(1, "a"), (2, "b"), (3, "c")]

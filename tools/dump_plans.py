@@ -8,12 +8,12 @@ Iterative/multi-action operators (cycle fixpoints, persisted indexes) execute
 their rounds while BUILDING the frame; the dumped plan is the final frame's —
 still the artifact that shows retained partitioning/exchange placement.
 
-A graph operator that materializes its rounds through
-``operators.graph._ckpt_counted`` (k-truss, k-core, BFS, CC-star, ...) leaves
-only a checkpoint scan in its final plan, so the dump also lists the executed
-(adaptive final) plan of every frame ``_ckpt_counted`` materialized while the
-query was built, each headed by its tree node and exchange counts. The tool
-wraps ``_ckpt_counted`` for the duration of the build; the engine is unchanged.
+An operator that materializes its rounds through ``fixpoint.checkpoint_counted``
+(k-truss, BFS, CC-star, ``converge`` cycle-IR plans, ...) leaves only a
+checkpoint scan in its final plan, so the dump also lists the executed
+(adaptive final) plan of every frame ``checkpoint_counted`` materialized while
+the query was built, each headed by its tree node and exchange counts. The tool
+wraps it for the duration of the build; the engine is unchanged.
 
 A query that ran a streaming query through ``streaming.run_to_memory`` returns
 its memory table, whose plan says nothing about the stream; for those the dump
@@ -71,12 +71,12 @@ def tree_counts(plan: str) -> tuple[int, int]:
 @contextmanager
 def materialized_plans():
     """Yield a list that collects, in order, the formatted executed plan of
-    every frame ``operators.graph._ckpt_counted`` materializes inside the
+    every frame ``fixpoint.checkpoint_counted`` materializes inside the
     block."""
-    from milan_spark.operators import graph
+    from milan_spark import fixpoint
 
     plans: list[str] = []
-    real_ckpt = graph._ckpt_counted
+    real_ckpt = fixpoint.checkpoint_counted
 
     def ckpt(df):
         cls = type(df)  # the concrete (classic) DataFrame class
@@ -93,11 +93,11 @@ def materialized_plans():
         finally:
             cls.localCheckpoint = real_lc
 
-    graph._ckpt_counted = ckpt
+    fixpoint.checkpoint_counted = ckpt
     try:
         yield plans
     finally:
-        graph._ckpt_counted = real_ckpt
+        fixpoint.checkpoint_counted = real_ckpt
 
 
 def main() -> None:
@@ -131,7 +131,7 @@ def main() -> None:
             for i, plan in enumerate(rounds, 1):
                 nodes, exchanges = tree_counts(plan)
                 f.write(
-                    f"\n# materialized frame {i} of {len(rounds)} (_ckpt_counted): "
+                    f"\n# materialized frame {i} of {len(rounds)} (checkpoint_counted): "
                     f"{nodes} nodes, {exchanges} exchanges\n"
                 )
                 f.write(plan.replace(data_parent, ""))
