@@ -49,9 +49,7 @@ def _warm_streaming_child(sf_dir: str, names: list[str]) -> None:
                 samples.append(round(_t.perf_counter() - start, 4))
             release_cached(spark)
         if samples:
-            s = sorted(samples)
-            n = len(s)
-            out[name] = s[n // 2] if n % 2 else round((s[n // 2 - 1] + s[n // 2]) / 2, 4)
+            out[name] = round(statistics.median(samples), 4)
     print(json.dumps(out))
 
 

@@ -357,17 +357,15 @@ def left_windowed_agg_join(
     parsed = {alias: _parse_agg(e) for alias, e in aggs.items()}
     lcols = list(left.columns)
 
-    arg_types = {
-        alias: right.select(F.expr(inner).alias("x")).schema["x"].dataType
-        for alias, (_, inner) in parsed.items()
-    }
-    largs = [
-        F.lit(None).cast(arg_types[alias]).alias(f"__wj_{alias}") for alias in parsed
-    ]
     rargs = [
         (F.lit(1) if func == "count" and inner in ("*", "1") else F.expr(inner))
         .alias(f"__wj_{alias}")
         for alias, (func, inner) in parsed.items()
+    ]
+    arg_types = right.select(*rargs).schema
+    largs = [
+        F.lit(None).cast(arg_types[f"__wj_{alias}"].dataType).alias(f"__wj_{alias}")
+        for alias in parsed
     ]
     l = left.select(
         F.struct(*lcols).alias(_L),

@@ -57,6 +57,7 @@ from milan_spark.errors import MilanAnalysisError
 from milan_spark.expr import compile_expr, compile_projection
 from milan_spark.operators.joins import _prefixed
 from milan_spark.plans.nodes import Node, _resolve_function_ref
+from milan_spark.session import SEQ_COL
 
 _SOURCE_OPS = frozenset({"external_stream", "parquet_source", "file_source", "list_source"})
 
@@ -889,7 +890,8 @@ def compile_event(
             if key is not None and key in schemas:
                 return _schema_cols(schemas[key])
         if n.op == "list_source" and n.params.get("schema"):
-            return _schema_cols(n.params["schema"])
+            seq = [SEQ_COL] if n.params.get("with_seq") else []
+            return _schema_cols(n.params["schema"]) + seq
         raise MilanAnalysisError(
             f"{n.op} [{n.node_id}]: no schema provided for this entry; pass "
             "schemas={stream_id_or_node_id_or_path: [columns...]}"

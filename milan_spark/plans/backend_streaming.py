@@ -256,7 +256,7 @@ def _streaming_record_window(
     from the BATCH operator compiled against a zero-row frame, so both
     backends agree by construction.
     """
-    from pyspark.sql.types import DecimalType, StructType
+    from pyspark.sql.types import StructType
 
     from milan_spark.operators.windows import record_window
     from milan_spark.streaming import stateful
@@ -286,7 +286,6 @@ def _streaming_record_window(
         name for name in names
         if out_fields[name].simpleString() in ("bigint", "int", "smallint", "tinyint")
     }
-    dec_out = {name for name in names if isinstance(out_fields[name], DecimalType)}
     funcs = {name: parsed[name][0] for name in names}
 
     def _live(v) -> bool:
@@ -315,11 +314,9 @@ def _streaming_record_window(
             out[name] = agg_over(rows, name)
         return out
 
-    res = stateful.record_window_apply(
+    return stateful.record_window_apply(
         pre, n, fn, output_schema=out_schema, keys=keys, seq=seq
     )
-    del dec_out  # decimals ride through as exact Decimal objects
-    return res
 
 
 def _streaming_left_windowed_join(

@@ -14,9 +14,12 @@ expressions serialize to JSON and back. The single compiler target is a
 DataFrame — Catalyst replaces the reference's per-backend source codegen
 (``flink/generator/FlinkGenerator.scala:63-87``).
 
-Plans whose expressions are live Column/callable objects still execute (the
-Stream API compiles incrementally) but are marked non-serializable, mirroring
-the reference's split between portable IR and opaque ApplyFunction references.
+``_compile_op`` is the one per-op builder: ``compile_node``, the streaming
+backend's shared ops, plan validation and every ``Stream`` DSL method build an
+op's DataFrame through it. A node built from live Column/callable objects
+holds those values in its ``params`` and is marked non-serializable: it still
+compiles (``to_json`` refuses it), mirroring the reference's split between
+portable IR and opaque ApplyFunction references.
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ import json
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from milan_spark import fixpoint
 from milan_spark.streaming import _conf_scope
@@ -278,6 +281,12 @@ def _resolve_function_ref(ref: str, node_id: str = ""):
     return obj
 
 
+def _col(e: str | Column) -> Column:
+    """A SQL expression string parsed, or a live Column (non-serializable
+    nodes) as is."""
+    return F.expr(e) if isinstance(e, str) else e
+
+
 def _compile_op(n: Node, spark: SparkSession, ins: list[DataFrame]) -> DataFrame:
     p = n.params
     if n.op == "apply_function":
@@ -295,22 +304,24 @@ def _compile_op(n: Node, spark: SparkSession, ins: list[DataFrame]) -> DataFrame
 
         return file_source(spark, p["path"], fmt=p.get("fmt", "parquet"), options=p.get("options"))
     if n.op == "list_source":
-        return spark.createDataFrame(p["rows"], schema=p.get("schema"))
+        from milan_spark.sources import list_source
+
+        return list_source(spark, p["rows"], schema=p.get("schema"), with_seq=p.get("with_seq", False))
     if n.op == "filter":
         return ins[0].filter(p["condition"])
     if n.op == "map":
-        return ins[0].selectExpr(*p["exprs"])
+        return ins[0].select(*[_col(e) for e in p["exprs"]])
     if n.op == "add_fields":
         df = ins[0]
         for name, expr in p["fields"].items():
-            df = df.withColumn(name, F.expr(expr))
+            df = df.withColumn(name, _col(expr))
         return df
     if n.op == "to_field":
         df = ins[0]
         return df.select(F.struct(*df.columns).alias(p["name"]))
     if n.op == "aggregate":
         df = ins[0]
-        aggs = [F.expr(e).alias(a) for a, e in p["aggs"].items()]
+        aggs = [_col(e).alias(a) for a, e in p["aggs"].items()]
         if p.get("keys"):
             return df.groupBy(*[F.expr(k) for k in p["keys"]]).agg(*aggs)
         return df.groupBy().agg(*aggs)
@@ -324,7 +335,7 @@ def _compile_op(n: Node, spark: SparkSession, ins: list[DataFrame]) -> DataFrame
             p.get("slide", p["size"]),
             offset=p.get("offset"),
             keys=p.get("keys", []),
-            aggs=[F.expr(e).alias(a) for a, e in p["aggs"].items()],
+            aggs=[_col(e).alias(a) for a, e in p["aggs"].items()],
         )
     if n.op == "session_window_aggregate":
         from milan_spark.operators.windows import session_window_agg
@@ -334,7 +345,7 @@ def _compile_op(n: Node, spark: SparkSession, ins: list[DataFrame]) -> DataFrame
             p["ts"],
             p["gap"],
             keys=p.get("keys", []),
-            aggs=[F.expr(e).alias(a) for a, e in p["aggs"].items()],
+            aggs=[_col(e).alias(a) for a, e in p["aggs"].items()],
         )
     if n.op == "record_window":
         from milan_spark.operators.windows import record_window
@@ -342,7 +353,7 @@ def _compile_op(n: Node, spark: SparkSession, ins: list[DataFrame]) -> DataFrame
         return record_window(
             ins[0],
             p["n"],
-            {a: F.expr(e) for a, e in p["aggs"].items()},
+            {a: _col(e) for a, e in p["aggs"].items()},
             keys=p.get("keys", []),
             seq=p.get("seq", "__seq"),
         )
@@ -354,10 +365,10 @@ def _compile_op(n: Node, spark: SparkSession, ins: list[DataFrame]) -> DataFrame
         return ins[0].exceptAll(ins[1]).dropDuplicates()
     if n.op in ("rollup", "cube"):
         grouped = getattr(ins[0], n.op)(*p["keys"])
-        return grouped.agg(*[F.expr(e).alias(a) for a, e in p.get("aggs", {}).items()])
+        return grouped.agg(*[_col(e).alias(a) for a, e in p.get("aggs", {}).items()])
     if n.op == "grouping_sets":
         grouped = ins[0].groupingSets([list(s) for s in p["sets"]], *p["keys"])
-        return grouped.agg(*[F.expr(e).alias(a) for a, e in p.get("aggs", {}).items()])
+        return grouped.agg(*[_col(e).alias(a) for a, e in p.get("aggs", {}).items()])
     if n.op in ("left_enrichment_join", "full_enrichment_join", "left_inner_enrichment_join"):
         from milan_spark.operators import joins as J
 
@@ -369,8 +380,9 @@ def _compile_op(n: Node, spark: SparkSession, ins: list[DataFrame]) -> DataFrame
             right_seq=p.get("right_seq", "__seq"),
             right_prefix=p.get("right_prefix", "r_"),
         )
-        if n.op != "left_inner_enrichment_join" and p.get("residual"):
-            kwargs["residual"] = lambda l, r: F.expr(p["residual"])
+        res = p.get("residual")
+        if n.op != "left_inner_enrichment_join" and res:
+            kwargs["residual"] = res if callable(res) else lambda l, r: F.expr(res)
         return fn(ins[0], ins[1], **kwargs)
     if n.op == "relational_join":
         # One node, both backends. Optional params for the stream-stream
@@ -536,6 +548,6 @@ def _compile_op(n: Node, spark: SparkSession, ins: list[DataFrame]) -> DataFrame
     if n.op == "order_limit":
         df = ins[0]
         if p.get("order"):
-            df = df.orderBy(*[F.expr(e) for e in p["order"]])
-        return df.limit(p["limit"]) if p.get("limit") else df
+            df = df.orderBy(*[_col(e) for e in p["order"]])
+        return df if p.get("limit") is None else df.limit(p["limit"])
     raise ValueError(f"unknown op: {n.op}")

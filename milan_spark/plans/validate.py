@@ -17,11 +17,12 @@ schema (the engine's TypeDescriptor table).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructType
 from pyspark.sql.utils import AnalysisException
 
 from milan_spark.errors import MilanAnalysisError, _condense
 from milan_spark.plans.nodes import Node, _compile_op
+from milan_spark.session import SEQ_COL
 
 
 def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
@@ -41,8 +42,11 @@ def _source_schema(n: Node, spark: SparkSession) -> StructType:
         return reader.load(p["path"]).schema
     if n.op == "list_source":
         if p.get("schema"):
-            return StructType.fromDDL(p["schema"])
-        return spark.createDataFrame(p["rows"]).schema
+            schema = StructType.fromDDL(p["schema"])
+        else:
+            schema = spark.createDataFrame(p["rows"]).schema
+        # a fresh StructType either way, so add() mutates no cached schema
+        return schema.add(SEQ_COL, LongType(), False) if p.get("with_seq") else schema
     raise MilanAnalysisError(f"{n.op} [{n.node_id}]: not a source node")
 
 

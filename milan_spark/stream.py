@@ -14,8 +14,15 @@ Where Milan captures lambdas with Scala macros (lang/internal/
 StreamMacros.scala:31-276), this DSL takes Spark SQL expression strings (the
 portable, JSON-serializable path — see milan_spark.plans) or live Column
 objects / Python callables (the opaque ApplyFunction path). Every operation
-records a logical plan Node and compiles incrementally to a DataFrame;
-Catalyst owns optimization.
+records a logical plan Node and builds its DataFrame from that node through
+the plan compiler's one per-op builder (``plans.nodes._compile_op``), so the
+eagerly composed frame and a recompiled plan cannot drift apart. A node
+built from live Columns or callables holds them in its params and stays
+non-serializable. Only the forms the IR has no op for (a callable ``scan``,
+Column-aggregate ``left_windowed_join``, ``top_k_per_group``, grouped and
+window-apply UDFs, ``with_seq()``, callable ``apply_function``) and
+``GroupedStream.ranked`` (its ``grouped_rank`` node is logical-only) build
+their frame here directly. Catalyst owns optimization.
 """
 
 from __future__ import annotations
@@ -31,7 +38,7 @@ from milan_spark.errors import (
     require_temporal,
 )
 from milan_spark.fixpoint import fixpoint
-from milan_spark.plans.nodes import Node
+from milan_spark.plans.nodes import Node, _compile_op, compile_node
 from milan_spark.session import SEQ_COL
 
 
@@ -39,10 +46,18 @@ def _is_str(x) -> bool:
     return isinstance(x, str)
 
 
+def _all_str(xs) -> bool:
+    return all(_is_str(x) for x in xs)
+
+
 def _join_keys(on, left_on, right_on) -> tuple[list, list]:
     lo = [on] if isinstance(on, str) else list(on or left_on)
     ro = [on] if isinstance(on, str) else list(on or right_on)
     return lo, ro
+
+
+def _compiled(node: Node, spark: SparkSession, inputs: Sequence["Stream"] = ()) -> "Stream":
+    return Stream(_compile_op(node, spark, [s.df for s in inputs]), node)
 
 
 class Stream:
@@ -53,37 +68,29 @@ class Stream:
         self.node = node or Node("opaque_source", serializable=False)
         self.name = name or self.node.node_id
 
+    def _then(self, op: str, params: dict, *others: "Stream", serializable: bool = True) -> "Stream":
+        """Record ``op`` over this stream (and ``others``) and build its frame
+        from the recorded node."""
+        node = Node(op, params, [self.node, *(o.node for o in others)], serializable=serializable)
+        return _compiled(node, self.df.sparkSession, [self, *others])
+
     # --- sources (SURVEY §2.1) ---------------------------------------------
 
     @staticmethod
     def from_parquet(spark: SparkSession, path: str) -> "Stream":
-        from milan_spark.sources import ensure_read_conf
-
-        return Stream(ensure_read_conf(spark).read.parquet(path), Node("parquet_source", {"path": path}))
+        return _compiled(Node("parquet_source", {"path": path}), spark)
 
     @staticmethod
     def from_file(spark: SparkSession, path: str, fmt: str = "parquet", options: dict | None = None) -> "Stream":
-        from milan_spark.sources import file_source
-
-        return Stream(
-            file_source(spark, path, fmt=fmt, options=options),
-            Node("file_source", {"path": path, "fmt": fmt, "options": options or {}}),
-        )
+        return _compiled(Node("file_source", {"path": path, "fmt": fmt, "options": options or {}}), spark)
 
     @staticmethod
     def from_list(spark: SparkSession, rows: Iterable, schema=None, with_seq: bool = False) -> "Stream":
-        from milan_spark.sources import list_source
-
-        rows = list(rows)
-        df = list_source(spark, rows, schema=schema, with_seq=with_seq)
-        serializable = isinstance(schema, (str, type(None)))
-        return Stream(
-            df,
-            Node(
-                "list_source",
-                {"rows": rows if serializable else None, "schema": schema if isinstance(schema, str) else None},
-                serializable=serializable,
-            ),
+        params = {"rows": list(rows), "schema": schema}
+        if with_seq:
+            params["with_seq"] = True
+        return _compiled(
+            Node("list_source", params, serializable=isinstance(schema, (str, type(None)))), spark
         )
 
     @staticmethod
@@ -95,9 +102,7 @@ class Stream:
     def where(self, condition: str | Column) -> "Stream":
         """Milan Filter (lang/Stream.scala:155, StreamExpressions.scala:442)."""
         with analysis_scope("where", self.df.columns):
-            if _is_str(condition):
-                return Stream(self.df.filter(condition), Node("filter", {"condition": condition}, [self.node]))
-            return Stream(self.df.filter(condition), Node("filter", serializable=False, inputs=[self.node]))
+            return self._then("filter", {"condition": condition}, serializable=_is_str(condition))
 
     filter = where
 
@@ -105,33 +110,18 @@ class Stream:
         """Milan StreamMap / named-fields projection (lang/Stream.scala:164,
         lang/package.scala:8-31). String exprs may use ``expr AS name``."""
         with analysis_scope("map", self.df.columns):
-            if all(_is_str(e) for e in exprs):
-                return Stream(self.df.selectExpr(*exprs), Node("map", {"exprs": list(exprs)}, [self.node]))
-            return Stream(self.df.select(*exprs), Node("map", serializable=False, inputs=[self.node]))
+            return self._then("map", {"exprs": list(exprs)}, serializable=_all_str(exprs))
 
     select = map
 
     def add_fields(self, **fields: str | Column) -> "Stream":
         """Milan addFields (lang/Stream.scala:187)."""
-        df = self.df
-        serializable = all(_is_str(e) for e in fields.values())
         with analysis_scope("add_fields", self.df.columns):
-            for name, expr in fields.items():
-                df = df.withColumn(name, F.expr(expr) if _is_str(expr) else expr)
-        node = Node(
-            "add_fields",
-            {"fields": fields} if serializable else {},
-            [self.node],
-            serializable=serializable,
-        )
-        return Stream(df, node)
+            return self._then("add_fields", {"fields": fields}, serializable=_all_str(fields.values()))
 
     def to_field(self, name: str) -> "Stream":
         """Milan toField (lang/Stream.scala:55-65)."""
-        return Stream(
-            self.df.select(F.struct(*self.df.columns).alias(name)),
-            Node("to_field", {"name": name}, [self.node]),
-        )
+        return self._then("to_field", {"name": name})
 
     def apply_function(self, fn: Callable | str, return_type, *cols, alias: str = "result") -> "Stream":
         """Milan ApplyFunction UDF escape hatch (Expression.scala:407) as a
@@ -144,17 +134,11 @@ class Stream:
         the node serializes and both compilers re-resolve the function by
         name at compile time. ``return_type`` must then be a DDL string and
         ``cols`` column names."""
-        if _is_str(fn) and isinstance(return_type, str) and all(_is_str(c) for c in cols):
-            from milan_spark.plans.nodes import _resolve_function_ref
-
-            node = Node(
+        if _is_str(fn) and isinstance(return_type, str) and _all_str(cols):
+            return self._then(
                 "apply_function",
                 {"ref": fn, "return_type": return_type, "cols": list(cols), "alias": alias},
-                [self.node],
             )
-            resolved = _resolve_function_ref(fn, node.node_id)
-            udf = F.pandas_udf(resolved, return_type)
-            return Stream(self.df.withColumn(alias, udf(*[F.col(c) for c in cols])), node)
         udf = F.pandas_udf(fn, return_type)
         return Stream(
             self.df.withColumn(alias, udf(*[F.col(c) if _is_str(c) else c for c in cols])),
@@ -172,15 +156,9 @@ class Stream:
         if order_by is None:
             df = self.df.withColumn(SEQ_COL, F.monotonically_increasing_id())
             return Stream(df, Node("with_seq", serializable=False, inputs=[self.node]))
-        expr = F.expr(order_by) if _is_str(order_by) else order_by
-        df = self.df.withColumn(SEQ_COL, expr.cast("long"))
-        node = Node(
-            "add_fields",
-            {"fields": {SEQ_COL: f"CAST({order_by} AS LONG)"}} if _is_str(order_by) else {},
-            [self.node],
-            serializable=_is_str(order_by),
-        )
-        return Stream(df, node)
+        if _is_str(order_by):
+            return self.add_fields(**{SEQ_COL: f"CAST({order_by} AS LONG)"})
+        return self.add_fields(**{SEQ_COL: order_by.cast("long")})
 
     # --- grouping & windows (SURVEY §2.4, §2.5) ----------------------------
 
@@ -208,6 +186,21 @@ class Stream:
 
     # --- joins (SURVEY §2.3) -----------------------------------------------
 
+    def _enrichment_join(
+        self, op: str, what: str, other: "Stream", on, left_on, right_on,
+        left_seq: str, right_seq: str, right_prefix: str, residual=None,
+    ) -> "Stream":
+        lo, ro = _join_keys(on, left_on, right_on)
+        require_columns(f"{what} (left side)", self.df, lo + [left_seq])
+        require_columns(f"{what} (right side)", other.df, ro + [right_seq])
+        params = {
+            "left_on": lo, "right_on": ro, "left_seq": left_seq, "right_seq": right_seq,
+            "right_prefix": right_prefix,
+        }
+        if residual is not None:
+            params["residual"] = residual
+        return self._then(op, params, other, serializable=residual is None)
+
     def left_join(
         self,
         other: "Stream",
@@ -221,32 +214,10 @@ class Stream:
         right_seq: str = SEQ_COL,
     ) -> "Stream":
         """Milan LeftJoin — temporal left enrichment (doc/Milan Operations.md:31-39)."""
-        from milan_spark.operators.joins import left_enrichment_join
-
-        __lo, __ro = _join_keys(on, left_on, right_on)
-        require_columns("left_join (left side)", self.df, __lo + [left_seq])
-        require_columns("left_join (right side)", other.df, __ro + [right_seq])
-        df = left_enrichment_join(
-            self.df,
-            other.df,
-            on,
-            left_on=left_on,
-            right_on=right_on,
-            left_seq=left_seq,
-            right_seq=right_seq,
-            residual=residual,
-            right_prefix=right_prefix,
+        return self._enrichment_join(
+            "left_enrichment_join", "left_join", other, on, left_on, right_on,
+            left_seq, right_seq, right_prefix, residual,
         )
-        lo, ro = ([on] if isinstance(on, str) else list(on or left_on)), (
-            [on] if isinstance(on, str) else list(on or right_on)
-        )
-        node = Node(
-            "left_enrichment_join",
-            {"left_on": lo, "right_on": ro, "left_seq": left_seq, "right_seq": right_seq, "right_prefix": right_prefix},
-            [self.node, other.node],
-            serializable=residual is None,
-        )
-        return Stream(df, node)
 
     def full_join(
         self,
@@ -261,31 +232,10 @@ class Stream:
         right_seq: str = SEQ_COL,
     ) -> "Stream":
         """Milan FullJoin — symmetric enrichment (doc/Milan Operations.md:41-46)."""
-        from milan_spark.operators.joins import full_enrichment_join
-
-        __lo, __ro = _join_keys(on, left_on, right_on)
-        require_columns("full_join (left side)", self.df, __lo + [left_seq])
-        require_columns("full_join (right side)", other.df, __ro + [right_seq])
-        df = full_enrichment_join(
-            self.df,
-            other.df,
-            on,
-            left_on=left_on,
-            right_on=right_on,
-            left_seq=left_seq,
-            right_seq=right_seq,
-            residual=residual,
-            right_prefix=right_prefix,
+        return self._enrichment_join(
+            "full_enrichment_join", "full_join", other, on, left_on, right_on,
+            left_seq, right_seq, right_prefix, residual,
         )
-        lo = [on] if isinstance(on, str) else list(on or left_on)
-        ro = [on] if isinstance(on, str) else list(on or right_on)
-        node = Node(
-            "full_enrichment_join",
-            {"left_on": lo, "right_on": ro, "left_seq": left_seq, "right_seq": right_seq, "right_prefix": right_prefix},
-            [self.node, other.node],
-            serializable=residual is None,
-        )
-        return Stream(df, node)
 
     def left_inner_join(
         self,
@@ -299,37 +249,17 @@ class Stream:
         right_seq: str = SEQ_COL,
     ) -> "Stream":
         """Milan LeftInnerJoin — buffered enrichment (doc/Milan Operations.md:48-51)."""
-        from milan_spark.operators.joins import left_inner_enrichment_join
-
-        __lo, __ro = _join_keys(on, left_on, right_on)
-        require_columns("left_inner_join (left side)", self.df, __lo + [left_seq])
-        require_columns("left_inner_join (right side)", other.df, __ro + [right_seq])
-        df = left_inner_enrichment_join(
-            self.df,
-            other.df,
-            on,
-            left_on=left_on,
-            right_on=right_on,
-            left_seq=left_seq,
-            right_seq=right_seq,
-            right_prefix=right_prefix,
+        return self._enrichment_join(
+            "left_inner_enrichment_join", "left_inner_join", other, on, left_on, right_on,
+            left_seq, right_seq, right_prefix,
         )
-        lo = [on] if isinstance(on, str) else list(on or left_on)
-        ro = [on] if isinstance(on, str) else list(on or right_on)
-        node = Node(
-            "left_inner_enrichment_join",
-            {"left_on": lo, "right_on": ro, "left_seq": left_seq, "right_seq": right_seq, "right_prefix": right_prefix},
-            [self.node, other.node],
-        )
-        return Stream(df, node)
 
     def join(self, other: "Stream", on, how: str = "inner") -> "Stream":
         """Relational join passthrough (inner/left/right/full/semi/anti) —
         beyond the reference's enrichment-only joins; Catalyst picks
         broadcast/SMJ/hash."""
-        return Stream(
-            self.df.join(other.df, on=on, how=how),
-            Node("relational_join", {"on": on, "how": how}, [self.node, other.node]),
+        return self._then(
+            "relational_join", {"on": on, "how": how}, other, serializable=not isinstance(on, Column)
         )
 
     def asof_join(
@@ -347,23 +277,8 @@ class Stream:
     ) -> "Stream":
         """Time-axis as-of join with tolerance — the enrichment join
         generalized from arrival sequence to any numeric time column."""
-        from milan_spark.operators.joins import asof_join
-
-        df = asof_join(
-            self.df,
-            other.df,
-            on,
-            left_on=left_on,
-            right_on=right_on,
-            left_ord=left_ord,
-            right_ord=right_ord,
-            tolerance=tolerance,
-            direction=direction,
-            right_prefix=right_prefix,
-        )
-        lo = [on] if isinstance(on, str) else list(on or left_on)
-        ro = [on] if isinstance(on, str) else list(on or right_on)
-        node = Node(
+        lo, ro = _join_keys(on, left_on, right_on)
+        return self._then(
             "asof_join",
             {
                 "left_on": lo,
@@ -374,9 +289,8 @@ class Stream:
                 "direction": direction,
                 "right_prefix": right_prefix,
             },
-            [self.node, other.node],
+            other,
         )
-        return Stream(df, node)
 
     def left_windowed_join(
         self,
@@ -399,20 +313,13 @@ class Stream:
         reference's streaming runtime's actual behavior). The latter records
         a serializable ``left_windowed_join`` node both backends compile."""
         if agg_exprs is not None:
-            from milan_spark.operators.joins import left_windowed_agg_join
-
             lo, ro = _join_keys(on, left_on, right_on)
-            df = left_windowed_agg_join(
-                self.df, other.df, on, left_on=left_on, right_on=right_on,
-                aggs=agg_exprs, left_seq=left_seq, right_seq=right_seq,
-            )
-            node = Node(
+            return self._then(
                 "left_windowed_join",
                 {"left_on": lo, "right_on": ro, "aggs": dict(agg_exprs),
                  "left_seq": left_seq, "right_seq": right_seq},
-                [self.node, other.node],
+                other,
             )
-            return Stream(df, node)
         from milan_spark.operators.joins import left_windowed_join_apply
 
         df = left_windowed_join_apply(self.df, other.df, on, left_on=left_on, right_on=right_on, aggs=aggs)
@@ -422,38 +329,17 @@ class Stream:
 
     def sum_by(self, arg: str | Column, alias: str = "running_sum", keys: Sequence[str] = ()) -> "Stream":
         """Milan SumBy (lang/Stream.scala:251)."""
-        from milan_spark.operators.scans import running_sum_by
-
-        df = running_sum_by(self.df, arg, keys=keys, alias=alias)
-        return Stream(
-            df,
-            Node(
-                "running_sum_by",
-                {"arg": arg, "keys": list(keys), "alias": alias} if _is_str(arg) else {},
-                [self.node],
-                serializable=_is_str(arg),
-            ),
+        return self._then(
+            "running_sum_by", {"arg": arg, "keys": list(keys), "alias": alias}, serializable=_is_str(arg)
         )
 
     def max_by(self, arg: str | Column, keys: Sequence[str] = ()) -> "Stream":
         """Milan MaxBy — emit-on-improvement (lang/Stream.scala:229)."""
-        from milan_spark.operators.scans import stream_max_by
-
-        df = stream_max_by(self.df, arg, keys=keys)
-        return Stream(
-            df,
-            Node("stream_max_by", {"arg": arg, "keys": list(keys)} if _is_str(arg) else {}, [self.node], serializable=_is_str(arg)),
-        )
+        return self._then("stream_max_by", {"arg": arg, "keys": list(keys)}, serializable=_is_str(arg))
 
     def min_by(self, arg: str | Column, keys: Sequence[str] = ()) -> "Stream":
         """Milan MinBy (lang/Stream.scala:239)."""
-        from milan_spark.operators.scans import stream_min_by
-
-        df = stream_min_by(self.df, arg, keys=keys)
-        return Stream(
-            df,
-            Node("stream_min_by", {"arg": arg, "keys": list(keys)} if _is_str(arg) else {}, [self.node], serializable=_is_str(arg)),
-        )
+        return self._then("stream_min_by", {"arg": arg, "keys": list(keys)}, serializable=_is_str(arg))
 
     def scan(
         self,
@@ -475,24 +361,19 @@ class Stream:
         streaming → keyed value state). ``initial_state`` must then be
         JSON-serializable.
         """
+        if isinstance(fold, str):
+            return self._then(
+                "scan_fold",
+                {
+                    "fold_ref": fold,
+                    "initial_state": initial_state,
+                    "output_schema": output_schema,
+                    "keys": list(keys),
+                    "seq": seq,
+                },
+            )
         from milan_spark.operators.scans import scan as scan_op
 
-        if isinstance(fold, str):
-            from milan_spark.plans.nodes import _resolve_function_ref
-
-            params = {
-                "fold_ref": fold,
-                "initial_state": initial_state,
-                "output_schema": output_schema,
-                "keys": list(keys),
-                "seq": seq,
-            }
-            fn = _resolve_function_ref(fold)
-            df = scan_op(
-                self.df, fn, initial_state=initial_state,
-                output_schema=output_schema, keys=keys, seq=seq,
-            )
-            return Stream(df, Node("scan_fold", params, [self.node]))
         df = scan_op(
             self.df, fold, initial_state=initial_state,
             output_schema=output_schema, keys=keys, seq=seq,
@@ -520,11 +401,11 @@ class Stream:
 
         Unlike :meth:`scan` this keeps the plan serializable and lets the
         optimizer (``plans.rewrite``) lower it to cumulative window
-        aggregates — JVM window exec instead of a Python fold. Updates
-        outside the grammar raise immediately; use :meth:`scan` for those.
+        aggregates — JVM window exec instead of a Python fold. The frame is
+        built from that same lowering, so updates outside the grammar raise
+        immediately; use :meth:`scan` for those.
         """
-        from milan_spark.operators.scans import cum_fold
-        from milan_spark.plans.rewrite import recognize_update
+        from milan_spark.plans.rewrite import rule_scan_fold_to_window
 
         params = {
             "state": dict(state),
@@ -534,48 +415,33 @@ class Stream:
             "keys": list(keys),
             "seq": seq,
         }
-        names = set(state)
-        folds = {}
-        for name, upd in update.items():
-            kind, arg = recognize_update(name, names, upd)
-            folds[name] = (kind, arg, state[name])
-        df = cum_fold(self.df, folds, keys=keys, seq=seq)
-        if emit_when:
-            df = df.filter(emit_when)
-        df = df.selectExpr(*[f"{e} AS {a}" for a, e in output.items()])
+        # the scan_fold node is logical-only: lower a twin over a bound leaf
+        leaf = Node("external_stream", {"stream_id": "input"})
+        lowered = rule_scan_fold_to_window(Node("scan_fold", params, [leaf]))
+        df = compile_node(lowered, self.df.sparkSession, {"input": self.df})
         return Stream(df, Node("scan_fold", params, [self.node]))
 
     def last(self, keys: Sequence[str] = ()) -> "Stream":
         """Milan Last (lang/Stream.scala:123)."""
-        from milan_spark.operators.scans import last as last_op
-
-        return Stream(last_op(self.df, keys=keys), Node("last", {"keys": list(keys)}, [self.node]))
+        return self._then("last", {"keys": list(keys)})
 
     # --- set/flow ops (SURVEY §2.7) ----------------------------------------
 
     def union(self, other: "Stream") -> "Stream":
         """Milan Union — bag union (lang/Stream.scala:135)."""
-        return Stream(self.df.unionByName(other.df), Node("union", {}, [self.node, other.node]))
+        return self._then("union", {}, other)
 
     def distinct(self, subset: Sequence[str] | None = None) -> "Stream":
         """The documented unique/uniqueBy (doc/Streams in Milan and streaming
         operations.md:73-77) — implemented, unlike the reference."""
-        return Stream(self.df.dropDuplicates(list(subset) if subset else None), Node("distinct", {"subset": list(subset) if subset else None}, [self.node]))
+        return self._then("distinct", {"subset": list(subset) if subset else None})
 
     def order_by(self, *exprs: str | Column) -> "Stream":
         """Total ordering (SURVEY §2.7 'sorts/limits: absent — free')."""
-        cols = [F.expr(e) if _is_str(e) else e for e in exprs]
-        serializable = all(_is_str(e) for e in exprs)
-        node = Node(
-            "order_limit",
-            {"order": list(exprs), "limit": None} if serializable else {},
-            [self.node],
-            serializable=serializable,
-        )
-        return Stream(self.df.orderBy(*cols), node)
+        return self._then("order_limit", {"order": list(exprs), "limit": None}, serializable=_all_str(exprs))
 
     def limit(self, n: int) -> "Stream":
-        return Stream(self.df.limit(n), Node("order_limit", {"order": [], "limit": n}, [self.node]))
+        return self._then("order_limit", {"order": [], "limit": n})
 
     def top_k_per_group(self, keys: Sequence[str], order_expr: str | Column, k: int, desc: bool = True) -> "Stream":
         """Top-k per key = row_number() <= k over a per-key ordering
@@ -593,20 +459,20 @@ class Stream:
 
     def intersect(self, other: "Stream") -> "Stream":
         """Set intersection (SURVEY §2.7 'absent — free via Spark if exposed')."""
-        return Stream(self.df.intersect(other.df), Node("intersect", {}, [self.node, other.node]))
+        return self._then("intersect", {}, other)
 
     def except_(self, other: "Stream") -> "Stream":
         """Set difference (SURVEY §2.7)."""
-        return Stream(self.df.exceptAll(other.df).dropDuplicates(), Node("except", {}, [self.node, other.node]))
+        return self._then("except", {}, other)
 
     def rollup(self, *keys: str, **aggs: str | Column) -> "Stream":
         """Hierarchical subtotal aggregation (SURVEY §2.4 'grouping sets /
         cube / rollup: absent — available free in Spark if exposed')."""
-        return self._multi_dim_agg("rollup", keys, aggs)
+        return self._multi_dim_agg("rollup", {"keys": list(keys)}, aggs)
 
     def cube(self, *keys: str, **aggs: str | Column) -> "Stream":
         """All-combination subtotal aggregation (SURVEY §2.4)."""
-        return self._multi_dim_agg("cube", keys, aggs)
+        return self._multi_dim_agg("cube", {"keys": list(keys)}, aggs)
 
     def grouping_sets(
         self, sets: list[list[str]], *keys: str, **aggs: str | Column
@@ -616,28 +482,12 @@ class Stream:
         the explicit list of grouping-column subsets; ``keys`` the full
         grouping-column universe. Serializes to a ``grouping_sets`` IR node
         when the aggregate expressions are strings."""
-        cols = [F.expr(e).alias(a) if _is_str(e) else e.alias(a) for a, e in aggs.items()]
-        serializable = all(_is_str(e) for e in aggs.values())
-        node = Node(
-            "grouping_sets",
-            {"sets": [list(s) for s in sets], "keys": list(keys), "aggs": dict(aggs)}
-            if serializable
-            else {},
-            [self.node],
-            serializable=serializable,
+        return self._multi_dim_agg(
+            "grouping_sets", {"sets": [list(s) for s in sets], "keys": list(keys)}, aggs
         )
-        return Stream(self.df.groupingSets([list(s) for s in sets], *keys).agg(*cols), node)
 
-    def _multi_dim_agg(self, op: str, keys, aggs) -> "Stream":
-        cols = [F.expr(e).alias(a) if _is_str(e) else e.alias(a) for a, e in aggs.items()]
-        serializable = all(_is_str(e) for e in aggs.values())
-        node = Node(
-            op,
-            {"keys": list(keys), "aggs": dict(aggs)} if serializable else {},
-            [self.node],
-            serializable=serializable,
-        )
-        return Stream(getattr(self.df, op)(*keys).agg(*cols), node)
+    def _multi_dim_agg(self, op: str, params: dict, aggs) -> "Stream":
+        return self._then(op, {**params, "aggs": dict(aggs)}, serializable=_all_str(aggs.values()))
 
     def to_application(self, app_id: str, sink: dict | None = None, **kwargs):
         """Export this program as a portable Application bundle: concrete
@@ -717,10 +567,11 @@ class Stream:
         row_number, filter pushdown into enrichment joins, small-side
         broadcast) whenever the whole plan is serializable, so user programs
         get the rewrites without opting in. Plans holding opaque
-        Column/callable nodes — or ``optimized=False`` — return the
-        directly-composed DataFrame unchanged."""
+        Column/callable nodes — or ``optimized=False``, or a plan no rule
+        rewrites — return the frame composed as the stream was built, which
+        each op built from its own recorded node, so it is the unoptimized
+        plan's compile."""
         if optimized and self.node.is_serializable:
-            from milan_spark.plans.nodes import compile_node
             from milan_spark.plans.rewrite import optimize
 
             spark = self.df.sparkSession
@@ -783,17 +634,10 @@ class GroupedStream:
     def select(self, **aggs: str | Column) -> Stream:
         """Aggregate over the group; keyword = output column name. String
         values are SQL aggregate expressions; Columns pass through."""
-        cols = [F.expr(e).alias(a) if _is_str(e) else e.alias(a) for a, e in aggs.items()]
         with analysis_scope("group_by.select", self.parent.df.columns):
-            df = self.parent.df.groupBy(*self.keys).agg(*cols)
-        serializable = all(_is_str(e) for e in aggs.values())
-        node = Node(
-            "aggregate",
-            {"keys": self.keys, "aggs": {a: e for a, e in aggs.items()}} if serializable else {},
-            [self.parent.node],
-            serializable=serializable,
-        )
-        return Stream(df, node)
+            return self.parent._then(
+                "aggregate", {"keys": self.keys, "aggs": dict(aggs)}, serializable=_all_str(aggs.values())
+            )
 
     agg = select
 
@@ -866,19 +710,11 @@ class GroupedStream:
 
     def record_window(self, n: int, aggs: dict[str, Column | str] | None = None, seq: str = SEQ_COL) -> Stream:
         """Milan SlidingRecordWindow on a grouped stream (lang/GroupedStream.scala:46)."""
-        from milan_spark.operators.windows import record_window
-
         aggs = aggs or {}
-        cols = {a: (F.expr(e) if _is_str(e) else e) for a, e in aggs.items()}
-        df = record_window(self.parent.df, n, cols, keys=self.keys, seq=seq)
-        serializable = all(_is_str(e) for e in aggs.values())
-        node = Node(
-            "record_window",
-            {"n": n, "aggs": aggs, "keys": self.keys, "seq": seq} if serializable else {},
-            [self.parent.node],
-            serializable=serializable,
+        return self.parent._then(
+            "record_window", {"n": n, "aggs": aggs, "keys": self.keys, "seq": seq},
+            serializable=_all_str(aggs.values()),
         )
-        return Stream(df, node)
 
     def tumbling_window(self, ts: str, period: str, offset: str | None = None) -> "WindowedStream":
         """Keyed time window (lang/GroupedStream.scala:61)."""
@@ -912,14 +748,7 @@ class WindowedStream:
         self.keys = keys
 
     def select(self, **aggs: str | Column) -> Stream:
-        from milan_spark.operators.windows import sliding_window
-
-        cols = [F.expr(e).alias(a) if _is_str(e) else e.alias(a) for a, e in aggs.items()]
-        df = sliding_window(
-            self.parent.df, self.ts, self.size, self.slide, offset=self.offset, keys=self.keys, aggs=cols
-        )
-        serializable = all(_is_str(e) for e in aggs.values())
-        node = Node(
+        return self.parent._then(
             "time_window_aggregate",
             {
                 "ts": self.ts,
@@ -928,13 +757,9 @@ class WindowedStream:
                 "offset": self.offset,
                 "keys": self.keys,
                 "aggs": dict(aggs),
-            }
-            if serializable
-            else {},
-            [self.parent.node],
-            serializable=serializable,
+            },
+            serializable=_all_str(aggs.values()),
         )
-        return Stream(df, node)
 
     agg = select
 
@@ -971,21 +796,10 @@ class SessionWindowedStream:
         self.keys = keys
 
     def select(self, **aggs: str | Column) -> Stream:
-        from milan_spark.operators.windows import session_window_agg
-
-        cols = [F.expr(e).alias(a) if _is_str(e) else e.alias(a) for a, e in aggs.items()]
-        df = session_window_agg(
-            self.parent.df, self.ts, self.gap, keys=self.keys, aggs=cols
-        )
-        serializable = all(_is_str(e) for e in aggs.values())
-        node = Node(
+        return self.parent._then(
             "session_window_aggregate",
-            {"ts": self.ts, "gap": self.gap, "keys": self.keys, "aggs": dict(aggs)}
-            if serializable
-            else {},
-            [self.parent.node],
-            serializable=serializable,
+            {"ts": self.ts, "gap": self.gap, "keys": self.keys, "aggs": dict(aggs)},
+            serializable=_all_str(aggs.values()),
         )
-        return Stream(df, node)
 
     agg = select

@@ -44,11 +44,12 @@ machine through one driver (:func:`_drive`) with ``GroupStateTimeout.NoTimeout``
 from __future__ import annotations
 
 import json
+import pickle
 from typing import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from milan_spark.operators.joins import _normalize_on, _prefixed
 from milan_spark.session import SEQ_COL
@@ -116,6 +117,14 @@ _STATE_2 = StructType(
 _STATE_BUF = StructType(
     [StructField("r", StringType(), True), StructField("buf", StringType(), True)]
 )
+_STATE_PICKLE = StructType([StructField("buf", BinaryType(), True)])
+
+# the payload JSON both ways: Spark's default timestamp formats stop at
+# milliseconds, so a side's microseconds would not survive the round trip
+_JSON_OPTS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
 
 
 def _tagged_union(
@@ -132,13 +141,13 @@ def _tagged_union(
         *[F.col(c).alias(f"__key{i}") for i, c in enumerate(left_on)],
         F.col(left_seq).cast("long").alias("__ord"),
         F.lit(1).alias("__side"),
-        F.to_json(F.struct(*left.columns)).alias("__payload"),
+        F.to_json(F.struct(*left.columns), _JSON_OPTS).alias("__payload"),
     )
     r = right.select(
         *[F.col(c).alias(f"__key{i}") for i, c in enumerate(right_on)],
         F.col(right_seq).cast("long").alias("__ord"),
         F.lit(0).alias("__side"),
-        F.to_json(F.struct(*right.columns)).alias("__payload"),
+        F.to_json(F.struct(*right.columns), _JSON_OPTS).alias("__payload"),
     )
     return l.unionByName(r)
 
@@ -167,8 +176,8 @@ def _pair_project(
     """JSON pair → flat output columns; key columns come from the partition
     key (never the possibly-null side), mirroring ``operators.joins._pair_output``."""
     lcols, rcols = list(left.columns), list(right.columns)
-    lstruct = F.from_json("__l", left.schema)
-    rstruct = F.from_json("__r", right.schema)
+    lstruct = F.from_json("__l", left.schema, _JSON_OPTS)
+    rstruct = F.from_json("__r", right.schema, _JSON_OPTS)
     out = paired.withColumn("__ls", lstruct).withColumn("__rs", rstruct)
     if residual is not None:
         out = out.filter(residual(F.col("__ls"), F.col("__rs")))
@@ -402,7 +411,9 @@ def record_window_apply(
 
     ``fn(rows: list[dict]) -> dict | None`` — rows oldest-first; None emits
     nothing for that arrival. State is bounded at n rows per key by
-    construction, the property that makes record windows safe at scale.
+    construction, the property that makes record windows safe at scale. The
+    buffer is held pickled in one binary state field, so decimal and
+    timestamp values reach ``fn`` exactly (JSON has neither).
     """
     import pandas as pd
 
@@ -413,7 +424,7 @@ def record_window_apply(
     payload_cols = [c for c in sdf.columns]
 
     def process(key, pdf, st_t):
-        buf = json.loads(st_t[0]) if st_t is not None else []
+        buf = pickle.loads(st_t[0]) if st_t is not None else []
         rows = []
         for rec in pdf[payload_cols].to_dict("records"):
             buf.append(rec)
@@ -427,14 +438,14 @@ def record_window_apply(
             if rows
             else []
         )
-        return (json.dumps(buf),), frames
+        return (pickle.dumps(buf),), frames
 
     # a keyless fold runs as one group over a synthetic constant column
     if key_list:
         group_df, group_cols = sdf, key_list
     else:
         group_df, group_cols = sdf.withColumn("__g", F.lit(1)), ["__g"]
-    return _drive(group_df, group_cols, process, out_schema, _STATE_1, sort_by=[seq])
+    return _drive(group_df, group_cols, process, out_schema, _STATE_PICKLE, sort_by=[seq])
 
 
 def windowed_agg_per_record(

@@ -206,6 +206,83 @@ def test_state_ttl_expires_idle_keys(spark, tmp_path):
     assert scenario("nottl", None).name == "a0", "without a TTL the right must be retained"
 
 
+
+def _typed_stream(spark, dirpath, schema, casts):
+    """A one-file-per-microbatch stream over ``dirpath`` with typed columns
+    made from string ones (``casts``: name -> SQL), so no parquet timestamp
+    encoding is involved."""
+    sdf = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(dirpath))
+    return sdf.selectExpr(*[f"{e} AS {c}" for c, e in casts.items()])
+
+
+@pytest.mark.parametrize(
+    "join", ["left_enrichment_join", "full_enrichment_join", "left_inner_enrichment_join"]
+)
+def test_enrichment_joins_keep_microseconds(spark, tmp_path, join):
+    """Rows cross the state machine as JSON; both sides' timestamp and
+    timestamp_ntz values (pre-1970 too) must come out to the microsecond."""
+    _write_chunks(
+        tmp_path / "right",
+        [[(10, "2024-03-01 12:00:05.123456", 1)], [(20, "1969-07-20 20:17:40.000007", 3)]],
+        ["k", "s", "__seq"],
+    )
+    _write_chunks(
+        tmp_path / "left",
+        [[(1, 10, "2024-03-01 12:00:06.654321", 2)], [(2, 20, "1960-01-01 00:00:00.999999", 4)]],
+        ["id", "k", "s", "__seq"],
+    )
+    typed = {"ts": "CAST(s AS TIMESTAMP)", "tn": "CAST(s AS TIMESTAMP_NTZ)"}
+    ls = _typed_stream(
+        spark, tmp_path / "left", "id long, k long, s string, __seq long",
+        {"id": "id", "k": "k", **typed, "__seq": "__seq"},
+    )
+    rs = _typed_stream(
+        spark, tmp_path / "right", "k long, s string, __seq long", {"k": "k", **typed, "__seq": "__seq"}
+    )
+    rows = run_to_memory(getattr(stateful, join)(ls, rs, on="k"), f"s_us_{join}").collect()
+
+    def stamps(sub, ts, tn):
+        b = spark.read.parquet(str(tmp_path / sub)).selectExpr(*[f"{e} AS {c}" for c, e in typed.items()])
+        return {(r.ts, r.tn) for r in b.collect()}, {(r[ts], r[tn]) for r in rows if r[ts] is not None}
+
+    for sub, ts, tn in (("left", "ts", "tn"), ("right", "r_ts", "r_tn")):
+        want, got = stamps(sub, ts, tn)
+        assert got and got <= want, (sub, got, want)
+        assert any(t.microsecond % 1000 for t, _ in got)
+
+
+
+def test_record_window_apply_decimal_and_timestamp(spark, tmp_path):
+    """The record-window buffer survives microbatches with exact Decimal and
+    microsecond timestamp values (JSON state could hold neither)."""
+    from decimal import Decimal
+
+    _write_chunks(
+        tmp_path / "s",
+        [
+            [(1, "0.000001", "2024-03-01 12:00:05.123456", 0), (2, "5.5", "2024-03-01 12:00:06.000001", 1)],
+            [(1, "123456789012.000002", "1969-07-20 20:17:40.000007", 2)],
+        ],
+        ["k", "d", "t", "__seq"],
+    )
+    sdf = _typed_stream(
+        spark, tmp_path / "s", "k long, d string, t string, __seq long",
+        {"k": "k", "d": "CAST(d AS DECIMAL(18,6))", "t": "CAST(t AS TIMESTAMP)", "__seq": "__seq"},
+    )
+
+    def fn(rows):
+        return {"k": rows[-1]["k"], "s": sum(r["d"] for r in rows), "first_t": rows[0]["t"], "seq": rows[-1]["__seq"]}
+
+    out = stateful.record_window_apply(
+        sdf, 2, fn, output_schema="k long, s decimal(18,6), first_t timestamp, seq long", keys=["k"]
+    )
+    got = {r.seq: (r.s, r.first_t) for r in run_to_memory(out, "s_rw_decimal_ts").collect()}
+    t0 = spark.sql("SELECT CAST('2024-03-01 12:00:05.123456' AS TIMESTAMP) AS t").first().t
+    assert got[0] == (Decimal("0.000001"), t0)
+    assert got[2] == (Decimal("123456789012.000003"), t0)  # from the first microbatch's state
+    assert got[1][0] == Decimal("5.500000")
+
+
 @pytest.mark.slow
 def test_streaming_scan_matches_batch(spark, sides):
     ls, _, lb, _ = sides
