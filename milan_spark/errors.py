@@ -59,6 +59,12 @@ class MilanConcurrentCommitError(RuntimeError):
     wrong for MERGE/compact, whose input depends on the snapshot."""
 
 
+class MilanDuplicateKeyError(ValueError):
+    """A keyed MERGE batch holds several rows for one key and names no
+    ``seq_col`` to choose between them (``operators.versioned.commit_merge``).
+    Keeping any one of them would be arbitrary, so nothing is committed."""
+
+
 def _condense(e: AnalysisException) -> str:
     # first message line carries the error class + names; the rest is plan
     # dump / JVM trace

@@ -140,14 +140,7 @@ def audited_versioned_sink(
     product and quarantine tables). Bad records never stall the stream and
     never ship: they land in the quarantine table with their failure
     signatures, microbatch by microbatch."""
-    from milan_spark.operators.versioned import versions
+    from milan_spark.operators.versioned import once_per_batch
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        tag = f"batch={batch_id}"
-        if any(e["tag"] == tag for e in versions(path)):
-            return
-        audited_append(
-            batch_df, path, rules, quarantine_path=quarantine_path, tag=tag
-        )
-
-    return write
+    return once_per_batch(path, lambda df, tag: audited_append(
+        df, path, rules, quarantine_path=quarantine_path, tag=tag))

@@ -76,9 +76,9 @@ def compact_files(
     pipeline sink needs: streaming/incremental writers leave a directory of
     tiny files whose per-file open/footer cost eventually dominates scans.
     Rewrites ``path`` into ⌈total_bytes / target_mb⌉ files (optionally
-    sorted, which restores row-group pruning after the rewrite) with the
-    same two-rename atomic swap as the upsert sink — readers see the old or
-    the new directory, never a partial one.
+    sorted, which restores row-group pruning after the rewrite) with a
+    two-rename directory swap — readers see the old or the new directory,
+    never a partial one.
 
     Returns {"files_before", "files_after", "bytes"}. One read + one
     shuffle-free coalesce write (or one range sort when ``sort_by`` — the

@@ -1,6 +1,6 @@
 """Versioned table layout: snapshot isolation + time travel over plain
 parquet — the lakehouse commit pattern (immutable data files, an
-atomically-swapped pointer) without a table-format dependency. No reference
+atomically linked manifest) without a table-format dependency. No reference
 analog (Milan's sinks are fire-and-forget, ``FileDataSink``); this is the
 sink discipline a long-lived 100 TB pipeline table needs: writers never
 disturb readers, any historical snapshot stays reproducible, and cleanup is
@@ -43,8 +43,8 @@ and the hint an ordinary overwrite PUT, safe because it is only a cache.
 
 Scale notes: an ``append`` commit is O(new data) — history accumulates as
 union-read directories until ``compact`` (one rewrite commit) folds them;
-``merge`` reuses the full-outer COALESCE plan of ``merge_upsert`` and
-rewrites (the parquet-upsert cost model, documented there). Manifests list
+``merge`` is a whole-row upsert (``base left_anti updates ∪ updates``)
+rewritten as one directory, O(table) per commit. Manifests list
 directories plus (with ``stats_cols``) one stats row per FILE — O(files
 since compaction), the Iceberg manifest scale story: the metadata a scan
 needs to prune 100 TB down to the matching files is itself a small table,
@@ -62,7 +62,8 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from milan_spark.errors import MilanAnalysisError, MilanConcurrentCommitError
+from milan_spark.errors import (
+    MilanAnalysisError, MilanConcurrentCommitError, MilanDuplicateKeyError)
 
 _MANIFEST_DIR = "_versions"
 _LATEST = "_latest"
@@ -501,27 +502,51 @@ def commit_merge(
     path: str,
     key_cols: list[str],
     *,
+    seq_col: str | None = None,
     tag: str | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = 8192,
 ) -> int:
-    """MERGE commit: full-outer COALESCE of updates over the current
-    snapshot (the ``merge_upsert`` plan), rewritten as one directory."""
-    base = read_version(spark, path)
-    cond = [base[k].eqNullSafe(updates[k]) for k in key_cols]
-    from functools import reduce
-    from operator import and_
+    """MERGE commit, rewritten as one directory: a whole-row upsert of
+    ``updates`` into the current snapshot. A matched row is replaced by its
+    update (a NULL in the update is written), unmatched updates insert, and
+    the other rows stay; keys match null-safely. Several updates for one
+    key resolve by ``seq_col`` (greatest wins); without it they raise
+    :class:`MilanDuplicateKeyError` rather than pick one arbitrarily. On a
+    table with no commits the updates become version 1."""
+    keys = list(key_cols)
+    if seq_col is not None:
+        updates = (
+            updates.groupBy(*keys)
+            .agg(F.max_by(F.struct(*updates.columns), F.col(seq_col)).alias("__r"))
+            .select("__r.*")
+        )
+    else:
+        dup = (
+            updates.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
+            .where("__n > 1").limit(1).collect()
+        )
+        if dup:
+            key = {k: dup[0][k] for k in keys}
+            raise MilanDuplicateKeyError(
+                f"merge into {path}: key {key} has {dup[0]['__n']} rows in one "
+                f"batch; pass seq_col to keep the greatest"
+            )
+    merged = updates
+    if current_version(path):
+        from functools import reduce
+        from operator import and_
 
-    joined = base.alias("b").join(
-        updates.alias("u"), reduce(and_, cond), "full_outer"
-    )
-    cols = [
-        F.coalesce(F.col(f"u.{c}"), F.col(f"b.{c}")).alias(c)
-        for c in base.columns
-    ]
+        cond = reduce(and_, [F.col(f"__b.{k}").eqNullSafe(F.col(f"__u.{k}"))
+                             for k in keys])
+        merged = (
+            read_version(spark, path).alias("__b")
+            .join(updates.alias("__u"), cond, "left_anti")
+            .unionByName(updates)
+        )
     return _commit(
-        path, joined.select(*cols), dirs_from_parent=lambda p: [], op="merge",
+        path, merged, dirs_from_parent=lambda p: [], op="merge",
         tag=tag, stats_cols=stats_cols, bloom_cols=bloom_cols,
         bloom_bits=bloom_bits,
     )
@@ -805,14 +830,40 @@ def versioned_sink(path: str):
     standard batchId-idempotent transactional-sink recipe; combined with
     the atomic manifest-link commit point, readers see each microbatch
     exactly once or not yet."""
+    return once_per_batch(path, lambda df, tag: commit_append(df, path, tag=tag))
+
+
+def once_per_batch(path: str, commit):
+    """Wrap ``commit(batch_df, tag)`` as a ``foreachBatch`` writer that
+    commits under the tag ``batch=<id>`` and skips a batch id the manifest
+    chain of ``path`` already records — the replay a restart runs when its
+    checkpoint is behind the sink."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         tag = f"batch={batch_id}"
-        if any(e["tag"] == tag for e in versions(path)):
-            return
-        commit_append(batch_df, path, tag=tag)
+        if not any(e["tag"] == tag for e in versions(path)):
+            commit(batch_df, tag)
 
     return write
+
+
+def merge_head(updates: DataFrame, path: str, key_cols, *,
+               seq_col: str | None = None, tag: str | None = None) -> int:
+    """:func:`commit_merge`, then ``vacuum`` all but the new head and its
+    parent: the retention of a table read only at its head (a keyed upsert
+    sink's), which would otherwise keep one full copy per commit."""
+    v = commit_merge(updates.sparkSession, updates, path, key_cols,
+                     seq_col=seq_col, tag=tag)
+    vacuum(path, keep_from=v - 1)
+    return v
+
+
+def merge_sink(path: str, key_cols, *, seq_col: str | None = None):
+    """``foreachBatch`` writer that upserts every microbatch into the
+    versioned table at ``path`` through :func:`merge_head`, once per batch
+    id (:func:`once_per_batch`)."""
+    return once_per_batch(path, lambda df, tag: merge_head(
+        df, path, key_cols, seq_col=seq_col, tag=tag))
 
 
 def publish_appends(path: str, staging: str) -> dict:

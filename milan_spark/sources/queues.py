@@ -25,10 +25,11 @@ to one of three bindings:
    send, sequence-numbered and mtime-ordered (FIFO — the same
    file-arrival-order recipe the streaming oracles use), so every
    queue-shaped pipeline is testable in-sandbox and in CI without AWS.
-   The emulated DynamoDB table additionally keeps a parquet upsert state
-   and a JSON **change log**, so ``DynamoDbStreamSource`` reads exactly
-   what ``DynamoDbTableSink`` wrote — the table/stream pairing DynamoDB
-   itself provides.
+   The emulated DynamoDB table additionally keeps its state as a versioned
+   table (keyed upserts through ``versioned.commit_merge``) and a JSON
+   **change log**, so ``DynamoDbStreamSource`` reads exactly what
+   ``DynamoDbTableSink`` wrote — the table/stream pairing DynamoDB itself
+   provides.
 3. The record schema is explicit (a DDL string) — the role the reference's
    ``TypeDescriptor[T]`` generic argument plays (``getGenericArguments``).
 
@@ -144,7 +145,7 @@ class SqsDataSource:
 class DynamoDbStreamSource:
     """ref: application/sources/DynamoDbStreamSource.scala:16 — reads a
     table's CHANGE STREAM. The emulation reads the change log that
-    :class:`DynamoDbTableSink` maintains next to its parquet state, so the
+    :class:`DynamoDbTableSink` maintains next to its table state, so the
     table/stream pairing behaves like the real service's."""
 
     table_name: str | None
@@ -195,9 +196,9 @@ class SqsDataSink:
 @dataclass(frozen=True)
 class DynamoDbTableSink:
     """ref: application/sinks/DynamoDbTableSink.scala:17 — a KV upsert
-    writer. The emulation merges each microbatch into a parquet table keyed
-    on ``key_cols`` (the reuse of the engine's streaming MERGE idiom) and
-    appends every upserted row to the table's change log."""
+    writer. The emulation upserts each microbatch into a versioned table
+    keyed on ``key_cols`` (``versioned.commit_merge``, whole-row put
+    semantics) and appends every upserted row to the table's change log."""
 
     sink_id: str
     table_name: str | None = None
@@ -334,8 +335,10 @@ def open_queue_sink(
 
     Emulated Kinesis/SQS spool each microbatch as ordered JSON message
     files (Kinesis chunked at ``queue_limit``); the emulated DynamoDB table
-    MERGEs the batch into parquet state keyed on ``key_cols`` and appends
-    the rows to the change log that :class:`DynamoDbStreamSource` reads.
+    MERGEs the batch into its versioned state keyed on ``key_cols`` (a
+    replayed batch id merges nothing) and appends the rows to the change
+    log that :class:`DynamoDbStreamSource` reads — at-least-once, as a
+    replayed batch spools its rows again.
     """
     from milan_spark.streaming import foreach_batch_sink
 
@@ -372,14 +375,14 @@ def open_queue_sink(
             f"dynamodb_table sink {coord!r}: key_cols required (the table's "
             "primary key)"
         )
-    state = os.path.join(base, "_state")
+    from milan_spark.operators.versioned import merge_sink
+
+    merge_state = merge_sink(os.path.join(base, "_state"), key_cols)
     changelog = os.path.join(base, "_changelog")
     os.makedirs(changelog, exist_ok=True)
 
     def merge(batch_df: DataFrame, bid: int) -> None:
-        from milan_spark.streaming import merge_parquet_batch  # shared MERGE idiom
-
-        merge_parquet_batch(batch_df, state, key_cols, batch_id=bid)
+        merge_state(batch_df, bid)
         docs = _collect_messages(batch_df, coord)
         if docs:
             _spool(changelog, docs)
@@ -418,9 +421,9 @@ def publish_batch(df: DataFrame, spec: Mapping) -> int:
             f"dynamodb_table sink {coord!r}: key_cols required (the table's "
             "primary key)"
         )
-    from milan_spark.streaming import merge_parquet_batch
+    from milan_spark.operators.versioned import merge_head
 
-    merge_parquet_batch(df, os.path.join(base, "_state"), key_cols, batch_id=_next_seq(base))
+    merge_head(df, os.path.join(base, "_state"), key_cols)
     changelog = os.path.join(base, "_changelog")
     os.makedirs(changelog, exist_ok=True)
     if docs:
@@ -435,7 +438,9 @@ def read_table_state(spark: SparkSession, table_coord: str) -> DataFrame:
             f"dynamodb table {table_coord!r}: state read exists only for "
             "the local: emulation"
         )
-    return spark.read.parquet(os.path.join(_local_dir(table_coord), "_state"))
+    from milan_spark.operators.versioned import read_version
+
+    return read_version(spark, os.path.join(_local_dir(table_coord), "_state"))
 
 
 def local_queue(prefix: str = "milan_queue_") -> str:

@@ -275,68 +275,6 @@ def foreach_batch_sink(
     return _start(w, sdf)
 
 
-def merge_parquet_batch(
-    batch_df: DataFrame,
-    path: str,
-    key_cols: Sequence[str],
-    *,
-    seq_col: str | None = None,
-    batch_id: int = 0,
-) -> None:
-    """One MERGE of a (micro)batch into the parquet table at ``path`` —
-    the shared idiom behind :func:`upsert_sink` and the emulated DynamoDB
-    table sink (``sources.queues``). Matched keys replaced, unmatched
-    inserted, the rest kept; read-merge-rewrite with an atomic directory
-    swap and crash recovery of a half-completed swap."""
-    import os
-    import shutil
-
-    keys = list(key_cols)
-    spark = batch_df.sparkSession
-    # Crash-recovery for the two-rename swap below: if a previous run died
-    # between `os.rename(path, old)` and `os.rename(tmp, path)`, the table
-    # is stranded in a `path.__old_<id>` sibling while `path` is missing.
-    # Restore the newest such sibling before merging so the checkpoint's
-    # replayed batch merges against the full prior table instead of
-    # silently rewriting it with only this batch's rows.
-    if not os.path.exists(path):
-        parent = os.path.dirname(path) or "."
-        base_name = os.path.basename(path)
-        stranded = sorted(
-            n for n in os.listdir(parent) if n.startswith(f"{base_name}.__old_")
-        )
-        if stranded:
-            os.rename(os.path.join(parent, stranded[-1]), path)
-            for extra in stranded[:-1]:
-                shutil.rmtree(os.path.join(parent, extra), ignore_errors=True)
-    if seq_col is not None:
-        batch_df = (
-            batch_df.groupBy(*keys)
-            .agg(F.max_by(F.struct(*batch_df.columns), F.col(seq_col)).alias("__r"))
-            .select("__r.*")
-        )
-    else:
-        n_all = batch_df.count()
-        n_keys = batch_df.select(*keys).distinct().count()
-        if n_all != n_keys:
-            raise ValueError(
-                f"upsert batch {batch_id} holds {n_all} rows for {n_keys} keys; "
-                "pass seq_col to resolve within-batch duplicates deterministically"
-            )
-    if os.path.exists(path):
-        base = spark.read.parquet(path)
-        merged = base.join(batch_df, keys, "left_anti").unionByName(batch_df)
-    else:
-        merged = batch_df
-    tmp = f"{path}.__tmp_{batch_id}"
-    merged.write.mode("overwrite").parquet(tmp)  # materializes BEFORE the swap
-    old = f"{path}.__old_{batch_id}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def upsert_sink(
     sdf: DataFrame,
     path: str,
@@ -346,29 +284,29 @@ def upsert_sink(
     checkpoint: str | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Streaming MERGE/upsert sink via foreachBatch: each microbatch merges
-    into the parquet table at ``path`` — matched keys replaced by the
-    batch's row, unmatched inserted, the rest kept. The foreachBatch-merge
-    idiom is how Structured Streaming upserts into any store without a
-    transactional row-level API; table formats with native MERGE
-    (Delta/Iceberg) swap the inner function for their own command.
+    """Streaming MERGE/upsert sink via foreachBatch: each microbatch
+    commits into the versioned table at ``path`` through
+    ``operators.versioned.commit_merge`` — matched keys replaced whole by
+    the batch's row, unmatched inserted, the rest kept (read it with
+    ``read_version``). The foreachBatch-merge idiom is how Structured
+    Streaming upserts into any store without a transactional row-level
+    API; table formats with native MERGE (Delta/Iceberg) swap the inner
+    function for their own command.
 
-    Within-batch duplicates of a key resolve deterministically by
-    ``seq_col`` (greatest wins); with no ``seq_col`` the batch must carry
-    at most one row per key (enforced — an ambiguous batch raises rather
-    than picking an arbitrary row).
+    Within-batch duplicates of a key resolve by ``seq_col`` (greatest
+    wins); with no ``seq_col`` an ambiguous batch raises
+    ``MilanDuplicateKeyError`` rather than picking an arbitrary row.
 
-    Plain parquet has no row-level transaction, so the merge is
-    read-merge-rewrite with an atomic directory swap — O(table) per batch.
-    That is the honest cost of upsert-on-parquet; at 100 TB the table
-    partitions on a key hash and only partitions containing batch keys
+    A replayed batch id commits nothing (its ``batch=<id>`` tag is in the
+    manifest chain). Each merge rewrites the table, O(table) per batch, and
+    keeps only the head and its parent on disk; at 100 TB the table
+    partitions on a key hash and only partitions holding batch keys
     rewrite (or a transactional format takes over).
     """
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        merge_parquet_batch(batch_df, path, key_cols, seq_col=seq_col, batch_id=batch_id)
+    from milan_spark.operators.versioned import merge_sink
 
     w = (
-        sdf.writeStream.foreachBatch(_merge)
+        sdf.writeStream.foreachBatch(merge_sink(path, key_cols, seq_col=seq_col))
         .option("checkpointLocation", checkpoint or tempfile.mkdtemp(prefix="milan_ckpt_"))
     )
     if available_now:

@@ -24,6 +24,7 @@ from milan_spark.sources.queues import (
     local_queue,
     open_queue_sink,
     open_queue_source,
+    publish_batch,
     read_queue_batch,
     read_table_state,
 )
@@ -130,6 +131,15 @@ def test_dynamodb_table_sink_state_and_change_stream(spark):
         .select("user_id", "r.event_id", "r.cents")
     )
     assert sorted(map(tuple, last.collect())) == sorted(map(tuple, expected.collect()))
+
+
+def test_publish_batch_to_dynamodb_table_lands_every_call(spark):
+    t = local_queue("ddb_pub_")
+    spec = DynamoDbTableSink("d1", t, key_cols=["k"]).to_spec()
+    publish_batch(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), spec)
+    publish_batch(spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string"), spec)
+    got = {tuple(r) for r in read_table_state(spark, t).collect()}
+    assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
 def test_remote_coordinates_raise_named_connector_errors(spark):

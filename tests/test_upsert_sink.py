@@ -1,5 +1,6 @@
 """Streaming MERGE sink: microbatch upserts equal the sequential batch
-merge, within-batch duplicates resolve by seq, ambiguity raises."""
+merge, within-batch duplicates resolve by seq, ambiguity raises, and a
+crash before the commit point replays exactly once."""
 
 from __future__ import annotations
 
@@ -10,7 +11,12 @@ import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from milan_spark.operators.versioned import read_version
 from milan_spark.streaming import await_finished, upsert_sink
+
+
+def _rows(df):
+    return {(r.k, r.v) for r in df.collect()}
 
 
 def _stage_batches(spark, batches):
@@ -47,7 +53,7 @@ def test_upsert_sink_matches_sequential_merge(spark):
     out = tempfile.mkdtemp(prefix="ups_out_") + "/t"
     q = upsert_sink(sdf, out, ["k"])
     await_finished(q, 120)
-    got = {(r.k, r.v) for r in spark.read.parquet(out).collect()}
+    got = _rows(read_version(spark, out))
     assert got == {(1, "A"), (2, "B"), (3, "c"), (4, "d")}
 
 
@@ -63,43 +69,42 @@ def test_upsert_sink_seq_resolves_in_batch_duplicates(spark):
     out = tempfile.mkdtemp(prefix="ups_out_") + "/t"
     q = upsert_sink(sdf, out, ["k"], seq_col="seq")
     await_finished(q, 120)
-    got = {(r.k, r.v) for r in spark.read.parquet(out).collect()}
+    got = _rows(read_version(spark, out))
     assert got == {(1, "y"), (2, "b")}
 
 
-@pytest.mark.slow
-def test_upsert_sink_recovers_stranded_old_dir(spark):
-    """Crash window between the two renames: if a previous run died after
-    os.rename(path, old) but before os.rename(tmp, path), the table lives
-    only in path.__old_<id>. A replayed batch must restore it before
-    merging instead of rewriting the table with only its own rows."""
-    import shutil
+def test_merge_sink_crash_before_manifest_link_replays_once(spark, monkeypatch):
+    """Crash window of the one commit protocol: a merge that dies before
+    its manifest link leaves the head as it was; the replayed batch id then
+    merges exactly once against the full prior table, a second replay
+    commits nothing, and only the head's and its parent's data directories
+    stay on disk (the crashed attempt's orphan included, none remain)."""
+    import milan_spark.operators.versioned as V
 
-    out_root = tempfile.mkdtemp(prefix="ups_crash_")
-    out = os.path.join(out_root, "t")
-    # prior table, as the crashed run left it: renamed away, not yet replaced
-    spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 2)], "k long, v string, seq long"
-    ).write.parquet(os.path.join(out_root, "t.__old_0"))
-    # stray tmp dir from the same crashed batch should not confuse recovery
-    spark.createDataFrame(
-        [(3, "c", 3)], "k long, v string, seq long"
-    ).write.parquet(os.path.join(out_root, "t.__tmp_0"))
+    def df(rows):
+        return spark.createDataFrame(rows, "k long, v string, seq long")
 
-    batches = [[(2, "B", 3), (3, "c", 4)]]  # replay of the crashed batch
-    stage = _stage_batches(spark, batches)
-    sdf = (
-        spark.readStream.schema("k long, v string, seq long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = upsert_sink(sdf, out, ["k"])
-    await_finished(q, 120)
-    got = {(r.k, r.v) for r in spark.read.parquet(out).collect()}
-    # key 1 survives from the stranded prior table; 2 is updated; 3 inserted
-    assert got == {(1, "a"), (2, "B"), (3, "c")}
-    assert not [d for d in os.listdir(out_root) if d.startswith("t.__old_")]
-    shutil.rmtree(out_root, ignore_errors=True)
+    out = tempfile.mkdtemp(prefix="ups_crash_")
+    write = V.merge_sink(out, ["k"])
+    write(df([(1, "a", 1), (2, "b", 2)]), 0)
+    write(df([(4, "d", 3)]), 1)
+    head = V.current_version(out)
+    batch = df([(2, "B", 4), (3, "c", 5)])
+
+    def crash(src, dst):
+        raise OSError("crash before manifest link")
+
+    with monkeypatch.context() as m:
+        m.setattr(V.os, "link", crash)
+        with pytest.raises(OSError, match="crash before manifest link"):
+            write(batch, 2)
+    assert V.current_version(out) == head
+    assert _rows(V.read_version(spark, out)) == {(1, "a"), (2, "b"), (4, "d")}
+    write(batch, 2)  # the checkpoint's replay of the crashed batch
+    write(batch, 2)  # a second replay commits nothing
+    assert V.current_version(out) == head + 1
+    assert _rows(V.read_version(spark, out)) == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
+    assert len(os.listdir(os.path.join(out, "data"))) == 2
 
 
 def test_upsert_sink_ambiguous_batch_raises(spark):

@@ -1,7 +1,7 @@
 """operators.versioned — snapshot isolation and time travel over plain
 parquet: append/overwrite/merge/compact commit kinds, reader isolation from
 concurrent commits, vacuum's reference-counted cleanup, and the crash
-protocol (pointer flips last)."""
+protocol (the manifest link is the commit point)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from milan_spark.errors import MilanAnalysisError
+from milan_spark.errors import MilanAnalysisError, MilanDuplicateKeyError
 from milan_spark.operators.versioned import (
     commit_append,
     commit_merge,
@@ -55,12 +55,36 @@ def test_overwrite_keeps_history_readable(spark, tbl):
     assert _snap(read_version(spark, tbl, 1)) == [(1, "a")]
 
 
-def test_merge_matches_coalesce_semantics(spark, tbl):
+def test_merge_replaces_whole_rows(spark, tbl):
     commit_append(_df(spark, [(1, "a"), (2, "b")]), tbl)
     commit_merge(spark, _df(spark, [(2, "B"), (3, "C")]), tbl, ["k"])
     assert _snap(read_version(spark, tbl)) == [(1, "a"), (2, "B"), (3, "C")]
     # pre-merge snapshot untouched
     assert _snap(read_version(spark, tbl, 1)) == [(1, "a"), (2, "b")]
+    # a matched update replaces the whole row: its NULL is written
+    commit_merge(spark, _df(spark, [(2, None)]), tbl, ["k"])
+    assert _snap(read_version(spark, tbl)) == [(1, "a"), (2, None), (3, "C")]
+
+
+def test_merge_into_empty_table_and_duplicate_keys(spark, tbl):
+    def rows(df):
+        return {(r["k"], r["v"]) for r in df.collect()}
+
+    # no commits yet: the updates become version 1
+    assert commit_merge(spark, _df(spark, [(None, "n"), (1, "a")]), tbl, ["k"]) == 1
+    # keys match null-safely: the NULL key is replaced, not inserted twice
+    commit_merge(spark, _df(spark, [(None, "N")]), tbl, ["k"])
+    assert rows(read_version(spark, tbl)) == {(None, "N"), (1, "a")}
+    with pytest.raises(MilanDuplicateKeyError, match=r"key \{'k': 1\} has 2 rows"):
+        commit_merge(spark, _df(spark, [(1, "x"), (1, "y"), (2, "b")]), tbl, ["k"])
+    assert current_version(tbl) == 2
+    seq = tempfile.mkdtemp(prefix="milan_vtab_")
+    commit_merge(
+        spark,
+        spark.createDataFrame([(1, "x", 1), (1, "y", 9)], "k long, v string, s long"),
+        seq, ["k"], seq_col="s",
+    )
+    assert rows(read_version(spark, seq)) == {(1, "y")}
 
 
 def test_snapshot_isolation_across_concurrent_commit(spark, tbl):
