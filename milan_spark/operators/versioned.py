@@ -361,9 +361,17 @@ def _commit(
     allow_schema_evolution: bool = False,
     exclude_files: list[str] | None = None,
 ) -> int:
+    parent = current_version(path)
+    if not parent and os.path.isdir(path) and any(
+            n.endswith(".parquet") for n in os.listdir(path)):
+        # a plain-parquet table (an upsert sink's before it was versioned):
+        # committing would hide its rows behind an empty parent
+        raise MilanAnalysisError(
+            f"versioned table {path}: holds plain parquet files but no "
+            f"commits; commit_overwrite them into a fresh path first"
+        )
     os.makedirs(os.path.join(path, _MANIFEST_DIR), exist_ok=True)
     os.makedirs(os.path.join(path, _DATA), exist_ok=True)
-    parent = current_version(path)
     v = parent + 1
     schema_json = df.schema.json()
     dir_schemas: dict[str, str] = {}
@@ -418,8 +426,23 @@ def _commit(
         "schema": schema_json, "dir_schemas": dir_schemas, "stats": stats,
         "blooms": blooms, "exclude_files": sorted(excl),
     }
-    # (2) THE COMMIT POINT: hard-link the finished manifest into place —
-    # atomic AND exclusive, so exactly one racing writer owns version v
+    # (2) the commit point, (3) the hint
+    return _link_manifest(
+        path, manifest,
+        f"versioned table {path}: version {v} was committed by a concurrent "
+        f"writer; this attempt published nothing, its data directory "
+        f"{data_rel} is an orphan for vacuum(). Re-derive from the new "
+        f"snapshot and retry (commit_with_retry).",
+    )
+
+
+def _link_manifest(path: str, manifest: dict, conflict: str) -> int:
+    """THE COMMIT POINT of every commit: hard-link the finished manifest
+    into place — atomic AND exclusive, so exactly one racing writer owns its
+    version and the others raise :class:`MilanConcurrentCommitError` with
+    the message ``conflict`` — then advertise it (the hint is a cache,
+    ``current_version`` probes past it)."""
+    v = manifest["version"]
     mpath = _manifest_path(path, v)
     tmp = mpath + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
@@ -427,15 +450,9 @@ def _commit(
     try:
         os.link(tmp, mpath)
     except FileExistsError:
-        raise MilanConcurrentCommitError(
-            f"versioned table {path}: version {v} was committed by a "
-            f"concurrent writer; this attempt published nothing, its data "
-            f"directory {data_rel} is an orphan for vacuum(). Re-derive "
-            f"from the new snapshot and retry (commit_with_retry)."
-        ) from None
+        raise MilanConcurrentCommitError(conflict) from None
     finally:
         os.unlink(tmp)
-    # (3) advertise — the hint is a cache, current_version probes past it
     _advance_hint(path, v)
     return v
 
@@ -837,7 +854,9 @@ def once_per_batch(path: str, commit):
     """Wrap ``commit(batch_df, tag)`` as a ``foreachBatch`` writer that
     commits under the tag ``batch=<id>`` and skips a batch id the manifest
     chain of ``path`` already records — the replay a restart runs when its
-    checkpoint is behind the sink."""
+    checkpoint is behind the sink. Only for a query whose checkpoint a
+    later run resumes from: a private one restarts batch ids at 0, and the
+    skip would drop the new run's batches."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         tag = f"batch={batch_id}"
@@ -1195,20 +1214,10 @@ def clone_table(
         "stats": m.get("stats", {}), "blooms": m.get("blooms", {}),
         "exclude_files": m.get("exclude_files", []),
     }
-    mpath = _manifest_path(dst, 1)
-    tmp = mpath + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    try:
-        os.link(tmp, mpath)
-    except FileExistsError:
-        raise MilanConcurrentCommitError(
-            f"clone_table: destination {dst} was initialized concurrently"
-        ) from None
-    finally:
-        os.unlink(tmp)
-    _advance_hint(dst, 1)
-    return 1
+    return _link_manifest(
+        dst, manifest,
+        f"clone_table: destination {dst} was initialized concurrently",
+    )
 
 
 def rollback(path: str, to_version: int, *, tag: str | None = None) -> int:
@@ -1236,22 +1245,11 @@ def rollback(path: str, to_version: int, *, tag: str | None = None) -> int:
         "stats": old.get("stats", {}), "blooms": old.get("blooms", {}),
         "exclude_files": old.get("exclude_files", []),
     }
-    mpath = _manifest_path(path, nv)
-    tmp = mpath + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    try:
-        os.link(tmp, mpath)
-    except FileExistsError:
-        raise MilanConcurrentCommitError(
-            f"versioned table {path}: version {nv} was committed by a "
-            f"concurrent writer during rollback; re-check the head and "
-            f"retry"
-        ) from None
-    finally:
-        os.unlink(tmp)
-    _advance_hint(path, nv)
-    return nv
+    return _link_manifest(
+        path, manifest,
+        f"versioned table {path}: version {nv} was committed by a concurrent "
+        f"writer during rollback; re-check the head and retry",
+    )
 
 
 def count_where(

@@ -324,6 +324,40 @@ def _collect_messages(batch_df: DataFrame, coord: str) -> list[dict]:
     return [json.loads(r) for r in rows]
 
 
+def _sink_coord(spec: Mapping) -> str | None:
+    return {
+        "kinesis": spec.get("stream_name"),
+        "sqs": spec.get("queue_url"),
+        "dynamodb_table": spec.get("table_name"),
+    }[spec["kind"]]
+
+
+def _table_key_cols(spec: Mapping, coord: str) -> list[str]:
+    key_cols = list(spec.get("key_cols") or [])
+    if not key_cols:
+        raise MilanConnectorError(
+            f"dynamodb_table sink {coord!r}: key_cols required (the table's "
+            "primary key)"
+        )
+    return key_cols
+
+
+def _table_put(df: DataFrame, base: str, key_cols: list[str], coord: str) -> int:
+    """Put ``df`` into the emulated DynamoDB table at ``base``: a keyed
+    whole-row upsert of its versioned state (``versioned.merge_head``, with
+    no batch-id skip), then its rows onto the change log. Returns the number
+    of rows."""
+    from milan_spark.operators.versioned import merge_head
+
+    merge_head(df, os.path.join(base, "_state"), key_cols)
+    docs = _collect_messages(df, coord)
+    if docs:
+        changelog = os.path.join(base, "_changelog")
+        os.makedirs(changelog, exist_ok=True)
+        _spool(changelog, docs)
+    return len(docs)
+
+
 def open_queue_sink(
     sdf: DataFrame,
     spec: Mapping,
@@ -335,20 +369,16 @@ def open_queue_sink(
 
     Emulated Kinesis/SQS spool each microbatch as ordered JSON message
     files (Kinesis chunked at ``queue_limit``); the emulated DynamoDB table
-    MERGEs the batch into its versioned state keyed on ``key_cols`` (a
-    replayed batch id merges nothing) and appends the rows to the change
-    log that :class:`DynamoDbStreamSource` reads — at-least-once, as a
-    replayed batch spools its rows again.
+    MERGEs the batch into its versioned state keyed on ``key_cols`` and
+    appends the rows to the change log that :class:`DynamoDbStreamSource`
+    reads. The query's checkpoint is private, so batch ids restart at 0 on
+    every run and no batch replays: every batch merges, with no tag skip.
     """
     from milan_spark.streaming import foreach_batch_sink
 
     output_mode = output_mode or spec.get("output_mode", "append")
     kind = spec["kind"]
-    coord = {
-        "kinesis": spec.get("stream_name"),
-        "sqs": spec.get("queue_url"),
-        "dynamodb_table": spec.get("table_name"),
-    }[kind]
+    coord = _sink_coord(spec)
     if not _is_local(coord):
         raise MilanConnectorError(
             f"{kind} sink {coord!r}: remote connector not available in this "
@@ -369,23 +399,10 @@ def open_queue_sink(
             sdf, publish, output_mode=output_mode, available_now=available_now
         )
 
-    key_cols = list(spec.get("key_cols") or [])
-    if not key_cols:
-        raise MilanConnectorError(
-            f"dynamodb_table sink {coord!r}: key_cols required (the table's "
-            "primary key)"
-        )
-    from milan_spark.operators.versioned import merge_sink
+    key_cols = _table_key_cols(spec, coord)
 
-    merge_state = merge_sink(os.path.join(base, "_state"), key_cols)
-    changelog = os.path.join(base, "_changelog")
-    os.makedirs(changelog, exist_ok=True)
-
-    def merge(batch_df: DataFrame, bid: int) -> None:
-        merge_state(batch_df, bid)
-        docs = _collect_messages(batch_df, coord)
-        if docs:
-            _spool(changelog, docs)
+    def merge(batch_df: DataFrame, _bid: int) -> None:
+        _table_put(batch_df, base, key_cols, coord)
 
     return foreach_batch_sink(
         sdf, merge, output_mode=output_mode, available_now=available_now
@@ -399,35 +416,18 @@ def publish_batch(df: DataFrame, spec: Mapping) -> int:
     part). Returns the number of messages published. Same guarded collect +
     cap as the streaming publisher — a queue is a control-plane transport."""
     kind = spec["kind"]
-    coord = {
-        "kinesis": spec.get("stream_name"),
-        "sqs": spec.get("queue_url"),
-        "dynamodb_table": spec.get("table_name"),
-    }[kind]
+    coord = _sink_coord(spec)
     if not _is_local(coord):
         raise MilanConnectorError(
             f"{kind} sink {coord!r}: batch publish exists only for the "
             "local: emulation"
         )
     base = _local_dir(coord)
+    if kind == "dynamodb_table":
+        return _table_put(df, base, _table_key_cols(spec, coord), coord)
     docs = _collect_messages(df, coord)
-    if kind in ("kinesis", "sqs"):
-        if docs:
-            _spool(base, docs, chunk=spec.get("queue_limit"))
-        return len(docs)
-    key_cols = list(spec.get("key_cols") or [])
-    if not key_cols:
-        raise MilanConnectorError(
-            f"dynamodb_table sink {coord!r}: key_cols required (the table's "
-            "primary key)"
-        )
-    from milan_spark.operators.versioned import merge_head
-
-    merge_head(df, os.path.join(base, "_state"), key_cols)
-    changelog = os.path.join(base, "_changelog")
-    os.makedirs(changelog, exist_ok=True)
     if docs:
-        _spool(changelog, docs)
+        _spool(base, docs, chunk=spec.get("queue_limit"))
     return len(docs)
 
 

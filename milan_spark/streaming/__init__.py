@@ -285,7 +285,8 @@ def upsert_sink(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming MERGE/upsert sink via foreachBatch: each microbatch
-    commits into the versioned table at ``path`` through
+    commits into the versioned table at ``path`` (a plain-parquet table
+    from before that layout raises) through
     ``operators.versioned.commit_merge`` — matched keys replaced whole by
     the batch's row, unmatched inserted, the rest kept (read it with
     ``read_version``). The foreachBatch-merge idiom is how Structured
@@ -297,16 +298,22 @@ def upsert_sink(
     wins); with no ``seq_col`` an ambiguous batch raises
     ``MilanDuplicateKeyError`` rather than picking an arbitrary row.
 
-    A replayed batch id commits nothing (its ``batch=<id>`` tag is in the
-    manifest chain). Each merge rewrites the table, O(table) per batch, and
+    Under a named ``checkpoint`` a replayed batch id commits nothing (its
+    ``batch=<id>`` tag is in the manifest chain). A private checkpoint
+    restarts batch ids at 0 on every run and never replays, so there every
+    batch merges. Each merge rewrites the table, O(table) per batch, and
     keeps only the head and its parent on disk; at 100 TB the table
     partitions on a key hash and only partitions holding batch keys
     rewrite (or a transactional format takes over).
     """
-    from milan_spark.operators.versioned import merge_sink
+    from milan_spark.operators.versioned import merge_head, merge_sink
+
+    def write(batch_df: DataFrame, _bid: int) -> None:
+        merge_head(batch_df, path, key_cols, seq_col=seq_col)
 
     w = (
-        sdf.writeStream.foreachBatch(merge_sink(path, key_cols, seq_col=seq_col))
+        sdf.writeStream.foreachBatch(
+            merge_sink(path, key_cols, seq_col=seq_col) if checkpoint else write)
         .option("checkpointLocation", checkpoint or tempfile.mkdtemp(prefix="milan_ckpt_"))
     )
     if available_now:

@@ -142,6 +142,21 @@ def test_publish_batch_to_dynamodb_table_lands_every_call(spark):
     assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
+def test_dynamodb_table_sink_second_run_lands(spark, tmp_path):
+    """Each run of the streaming table sink has a private checkpoint, so
+    its batch ids restart at 0; a second run into the same table must
+    merge, not be skipped as a replay of the first run's batches."""
+    t = local_queue("ddb_rerun_")
+    spec = DynamoDbTableSink("d1", t, key_cols=["k"]).to_spec()
+    for i, rows in enumerate(([(1, "a"), (2, "b")], [(2, "B"), (3, "c")])):
+        src = str(tmp_path / f"src{i}")
+        spark.createDataFrame(rows, "k long, v string").coalesce(1).write.parquet(src)
+        sdf = spark.readStream.schema("k long, v string").parquet(src)
+        await_finished(open_queue_sink(sdf, spec), 120)
+    got = {tuple(r) for r in read_table_state(spark, t).collect()}
+    assert got == {(1, "a"), (2, "B"), (3, "c")}
+
+
 def test_remote_coordinates_raise_named_connector_errors(spark):
     with pytest.raises(MilanConnectorError, match="kinesis"):
         open_queue_source(

@@ -73,6 +73,19 @@ def test_upsert_sink_seq_resolves_in_batch_duplicates(spark):
     assert got == {(1, "y"), (2, "b")}
 
 
+def test_upsert_sink_reruns_with_private_checkpoints_all_land(spark):
+    """Batch ids restart at 0 under a private checkpoint, so a second run
+    into the same table merges its batch 0 instead of skipping it as a
+    replay of the first run's."""
+    out = tempfile.mkdtemp(prefix="ups_out_") + "/t"
+    for batches in ([[(1, "a", 1), (2, "b", 2)]], [[(2, "B", 3), (3, "c", 4)]]):
+        sdf = spark.readStream.schema("k long, v string, seq long").parquet(
+            _stage_batches(spark, batches)
+        )
+        await_finished(upsert_sink(sdf, out, ["k"]), 120)
+    assert _rows(read_version(spark, out)) == {(1, "a"), (2, "B"), (3, "c")}
+
+
 def test_merge_sink_crash_before_manifest_link_replays_once(spark, monkeypatch):
     """Crash window of the one commit protocol: a merge that dies before
     its manifest link leaves the head as it was; the replayed batch id then

@@ -87,6 +87,23 @@ def test_merge_into_empty_table_and_duplicate_keys(spark, tbl):
     assert rows(read_version(spark, seq)) == {(1, "y")}
 
 
+def test_commit_into_plain_parquet_table_raises(spark, tbl):
+    """A plain-parquet table (an upsert sink's before it was versioned) has
+    no commits; merging into it as if empty would hide its rows, so every
+    commit raises and leaves the directory as it was."""
+    import os
+
+    plain = os.path.join(tbl, "t")
+    _df(spark, [(1, "a")]).write.parquet(plain)
+    before = sorted(os.listdir(plain))
+    with pytest.raises(MilanAnalysisError, match="plain parquet"):
+        commit_merge(spark, _df(spark, [(2, "b")]), plain, ["k"])
+    with pytest.raises(MilanAnalysisError, match="plain parquet"):
+        commit_append(_df(spark, [(2, "b")]), plain)
+    assert sorted(os.listdir(plain)) == before
+    assert _snap(spark.read.parquet(plain)) == [(1, "a")]
+
+
 def test_snapshot_isolation_across_concurrent_commit(spark, tbl):
     commit_append(_df(spark, [(1, "a")]), tbl)
     snapshot = read_version(spark, tbl)  # resolved at version 1
