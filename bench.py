@@ -53,16 +53,37 @@ def _warm_streaming_child(sf_dir: str, names: list[str]) -> None:
     print(json.dumps(out))
 
 
+#: most entries the printed ``queries`` map holds: the stdout tail keeps
+#: ~2000 chars, and a longer line would truncate (the round-1 lesson)
+_TRACKED_CAP = 40
+
+
+def _newest(here: str, prefix: str) -> str | None:
+    """The newest ``<prefix>_rNN*.json`` artifact in ``here``: highest round,
+    then the plain file before its variants (``BENCH_r10.json`` before
+    ``BENCH_r10_c8.json``)."""
+    found = []
+    for name in os.listdir(here):
+        m = re.fullmatch(rf"{prefix}_r(\d+)(.*)\.json", name)
+        if m:
+            found.append((int(m.group(1)), -len(m.group(2)), name))
+    return max(found)[2] if found else None
+
+
 def _prev_tracked_names(here: str) -> set[str]:
-    """Query names the driver's previous-round artifacts track per-query.
-    Keeping them in the printed ``queries`` map (even when they are no longer
-    among the slowest) prevents a membership change from reading as
-    ``dropped_from_bench`` round-over-round (the round-9 artifact)."""
+    """Query names the newest previous-round artifacts (``PERF_r*``,
+    ``BENCH_r*``) track per-query. Keeping them in the printed ``queries``
+    map (even when they are no longer among the slowest) prevents a
+    membership change from reading as ``dropped_from_bench``
+    round-over-round (the round-9 artifact)."""
     names: set[str] = set()
-    for fname, extract in (
-        ("PERF_r09.json", lambda d: (d.get("per_query") or {}).keys()),
-        ("BENCH_r08.json", lambda d: ((d.get("parsed") or {}).get("queries") or {}).keys()),
+    for prefix, extract in (
+        ("PERF", lambda d: (d.get("per_query") or {}).keys()),
+        ("BENCH", lambda d: ((d.get("parsed") or {}).get("queries") or {}).keys()),
     ):
+        fname = _newest(here, prefix)
+        if fname is None:
+            continue
         try:
             with open(os.path.join(here, fname)) as f:
                 names.update(extract(json.load(f)))
@@ -250,14 +271,16 @@ def main() -> None:
     slowest = dict(
         sorted(((k, v) for k, v in timings.items() if v >= 0), key=lambda kv: -kv[1])[:15]
     )
-    # the printed map = slowest 15 ∪ every name the previous rounds' per-query
-    # artifacts track, so a query leaving the slowest-15 set never reads as
-    # "dropped_from_bench" (still bounded: the stdout tail keeps ~2000 chars,
-    # and a full 262-entry line would truncate — the round-1 lesson)
+    # the printed map = slowest 15 ∪ the names the newest per-query artifacts
+    # track, slowest first up to _TRACKED_CAP entries, so a query leaving the
+    # slowest-15 set never reads as "dropped_from_bench"
     tracked = dict(slowest)
-    for k in sorted(_prev_tracked_names(here)):
-        if k in timings and timings[k] >= 0:
-            tracked[k] = timings[k]
+    prev = sorted(
+        (k for k in _prev_tracked_names(here) if k not in tracked and timings.get(k, -1) >= 0),
+        key=lambda k: (-timings[k], k),
+    )
+    for k in prev[: _TRACKED_CAP - len(tracked)]:
+        tracked[k] = timings[k]
     failed = sorted(k for k, v in timings.items() if v < 0)
     summary = {
         "metric": "total_catalog_query_wall_time",

@@ -119,7 +119,6 @@ class Application:
                 "metrics": self.metrics,
             },
             indent=2,
-            sort_keys=True,
         )
 
     @classmethod
@@ -267,9 +266,9 @@ class Application:
         spec = self.sources[sid]
         kind = spec["kind"]
         if kind == "parquet":
-            from milan_spark.sources import ensure_read_conf
+            from milan_spark.sources import read_parquet
 
-            return ensure_read_conf(spark).read.parquet(spec["path"])
+            return read_parquet(spark, spec["path"])
         if kind == "file":
             from milan_spark.sources import file_source
 
@@ -292,14 +291,11 @@ class Application:
 
             return open_queue_source(spark, spec)
         from milan_spark.plans.backend_streaming import _stage_dir
-        from milan_spark.sources import ensure_read_conf, file_stream_source
+        from milan_spark.sources import file_schema, file_stream_source
 
         fmt = spec.get("fmt", "parquet")
         options = spec.get("options") or {}
-        reader = ensure_read_conf(spark).read.format(fmt)
-        if options:
-            reader = reader.options(**options)
-        schema = reader.load(spec["path"]).schema
+        schema = file_schema(spark, spec["path"], fmt, options)
         return file_stream_source(spark, _stage_dir(spec["path"]), fmt=fmt, schema=schema, options=options)
 
     def _observe(self, df: DataFrame):

@@ -1019,27 +1019,24 @@ def random_projection(
 
     Output: (id_col, proj array<long> of length out_dim).
     """
-    def sgn(p: int, d: int) -> int:
-        return 1 if ((p + 1) * 73856093 + (d + 1) * 19349663) % 2000003 - 1000001 >= 0 else -1
-
     # quantize ONCE in a prior projection — as a shared subexpression of all
     # out_dim components it was re-evaluated per component (measured in the
-    # plan: 16 copies of the transform), and the 16 aggregates fold the one
-    # materialized array instead
+    # plan: 16 copies of the transform), and the out_dim folds read the one
+    # materialized array. The sign matrix is computed inside the lambdas
+    # from the (p, d) indices, so the expression has the same size at any
+    # out_dim × in_dim (a literal per sign was 21k py4j calls to build);
+    # p and d cast to long first, since (p+1)·73856093 + (d+1)·19349663
+    # passes 2^31 and int arithmetic overflows under ANSI. zip_with pads a
+    # vector of the wrong length with NULL, so its components are NULL.
     q = corpus.select(F.col(id_col), quantize(vec_col).alias("__q"))
-    comps = [
-        F.aggregate(
-            F.zip_with(
-                F.col("__q"),
-                F.array(*[F.lit(sgn(p, d)).cast("long") for d in range(in_dim)]),
-                lambda x, s: x * s,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        for p in range(out_dim)
-    ]
-    return q.select(F.col(id_col), F.array(*comps).alias("proj"))
+    sign = ("(2 * CAST(((CAST(p AS BIGINT) + 1) * 73856093 + (CAST(d AS BIGINT) + 1)"
+            " * 19349663) % 2000003 - 1000001 >= 0 AS BIGINT) - 1)")
+    proj = (
+        f"transform(sequence(0, {out_dim - 1}), p -> aggregate("
+        f"zip_with(__q, sequence(0, {in_dim - 1}), (x, d) -> x * {sign}),"
+        f" 0L, (acc, v) -> acc + v))"
+    )
+    return q.select(F.col(id_col), F.expr(proj).alias("proj"))
 
 
 def hard_negatives(

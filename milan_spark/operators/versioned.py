@@ -60,7 +60,7 @@ import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from milan_spark.errors import (
     MilanAnalysisError, MilanConcurrentCommitError, MilanDuplicateKeyError)
@@ -642,17 +642,41 @@ def read_version(
 ) -> DataFrame:
     """Snapshot read: resolve the version ONCE (default: `_latest`), then a
     plain union-read of its immutable directories — concurrent commits
-    cannot tear it. ``version=N`` is time travel. mergeSchema is enabled
-    only when the snapshot actually spans schemas (evolved table), since it
-    costs a footer read per file."""
+    cannot tear it. ``version=N`` is time travel. The schema comes from the
+    manifest (:func:`_snapshot_reader`), so the read runs no inference job
+    unless the snapshot spans schemas."""
     v = current_version(path) if version is None else int(version)
     if v == 0:
         raise MilanAnalysisError(f"versioned table {path}: no commits yet")
     m = _read_manifest(path, v)
-    reader = spark.read
-    if len(set(m.get("dir_schemas", {}).values())) > 1:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*_snapshot_paths(path, m))
+    return _snapshot_reader(spark, m).parquet(*_snapshot_paths(path, m))
+
+
+def _nullable(t):
+    """``t`` as a parquet read returns it: Spark reads every field, array
+    element and map value of a file source as nullable."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                           for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _snapshot_reader(spark: SparkSession, m: dict):
+    """A reader for manifest ``m``'s files: pinned to the schema the
+    manifest records when every directory was written with one schema (no
+    inference job), with mergeSchema when they span several (an evolved
+    table; it costs a footer read per file), else inferring."""
+    dir_schemas = m.get("dir_schemas", {})
+    schemas = {dir_schemas.get(d) for d in m["dirs"]}
+    if len(schemas) > 1:
+        return spark.read.option("mergeSchema", "true")
+    if len(schemas) == 1 and None not in schemas:
+        return spark.read.schema(_nullable(StructType.fromJson(json.loads(schemas.pop()))))
+    return spark.read
 
 
 _PRUNE_OPS = ("=", "<", "<=", ">", ">=", "between", "in")
@@ -799,10 +823,7 @@ def read_pruned(
             [], StructType.fromJson(json.loads(m["schema"]))
         )
     else:
-        reader = spark.read
-        if len(set(m.get("dir_schemas", {}).values())) > 1:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*paths)
+        df = _snapshot_reader(spark, m).parquet(*paths)
     df = df.filter(_predicate_column(predicates))
     return (df, report) if with_report else df
 
@@ -840,10 +861,11 @@ def vacuum(path: str, *, keep_from: int) -> dict:
 
 def versioned_sink(path: str):
     """``foreachBatch`` writer with EXACTLY-ONCE commits into a versioned
-    table: every microbatch appends under the tag ``batch=<id>``, and a
-    replayed batch id — Spark re-runs the last microbatch when a restart
-    finds its checkpoint behind the sink — is skipped because the manifest
-    already records it. The manifest chain IS the transaction log, the
+    table: every microbatch appends under the tag
+    ``batch=<queryId>:<batchId>`` (:func:`once_per_batch`), and a replayed
+    batch — Spark re-runs the last microbatch when a restart finds its
+    checkpoint behind the sink — is skipped because the manifest already
+    records it. The manifest chain IS the transaction log, the
     standard batchId-idempotent transactional-sink recipe; combined with
     the atomic manifest-link commit point, readers see each microbatch
     exactly once or not yet."""
@@ -852,14 +874,24 @@ def versioned_sink(path: str):
 
 def once_per_batch(path: str, commit):
     """Wrap ``commit(batch_df, tag)`` as a ``foreachBatch`` writer that
-    commits under the tag ``batch=<id>`` and skips a batch id the manifest
-    chain of ``path`` already records — the replay a restart runs when its
-    checkpoint is behind the sink. Only for a query whose checkpoint a
-    later run resumes from: a private one restarts batch ids at 0, and the
-    skip would drop the new run's batches."""
+    commits under the tag ``batch=<queryId>:<batchId>`` and skips a tag the
+    manifest chain of ``path`` already records — the replay a restart runs
+    when its checkpoint is behind the sink.
+
+    The query id is the streaming query's ``id``: it is stored in a named
+    checkpoint, so it is stable across restarts from it, and new under each
+    private checkpoint. A second run with a private checkpoint restarts
+    batch ids at 0 and still commits every batch. Called outside a
+    streaming query (no query id) the tag is a bare ``batch=<batchId>``,
+    as all tags were before they carried the query id. A bare tag matches
+    only a bare tag: a query restarted on a table whose last commit has one
+    re-commits the batch its checkpoint replays, which happens only when
+    the earlier run died between the sink commit and the checkpoint's."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        tag = f"batch={batch_id}"
+        qid = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId")
+        tag = f"batch={qid}:{batch_id}" if qid else f"batch={batch_id}"
         if not any(e["tag"] == tag for e in versions(path)):
             commit(batch_df, tag)
 
@@ -1082,7 +1114,7 @@ def commit_delete(
         return {"version": v, "files_rewritten": 0,
                 "files_untouched": total_files}
     survivors = (
-        spark.read.parquet(*[os.path.join(path, f) for f in candidates])
+        _snapshot_reader(spark, m).parquet(*[os.path.join(path, f) for f in candidates])
         .filter(~F.coalesce(_predicate_column(predicates), F.lit(False)))
     )
     new_excl = sorted(excl | set(candidates))
@@ -1156,7 +1188,7 @@ def commit_update(
         return {"version": v, "files_rewritten": 0,
                 "files_untouched": total_files}
     match = F.coalesce(_predicate_column(predicates), F.lit(False))
-    src = spark.read.parquet(*[os.path.join(path, f) for f in candidates])
+    src = _snapshot_reader(spark, m).parquet(*[os.path.join(path, f) for f in candidates])
     rewritten = src.select(
         *[
             F.when(match, assignments[c]).otherwise(F.col(c)).alias(c)
@@ -1300,7 +1332,7 @@ def count_where(
         else:
             scan.append(os.path.join(path, f))
     if scan:
-        df = spark.read.parquet(*scan)
+        df = _snapshot_reader(spark, m).parquet(*scan)
         if predicates:
             df = df.filter(_predicate_column(predicates))
         total += df.count()

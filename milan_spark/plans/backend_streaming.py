@@ -88,7 +88,7 @@ def _stage_dir(path: str) -> str:
 
 
 def _stream_source(n: Node, spark: SparkSession) -> DataFrame:
-    from milan_spark.sources import ensure_read_conf, file_stream_source
+    from milan_spark.sources import file_schema, file_stream_source
 
     p = n.params
     if n.op == "list_source":
@@ -100,11 +100,7 @@ def _stream_source(n: Node, spark: SparkSession) -> DataFrame:
     options = p.get("options") or {}
     # schema comes from a batch read of the same path — streaming file
     # sources require one, and this guarantees the two backends agree
-    ensure_read_conf(spark)
-    reader = spark.read.format(fmt)
-    if options:
-        reader = reader.options(**options)
-    schema = reader.load(p["path"]).schema
+    schema = file_schema(spark, p["path"], fmt, options)
     return file_stream_source(
         spark, _stage_dir(p["path"]), fmt=fmt, schema=schema, options=options
     )

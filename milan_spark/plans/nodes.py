@@ -60,7 +60,13 @@ class Node:
 
 def to_json(node: Node) -> str:
     """Dereferenced JSON form, like the reference's StreamCollection: nodes
-    stored flat, children replaced by id references."""
+    stored flat, children replaced by id references.
+
+    The order is fixed, not sorted: ``root`` then ``nodes``, the nodes
+    inputs-first in walk order, each as ``op``, ``params``, ``inputs``, and
+    params in the order they were given. Dict-valued params keep their key
+    order, because it is the output column order of ``add_fields``,
+    aggregates and ``record_window``."""
     if not node.is_serializable:
         raise ValueError(f"plan contains non-serializable node under {node.node_id}")
     nodes: dict[str, dict] = {}
@@ -75,7 +81,7 @@ def to_json(node: Node) -> str:
         return n.node_id
 
     root = walk(node)
-    return json.dumps({"root": root, "nodes": nodes}, indent=2, sort_keys=True)
+    return json.dumps({"root": root, "nodes": nodes}, indent=2)
 
 
 def from_json(text: str) -> Node:
@@ -296,9 +302,9 @@ def _compile_op(n: Node, spark: SparkSession, ins: list[DataFrame]) -> DataFrame
             p.get("alias", "result"), udf(*[F.col(c) for c in p["cols"]])
         )
     if n.op == "parquet_source":
-        from milan_spark.sources import ensure_read_conf
+        from milan_spark.sources import read_parquet
 
-        return ensure_read_conf(spark).read.parquet(p["path"])
+        return read_parquet(spark, p["path"])
     if n.op == "file_source":
         from milan_spark.sources import file_source
 

@@ -30,16 +30,13 @@ def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
 
 
 def _source_schema(n: Node, spark: SparkSession) -> StructType:
-    from milan_spark.sources import ensure_read_conf
+    from milan_spark.sources import file_schema
 
     p = n.params
     if n.op == "parquet_source":
-        return ensure_read_conf(spark).read.parquet(p["path"]).schema
+        return file_schema(spark, p["path"])
     if n.op == "file_source":
-        reader = ensure_read_conf(spark).read.format(p.get("fmt", "parquet"))
-        if p.get("options"):
-            reader = reader.options(**p["options"])
-        return reader.load(p["path"]).schema
+        return file_schema(spark, p["path"], p.get("fmt", "parquet"), p.get("options"))
     if n.op == "list_source":
         if p.get("schema"):
             schema = StructType.fromDDL(p["schema"])

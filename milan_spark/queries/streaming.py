@@ -24,6 +24,7 @@ from milan_spark.queries import analytics as _analytics  # noqa: F401
 from milan_spark.queries import joins as _joins  # noqa: F401
 from milan_spark.queries import scans as _scans  # noqa: F401
 from milan_spark.queries import windows as _windows  # noqa: F401
+from milan_spark.sources import parquet_schema
 from milan_spark.streaming import _start, await_finished, run_to_memory, windowed_agg
 from milan_spark.streaming import stateful
 
@@ -58,11 +59,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         link = os.path.join(stage, "events.parquet")
         if not os.path.exists(link):
             os.symlink(os.path.abspath(path), link)
-    from milan_spark.sources import _normalize_events_ts, ensure_read_conf
+    from milan_spark.sources import _normalize_events_ts
 
-    ensure_read_conf(spark)
-    schema = spark.read.parquet(path).schema
-    sdf = spark.readStream.schema(schema).parquet(stage)
+    sdf = spark.readStream.schema(parquet_schema(spark, path)).parquet(stage)
     return _normalize_events_ts(sdf)
 
 
@@ -482,7 +481,7 @@ def streaming_watermark_late_drop_q(spark: SparkSession, sf_dir: str) -> DataFra
         # arrival order explicitly (name order agrees, as a tiebreak)
         os.utime(dst, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
     shutil.rmtree(tmp)
-    schema = spark.read.parquet(os.path.join(stage, "batch0.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(stage, "batch0.parquet"))
     sdf = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1168,7 +1167,7 @@ def _stage_cohort_slices(ev: DataFrame, etype: str, cols, prefix: str) -> str:
 def _staged_stream(spark: SparkSession, d: str) -> DataFrame:
     import os
 
-    schema = spark.read.parquet(os.path.join(d, "batch0.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(d, "batch0.parquet"))
     return (spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(d))
 
@@ -2097,8 +2096,9 @@ def partitioned_by_stateful_auto_q(spark: SparkSession, sf_dir: str) -> DataFram
     "streaming_versioned_sink",
     doc="EXACTLY-ONCE streaming commits into the versioned table layout "
     "(operators.versioned.versioned_sink): each microbatch appends one "
-    "immutable data directory under tag batch=<id>, the manifest chain "
-    "doubling as the transaction log, and the pointer flips last — so a "
+    "immutable data directory under tag batch=<queryId>:<batchId>, the "
+    "manifest chain doubling as the transaction log, and the pointer flips "
+    "last — so a "
     "restart that replays a microbatch (Spark re-runs the last one when "
     "its checkpoint trails the sink) commits NOTHING twice; the query "
     "DEMONSTRATES the replay by re-invoking the writer with batch id 0 "
@@ -2139,10 +2139,16 @@ def streaming_versioned_sink_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     await_finished(q)
     committed = versions(path)
     assert committed, "versioned sink committed no batches (empty stream?)"
-    # simulated restart replay: batch 0 again, with the full batch content —
-    # the manifest tag makes it a no-op, which the oracle hash then proves
+    # simulated restart replay: batch 0 of the same query again, with the
+    # full batch content — the manifest tag makes it a no-op, which the
+    # oracle hash then proves
     replay = read_version(spark, path, 1)
-    writer(replay, 0)
+    sc = spark.sparkContext
+    sc.setLocalProperty("sql.streaming.queryId", str(q.id))
+    try:
+        writer(replay, 0)
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
     return (
         read_version(spark, path)
         .groupBy("bucket")

@@ -37,6 +37,19 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
     then only starts the stock daemon. ``spark.executorEnv.PYTHONPATH`` puts
     this package's root on the workers' path so the daemon imports from any
     working directory.
+
+    DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``) is
+    off. With it on, PySpark wraps every ``functions``/``Column`` call to
+    capture its Python call site: an ``inspect`` stack walk and about seven
+    py4j round trips (three ``getActiveSession``, the JVM origin class
+    lookup, a conf read, its ``set`` and ``clear``). That was a third to a
+    half of a query build's py4j calls (``ktruss_coparts`` 1,347 → 896,
+    ``streaming_left_enrichment_join`` 1,033 → 499). The cost: a Spark
+    runtime error (an ANSI overflow, a bad cast) no longer carries its
+    ``== DataFrame ==`` context naming the Python line that built the
+    failing expression; the error class and message stay. PySpark reads the
+    conf once per process, at the first wrapped call with an active
+    session, so it must be set before any session builds a column.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
@@ -67,6 +80,7 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.daemon.module", "milan_spark.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -16,13 +16,37 @@ parallelize natively; we deliberately do not reproduce that bottleneck.
 | CsvDataInputFormat (CsvDataInputFormat.scala:42-48) | fmt="csv" opts  |
 | JsonDataInputFormat (JsonDataInputFormat.scala:21)  | fmt="json"      |
 | Kinesis/DynamoDb/Sqs sources           | :mod:`milan_spark.sources.queues` (descriptors + local emulation) |
+
+One parquet read path: every parquet source (:func:`table`,
+:func:`read_parquet`, plan ``parquet_source`` nodes and their validation,
+``Application`` parquet sources, the streaming queries' pinned schemas)
+takes its schema from :func:`parquet_schema`, and passes it to the reader.
+Spark runs a job to infer a parquet schema, and the catalog reads the same
+few tables at hundreds of call sites on every pass; the reference declares
+each source once with a known record type instead. The schema is inferred
+once per key:
+
+- the absolute path;
+- the file's identity, ``(st_size, st_mtime_ns, st_ctime_ns)``; for a
+  directory, the relative path and identity of every file under it, walked
+  recursively (partition directories included). ``st_ctime_ns`` is there
+  because writers that pin mtimes (the staged microbatch files do) could
+  otherwise rewrite a file unseen; a rewritten file is inferred again;
+- the session's parquet-inference confs (:data:`SCHEMA_CONFS`).
+
+The cached value is the ``StructType`` Spark inferred: metadata, never
+rows. Only local paths can be stat'ed, so a path with a URI scheme other
+than ``file:`` (``s3a://``, ``hdfs://``), a glob, or a missing path is
+inferred on every read, as Spark does by itself.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from milan_spark.session import SEQ_COL
 
@@ -184,6 +208,8 @@ def file_source(
     CSV options mirror CsvDataInputFormat's ``skipHeader``/``columnSeparator``/
     ``nullIdentifier`` via Spark's ``header``/``sep``/``nullValue``.
     """
+    if fmt == "parquet" and schema is None and not options:
+        return read_parquet(spark, path)
     ensure_read_conf(spark)
     reader = spark.read.format(fmt)
     if schema is not None:
@@ -191,6 +217,21 @@ def file_source(
     if options:
         reader = reader.options(**options)
     return reader.load(path)
+
+
+def file_schema(
+    spark: SparkSession,
+    path: str,
+    fmt: str = "parquet",
+    options: Mapping[str, str] | None = None,
+) -> StructType:
+    """The schema a batch :func:`file_source` read of ``path`` has — what a
+    streaming read of the same files is pinned to. Plain parquet goes
+    through the :func:`parquet_schema` cache; other formats, or parquet
+    with reader options, are inferred by a batch read."""
+    if fmt == "parquet" and not options:
+        return parquet_schema(spark, path)
+    return file_source(spark, path, fmt=fmt, options=options).schema
 
 
 def file_stream_source(
@@ -254,10 +295,79 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     return df.select("event_id", "ts", "user_id", "event_type", "value", "props")
 
 
+#: Session confs that change the schema Spark infers from a parquet file.
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# abspath -> (identity, confs, schema): one entry per path, so a rewritten
+# file or a changed conf replaces its entry instead of adding one. Shared by
+# every session in the process, as a catalog is; two threads missing at once
+# both infer, and either entry is right for its key.
+_schemas: dict[str, tuple[tuple, tuple, StructType]] = {}
+
+
+def _local_path(path: str) -> str | None:
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+        if path.startswith("//"):
+            path = path[2:]
+    elif "://" in path:
+        return None
+    if any(c in path for c in "*?[{"):
+        return None
+    return os.path.abspath(path)
+
+
+def _identity(local: str) -> tuple:
+    st = os.stat(local)
+    if not os.path.isdir(local):
+        return (st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+    files = []
+    for root, dirs, names in os.walk(local):
+        dirs.sort()
+        for n in sorted(names):
+            full = os.path.join(root, n)
+            fst = os.stat(full)
+            files.append((os.path.relpath(full, local), fst.st_size,
+                          fst.st_mtime_ns, fst.st_ctime_ns))
+    return tuple(files)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    path, file identity and parquet-inference confs (module docstring)."""
+    ensure_read_conf(spark)
+    local = _local_path(path)
+    try:
+        ident = _identity(local) if local else None
+    except OSError:
+        ident = None  # missing: let Spark raise its own error
+    if ident is None:
+        return spark.read.parquet(path).schema
+    confs = tuple(spark.conf.get(k, None) for k in SCHEMA_CONFS)
+    hit = _schemas.get(local)
+    if hit is not None and hit[0] == ident and hit[1] == confs:
+        return hit[2]
+    schema = spark.read.parquet(path).schema
+    _schemas[local] = (ident, confs, schema)
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from
+    :func:`parquet_schema`: no inference job once the file is known."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-provided table, normalizing the events timestamp."""
-    ensure_read_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = _normalize_events_ts(df)
     return df

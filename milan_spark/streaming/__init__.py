@@ -298,22 +298,18 @@ def upsert_sink(
     wins); with no ``seq_col`` an ambiguous batch raises
     ``MilanDuplicateKeyError`` rather than picking an arbitrary row.
 
-    Under a named ``checkpoint`` a replayed batch id commits nothing (its
-    ``batch=<id>`` tag is in the manifest chain). A private checkpoint
-    restarts batch ids at 0 on every run and never replays, so there every
-    batch merges. Each merge rewrites the table, O(table) per batch, and
-    keeps only the head and its parent on disk; at 100 TB the table
-    partitions on a key hash and only partitions holding batch keys
-    rewrite (or a transactional format takes over).
+    A replayed batch commits nothing: its ``batch=<queryId>:<batchId>``
+    tag is in the manifest chain (``versioned.once_per_batch``). The query
+    id is new under each private checkpoint, so every run without a named
+    ``checkpoint`` merges all its batches. Each merge rewrites the table,
+    O(table) per batch, and keeps only the head and its parent on disk; at
+    100 TB the table partitions on a key hash and only partitions holding
+    batch keys rewrite (or a transactional format takes over).
     """
-    from milan_spark.operators.versioned import merge_head, merge_sink
-
-    def write(batch_df: DataFrame, _bid: int) -> None:
-        merge_head(batch_df, path, key_cols, seq_col=seq_col)
+    from milan_spark.operators.versioned import merge_sink
 
     w = (
-        sdf.writeStream.foreachBatch(
-            merge_sink(path, key_cols, seq_col=seq_col) if checkpoint else write)
+        sdf.writeStream.foreachBatch(merge_sink(path, key_cols, seq_col=seq_col))
         .option("checkpointLocation", checkpoint or tempfile.mkdtemp(prefix="milan_ckpt_"))
     )
     if available_now:

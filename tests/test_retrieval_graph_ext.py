@@ -3,6 +3,8 @@ sparse retrieval, RRF fusion, and the grouping_sets DSL/IR node."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -181,6 +183,30 @@ def test_random_projection_exact_ints(spark):
 
     exp = [sum(qx[d] * sgn(p, d) for d in range(4)) for p in range(3)]
     assert list(row["proj"]) == exp
+
+
+def test_random_projection_is_the_sign_formula_at_full_size(spark):
+    """The default 16 × 64 projection equals the Python sign formula exactly,
+    over signs from every (p, d) cell; (p+1)·73856093 + (d+1)·19349663
+    passes 2^31 there, which int arithmetic would overflow under ANSI. A
+    vector of the wrong length projects to NULLs."""
+    import random
+
+    from milan_spark.operators.similarity import QUANT, random_projection
+
+    def sgn(p, d):
+        return 1 if ((p + 1) * 73856093 + (d + 1) * 19349663) % 2000003 - 1000001 >= 0 else -1
+
+    rng = random.Random(7)
+    vecs = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(5)]
+    rows = [(i, v) for i, v in enumerate(vecs)] + [(5, [0.5] * 63), (6, [0.5] * 65)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {r["vec_id"]: r["proj"] for r in random_projection(df, "vec_id", "embedding").collect()}
+    for i, v in enumerate(vecs):
+        qx = [int(math.floor(x * QUANT + 0.5)) for x in v]
+        assert list(got[i]) == [sum(qx[d] * sgn(p, d) for d in range(64)) for p in range(16)]
+    assert {sgn(p, d) for p in range(16) for d in range(64)} == {1, -1}
+    assert list(got[5]) == [None] * 16 and list(got[6]) == [None] * 16
 
 
 def test_conversion_funnel_ordering_and_horizon(spark, tmp_path):

@@ -116,8 +116,9 @@ def test_scan_fold_matches_python_fold(spark):
         seq="event_id",
     )
     cols = ["event_id", "user_id", "acc_cents", "hi_cents"]
-    # JSON round-trip sorts param keys, so compare on named columns not position
-    assert sorted(map(tuple, fast.select(cols).collect())) == sorted(map(tuple, slow.select(cols).collect()))
+    # the output dict's order survives the JSON round trip
+    assert fast.columns == cols
+    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.select(cols).collect()))
 
 
 def test_stream_scan_fold_dsl(spark):

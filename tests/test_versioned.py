@@ -363,6 +363,46 @@ def test_versioned_sink_is_batch_id_idempotent(spark, tbl):
     assert tags == ["batch=0", "batch=1"]
 
 
+def test_versioned_sink_reruns_without_checkpoint_all_land(spark, tbl, tmp_path):
+    """Each run with a private checkpoint is a new query id, so its batch 0
+    is no replay of the previous run's: both runs land, each under its own
+    ``batch=<queryId>:<batchId>`` tag."""
+    from milan_spark.operators.versioned import versioned_sink
+    from milan_spark.streaming import await_finished, foreach_batch_sink
+
+    ids = []
+    for i, rows in enumerate(([(1, "a")], [(2, "b")])):
+        src = str(tmp_path / f"src{i}")
+        _df(spark, rows).write.parquet(src)
+        sdf = spark.readStream.schema("k long, v string").parquet(src)
+        q = foreach_batch_sink(sdf, versioned_sink(tbl))
+        await_finished(q, 120)
+        ids.append(str(q.id))
+    assert ids[0] != ids[1]
+    assert [e["tag"] for e in versions(tbl)] == [f"batch={qid}:0" for qid in ids]
+    assert _snap(read_version(spark, tbl)) == [(1, "a"), (2, "b")]
+
+
+def test_versioned_sink_query_id_is_stable_under_a_named_checkpoint(spark, tbl, tmp_path):
+    """A restart from a named checkpoint keeps the query id and continues
+    the batch ids, so a replay there carries the tag it committed under."""
+    from milan_spark.operators.versioned import versioned_sink
+    from milan_spark.streaming import await_finished
+
+    src, ck = str(tmp_path / "src"), str(tmp_path / "ck")
+    ids = []
+    for i, rows in enumerate(([(1, "a")], [(2, "b")])):
+        _df(spark, rows).write.parquet(f"{src}/part{i}")
+        sdf = spark.readStream.schema("k long, v string").parquet(f"{src}/*")
+        q = (sdf.writeStream.foreachBatch(versioned_sink(tbl))
+             .option("checkpointLocation", ck).trigger(availableNow=True).start())
+        await_finished(q, 120)
+        ids.append(str(q.id))
+    assert ids[0] == ids[1]
+    assert [e["tag"] for e in versions(tbl)] == [f"batch={ids[0]}:{b}" for b in (0, 1)]
+    assert _snap(read_version(spark, tbl)) == [(1, "a"), (2, "b")]
+
+
 def test_bloom_probe_matches_spark_bits(spark):
     """The driver-side Python probe must stay arithmetic-identical to the
     sketch._bloom_idx column expression for both key dtypes."""
