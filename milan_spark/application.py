@@ -290,13 +290,9 @@ class Application:
             from milan_spark.sources.queues import open_queue_source
 
             return open_queue_source(spark, spec)
-        from milan_spark.plans.backend_streaming import _stage_dir
-        from milan_spark.sources import file_schema, file_stream_source
+        from milan_spark.sources import stream_files
 
-        fmt = spec.get("fmt", "parquet")
-        options = spec.get("options") or {}
-        schema = file_schema(spark, spec["path"], fmt, options)
-        return file_stream_source(spark, _stage_dir(spec["path"]), fmt=fmt, schema=schema, options=options)
+        return stream_files(spark, spec["path"], spec.get("fmt", "parquet"), spec.get("options"))
 
     def _observe(self, df: DataFrame):
         if not self.metrics:

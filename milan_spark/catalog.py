@@ -18,7 +18,7 @@ Determinism rules used throughout (so value hashes match bit-for-bit):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,6 +30,7 @@ class QuerySpec:
     oracle: str | None  # None → non-SQL-expressible; driver does rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default=())
+    plan: Callable[[], Any] | None = None  # the plan function, for twins
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -41,6 +42,91 @@ def register(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...]
         return fn
 
     return deco
+
+
+def events():
+    """The leaf of every twin plan: the ``events`` table, bound at build
+    time by :func:`register_twins`."""
+    from milan_spark.plans.nodes import Node
+
+    return Node("external_stream", {"stream_id": "events"})
+
+
+# stateful aggregates emit refinements, so a plan holding one runs in
+# complete mode; the other twin plans append
+_COMPLETE_OPS = frozenset(
+    {"aggregate", "time_window_aggregate", "session_window_aggregate", "last"}
+)
+
+
+def _ops(node) -> set[str]:
+    return {node.op}.union(*(_ops(i) for i in node.inputs))
+
+
+def register_twins(
+    plan_fn: Callable[[], Any],
+    *,
+    oracle: str,
+    batch: dict[str, str],
+    streaming: dict[str, str],
+) -> None:
+    """Register one plan under batch and streaming names (``name -> doc``),
+    all checked by the one ``oracle``: Milan's one IR, several compilers.
+
+    ``plan_fn()`` returns a ``plans.Node`` whose leaf is :func:`events`; it
+    needs no SparkSession. Every name runs ``from_json(to_json(plan))``, so
+    the shipped JSON is what runs. A batch name compiles it with
+    ``compile_node`` over ``sources.table(…, "events")``; a streaming name
+    with ``compile_node_streaming`` over ``sources.events_stream`` and runs
+    it to a memory sink, in complete mode when the plan holds a stateful
+    aggregate (``_COMPLETE_OPS``), else in append mode.
+
+    Twins that stay hand-built, because their two sides run different
+    algorithms:
+
+    - ``zscore_anomaly`` / ``streaming_zscore_anomaly``: batch windows sum
+      in decimal(38); the stream folds unbounded Python ints.
+    - ``asof_join_purchase_view`` / ``streaming_asof_purchase_view`` and
+      ``scd2_temporal_join`` / ``streaming_scd2_temporal_join``: the batch
+      side pre-dedups its right side; the stream pairs through the
+      enrichment state machine keyed on time.
+    - ``partitioned_application_two_part`` /
+      ``streaming_partitioned_application`` (and ``application_bundle_run``,
+      whose oracle the latter shares): an ``Application`` bundle carries
+      its own source bindings and sinks, and runs on either backend itself.
+    - the graph pairs (``*_cycle_ir`` against ``operators/graph.py``).
+    """
+
+    def plan():
+        from milan_spark.plans.nodes import from_json, to_json
+
+        return from_json(to_json(plan_fn()))
+
+    def batch_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from milan_spark.plans.nodes import compile_node
+        from milan_spark.sources import table
+
+        return compile_node(plan(), spark, sources={"events": table(spark, sf_dir, "events")})
+
+    def streaming_build(name: str):
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            from milan_spark.plans.backend_streaming import compile_node_streaming
+            from milan_spark.sources import events_stream
+            from milan_spark.streaming import run_to_memory
+
+            node = plan()
+            sdf = compile_node_streaming(
+                node, spark, source_overrides={"events": events_stream(spark, sf_dir)}
+            )
+            mode = "complete" if _ops(node) & _COMPLETE_OPS else "append"
+            return run_to_memory(sdf, name, output_mode=mode)
+
+        return build
+
+    for name, doc in batch.items():
+        REGISTRY[name] = QuerySpec(name, batch_build, oracle, doc, plan=plan_fn)
+    for name, doc in streaming.items():
+        REGISTRY[name] = QuerySpec(name, streaming_build(name), oracle, doc, plan=plan_fn)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

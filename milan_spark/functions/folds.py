@@ -40,3 +40,13 @@ def ewma_cents_fold(state, rec):
     x = int(math.floor(rec.value * 100 + 0.5))
     state = x if state is None else state + (x - state) // 8
     return state, {"event_id": rec.event_id, "user_id": rec.user_id, "ewma_cents": state}
+
+
+def threshold_cents_fold(state, rec):
+    """Per-key running total of half-up cents, emitted once it passes
+    500000 (5000.00): the ``scan_threshold`` Scan. Requires record columns
+    ``event_id``, ``user_id``, ``value``; the initial state is 0."""
+    state = state + int(math.floor(rec.value * 100 + 0.5))
+    if state > 500000:
+        return state, {"event_id": rec.event_id, "user_id": rec.user_id, "acc_cents": state}
+    return state, None

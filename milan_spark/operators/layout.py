@@ -77,8 +77,11 @@ def compact_files(
     tiny files whose per-file open/footer cost eventually dominates scans.
     Rewrites ``path`` into ⌈total_bytes / target_mb⌉ files (optionally
     sorted, which restores row-group pruning after the rewrite) with a
-    two-rename directory swap — readers see the old or the new directory,
-    never a partial one.
+    two-rename directory swap. Readers see the old or the new directory,
+    never a partial one, except between the two renames, when ``path`` is
+    missing. A crash there leaves the old data whole in
+    ``path.__old_compact``; the next call restores it (and drops a stale
+    ``path.__tmp_compact``) before compacting again.
 
     Returns {"files_before", "files_after", "bytes"}. One read + one
     shuffle-free coalesce write (or one range sort when ``sort_by`` — the
@@ -88,6 +91,13 @@ def compact_files(
     import os
     import shutil
 
+    tmp, old = f"{path}.__tmp_compact", f"{path}.__old_compact"
+    if os.path.isdir(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)  # crashed after the swap: old is stale
+        else:
+            os.rename(old, path)  # crashed between the renames
+    shutil.rmtree(tmp, ignore_errors=True)
     before = [
         f for f in os.listdir(path)
         if not f.startswith(("_", ".")) and not f.endswith(".crc")
@@ -99,9 +109,7 @@ def compact_files(
         df = df.repartitionByRange(n_out, *sort_by).sortWithinPartitions(*sort_by)
     else:
         df = df.coalesce(n_out)
-    tmp = f"{path}.__tmp_compact"
     df.write.mode("overwrite").format(fmt).save(tmp)
-    old = f"{path}.__old_compact"
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)

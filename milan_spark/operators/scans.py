@@ -202,10 +202,5 @@ def last(
     sequence number. A map-side-combinable ``max_by`` — unlike the reference,
     which forces the unkeyed variant onto a single task.
     """
-    cols = [c for c in df.columns]
-    payload = F.max_by(F.struct(*cols), F.col(seq))
-    if keys:
-        out = df.groupBy(*keys).agg(payload.alias("__last"))
-    else:
-        out = df.groupBy().agg(payload.alias("__last"))
-    return out.select(*[F.col(f"__last.{c}").alias(c) for c in cols])
+    payload = F.max_by(F.struct(*df.columns), F.col(seq)).alias("__last")
+    return df.groupBy(*keys).agg(payload).select("__last.*")

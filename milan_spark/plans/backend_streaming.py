@@ -12,9 +12,9 @@ stateful operators to their ``streaming.stateful`` state-machine twins.
 
 Supported (the serializable streaming subset):
 
-- ``parquet_source`` / ``file_source`` → ``readStream`` over a staged
-  directory with the batch-inferred schema (FileStreamSource monitors
-  directories, so a single-file path is exposed via a symlink dir — no copy)
+- ``parquet_source`` / ``file_source`` → ``sources.stream_files``: a
+  ``readStream`` pinned to the schema the ``sources`` read path gives a batch
+  read of the same path (a single file is staged as a symlink directory)
 - ``filter`` / ``map`` / ``add_fields`` / ``to_field`` / ``union`` — the
   batch compile is already streaming-legal; delegated to ``_compile_op``
 - ``aggregate`` — streaming groupBy (caller runs it in complete/update mode)
@@ -29,7 +29,8 @@ Supported (the serializable streaming subset):
   emits on strict improvement (Milan's every-element MaxBy/MinBy trigger)
 - ``record_window`` → bounded per-key list state emitting trailing-N
   sum/count/min/max on every arrival (``stateful.record_window_apply``)
-- ``last`` → keyed/global max-seq streaming aggregation (complete mode)
+- ``last`` → the batch keyed/global max-seq aggregation, run in complete
+  mode
 - ``distinct`` → Spark's native streaming ``dropDuplicates``
 - ``relational_join`` → Spark's NATIVE stream-stream join (shared with the
   batch compiler: the node's ``watermarks`` apply only to streaming inputs
@@ -50,10 +51,7 @@ op — the same explicitness as the batch compiler's logical-only nodes.
 
 from __future__ import annotations
 
-import hashlib
 import math
-import os
-import tempfile
 from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -63,32 +61,18 @@ from milan_spark.plans.nodes import Node, _compile_op
 # ops whose batch DataFrame code is streaming-legal verbatim (distinct →
 # dropDuplicates, Spark's native streaming dedup with per-key state;
 # apply_function — a stateless Arrow-vectorized column append resolved from
-# its dotted-path FunctionReference, legal in any output mode)
+# its dotted-path FunctionReference, legal in any output mode; last — the
+# max-seq streaming aggregation, run in complete mode)
 _SHARED_OPS = frozenset(
     {"filter", "map", "add_fields", "to_field", "union", "aggregate", "hint",
-     "distinct", "apply_function", "relational_join"}
+     "distinct", "apply_function", "relational_join", "last"}
 )
 
 _SOURCE_OPS = frozenset({"parquet_source", "file_source", "list_source"})
 
 
-def _stage_dir(path: str) -> str:
-    """FileStreamSource monitors directories; expose a single-file path
-    through a stable per-path symlink directory (no data copy). A directory
-    path passes through unchanged."""
-    if os.path.isdir(path):
-        return path
-    tag = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"milan_ir_src_{tag}")
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, os.path.basename(path))
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(path), link)
-    return stage
-
-
 def _stream_source(n: Node, spark: SparkSession) -> DataFrame:
-    from milan_spark.sources import file_schema, file_stream_source
+    from milan_spark.sources import stream_files
 
     p = n.params
     if n.op == "list_source":
@@ -97,13 +81,13 @@ def _stream_source(n: Node, spark: SparkSession) -> DataFrame:
             "streaming DataFrame for it via source_overrides"
         )
     fmt = p.get("fmt", "parquet") if n.op == "file_source" else "parquet"
-    options = p.get("options") or {}
-    # schema comes from a batch read of the same path — streaming file
-    # sources require one, and this guarantees the two backends agree
-    schema = file_schema(spark, p["path"], fmt, options)
-    return file_stream_source(
-        spark, _stage_dir(p["path"]), fmt=fmt, schema=schema, options=options
-    )
+    return stream_files(spark, p["path"], fmt, p.get("options"))
+
+
+def _live(v) -> bool:
+    # pandas surfaces NULL numerics as NaN (nullable ints arrive as floats)
+    # — skip them per SQL aggregate semantics
+    return v is not None and not (isinstance(v, float) and math.isnan(v))
 
 
 _CUM_COMBINE = {"sum": lambda i, c: i + c, "max": F.greatest, "min": F.least}
@@ -154,9 +138,7 @@ def _streaming_cum_fold(
         new_state = list(state)
         for i, name in enumerate(names):
             v = rec[arg_pos[i]]
-            # pandas surfaces NULL numerics as NaN (nullable ints arrive as
-            # floats) — skip them per SQL aggregate semantics
-            if v is not None and not (isinstance(v, float) and math.isnan(v)):
+            if _live(v):
                 if name in int_out:
                     v = int(v)
                 cur = new_state[i]
@@ -206,7 +188,7 @@ def _streaming_arg_compare(
 
     def fold(state, rec):
         v = rec[argi]
-        if v is None or (isinstance(v, float) and v != v):
+        if not _live(v):
             return state, None
         if state is None or (v > state if maximize else v < state):
             return v, {c: rec[pos[c]] for c in orig}
@@ -237,78 +219,66 @@ def _parse_trailing_agg(expr: str) -> tuple[str, str]:
     return m.group(1).lower(), m.group(2).strip()
 
 
+_INT_TYPES = ("bigint", "int", "smallint", "tinyint")
+
+
+def _agg_folds(sdf: DataFrame, parsed: dict, out_schema, prefix: str):
+    """The state machines' side of sum/count/min/max aggregates: each
+    argument is evaluated JVM-side as a ``prefix + alias`` column before the
+    rows enter state (exact decimal/int semantics), and the returned
+    ``fold(rows) -> {alias: value}`` only combines, NULLs skipped. Integer
+    and Decimal sums are exact, floats add in arrival order as the batch
+    window does; an integer output column gets an int."""
+    out_types = {f.name: f.dataType.simpleString() for f in out_schema.fields}
+    args = {}
+    for alias, (func, inner) in parsed.items():
+        if func == "count" and inner in ("*", "1"):
+            args[alias] = (func, "", False)  # row count — no argument column
+        else:
+            args[alias] = (func, prefix + alias, out_types[alias] in _INT_TYPES)
+            sdf = sdf.withColumn(prefix + alias, F.expr(inner))
+
+    def fold(rows: list[dict]) -> dict:
+        out = {}
+        for alias, (func, col, as_int) in args.items():
+            if func == "count":
+                out[alias] = len(rows) if not col else sum(1 for r in rows if _live(r[col]))
+                continue
+            vals = [r[col] for r in rows if _live(r[col])]
+            if not vals:
+                out[alias] = None
+                continue
+            v = sum(vals) if func == "sum" else (max(vals) if func == "max" else min(vals))
+            out[alias] = int(v) if as_int else v
+        return out
+
+    return sdf, fold
+
+
 def _streaming_record_window(
     sdf: DataFrame, n: int, aggs: dict[str, str], keys: list[str], seq: str
 ) -> DataFrame:
     """Streaming twin of ``operators.windows.record_window`` — Milan's
     SlidingRecordWindow (bounded per-key list state vs the reference's
     priority-queue ValueState): every arrival emits the input row plus each
-    aggregate over the trailing ``n`` records inclusive.
-
-    Aggregate arguments are evaluated JVM-side as ``__rwarg_*`` columns
-    (exact decimal/int semantics); the Python fold only combines — integer
-    and Decimal sums are exact, floats match the batch window's
-    left-to-right arrival-order accumulation. The output schema is taken
-    from the BATCH operator compiled against a zero-row frame, so both
-    backends agree by construction.
+    aggregate over the trailing ``n`` records inclusive (``_agg_folds``).
+    The output schema is taken from the BATCH operator compiled against a
+    zero-row frame, so both backends agree by construction.
     """
-    from pyspark.sql.types import StructType
-
     from milan_spark.operators.windows import record_window
     from milan_spark.streaming import stateful
 
-    spark = sdf.sparkSession
     parsed = {name: _parse_trailing_agg(e) for name, e in aggs.items()}
-
     # batch-derived output schema (zero-row compile — no jobs run)
-    empty = spark.createDataFrame([], sdf.schema)
-    out_schema: StructType = record_window(
+    empty = sdf.sparkSession.createDataFrame([], sdf.schema)
+    out_schema = record_window(
         empty, n, {a: F.expr(e) for a, e in aggs.items()}, keys=keys, seq=seq
     ).schema
-    out_fields = {f.name: f.dataType for f in out_schema.fields}
-
-    pre = sdf
-    argcols: dict[str, str] = {}
-    for name, (func, inner) in parsed.items():
-        if func == "count" and inner in ("*", "1"):
-            argcols[name] = ""  # row count — no argument column
-        else:
-            argcols[name] = f"__rwarg_{name}"
-            pre = pre.withColumn(argcols[name], F.expr(inner))
-
+    pre, fold = _agg_folds(sdf, parsed, out_schema, "__rwarg_")
     orig = list(sdf.columns)
-    names = list(aggs)
-    int_out = {
-        name for name in names
-        if out_fields[name].simpleString() in ("bigint", "int", "smallint", "tinyint")
-    }
-    funcs = {name: parsed[name][0] for name in names}
-
-    def _live(v) -> bool:
-        # pandas surfaces NULL numerics as NaN (nullable ints arrive as
-        # floats) — skip them per SQL aggregate semantics
-        return v is not None and not (isinstance(v, float) and math.isnan(v))
-
-    def agg_over(buf: list[dict], name: str):
-        func, col = funcs[name], argcols[name]
-        if func == "count":
-            if not col:
-                return len(buf)
-            return sum(1 for r in buf if _live(r[col]))
-        vals = [r[col] for r in buf if _live(r[col])]
-        if not vals:
-            return None
-        if func == "sum":
-            s = sum(vals)
-        else:
-            s = max(vals) if func == "max" else min(vals)
-        return int(s) if name in int_out else s
 
     def fn(rows: list[dict]) -> dict:
-        out = {c: rows[-1][c] for c in orig}
-        for name in names:
-            out[name] = agg_over(rows, name)
-        return out
+        return {**{c: rows[-1][c] for c in orig}, **fold(rows)}
 
     return stateful.record_window_apply(
         pre, n, fn, output_schema=out_schema, keys=keys, seq=seq
@@ -329,63 +299,25 @@ def _streaming_left_windowed_join(
     Milan's LeftWindowedJoin + apply (JoinedWindowedStream.scala:16-27) in
     its per-arrival temporal flavor: the right window rides per-key state
     (``stateful.left_windowed_join_apply``), each left arrival emits its row
-    plus sum/count/min/max over the rights buffered so far.
-
-    Aggregate arguments are evaluated JVM-side as ``__wjarg_*`` columns
-    before the rows enter state (exact int semantics; the Python fold only
-    combines); the output schema is the BATCH operator compiled against
-    zero-row frames, so both backends agree by construction.
+    plus sum/count/min/max over the rights buffered so far (``_agg_folds``).
+    The output schema is the BATCH operator compiled against zero-row
+    frames, so both backends agree by construction.
     """
-    from pyspark.sql.types import StructType
-
     from milan_spark.operators.joins import _parse_agg, left_windowed_agg_join
     from milan_spark.streaming import stateful
 
     spark = left.sparkSession
     parsed = {alias: _parse_agg(e) for alias, e in aggs.items()}
-    lcols = list(left.columns)
-
-    empty_l = spark.createDataFrame([], left.schema)
-    empty_r = spark.createDataFrame([], right.schema)
-    out_schema: StructType = left_windowed_agg_join(
-        empty_l, empty_r, left_on=left_on, right_on=right_on, aggs=aggs,
+    out_schema = left_windowed_agg_join(
+        spark.createDataFrame([], left.schema), spark.createDataFrame([], right.schema),
+        left_on=left_on, right_on=right_on, aggs=aggs,
         left_seq=left_seq, right_seq=right_seq,
     ).schema
-    out_fields = {f.name: f.dataType.simpleString() for f in out_schema.fields}
-    int_out = {
-        a for a in parsed
-        if out_fields[a] in ("bigint", "int", "smallint", "tinyint")
-    }
-
-    pre_r = right
-    argcols: dict[str, str] = {}
-    for alias, (func, inner) in parsed.items():
-        if func == "count" and inner in ("*", "1"):
-            argcols[alias] = ""
-        else:
-            argcols[alias] = f"__wjarg_{alias}"
-            pre_r = pre_r.withColumn(argcols[alias], F.expr(inner))
-
-    def _live(v) -> bool:
-        return v is not None and not (isinstance(v, float) and math.isnan(v))
+    pre_r, fold = _agg_folds(right, parsed, out_schema, "__wjarg_")
+    lcols = list(left.columns)
 
     def fn(left_row: dict, rights: list[dict]) -> dict:
-        out = {c: left_row[c] for c in lcols}
-        for alias, (func, _inner) in parsed.items():
-            col = argcols[alias]
-            if func == "count":
-                out[alias] = (
-                    len(rights) if not col
-                    else sum(1 for r in rights if _live(r[col]))
-                )
-                continue
-            vals = [r[col] for r in rights if _live(r[col])]
-            if not vals:
-                out[alias] = None
-                continue
-            s = sum(vals) if func == "sum" else (max(vals) if func == "max" else min(vals))
-            out[alias] = int(s) if alias in int_out else s
-        return out
+        return {**{c: left_row[c] for c in lcols}, **fold(rights)}
 
     return stateful.left_windowed_join_apply(
         left,
@@ -622,16 +554,6 @@ def compile_node_streaming(
                 keys=p.get("keys", []),
                 seq=p.get("seq", "__seq"),
             )
-        if n.op == "last":
-            # Milan Last on the streaming backend: a keyed (or global)
-            # streaming aggregation holding the max-seq record — run in
-            # complete/update mode; matches operators.scans.last exactly
-            sdf = ins[0]
-            seq = p.get("seq", "__seq")
-            cols = list(sdf.columns)
-            payload = F.max_by(F.struct(*cols), F.col(seq)).alias("__last")
-            grouped = sdf.groupBy(*p.get("keys", [])).agg(payload)
-            return grouped.select(*[F.col(f"__last.{c}").alias(c) for c in cols])
         raise ValueError(
             f"op {n.op!r} has no streaming realization; compile with "
             "plans.nodes.compile_node (batch) instead"

@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from milan_spark import functions as mf
-from milan_spark.catalog import register
+from milan_spark.catalog import events, register, register_twins
+from milan_spark.plans.nodes import Node
 from milan_spark.sources import table
 
 DEC = "decimal(18,6)"
@@ -171,12 +172,19 @@ def union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.unionByName(b)
 
 
-@register(
-    "unique_dedup",
-    doc="Milan's documented-but-unimplemented unique/uniqueBy "
-    "(doc/Streams in Milan and streaming operations.md:73-77) — dropDuplicates "
-    "with deterministic survivor via last-per-key (max event_id), the "
-    "streaming-consistent choice.",
+def unique_dedup_plan() -> Node:
+    return Node(
+        "aggregate",
+        {
+            "keys": ["user_id", "event_type"],
+            "aggs": {"last_event_id": "max(event_id)", "last_value": "max_by(value, event_id)"},
+        },
+        [events()],
+    )
+
+
+register_twins(
+    unique_dedup_plan,
     oracle="""
 SELECT user_id, event_type,
        MAX(event_id) AS last_event_id,
@@ -184,13 +192,19 @@ SELECT user_id, event_type,
 FROM events
 GROUP BY user_id, event_type
 """,
+    batch={
+        "unique_dedup": "Milan's documented-but-unimplemented unique/uniqueBy "
+        "(doc/Streams in Milan and streaming operations.md:73-77) — dropDuplicates "
+        "with deterministic survivor via last-per-key (max event_id), the "
+        "streaming-consistent choice.",
+    },
+    streaming={
+        "streaming_unique_dedup": "unique/uniqueBy on the streaming backend: "
+        "streaming aggregation in complete mode keeping the last record per "
+        "(user_id, event_type) — the survivor choice that is consistent under "
+        "arrival order. Same plan and oracle as the batch twin.",
+    },
 )
-def unique_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    return ev.groupBy("user_id", "event_type").agg(
-        F.max("event_id").alias("last_event_id"),
-        F.max_by("value", "event_id").alias("last_value"),
-    )
 
 
 @register(

@@ -9,15 +9,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from milan_spark.catalog import register
-from milan_spark.operators.joins import (
-    full_enrichment_join,
-    left_enrichment_join,
-    left_inner_enrichment_join,
-    snapshot_join,
-)
+from milan_spark.catalog import events, register, register_twins
+from milan_spark.operators.joins import left_enrichment_join, snapshot_join
+from milan_spark.plans.nodes import Node
 from milan_spark.sources import table
-from milan_spark.stream import Stream
 
 DEC = "decimal(18,6)"
 
@@ -27,10 +22,35 @@ def _events_side(spark, sf_dir, event_type, cols):
     return ev.filter(F.col("event_type") == event_type).select(*cols, F.col("event_id").alias("__seq"))
 
 
-@register(
-    "left_enrichment_join",
-    doc="Milan LeftJoin (LeftJoinKeyedCoProcessFunction.scala:41-80): each "
-    "purchase paired with the user's latest at-or-earlier signup; null if none.",
+def _side(ev: Node, event_type: str, *exprs: str) -> Node:
+    """One event type of ``ev`` as a join side, sequenced by ``event_id``.
+    Both sides read the one ``ev`` node, so a stream reads one source."""
+    return Node(
+        "map", {"exprs": [*exprs, "event_id AS __seq"]},
+        [Node("filter", {"condition": f"event_type = '{event_type}'"}, [ev])],
+    )
+
+
+def _enrichment_plan(op: str, left: tuple, right: tuple, out: list[str]) -> Node:
+    """``op`` on ``user_id`` between two event types, each given as
+    ``(event_type, *exprs)``, then projected to ``out``."""
+    ev = events()
+    join = Node(op, {"left_on": ["user_id"], "right_on": ["user_id"]},
+                [_side(ev, *left), _side(ev, *right)])
+    return Node("map", {"exprs": out}, [join])
+
+
+def left_enrichment_join_plan() -> Node:
+    return _enrichment_plan(
+        "left_enrichment_join",
+        ("purchase", "event_id", "user_id", "value"),
+        ("signup", "user_id", "event_id AS signup_event_id", "value AS signup_value"),
+        ["event_id", "user_id", "value", "signup_event_id", "signup_value"],
+    )
+
+
+register_twins(
+    left_enrichment_join_plan,
     oracle="""
 WITH u AS (
   SELECT user_id, event_id AS ord, 1 AS side, event_id, value,
@@ -50,18 +70,37 @@ SELECT event_id, user_id, value,
        l_signup_event_id AS signup_event_id, l_signup_value AS signup_value
 FROM w WHERE side = 1
 """,
+    batch={
+        "left_enrichment_join": "Milan LeftJoin (LeftJoinKeyedCoProcessFunction.scala:41-80): "
+        "each purchase paired with the user's latest at-or-earlier signup; null if none.",
+    },
+    streaming={
+        "streaming_left_enrichment_join": "Milan LeftJoin executed as its true streaming "
+        "state machine (applyInPandasWithState value-state machine ≈ "
+        "LeftJoinKeyedCoProcessFunction.scala:41-80): purchases enriched with the "
+        "user's latest at-or-earlier signup. Same plan and oracle as the batch twin.",
+        "streaming_from_ir": "One IR, two compilers (the reference's defining "
+        "architecture: FlinkGenerator.scala:63-87 and EventHandlerClassGenerator."
+        "scala:36-80 consume the same StreamCollection): the left_enrichment_join "
+        "plan — filter/map sides, per-arrival LeftJoin, projection — JSON round-"
+        "tripped and compiled to Structured Streaming by plans.backend_streaming."
+        "compile_node_streaming, run to completion, and hash-matched against the "
+        "same DuckDB oracle as the batch LeftJoin.",
+    },
 )
-def left_enrichment_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    left = _events_side(spark, sf_dir, "purchase", ["event_id", "user_id", "value"])
-    right = _events_side(spark, sf_dir, "signup", ["user_id", F.col("event_id").alias("signup_event_id"), F.col("value").alias("signup_value")])
-    out = left_enrichment_join(left, right, on="user_id")
-    return out.select("event_id", "user_id", "value", "signup_event_id", "signup_value")
 
 
-@register(
-    "full_enrichment_join",
-    doc="Milan FullJoin (FullJoinKeyedCoProcessFunction.scala:43-88): every "
-    "purchase OR error arrival emits (latest purchase, latest error) for the user.",
+def full_enrichment_join_plan() -> Node:
+    return _enrichment_plan(
+        "full_enrichment_join",
+        ("purchase", "user_id", "event_id AS p_event_id", "value AS p_value"),
+        ("error", "user_id", "event_id AS e_event_id", "value AS e_value"),
+        ["user_id", "p_event_id", "p_value", "e_event_id", "e_value"],
+    )
+
+
+register_twins(
+    full_enrichment_join_plan,
     oracle="""
 WITH u AS (
   SELECT user_id, event_id AS ord, 1 AS side,
@@ -82,23 +121,30 @@ WITH u AS (
 )
 SELECT user_id, p_event_id, p_value, e_event_id, e_value FROM w
 """,
+    batch={
+        "full_enrichment_join": "Milan FullJoin (FullJoinKeyedCoProcessFunction.scala:43-88): "
+        "every purchase OR error arrival emits (latest purchase, latest error) for the user.",
+    },
+    streaming={
+        "streaming_full_enrichment_join": "Milan FullJoin as its streaming state "
+        "machine (two ValueStates, FullJoinKeyedCoProcessFunction.scala:43-88): every "
+        "purchase OR error arrival emits (latest purchase, latest error). Same plan "
+        "and oracle as the batch twin.",
+    },
 )
-def full_enrichment_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    left = _events_side(
-        spark, sf_dir, "purchase", ["user_id", F.col("event_id").alias("p_event_id"), F.col("value").alias("p_value")]
-    )
-    right = _events_side(
-        spark, sf_dir, "error", ["user_id", F.col("event_id").alias("e_event_id"), F.col("value").alias("e_value")]
-    )
-    out = full_enrichment_join(left, right, on="user_id")
-    return out.select("user_id", "p_event_id", "p_value", "e_event_id", "e_value")
 
 
-@register(
-    "left_inner_enrichment_join",
-    doc="Milan LeftInnerJoin (LeftInnerJoinKeyedCoProcessFunction.scala:40-103): "
-    "clicks pair with the latest earlier view, else buffer for the first later "
-    "view; unmatched clicks never emit.",
+def left_inner_enrichment_join_plan() -> Node:
+    return _enrichment_plan(
+        "left_inner_enrichment_join",
+        ("click", "event_id", "user_id", "value"),
+        ("view", "user_id", "event_id AS view_event_id"),
+        ["event_id", "user_id", "value", "view_event_id"],
+    )
+
+
+register_twins(
+    left_inner_enrichment_join_plan,
     oracle="""
 WITH u AS (
   SELECT user_id, event_id AS ord, 1 AS side, event_id, value,
@@ -118,12 +164,19 @@ WITH u AS (
 SELECT event_id, user_id, value, COALESCE(v_before, v_after) AS view_event_id
 FROM w WHERE side = 1 AND COALESCE(v_before, v_after) IS NOT NULL
 """,
+    batch={
+        "left_inner_enrichment_join": "Milan LeftInnerJoin "
+        "(LeftInnerJoinKeyedCoProcessFunction.scala:40-103): clicks pair with the "
+        "latest earlier view, else buffer for the first later view; unmatched clicks "
+        "never emit.",
+    },
+    streaming={
+        "streaming_left_inner_enrichment_join": "Milan LeftInnerJoin as its streaming "
+        "state machine (ListState buffer, LeftInnerJoinKeyedCoProcessFunction.scala:"
+        "40-103): clicks buffer until the user's first view, then pair with the "
+        "latest view. Same plan and oracle as the batch twin.",
+    },
 )
-def left_inner_enrichment_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    left = _events_side(spark, sf_dir, "click", ["event_id", "user_id", "value"])
-    right = _events_side(spark, sf_dir, "view", ["user_id", F.col("event_id").alias("view_event_id")])
-    out = left_inner_enrichment_join(left, right, on="user_id")
-    return out.select("event_id", "user_id", "value", "view_event_id")
 
 
 @register(
@@ -313,18 +366,27 @@ def asof_join_purchase_view_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "left_windowed_join_temporal",
-    doc="Milan LeftWindowedJoin + apply in its per-arrival TEMPORAL flavor "
-    "(lang/JoinedWindowedStream.scala:16-27 - the semantics the reference's "
-    "streaming runtime actually implements, vs windowed_join_apply's whole-"
-    "group batch-window convenience): each purchase emits count/sum over "
-    "the VIEW events for its user that arrived at-or-before it. Batch plan "
-    "= one shuffle + one per-key sort: aggregate args evaluated JVM-side "
-    "on right rows (NULL on left rows), cumulative null-skipping window "
-    "folds, zero Python. Serializable left_windowed_join node; the "
-    "streaming twin (streaming_left_windowed_join_ir) compiles the SAME "
-    "JSON via the per-key right-window state machine.",
+def left_windowed_join_temporal_plan() -> Node:
+    ev = events()
+    join = Node(
+        "left_windowed_join",
+        {
+            "left_on": ["user_id"],
+            "right_on": ["user_id"],
+            "aggs": {"n_views": "count(cents)", "view_cents": "sum(cents)"},
+            "left_seq": "__seq",
+            "right_seq": "__seq",
+        },
+        [
+            _side(ev, "purchase", "user_id", "event_id"),
+            _side(ev, "view", "user_id", "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents"),
+        ],
+    )
+    return Node("map", {"exprs": ["event_id", "user_id", "n_views", "view_cents"]}, [join])
+
+
+register_twins(
+    left_windowed_join_temporal_plan,
     oracle="""
 WITH u AS (
   SELECT user_id, event_id AS ord, 1 AS side, event_id,
@@ -346,23 +408,23 @@ SELECT event_id, user_id, n_views,
        CAST(view_cents AS BIGINT) AS view_cents
 FROM c WHERE side = 1
 """,
+    batch={
+        "left_windowed_join_temporal": "Milan LeftWindowedJoin + apply in its "
+        "per-arrival TEMPORAL flavor (lang/JoinedWindowedStream.scala:16-27 - the "
+        "semantics the reference's streaming runtime actually implements, vs "
+        "windowed_join_apply's whole-group batch-window convenience): each purchase "
+        "emits count/sum over the VIEW events for its user that arrived at-or-before "
+        "it. Batch plan = one shuffle + one per-key sort: aggregate args evaluated "
+        "JVM-side on right rows (NULL on left rows), cumulative null-skipping window "
+        "folds, zero Python.",
+    },
+    streaming={
+        "streaming_left_windowed_join_ir": "The left_windowed_join_temporal plan "
+        "(alias -> sum/count/min/max(expr) over the per-arrival right window) JSON "
+        "round-tripped and compiled by the streaming backend to the per-key "
+        "right-window state machine (stateful.left_windowed_join_apply); aggregate "
+        "args are evaluated JVM-side before entering state, and the output schema "
+        "comes from the batch operator compiled on zero rows, so the backends agree "
+        "by construction. Same oracle as the batch twin.",
+    },
 )
-def left_windowed_join_temporal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    purchases = Stream.from_dataframe(
-        ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "event_id", F.col("event_id").alias("__seq")
-        )
-    )
-    views = Stream.from_dataframe(
-        ev.filter(F.col("event_type") == "view").select(
-            "user_id",
-            F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("cents"),
-            F.col("event_id").alias("__seq"),
-        )
-    )
-    joined = purchases.left_windowed_join(
-        views, on="user_id",
-        agg_exprs={"n_views": "count(cents)", "view_cents": "sum(cents)"},
-    )
-    return joined.df.select("event_id", "user_id", "n_views", "view_cents")

@@ -6,12 +6,11 @@ reference's per-record sequence numbers.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from milan_spark.catalog import REGISTRY, register
-from milan_spark.operators.scans import last, running_sum_by, scan, stream_max_by, stream_min_by
+from milan_spark.catalog import REGISTRY, events, register, register_twins
+from milan_spark.operators.scans import running_sum_by, stream_min_by
+from milan_spark.plans.nodes import Node
 from milan_spark.sources import table
 
 DEC = "decimal(18,6)"
@@ -38,11 +37,16 @@ def running_sum_by_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "stream_max_by",
-    doc="Milan MaxBy emit-on-improvement (doc/Milan Operations.md:106-111, "
-    "ScanOperations.scala:49-103): per-user, emit an event only when its value "
-    "strictly beats every earlier value.",
+def stream_max_by_plan() -> Node:
+    return Node(
+        "stream_max_by",
+        {"arg": "value", "keys": ["user_id"], "seq": "event_id"},
+        [Node("map", {"exprs": ["event_id", "user_id", "value"]}, [events()])],
+    )
+
+
+register_twins(
+    stream_max_by_plan,
     oracle="""
 SELECT event_id, user_id, value
 FROM (
@@ -53,10 +57,19 @@ FROM (
 )
 WHERE prev_best IS NULL OR value > prev_best
 """,
+    batch={
+        "stream_max_by": "Milan MaxBy emit-on-improvement (doc/Milan "
+        "Operations.md:106-111, ScanOperations.scala:49-103): per-user, emit an event "
+        "only when its value strictly beats every earlier value.",
+    },
+    streaming={
+        "streaming_stream_max_by": "Milan MaxBy emit-on-improvement on the streaming "
+        "backend (ArgCompareProcessFunctions.scala): per-user value state holds the "
+        "running max; an arrival is emitted only when it strictly beats it - the "
+        "reference's every-element trigger, literally. Same plan and oracle as the "
+        "batch twin.",
+    },
 )
-def stream_max_by_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    return stream_max_by(ev, "value", keys=["user_id"], seq="event_id").select("event_id", "user_id", "value")
 
 
 @register(
@@ -80,10 +93,16 @@ def stream_min_by_global_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_min_by(ev, "value", seq="event_id").select("event_id", "user_id", "value")
 
 
-@register(
-    "last_per_key",
-    doc="Milan Last keyed (LastOperators.scala:85): final event per user by "
-    "sequence number — map-side-combinable max_by.",
+def last_per_key_plan() -> Node:
+    return Node(
+        "last",
+        {"keys": ["user_id"], "seq": "event_id"},
+        [Node("map", {"exprs": ["user_id", "event_id", "event_type", "value"]}, [events()])],
+    )
+
+
+register_twins(
+    last_per_key_plan,
     oracle="""
 SELECT user_id,
        MAX(event_id) AS event_id,
@@ -92,18 +111,44 @@ SELECT user_id,
 FROM events
 GROUP BY user_id
 """,
+    batch={
+        "last_per_key": "Milan Last keyed (LastOperators.scala:85): final event per "
+        "user by sequence number — map-side-combinable max_by.",
+    },
+    streaming={
+        "streaming_last_per_key": "Milan Last keyed on the streaming backend "
+        "(LastOperators.scala:85): complete-mode aggregation keeping the "
+        "highest-sequence record per user - parallel across keys, unlike the "
+        "reference's parallelism-1 unkeyed variant. Same plan and oracle as the "
+        "batch twin.",
+    },
 )
-def last_per_key_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events").select("user_id", "event_id", "event_type", "value")
-    return last(ev, keys=["user_id"], seq="event_id").select("user_id", "event_id", "event_type", "value")
 
 
-@register(
-    "scan_threshold",
-    doc="Milan Scan — general stateful fold with Option output "
-    "(doc/Milan Operations.md:122-133): per-user cents accumulator emitting "
-    "once the running total crosses 5000.00; executed as an ordered "
-    "applyInPandas fold (the UDF slow path the Scan op is specified to be).",
+def _scan_plan(fold: str, initial_state, output_schema: str) -> Node:
+    """A per-user Scan in event_id order over (event_id, user_id, value),
+    its fold carried as a ``functions.folds`` reference."""
+    return Node(
+        "scan_fold",
+        {
+            "fold_ref": f"milan_spark.functions.folds:{fold}",
+            "initial_state": initial_state,
+            "output_schema": output_schema,
+            "keys": ["user_id"],
+            "seq": "event_id",
+        },
+        [Node("map", {"exprs": ["event_id", "user_id", "value"]}, [events()])],
+    )
+
+
+def scan_threshold_plan() -> Node:
+    return _scan_plan(
+        "threshold_cents_fold", 0, "event_id long, user_id long, acc_cents long"
+    )
+
+
+register_twins(
+    scan_threshold_plan,
     oracle="""
 SELECT event_id, user_id, CAST(acc_cents AS BIGINT) AS acc_cents
 FROM (
@@ -115,24 +160,18 @@ FROM (
 )
 WHERE acc_cents > 500000
 """,
+    batch={
+        "scan_threshold": "Milan Scan — general stateful fold with Option output "
+        "(doc/Milan Operations.md:122-133): per-user cents accumulator emitting once the "
+        "running total crosses 5000.00; executed as an ordered applyInPandas fold (the "
+        "UDF slow path the Scan op is specified to be).",
+    },
+    streaming={
+        "streaming_scan_threshold": "Milan Scan on the streaming backend "
+        "(ScanProcessFunction.scala:17,66): per-user cents accumulator in per-key "
+        "value state, emitting past 5000.00. Same plan and oracle as the batch twin.",
+    },
 )
-def scan_threshold_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-
-    def fold(state, rec):
-        state = state + int(math.floor(rec.value * 100 + 0.5))
-        if state > 500000:
-            return state, {"event_id": rec.event_id, "user_id": rec.user_id, "acc_cents": state}
-        return state, None
-
-    return scan(
-        ev,
-        fold,
-        initial_state=0,
-        output_schema="event_id long, user_id long, acc_cents long",
-        keys=["user_id"],
-        seq="event_id",
-    )
 
 
 @register(
@@ -224,15 +263,12 @@ def running_mean_by_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ewma_smoothing",
-    doc="Per-user EWMA time-series smoothing as a Milan Scan (the genuinely "
-    "sequential fold the Scan op exists for — EWMA is NOT associative, so "
-    "no window rewrite applies): alpha = 1/8 realized as the integer "
-    "update s += floor((x - s) / 8) over exact cents, so the trajectory "
-    "is bit-identical across engines and partitionings. Executed as the "
-    "ordered per-key mapInPandas fold; the oracle replays the recurrence "
-    "with a DuckDB recursive CTE.",
+def ewma_smoothing_plan() -> Node:
+    return _scan_plan("ewma_cents_fold", None, "event_id long, user_id long, ewma_cents long")
+
+
+register_twins(
+    ewma_smoothing_plan,
     oracle="""
 WITH RECURSIVE ev AS (
   SELECT event_id, user_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS x,
@@ -247,52 +283,29 @@ WITH RECURSIVE ev AS (
 )
 SELECT event_id, user_id, s AS ewma_cents FROM rec
 """,
+    batch={
+        "ewma_smoothing": "Per-user EWMA time-series smoothing as a Milan Scan (the "
+        "genuinely sequential fold the Scan op exists for — EWMA is NOT associative, "
+        "so no window rewrite applies): alpha = 1/8 realized as the integer update "
+        "s += floor((x - s) / 8) over exact cents, so the trajectory is "
+        "bit-identical across engines and partitionings. Executed as the ordered "
+        "per-key mapInPandas fold; the oracle replays the recurrence with a DuckDB "
+        "recursive CTE.",
+        "ewma_smoothing_from_ir": "The EWMA fold carried THROUGH the portable JSON IR "
+        "as a dotted-path FunctionReference (scan_fold.fold_ref — the reference "
+        "ships Scan step functions in its serialized programs the same way, "
+        "StreamExpressions.scala:505 / Expression.scala:407): an opaque fold "
+        "survives the define/ship/run-elsewhere lifecycle. Every twin runs the "
+        "round-tripped plan; this name keeps the lifecycle's entry in the catalog.",
+    },
+    streaming={
+        "streaming_ewma_smoothing": "Per-user EWMA smoothing on the streaming "
+        "backend: the same non-associative integer recurrence (s += floor((x - s)/8), "
+        "exact cents) in per-key value state — the anomaly-baseline shape a "
+        "monitoring pipeline runs on live events. Same plan and oracle as the batch "
+        "twin (DuckDB recursive CTE).",
+    },
 )
-def ewma_smoothing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-
-    def fold(state, rec):
-        x = int(math.floor(rec.value * 100 + 0.5))
-        state = x if state is None else state + (x - state) // 8
-        return state, {"event_id": rec.event_id, "user_id": rec.user_id, "ewma_cents": state}
-
-    return scan(
-        ev,
-        fold,
-        initial_state=None,
-        output_schema="event_id long, user_id long, ewma_cents long",
-        keys=["user_id"],
-        seq="event_id",
-    )
-
-
-@register(
-    "ewma_smoothing_from_ir",
-    doc="The same non-associative EWMA fold, but carried THROUGH the portable "
-    "JSON IR as a dotted-path FunctionReference (scan_fold.fold_ref — the "
-    "reference ships Scan step functions in its serialized programs the "
-    "same way, StreamExpressions.scala:505 / Expression.scala:407): the "
-    "plan is serialized, re-parsed, and compiled by the batch backend, so "
-    "this entry proves an opaque fold survives the define/ship/run-"
-    "elsewhere lifecycle. Same recursive-CTE oracle as the direct twin.",
-    oracle=REGISTRY["ewma_smoothing"].oracle,
-)
-def ewma_smoothing_from_ir_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from milan_spark.plans.nodes import compile_node, from_json, to_json
-    from milan_spark.stream import Stream
-
-    s = (
-        Stream.from_parquet(spark, f"{sf_dir}/events.parquet")
-        .map("event_id", "user_id", "value")
-        .scan(
-            "milan_spark.functions.folds:ewma_cents_fold",
-            initial_state=None,
-            output_schema="event_id long, user_id long, ewma_cents long",
-            keys=["user_id"],
-            seq="event_id",
-        )
-    )
-    return compile_node(from_json(to_json(s.node)), spark)
 
 
 @register(
@@ -319,26 +332,13 @@ def ewma_smoothing_from_ir_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ewma_smoothing_event_backend_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from milan_spark.plans.backend_event import compile_event
     from milan_spark.plans.nodes import from_json, to_json
-    from milan_spark.stream import Stream
 
-    path = f"{sf_dir}/events.parquet"
-    s = (
-        Stream.from_parquet(spark, path)
-        .map("event_id", "user_id", "value")
-        .scan(
-            "milan_spark.functions.folds:ewma_cents_fold",
-            initial_state=None,
-            output_schema="event_id long, user_id long, ewma_cents long",
-            keys=["user_id"],
-            seq="event_id",
-        )
-    )
     handler = compile_event(
-        from_json(to_json(s.node)),
-        schemas={path: ["event_id", "user_id", "ts", "event_type", "value"]},
+        from_json(to_json(ewma_smoothing_plan())),
+        schemas={"events": ["event_id", "user_id", "ts", "event_type", "value"]},
     )
     rows = (
-        spark.read.parquet(path)
+        spark.read.parquet(f"{sf_dir}/events.parquet")
         .filter("event_id <= 100000")  # the bounded demo slice (see doc)
         .select("event_id", "user_id", "value")
         .orderBy("event_id")

@@ -1,13 +1,18 @@
-"""Streaming-backend queries: the same operator semantics executed through
-Structured Streaming (readStream → stateful op / windowed agg → memory sink),
-verified against the *same* DuckDB oracles as their batch twins.
+"""Streaming-backend queries: Structured Streaming runs (readStream →
+stateful op / windowed agg → memory sink), each a bounded stream
+(availableNow trigger) run to completion, returning the sink table —
+final-state equivalence, which for per-record operators (joins, scans) is
+exact per-record equivalence.
 
 This is the reference's primary execution mode (IR → Flink streaming job,
-``flink/generator/FlinkGenerator.scala:63-87``); the batch queries correspond
-to its scala-event compiler twin. Each query here runs a bounded stream
-(availableNow trigger) to completion and returns the sink table — final-state
-equivalence, which for per-record operators (joins, scans) is exact per-record
-equivalence.
+``flink/generator/FlinkGenerator.scala:63-87``). A streaming twin of a batch
+query is not written here: ``catalog.register_twins`` registers both names
+from one plan, which ``compile_node`` and ``compile_node_streaming`` each
+compile (``streaming_left_enrichment_join``, the window, scan, dedup and
+EWMA twins, ``streaming_from_ir``, ``streaming_left_windowed_join_ir``).
+What stays here are the streams with their own oracle, and the twins whose
+stream runs a different algorithm from the batch side (the list is in
+``register_twins``'s docstring).
 """
 
 from __future__ import annotations
@@ -22,316 +27,9 @@ from milan_spark.catalog import REGISTRY, register
 from milan_spark.queries import advanced as _advanced  # noqa: F401
 from milan_spark.queries import analytics as _analytics  # noqa: F401
 from milan_spark.queries import joins as _joins  # noqa: F401
-from milan_spark.queries import scans as _scans  # noqa: F401
-from milan_spark.queries import windows as _windows  # noqa: F401
-from milan_spark.sources import parquet_schema
+from milan_spark.sources import events_stream
 from milan_spark.streaming import _start, await_finished, run_to_memory, windowed_agg
 from milan_spark.streaming import stateful
-
-DEC = "decimal(18,6)"
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events table, normalizing nanosecond timestamps the
-    same way ``sources.table`` does for batch.
-
-    FileStreamSource monitors directories, not single files, so a
-    single-FILE events.parquet is exposed through a per-sf symlink
-    directory (no data copy). A directory-shaped events.parquet (multi-part
-    datasets, e.g. the 10x scale build) passes through unchanged —
-    FileStreamSource does NOT list through a directory symlink, so the old
-    always-symlink recipe silently produced an EMPTY stream for directory
-    datasets (caught in round 8: every _events_stream query benched ~0.2 s
-    at sf1 because it processed zero rows; correctness gates never saw it
-    because sf0.01/0.1 store single files).
-    """
-    import hashlib
-    import os
-    import tempfile
-
-    path = f"{sf_dir}/events.parquet"
-    if os.path.isdir(path):
-        stage = path
-    else:
-        tag = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:12]
-        stage = os.path.join(tempfile.gettempdir(), f"milan_stream_src_{tag}")
-        os.makedirs(stage, exist_ok=True)
-        link = os.path.join(stage, "events.parquet")
-        if not os.path.exists(link):
-            os.symlink(os.path.abspath(path), link)
-    from milan_spark.sources import _normalize_events_ts
-
-    sdf = spark.readStream.schema(parquet_schema(spark, path)).parquet(stage)
-    return _normalize_events_ts(sdf)
-
-
-def _stream_side(ev: DataFrame, event_type: str, cols) -> DataFrame:
-    """One event type of the events stream ``ev`` as a join side, sequenced
-    by ``event_id``. Both sides of a tagged-union join project the SAME
-    ``ev``, so each microbatch reads one FileStreamSource, not two."""
-    return ev.filter(F.col("event_type") == event_type).select(
-        *cols, F.col("event_id").alias("__seq")
-    )
-
-
-@register(
-    "streaming_left_enrichment_join",
-    doc="Milan LeftJoin executed as its true streaming state machine "
-    "(applyInPandasWithState value-state machine ≈ LeftJoinKeyedCoProcessFunction.scala:41-80): "
-    "purchases enriched with the user's latest at-or-earlier signup. Same "
-    "oracle as the batch twin.",
-    oracle=REGISTRY["left_enrichment_join"].oracle,
-)
-def streaming_left_enrichment_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir)
-    left = _stream_side(ev, "purchase", ["event_id", "user_id", "value"])
-    right = _stream_side(
-        ev,
-        "signup",
-        [
-            "user_id",
-            F.col("event_id").alias("signup_event_id"),
-            F.col("value").alias("signup_value"),
-        ],
-    )
-    out = stateful.left_enrichment_join(left, right, on="user_id")
-    out = out.select("event_id", "user_id", "value", "signup_event_id", "signup_value")
-    return run_to_memory(out, "streaming_left_enrichment_join")
-
-
-@register(
-    "streaming_tumbling_window_daily",
-    doc="Milan TumblingWindow on the streaming backend: watermarked daily "
-    "windows (watermark = window size, WindowedStreamsGenerator.scala:129-130), "
-    "complete-mode emission. Same oracle as the batch twin.",
-    oracle=REGISTRY["tumbling_window_daily"].oracle,
-)
-def streaming_tumbling_window_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir)
-    out = windowed_agg(
-        ev,
-        "ts",
-        "1 day",
-        keys=["event_type"],
-        aggs=[
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("value").cast(DEC)), 2).cast("double").alias("total"),
-        ],
-    )
-    return run_to_memory(out, "streaming_tumbling_window_daily", output_mode="complete")
-
-
-@register(
-    "streaming_scan_threshold",
-    doc="Milan Scan on the streaming backend (ScanProcessFunction.scala:17,66): "
-    "per-user cents accumulator in per-key value state, emitting past 5000.00. "
-    "Same oracle as the batch twin.",
-    oracle=REGISTRY["scan_threshold"].oracle,
-)
-def streaming_scan_threshold_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir).select("event_id", "user_id", "value")
-
-    def fold(state, rec):
-        state = state + int(math.floor(rec.value * 100 + 0.5))
-        if state > 500000:
-            return state, {"event_id": rec.event_id, "user_id": rec.user_id, "acc_cents": state}
-        return state, None
-
-    out = stateful.scan(
-        ev,
-        fold,
-        initial_state=0,
-        output_schema="event_id long, user_id long, acc_cents long",
-        keys=["user_id"],
-        seq="event_id",
-    )
-    return run_to_memory(out, "streaming_scan_threshold")
-
-
-@register(
-    "streaming_full_enrichment_join",
-    doc="Milan FullJoin as its streaming state machine (two ValueStates, "
-    "FullJoinKeyedCoProcessFunction.scala:43-88): every purchase OR error "
-    "arrival emits (latest purchase, latest error). Same oracle as batch.",
-    oracle=REGISTRY["full_enrichment_join"].oracle,
-)
-def streaming_full_enrichment_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir)
-    left = _stream_side(
-        ev, "purchase",
-        [F.col("event_id").alias("p_event_id"), "user_id", F.col("value").alias("p_value")],
-    )
-    right = _stream_side(
-        ev, "error",
-        ["user_id", F.col("event_id").alias("e_event_id"), F.col("value").alias("e_value")],
-    )
-    out = stateful.full_enrichment_join(left, right, on="user_id")
-    out = out.select("user_id", "p_event_id", "p_value", "e_event_id", "e_value")
-    return run_to_memory(out, "streaming_full_enrichment_join")
-
-
-@register(
-    "streaming_sliding_window_hourly",
-    doc="Milan SlidingWindow on the streaming backend: 2-hour windows sliding "
-    "hourly, watermarked, complete-mode. Same oracle as the batch twin.",
-    oracle=REGISTRY["sliding_window_hourly"].oracle,
-)
-def streaming_sliding_window_hourly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir)
-    out = windowed_agg(
-        ev,
-        "ts",
-        "2 hours",
-        slide="1 hour",
-        aggs=[
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("value").cast(DEC)), 2).cast("double").alias("total"),
-        ],
-    )
-    return run_to_memory(out, "streaming_sliding_window_hourly", output_mode="complete")
-
-
-@register(
-    "streaming_record_window_trailing",
-    doc="Milan SlidingRecordWindow on the streaming backend (bounded per-key "
-    "list state ≈ the reference's priority-queue state): per-user trailing-5 "
-    "aggregate on every arrival. Same oracle as the batch twin; the python "
-    "fold replicates the DECIMAL(18,6)-cast + HALF_UP rounding discipline.",
-    oracle=REGISTRY["record_window_trailing"].oracle,
-)
-def streaming_record_window_trailing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    ev = _events_stream(spark, sf_dir).select(
-        "event_id", "user_id", "value", F.col("event_id").alias("__seq")
-    )
-    six, two = Decimal("0.000001"), Decimal("0.01")
-
-    def trail(rows):
-        last = rows[-1]
-        s = sum(
-            (Decimal(r["value"]).quantize(six, ROUND_HALF_UP) for r in rows),
-            Decimal(0),
-        )
-        return {
-            "event_id": last["event_id"],
-            "user_id": last["user_id"],
-            "trail_sum": float(s.quantize(two, ROUND_HALF_UP)),
-            "trail_n": len(rows),
-        }
-
-    out = stateful.record_window_apply(
-        ev,
-        5,
-        trail,
-        output_schema="event_id long, user_id long, trail_sum double, trail_n long",
-        keys=["user_id"],
-    )
-    return run_to_memory(out, "streaming_record_window_trailing")
-
-
-@register(
-    "streaming_left_inner_enrichment_join",
-    doc="Milan LeftInnerJoin as its streaming state machine (ListState "
-    "buffer, LeftInnerJoinKeyedCoProcessFunction.scala:40-103): clicks "
-    "buffer until the user's first view, then pair with the latest view. "
-    "Same oracle as the batch twin.",
-    oracle=REGISTRY["left_inner_enrichment_join"].oracle,
-)
-def streaming_left_inner_enrichment_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir)
-    left = _stream_side(ev, "click", ["event_id", "user_id", "value"])
-    right = _stream_side(ev, "view", ["user_id", F.col("event_id").alias("view_event_id")])
-    out = stateful.left_inner_enrichment_join(left, right, on="user_id")
-    out = out.select("event_id", "user_id", "value", "view_event_id")
-    return run_to_memory(out, "streaming_left_inner_enrichment_join")
-
-
-@register(
-    "streaming_session_window_gap",
-    doc="Session windows on the streaming backend (F.session_window + "
-    "watermark, complete mode): per-user 30-minute-gap sessions. Same "
-    "oracle as the batch twin.",
-    oracle=REGISTRY["session_window_gap"].oracle,
-)
-def streaming_session_window_gap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir).withWatermark("ts", "30 minutes")
-    out = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("__w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("__w.start").alias("session_start"),
-            F.col("__w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    return run_to_memory(out, "streaming_session_window_gap", output_mode="complete")
-
-
-@register(
-    "streaming_unique_dedup",
-    doc="unique/uniqueBy on the streaming backend: streaming aggregation in "
-    "complete mode keeping the last record per (user_id, event_type) — the "
-    "survivor choice that is consistent under arrival order. Same oracle as "
-    "the batch twin.",
-    oracle=REGISTRY["unique_dedup"].oracle,
-)
-def streaming_unique_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir)
-    out = ev.groupBy("user_id", "event_type").agg(
-        F.max("event_id").alias("last_event_id"),
-        F.max_by("value", "event_id").alias("last_value"),
-    )
-    return run_to_memory(out, "streaming_unique_dedup", output_mode="complete")
-
-
-@register(
-    "streaming_stream_max_by",
-    doc="Milan MaxBy emit-on-improvement on the streaming backend "
-    "(ArgCompareProcessFunctions.scala): per-user value state holds the "
-    "running max; an arrival is emitted only when it strictly beats it - the "
-    "reference's every-element trigger, literally. Same oracle as the batch "
-    "twin.",
-    oracle=REGISTRY["stream_max_by"].oracle,
-)
-def streaming_stream_max_by_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir).select(
-        "event_id", "user_id", "value", F.col("event_id").alias("__seq")
-    )
-
-    def fold(state, rec):
-        if state is None or rec.value > state:
-            return rec.value, {"event_id": rec.event_id, "user_id": rec.user_id, "value": rec.value}
-        return state, None
-
-    out = stateful.scan(
-        ev,
-        fold,
-        initial_state=None,
-        output_schema="event_id long, user_id long, value double",
-        keys=["user_id"],
-        seq="event_id",
-    )
-    return run_to_memory(out, "streaming_stream_max_by")
-
-
-@register(
-    "streaming_last_per_key",
-    doc="Milan Last keyed on the streaming backend (LastOperators.scala:85): "
-    "complete-mode aggregation keeping the highest-sequence record per user - "
-    "parallel across keys, unlike the reference's parallelism-1 unkeyed "
-    "variant. Same oracle as the batch twin.",
-    oracle=REGISTRY["last_per_key"].oracle,
-)
-def streaming_last_per_key_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir)
-    out = ev.groupBy("user_id").agg(
-        F.max("event_id").alias("event_id"),
-        F.max_by("event_type", "event_id").alias("event_type"),
-        F.max_by("value", "event_id").alias("value"),
-    )
-    return run_to_memory(out, "streaming_last_per_key", output_mode="complete")
 
 
 @register(
@@ -345,7 +43,7 @@ def streaming_last_per_key_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=REGISTRY["asof_join_purchase_view"].oracle,
 )
 def streaming_asof_purchase_view_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir).select(
+    ev = events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )
     purch = ev.filter(F.col("event_type") == "purchase").select(
@@ -384,7 +82,7 @@ WINDOW w AS (PARTITION BY date_trunc('day', ts) ORDER BY event_id
 """,
 )
 def streaming_tumbling_window_per_record_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir)
+    ev = events_stream(spark, sf_dir)
     out = stateful.windowed_agg_per_record(
         ev,
         "ts",
@@ -396,6 +94,62 @@ def streaming_tumbling_window_per_record_q(spark: SparkSession, sf_dir: str) -> 
         seq="event_id",
     )
     return run_to_memory(out, "streaming_tumbling_window_per_record")
+
+
+def _t(d: str):
+    return F.lit(d).cast("timestamp")
+
+
+def _sliced_stream(frame: DataFrame, preds: list, prefix: str) -> DataFrame:
+    """``frame`` as a stream of one microbatch per predicate, in order: each
+    slice is staged as one parquet file with a pinned, increasing mtime
+    (FileStreamSource orders new files by it) and read back with
+    ``maxFilesPerTrigger=1``.
+
+    ONE source pass: the slice id is a CASE column and the write is
+    partitioned on it (each slice's rows land in one task, so one file per
+    slice), not one filtered scan and ``coalesce(1)`` job per slice; scan
+    count is the staging cost that matters when the source is 100 TB. An
+    empty slice is staged as an empty file, so the microbatch count (which
+    watermark choreography depends on) holds. The stream is pinned to the
+    schema written, so no job infers it back; the file stream reader makes
+    every field nullable, as a parquet read does."""
+    import os
+    import shutil
+    import tempfile
+
+    stage = tempfile.mkdtemp(prefix=prefix)
+    sl = F.lit(None).cast("int")
+    for i, pred in enumerate(preds):
+        sl = F.when(pred, F.lit(i)).otherwise(sl)
+    tmp = os.path.join(stage, "__tmp")
+    (
+        frame.withColumn("__slice", sl)
+        # a null slice (null ts) would otherwise shuffle into the
+        # __HIVE_DEFAULT_PARTITION__ dir only to be discarded by the rmtree
+        .filter(F.col("__slice").isNotNull())
+        .repartition(len(preds), "__slice")
+        .write.partitionBy("__slice")
+        .parquet(tmp)
+    )
+    for i in range(len(preds)):
+        src_dir = os.path.join(tmp, f"__slice={i}")
+        dst = os.path.join(stage, f"batch{i}.parquet")
+        if not os.path.isdir(src_dir):
+            frame.limit(0).coalesce(1).write.parquet(src_dir)
+        parts = [f for f in os.listdir(src_dir) if f.endswith(".parquet")]
+        # one file per slice is what repartition-on-slice guarantees; a
+        # config that splits files (maxRecordsPerFile) would silently drop
+        # microbatch rows here, so fail loudly instead
+        assert len(parts) == 1, f"expected 1 part in {src_dir}, found {parts}"
+        shutil.move(os.path.join(src_dir, parts[0]), dst)
+        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
+    shutil.rmtree(tmp)
+    return (
+        frame.sparkSession.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
 
 
 @register(
@@ -433,59 +187,18 @@ GROUP BY 1, 2
 """,
 )
 def streaming_watermark_late_drop_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from milan_spark.sources import table
 
-    ev = table(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix="milan_late_")
-    t = lambda d: F.lit(d).cast("timestamp")  # noqa: E731
-    slices = [
-        ("batch0", F.col("ts") < t("2024-01-10")),
-        ("batch1", (F.col("ts") >= t("2024-01-20")) & (F.col("ts") < t("2024-01-25"))),
-        ("batch2", F.col("ts") >= t("2024-01-25")),
-        ("batch3", (F.col("ts") >= t("2024-01-10")) & (F.col("ts") < t("2024-01-20"))),
-    ]
-    # ONE source pass: slice id as a CASE column, write partitioned on it
-    # (the _stage_cohort_slices device) instead of four filtered scans +
-    # coalesce(1) jobs — the staging cost that matters when the source is
-    # 100 TB is scan count, and the slices are disjoint and exhaustive so a
-    # single pass materializes all four microbatch files
-    sl = F.lit(None).cast("int")
-    for i, (_, pred) in enumerate(slices):
-        sl = F.when(pred, F.lit(i)).otherwise(sl)
-    tmp = os.path.join(stage, "__tmp")
-    (
-        ev.withColumn("__slice", sl)
-        # a null slice (null ts) would otherwise shuffle into the
-        # __HIVE_DEFAULT_PARTITION__ dir only to be discarded by the rmtree
-        .filter(F.col("__slice").isNotNull())
-        .repartition(len(slices), "__slice")
-        .write.partitionBy("__slice")
-        .parquet(tmp)
-    )
-    for i, (name, _) in enumerate(slices):
-        src_dir = os.path.join(tmp, f"__slice={i}")
-        dst = os.path.join(stage, f"{name}.parquet")
-        if not os.path.isdir(src_dir):  # empty slice: keep the file count
-            ev.limit(0).coalesce(1).write.parquet(src_dir)
-        parts = [f for f in os.listdir(src_dir) if f.endswith(".parquet")]
-        # one file per slice is what repartition-on-slice guarantees; a
-        # config that splits files (maxRecordsPerFile) would silently drop
-        # microbatch rows here, so fail loudly instead
-        assert len(parts) == 1, f"expected 1 part in {src_dir}, found {parts}"
-        shutil.move(os.path.join(src_dir, parts[0]), dst)
-        # FileStreamSource orders new files by modification time; pin the
-        # arrival order explicitly (name order agrees, as a tiebreak)
-        os.utime(dst, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
-    shutil.rmtree(tmp)
-    schema = parquet_schema(spark, os.path.join(stage, "batch0.parquet"))
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    ts = F.col("ts")
+    sdf = _sliced_stream(
+        table(spark, sf_dir, "events"),
+        [
+            ts < _t("2024-01-10"),
+            (ts >= _t("2024-01-20")) & (ts < _t("2024-01-25")),
+            ts >= _t("2024-01-25"),
+            (ts >= _t("2024-01-10")) & (ts < _t("2024-01-20")),
+        ],
+        "milan_late_",
     )
     out = windowed_agg(
         sdf,
@@ -522,8 +235,8 @@ WHERE p.event_type = 'purchase' AND v.event_type = 'view'
 """,
 )
 def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev_p = _events_stream(spark, sf_dir)
-    ev_v = _events_stream(spark, sf_dir)
+    ev_p = events_stream(spark, sf_dir)
+    ev_v = events_stream(spark, sf_dir)
     p = (
         ev_p.filter(F.col("event_type") == "purchase")
         .select(
@@ -572,8 +285,8 @@ FROM events GROUP BY 1
 """,
 )
 def streaming_drop_duplicates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    b = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
+    a = events_stream(spark, sf_dir).select("event_id", "event_type", "value")
+    b = events_stream(spark, sf_dir).select("event_id", "event_type", "value")
     deduped = a.unionByName(b).dropDuplicates(["event_id"])
     out = deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -605,7 +318,7 @@ FROM c WHERE n * 10 >= (SELECT n_total FROM tot)
 def streaming_hot_event_types_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    ev = _events_stream(spark, sf_dir).select("event_type")
+    ev = events_stream(spark, sf_dir).select("event_type")
     snaps = stateful.streaming_heavy_hitters(ev, "event_type", capacity=64, n_buckets=4)
     table = run_to_memory(snaps, "streaming_hot_event_types")
     w = W.partitionBy("bucket")
@@ -666,7 +379,7 @@ def streaming_cms_user_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from milan_spark.operators.sketch import _cms_fold, _cms_row_idx
     from milan_spark.sources import table as batch_table
 
-    ev = _events_stream(spark, sf_dir).select("user_id")
+    ev = events_stream(spark, sf_dir).select("user_id")
     snaps = stateful.streaming_cms(ev, "user_id", depth=4, width=64)
     t = run_to_memory(snaps, "streaming_cms_user_counts_snaps")
     w = W.partitionBy("r")
@@ -722,7 +435,7 @@ GROUP BY c.c_nationkey
 def streaming_static_enrichment_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from milan_spark.sources import table
 
-    ev = _events_stream(spark, sf_dir).select("user_id", "value")
+    ev = events_stream(spark, sf_dir).select("user_id", "value")
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     joined = ev.join(F.broadcast(cust), ev.user_id == cust.c_custkey)
     out = joined.groupBy(F.col("c_nationkey").alias("nationkey")).agg(
@@ -778,7 +491,7 @@ def streaming_hll_distinct_users_q(spark: SparkSession, sf_dir: str) -> DataFram
 
     from milan_spark.operators.sketch import hll_estimate
 
-    ev = _events_stream(spark, sf_dir).select("user_id")
+    ev = events_stream(spark, sf_dir).select("user_id")
     snaps = stateful.streaming_hll(ev, "user_id")
     t = run_to_memory(snaps, "streaming_hll_distinct_users_snaps")
     w = W.partitionBy("reg")
@@ -788,64 +501,6 @@ def streaming_hll_distinct_users_q(spark: SparkSession, sf_dir: str) -> DataFram
         .select("reg", "m")
     )
     return hll_estimate(cur)
-
-
-def _ir_left_join_plan(sf_dir: str):
-    """The reference's save/ship/run lifecycle: one serializable plan —
-    filter/map sides, per-arrival LeftJoin, output projection — built as raw
-    IR nodes, round-tripped through JSON, then compiled by the STREAMING
-    backend (plans.backend_streaming.compile_node_streaming). The same JSON
-    compiles to the batch backend; tests/test_streaming_ir.py asserts both
-    produce identical rows."""
-    from milan_spark.plans import Node, from_json, to_json
-
-    src = Node("parquet_source", {"path": f"{sf_dir}/events.parquet"})
-    left = Node(
-        "map",
-        {"exprs": ["user_id", "event_id", "value", "event_id AS __seq"]},
-        [Node("filter", {"condition": "event_type = 'purchase'"}, [src])],
-    )
-    right = Node(
-        "map",
-        {
-            "exprs": [
-                "user_id",
-                "event_id AS signup_event_id",
-                "value AS signup_value",
-                "event_id AS __seq",
-            ]
-        },
-        [Node("filter", {"condition": "event_type = 'signup'"}, [src])],
-    )
-    join = Node(
-        "left_enrichment_join",
-        {"left_on": ["user_id"], "right_on": ["user_id"]},
-        [left, right],
-    )
-    out = Node(
-        "map",
-        {"exprs": ["event_id", "user_id", "value", "signup_event_id", "signup_value"]},
-        [join],
-    )
-    return from_json(to_json(out))  # the query runs the DESERIALIZED plan
-
-
-@register(
-    "streaming_from_ir",
-    doc="One IR, two compilers (the reference's defining architecture: "
-    "FlinkGenerator.scala:63-87 and EventHandlerClassGenerator.scala:36-80 "
-    "consume the same StreamCollection): a JSON-serialized plan — filter/map "
-    "sides, per-arrival LeftJoin, projection — is deserialized and compiled "
-    "to Structured Streaming by plans.backend_streaming.compile_node_streaming, "
-    "run to completion, and hash-matched against the same DuckDB oracle as "
-    "the batch LeftJoin.",
-    oracle=REGISTRY["left_enrichment_join"].oracle,
-)
-def streaming_from_ir_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from milan_spark.plans import compile_node_streaming
-
-    out = compile_node_streaming(_ir_left_join_plan(sf_dir), spark)
-    return run_to_memory(out, "streaming_from_ir")
 
 
 @register(
@@ -907,7 +562,7 @@ def application_bundle_run_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=REGISTRY["scd2_temporal_join"].oracle,
 )
 def streaming_scd2_temporal_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir).select(
+    ev = events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value",
         F.unix_micros("ts").alias("ts_us"),
     )
@@ -1047,57 +702,6 @@ def streaming_scan_fold_from_ir_q(spark: SparkSession, sf_dir: str) -> DataFrame
     return run_to_memory(sdf, "streaming_scan_fold_from_ir")
 
 
-@register(
-    "streaming_left_windowed_join_ir",
-    doc="left_windowed_join reachable FROM A DESERIALIZED PLAN on the "
-    "streaming backend (round-7 gap closed): the serializable node - per-"
-    "arrival temporal flavor, alias -> sum/count/min/max(expr) - is built "
-    "by the DSL (Stream.left_windowed_join(agg_exprs=...)), JSON round-"
-    "tripped, and compiled to the per-key right-window state machine "
-    "(stateful.left_windowed_join_apply); aggregate args are evaluated "
-    "JVM-side before entering state, and the output schema comes from the "
-    "batch operator compiled on zero rows, so the backends agree by "
-    "construction. Same oracle as the batch twin.",
-    oracle=REGISTRY["left_windowed_join_temporal"].oracle,
-)
-def streaming_left_windowed_join_ir_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from milan_spark.plans import Node, compile_node_streaming, from_json, to_json
-
-    src = Node("parquet_source", {"path": f"{sf_dir}/events.parquet"})
-    left = Node(
-        "map",
-        {"exprs": ["user_id", "event_id", "event_id AS __seq"]},
-        [Node("filter", {"condition": "event_type = 'purchase'"}, [src])],
-    )
-    right = Node(
-        "map",
-        {
-            "exprs": [
-                "user_id",
-                "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents",
-                "event_id AS __seq",
-            ]
-        },
-        [Node("filter", {"condition": "event_type = 'view'"}, [src])],
-    )
-    join = Node(
-        "left_windowed_join",
-        {
-            "left_on": ["user_id"],
-            "right_on": ["user_id"],
-            "aggs": {"n_views": "count(cents)", "view_cents": "sum(cents)"},
-            "left_seq": "__seq",
-            "right_seq": "__seq",
-        },
-        [left, right],
-    )
-    out = Node(
-        "map", {"exprs": ["event_id", "user_id", "n_views", "view_cents"]}, [join]
-    )
-    sdf = compile_node_streaming(from_json(to_json(out)), spark)
-    return run_to_memory(sdf, "streaming_left_windowed_join_ir")
-
-
 
 # outer stream-stream join staging: the cohort slice first, then TWO
 # far-future slices whose only job is to advance BOTH watermarks past the
@@ -1112,64 +716,19 @@ _COHORT_BOUNDS = [(None, "2024-01-10"), ("2024-01-20", "2024-01-24"),
                   ("2024-01-24", None)]
 
 
-def _stage_cohort_slices(ev: DataFrame, etype: str, cols, prefix: str) -> str:
-    """Write one side of an outer-join stream as 4 mtime-ordered parquet
-    files (cohort + watermark drivers) and return the staged directory.
-
-    ONE pass: the slice id is a CASE column and the write is partitioned
-    on it (each slice's rows land in one task → one file per slice dir),
-    instead of four filtered scans + coalesce(1) jobs per side. Warm at
-    sf0.1 the streaming query dominates (full join measured 7.4 → 6.7 s,
-    left ~flat) — the change is really about scan count: 1 source pass
-    per side instead of 4, the number that matters when the source is
-    100 TB. An empty slice writes no dir;
-    those fall back to a per-slice empty-frame write so the microbatch
-    count (which the watermark choreography depends on) is invariant."""
-    import os
-    import shutil
-    import tempfile
-
-    t = lambda d: F.lit(d).cast("timestamp")  # noqa: E731
-    d = tempfile.mkdtemp(prefix=f"{prefix}{etype}_")
-    side = ev.filter(F.col("event_type") == etype)
-    sl = F.lit(None).cast("int")
-    for i, (lo, hi) in enumerate(_COHORT_BOUNDS):
+def _cohort_stream(ev: DataFrame, etype: str, cols, ts: str, prefix: str) -> DataFrame:
+    """One side of an outer-join stream: the ``etype`` events projected to
+    ``cols``, as one microbatch per ``_COHORT_BOUNDS`` slice of ``ts``."""
+    preds = []
+    for lo, hi in _COHORT_BOUNDS:
         pred = F.lit(True)
         if lo:
-            pred = pred & (F.col("ts") >= t(lo))
+            pred = pred & (F.col(ts) >= _t(lo))
         if hi:
-            pred = pred & (F.col("ts") < t(hi))
-        sl = F.when(pred, F.lit(i)).otherwise(sl)
-    tmp = os.path.join(d, "__tmp")
-    (
-        side.select(*cols, sl.alias("__slice"))
-        .filter(F.col("__slice").isNotNull())
-        .repartition(len(_COHORT_BOUNDS), "__slice")
-        .write.partitionBy("__slice")
-        .parquet(tmp)
-    )
-    for i in range(len(_COHORT_BOUNDS)):
-        src_dir = os.path.join(tmp, f"__slice={i}")
-        dst = os.path.join(d, f"batch{i}.parquet")
-        if not os.path.isdir(src_dir):  # empty slice: keep the file (and
-            # microbatch) count invariant
-            side.select(*cols).limit(0).coalesce(1).write.parquet(src_dir)
-        parts = [f for f in os.listdir(src_dir) if f.endswith(".parquet")]
-        # one file per slice is what repartition-on-slice guarantees; a
-        # config that splits files would silently corrupt microbatches here
-        assert len(parts) == 1, f"expected 1 part in {src_dir}, found {parts}"
-        shutil.move(os.path.join(src_dir, parts[0]), dst)
-        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-    shutil.rmtree(tmp)
-    return d
-
-
-def _staged_stream(spark: SparkSession, d: str) -> DataFrame:
-    import os
-
-    schema = parquet_schema(spark, os.path.join(d, "batch0.parquet"))
-    return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(d))
+            pred = pred & (F.col(ts) < _t(hi))
+        preds.append(pred)
+    side = ev.filter(F.col("event_type") == etype).select(*cols)
+    return _sliced_stream(side, preds, f"{prefix}{etype}_")
 
 
 @register(
@@ -1206,18 +765,15 @@ def streaming_stream_stream_left_join_q(spark: SparkSession, sf_dir: str) -> Dat
     from milan_spark.sources import table
 
     ev = table(spark, sf_dir, "events")
-    t = lambda d: F.lit(d).cast("timestamp")  # noqa: E731
-    p_dir = _stage_cohort_slices(
+    left = _cohort_stream(
         ev, "purchase",
         ["user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")],
-        "milan_sslj_")
-    s_dir = _stage_cohort_slices(
+        "p_ts", "milan_sslj_").withWatermark("p_ts", "1 hour")
+    right = _cohort_stream(
         ev, "signup",
         [F.col("user_id").alias("s_user_id"), F.col("event_id").alias("signup_id"),
          F.col("ts").alias("s_ts")],
-        "milan_sslj_")
-    left = _staged_stream(spark, p_dir).withWatermark("p_ts", "1 hour")
-    right = _staged_stream(spark, s_dir).withWatermark("s_ts", "1 hour")
+        "s_ts", "milan_sslj_").withWatermark("s_ts", "1 hour")
     cond = (
         (F.col("user_id") == F.col("s_user_id"))
         & (F.col("p_ts") >= F.col("s_ts"))
@@ -1225,7 +781,7 @@ def streaming_stream_stream_left_join_q(spark: SparkSession, sf_dir: str) -> Dat
     )
     out = (
         left.join(right, cond, "left_outer")
-        .filter(F.col("p_ts") < t("2024-01-10"))
+        .filter(F.col("p_ts") < _t("2024-01-10"))
         .select(
             "purchase_id", "user_id",
             F.unix_micros("p_ts").alias("p_ts_us"),
@@ -1266,19 +822,16 @@ def streaming_stream_stream_full_join_q(spark: SparkSession, sf_dir: str) -> Dat
     from milan_spark.sources import table
 
     ev = table(spark, sf_dir, "events")
-    t = lambda d: F.lit(d).cast("timestamp")  # noqa: E731
-    p_dir = _stage_cohort_slices(
+    left = _cohort_stream(
         ev, "purchase",
         [F.col("user_id").alias("p_user_id"), F.col("event_id").alias("purchase_id"),
          F.col("ts").alias("p_ts")],
-        "milan_ssfj_")
-    s_dir = _stage_cohort_slices(
+        "p_ts", "milan_ssfj_").withWatermark("p_ts", "1 hour")
+    right = _cohort_stream(
         ev, "signup",
         [F.col("user_id").alias("s_user_id"), F.col("event_id").alias("signup_id"),
          F.col("ts").alias("s_ts")],
-        "milan_ssfj_")
-    left = _staged_stream(spark, p_dir).withWatermark("p_ts", "1 hour")
-    right = _staged_stream(spark, s_dir).withWatermark("s_ts", "1 hour")
+        "s_ts", "milan_ssfj_").withWatermark("s_ts", "1 hour")
     cond = (
         (F.col("p_user_id") == F.col("s_user_id"))
         & (F.col("p_ts") >= F.col("s_ts"))
@@ -1286,7 +839,7 @@ def streaming_stream_stream_full_join_q(spark: SparkSession, sf_dir: str) -> Dat
     )
     out = (
         left.join(right, cond, "full_outer")
-        .filter(F.coalesce(F.col("p_ts"), F.col("s_ts")) < t("2024-01-10"))
+        .filter(F.coalesce(F.col("p_ts"), F.col("s_ts")) < _t("2024-01-10"))
         .select(
             "purchase_id",
             F.coalesce(F.col("p_user_id"), F.col("s_user_id")).alias("user_id"),
@@ -1328,10 +881,9 @@ def streaming_kinesis_emulated_roundtrip_q(spark: SparkSession, sf_dir: str) -> 
     )
 
     q = local_queue("kinesis_rt_")
-    s = _stream_side(
-        _events_stream(spark, sf_dir), "purchase",
-        ["user_id", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents")],
-    ).drop("__seq")
+    s = events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase").select(
+        "user_id", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents")
+    )
     sink = KinesisDataSink("rollup_feed", q, "local", queue_limit=2000)
     await_finished(open_queue_sink(s, sink.to_spec()))
 
@@ -1444,7 +996,7 @@ def streaming_psi_value_drift_daily_q(spark: SparkSession, sf_dir: str) -> DataF
         .persist()
     )
 
-    ev = _events_stream(spark, sf_dir)
+    ev = events_stream(spark, sf_dir)
     new = (
         ev.filter((F.col("event_type") == "purchase") & F.col("value").isNotNull())
         .crossJoin(F.broadcast(stats))
@@ -1559,7 +1111,7 @@ def streaming_stream_stream_semi_join_q(spark: SparkSession, sf_dir: str) -> Dat
     oracle=REGISTRY["zscore_anomaly"].oracle,
 )
 def streaming_zscore_anomaly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir).select("event_id", "user_id", "value")
+    ev = events_stream(spark, sf_dir).select("event_id", "user_id", "value")
 
     def fold(state, rec):
         n, s, s2 = state
@@ -1583,34 +1135,6 @@ def streaming_zscore_anomaly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq="event_id",
     )
     return run_to_memory(out, "streaming_zscore_anomaly")
-
-
-@register(
-    "streaming_ewma_smoothing",
-    doc="Per-user EWMA smoothing on the streaming backend: the same "
-    "non-associative integer recurrence (s += floor((x - s)/8), exact "
-    "cents) in per-key value state — the anomaly-baseline shape a "
-    "monitoring pipeline runs on live events. Same oracle as the batch "
-    "twin (DuckDB recursive CTE).",
-    oracle=REGISTRY["ewma_smoothing"].oracle,
-)
-def streaming_ewma_smoothing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_stream(spark, sf_dir).select("event_id", "user_id", "value")
-
-    def fold(state, rec):
-        x = int(math.floor(rec.value * 100 + 0.5))
-        state = x if state is None else state + (x - state) // 8
-        return state, {"event_id": rec.event_id, "user_id": rec.user_id, "ewma_cents": state}
-
-    out = stateful.scan(
-        ev,
-        fold,
-        initial_state=None,
-        output_schema="event_id long, user_id long, ewma_cents long",
-        keys=["user_id"],
-        seq="event_id",
-    )
-    return run_to_memory(out, "streaming_ewma_smoothing")
 
 
 @register(
@@ -1659,7 +1183,7 @@ SELECT user_id, CAST(3 AS INT), p_us FROM pts
 def streaming_conversion_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     day30_us = 30 * 86400 * 1_000_000
     ev = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .filter(F.col("user_id").isNotNull())
         .select("event_id", "user_id", "event_type", F.unix_micros("ts").alias("ts_us"))
     )
@@ -1720,7 +1244,7 @@ def streaming_weighted_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     p31 = 2_147_483_647
     ev = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .filter(F.col("value").isNotNull() & (F.col("value") > 0) & F.col("event_type").isNotNull())
         .select("event_id", "event_type", "value")
     )
@@ -1800,7 +1324,7 @@ GROUP BY 1
 )
 def streaming_twap_user_value_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .filter(F.col("user_id").isNotNull())
         .select(
             "event_id",
@@ -1867,7 +1391,7 @@ WHERE length(s) - length(replace(s, 'vcp', '')) > 0
 )
 def streaming_sequence_dfa_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .filter(F.col("user_id").isNotNull())
         .select(
             "event_id",
@@ -2125,7 +1649,7 @@ def streaming_versioned_sink_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = tempfile.mkdtemp(prefix="milan_vsink_")
-    ev = _events_stream(spark, sf_dir).filter("event_type = 'purchase'").select(
+    ev = events_stream(spark, sf_dir).filter("event_type = 'purchase'").select(
         (F.col("user_id") % 8).alias("bucket"),
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
     )

@@ -11,17 +11,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from milan_spark.catalog import register
-from milan_spark.operators.windows import record_window, session_window_agg, sliding_window, tumbling_window
+from milan_spark.catalog import events, register, register_twins
+from milan_spark.operators.windows import tumbling_window
+from milan_spark.plans.nodes import Node
 from milan_spark.sources import table
 
 DEC = "decimal(18,6)"
 
 
-@register(
-    "tumbling_window_daily",
-    doc="Milan TumblingWindow (GroupingExpressions.scala:173): daily event "
-    "counts and exact sums per event_type.",
+# count and exact decimal sum, rounded back to double (the catalog's rule)
+_N_TOTAL = {"n": "count(1)", "total": f"CAST(round(sum(CAST(value AS {DEC})), 2) AS DOUBLE)"}
+
+
+def tumbling_window_daily_plan() -> Node:
+    return Node(
+        "time_window_aggregate",
+        {"ts": "ts", "size": "1 day", "keys": ["event_type"], "aggs": _N_TOTAL},
+        [events()],
+    )
+
+
+register_twins(
+    tumbling_window_daily_plan,
     oracle="""
 SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
        event_type,
@@ -30,19 +41,17 @@ SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
 FROM events
 GROUP BY 1, 2
 """,
+    batch={
+        "tumbling_window_daily": "Milan TumblingWindow (GroupingExpressions.scala:173): "
+        "daily event counts and exact sums per event_type.",
+    },
+    streaming={
+        "streaming_tumbling_window_daily": "Milan TumblingWindow on the streaming "
+        "backend: watermarked daily windows (watermark = window size, "
+        "WindowedStreamsGenerator.scala:129-130), complete-mode emission. Same plan "
+        "and oracle as the batch twin.",
+    },
 )
-def tumbling_window_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    return tumbling_window(
-        ev,
-        "ts",
-        "1 day",
-        keys=["event_type"],
-        aggs=[
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("value").cast(DEC)), 2).cast("double").alias("total"),
-        ],
-    )
 
 
 @register(
@@ -61,11 +70,16 @@ def tumbling_window_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumbling_window(ev, "ts", "1 day", offset="6 hours", aggs=[F.count(F.lit(1)).alias("n")])
 
 
-@register(
-    "sliding_window_hourly",
-    doc="Milan SlidingWindow (GroupingExpressions.scala:245, doc/Milan "
-    "Operations.md:18-25): 2-hour windows sliding hourly; each record lands "
-    "in 2 windows.",
+def sliding_window_hourly_plan() -> Node:
+    return Node(
+        "time_window_aggregate",
+        {"ts": "ts", "size": "2 hours", "slide": "1 hour", "aggs": _N_TOTAL},
+        [events()],
+    )
+
+
+register_twins(
+    sliding_window_hourly_plan,
     oracle="""
 WITH assigned AS (
   SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) - k * INTERVAL 1 HOUR AS window_start, value
@@ -77,26 +91,39 @@ SELECT window_start,
 FROM assigned
 GROUP BY 1
 """,
+    batch={
+        "sliding_window_hourly": "Milan SlidingWindow (GroupingExpressions.scala:245, doc/Milan "
+        "Operations.md:18-25): 2-hour windows sliding hourly; each record lands in 2 windows.",
+    },
+    streaming={
+        "streaming_sliding_window_hourly": "Milan SlidingWindow on the streaming "
+        "backend: 2-hour windows sliding hourly, watermarked, complete-mode. Same "
+        "plan and oracle as the batch twin.",
+    },
 )
-def sliding_window_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    return sliding_window(
-        ev,
-        "ts",
-        size="2 hours",
-        slide="1 hour",
-        aggs=[
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("value").cast(DEC)), 2).cast("double").alias("total"),
-        ],
+
+
+def record_window_trailing_plan() -> Node:
+    trail = Node(
+        "record_window",
+        {
+            "n": 5,
+            "aggs": {"__trail_sum_dec": f"sum(CAST(value AS {DEC}))", "trail_n": "count(1)"},
+            "keys": ["user_id"],
+            "seq": "event_id",
+        },
+        [Node("map", {"exprs": ["event_id", "user_id", "value"]}, [events()])],
+    )
+    return Node(
+        "map",
+        {"exprs": ["event_id", "user_id",
+                   "CAST(round(__trail_sum_dec, 2) AS DOUBLE) AS trail_sum", "trail_n"]},
+        [trail],
     )
 
 
-@register(
-    "record_window_trailing",
-    doc="Milan SlidingRecordWindow (GroupingExpressions.scala:104, "
-    "RecordWindowGenerator.scala:19): per-user trailing-5-event aggregate on "
-    "every arrival, arrival order = event_id.",
+register_twins(
+    record_window_trailing_plan,
     oracle="""
 SELECT event_id, user_id,
        CAST(ROUND(SUM(CAST(value AS DECIMAL(18,6))) OVER
@@ -105,31 +132,34 @@ SELECT event_id, user_id,
          (PARTITION BY user_id ORDER BY event_id ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS trail_n
 FROM events
 """,
+    batch={
+        "record_window_trailing": "Milan SlidingRecordWindow (GroupingExpressions.scala:104, "
+        "RecordWindowGenerator.scala:19): per-user trailing-5-event aggregate on every "
+        "arrival, arrival order = event_id.",
+    },
+    streaming={
+        "streaming_record_window_trailing": "Milan SlidingRecordWindow on the "
+        "streaming backend (bounded per-key list state ≈ the reference's "
+        "priority-queue state): per-user trailing-5 aggregate on every arrival. The "
+        "state fold sums the JVM-cast decimals exactly; the rounding map runs in the "
+        "JVM as in batch. Same plan and oracle as the batch twin.",
+    },
 )
-def record_window_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    out = record_window(
-        ev,
-        5,
-        {
-            "__trail_sum_dec": F.sum(F.col("value").cast(DEC)),
-            "trail_n": F.count(F.lit(1)),
-        },
-        keys=["user_id"],
-        seq="event_id",
+
+
+def session_window_gap_plan() -> Node:
+    sessions = Node(
+        "session_window_aggregate",
+        {"ts": "ts", "gap": "30 minutes", "keys": ["user_id"], "aggs": {"n_events": "count(1)"}},
+        [events()],
     )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.round(F.col("__trail_sum_dec"), 2).cast("double").alias("trail_sum"),
-        "trail_n",
+    return Node(
+        "map", {"exprs": ["user_id", "session_start", "session_end", "n_events"]}, [sessions]
     )
 
 
-@register(
-    "session_window_gap",
-    doc="Session windows (exceeds-parity, SURVEY §2.5 'absent — free if "
-    "exposed'): per-user sessions with a 30-minute inactivity gap.",
+register_twins(
+    session_window_gap_plan,
     oracle="""
 WITH e AS (
   -- truncate TIMESTAMP_NS to Spark's microsecond timestamps
@@ -153,12 +183,16 @@ SELECT user_id,
 FROM s
 GROUP BY user_id, sid
 """,
+    batch={
+        "session_window_gap": "Session windows (exceeds-parity, SURVEY §2.5 'absent — free if "
+        "exposed'): per-user sessions with a 30-minute inactivity gap.",
+    },
+    streaming={
+        "streaming_session_window_gap": "Session windows on the streaming backend "
+        "(session_window + watermark = gap, complete mode): per-user 30-minute-gap "
+        "sessions. Same plan and oracle as the batch twin.",
+    },
 )
-def session_window_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    return session_window_agg(
-        ev, "ts", "30 minutes", keys=["user_id"], aggs=[F.count(F.lit(1)).alias("n_events")]
-    ).select("user_id", "session_start", "session_end", "n_events")
 
 
 @register(

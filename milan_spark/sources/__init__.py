@@ -11,7 +11,7 @@ parallelize natively; we deliberately do not reproduce that bottleneck.
 | ListDataSource (ListDataSource.scala:22)   | :func:`list_source`      |
 | DelayedListDataSource (testing/DelayedListDataSource.scala:68) | :class:`DelayedListSourceBuilder` |
 | FileDataSource Once (FileDataSource.scala:22) | :func:`file_source`   |
-| FileDataSource Continuous (:60-75)     | :func:`file_stream_source`   |
+| FileDataSource Continuous (:60-75)     | :func:`file_stream_source`; :func:`stream_files` pins a batch read's schema |
 | S3DataSource (S3DataSource.scala:21)   | same readers on ``s3a://``   |
 | CsvDataInputFormat (CsvDataInputFormat.scala:42-48) | fmt="csv" opts  |
 | JsonDataInputFormat (JsonDataInputFormat.scala:21)  | fmt="json"      |
@@ -249,6 +249,46 @@ def file_stream_source(
     if options:
         reader = reader.options(**options)
     return reader.load(path)
+
+
+def _stage_dir(path: str) -> str:
+    """FileStreamSource monitors directories, not files: a single-file path
+    is exposed through a stable per-path symlink directory (no data copy).
+    A directory path (a multi-part dataset) passes through unchanged;
+    FileStreamSource does not list through a directory symlink, so linking
+    one would stream nothing."""
+    if os.path.isdir(path):
+        return path
+    import hashlib
+    import tempfile
+
+    tag = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:12]
+    stage = os.path.join(tempfile.gettempdir(), f"milan_stream_src_{tag}")
+    os.makedirs(stage, exist_ok=True)
+    link = os.path.join(stage, os.path.basename(path))
+    if not os.path.lexists(link):
+        os.symlink(os.path.abspath(path), link)
+    return stage
+
+
+def stream_files(
+    spark: SparkSession,
+    path: str,
+    fmt: str = "parquet",
+    options: Mapping[str, str] | None = None,
+) -> DataFrame:
+    """``readStream`` over the file or directory at ``path``, pinned to the
+    schema a batch read of it has (:func:`file_schema`), so both backends
+    see the same columns and types. One source for the streaming compiler's
+    file nodes, ``Application`` file sources and the catalog's streams."""
+    schema = file_schema(spark, path, fmt, options)
+    return file_stream_source(spark, _stage_dir(path), fmt=fmt, schema=schema, options=options)
+
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a stream: :func:`stream_files` with the
+    timestamp normalization :func:`table` applies to the batch read."""
+    return _normalize_events_ts(stream_files(spark, f"{sf_dir}/events.parquet"))
 
 
 def ensure_read_conf(spark: SparkSession) -> SparkSession:

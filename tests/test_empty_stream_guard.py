@@ -41,9 +41,9 @@ def test_empty_source_opt_out_for_deliberate_fixtures(spark, tmp_path):
 def test_filter_dropping_all_rows_is_not_flagged(spark):
     # distinct failure modes: a filter removing every row is a RESULT, not a
     # source problem — numInputRows > 0, so the guard stays quiet
-    from milan_spark.queries.streaming import _events_stream
+    from milan_spark.sources import events_stream
 
-    sdf = _events_stream(spark, "/root/testdata/sf0.001").filter(
+    sdf = events_stream(spark, os.path.dirname(EV)).filter(
         "event_type = 'no_such_type'"
     )
     out = run_to_memory(sdf.select("event_id"), "guard_all_filtered")
@@ -53,12 +53,12 @@ def test_filter_dropping_all_rows_is_not_flagged(spark):
 def test_directory_shaped_events_table_streams(spark, tmp_path):
     # regression for the sf1 staging bug: a DIRECTORY events.parquet (multi-
     # part dataset) must stream all rows, not silently zero
-    from milan_spark.queries.streaming import _events_stream
+    from milan_spark.sources import events_stream
 
     sf_dir = tmp_path / "sfdir"
     os.makedirs(sf_dir)
     spark.read.parquet(EV).repartition(3).write.parquet(str(sf_dir / "events.parquet"))
-    sdf = _events_stream(spark, str(sf_dir))
+    sdf = events_stream(spark, str(sf_dir))
     out = run_to_memory(sdf.select("event_id"), "guard_dir_events")
     want = spark.read.parquet(EV).count()
     assert out.count() == want > 0

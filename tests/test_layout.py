@@ -106,3 +106,37 @@ def test_compact_files_sorted_variant_restores_clustering(spark, tmp_path):
     )
     spans = sorted((r["lo"], r["hi"]) for r in per_file)
     assert all(a[1] <= b[0] for a, b in zip(spans, spans[1:]))
+
+
+def test_compact_files_recovers_from_a_crash_between_its_renames(
+    spark, tmp_path, monkeypatch
+):
+    import os
+
+    import pytest
+
+    from milan_spark.operators.layout import compact_files
+    from tests.conftest import SF_SMOKE
+
+    p = str(tmp_path / "sink3")
+    spark.read.parquet(f"{SF_SMOKE}/events.parquet").repartition(8).write.parquet(p)
+    base = sorted(tuple(r) for r in spark.read.parquet(p).collect())
+
+    real_rename = os.rename
+
+    def crash_on_swap_in(src, dst):
+        if src.endswith(".__tmp_compact"):
+            raise OSError("crash between the renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_swap_in)
+    with pytest.raises(OSError, match="crash between the renames"):
+        compact_files(spark, p, target_mb=128)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(p)  # the crash window: path is missing
+
+    stats = compact_files(spark, p, target_mb=128)
+    assert stats["files_after"] <= 2
+    assert sorted(tuple(r) for r in spark.read.parquet(p).collect()) == base
+    assert not os.path.exists(f"{p}.__old_compact")
+    assert not os.path.exists(f"{p}.__tmp_compact")

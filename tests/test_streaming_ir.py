@@ -133,13 +133,9 @@ def test_source_overrides_bind_by_node_id_and_path(spark):
     while src.inputs:
         src = src.inputs[0]
     # override by path: point the plan at a rate-limited readStream twin
-    from milan_spark.sources import file_stream_source, ensure_read_conf
+    from milan_spark.sources import stream_files
 
-    ensure_read_conf(spark)
-    schema = spark.read.parquet(EV).schema
-    from milan_spark.plans.backend_streaming import _stage_dir
-
-    sdf = file_stream_source(spark, _stage_dir(EV), schema=schema)
+    sdf = stream_files(spark, EV)
     out = compile_node_streaming(node, spark, source_overrides={src.node_id: sdf})
     mem = run_to_memory(out, "ir_override_both")
     batch = compile_node(node, spark)

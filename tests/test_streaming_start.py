@@ -31,9 +31,9 @@ SF = "/root/testdata/sf0.001"
 
 
 def _events(spark):
-    from milan_spark.queries.streaming import _events_stream
+    from milan_spark.sources import events_stream
 
-    return _events_stream(spark, SF)
+    return events_stream(spark, SF)
 
 
 def _keyed_count(spark):
