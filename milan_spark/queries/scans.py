@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from milan_spark.catalog import REGISTRY, events, register, register_twins
 from milan_spark.operators.scans import running_sum_by, stream_min_by
 from milan_spark.plans.nodes import Node
-from milan_spark.sources import table
+from milan_spark.sources import read_parquet, table
 
 DEC = "decimal(18,6)"
 
@@ -338,7 +338,7 @@ def ewma_smoothing_event_backend_q(spark: SparkSession, sf_dir: str) -> DataFram
         schemas={"events": ["event_id", "user_id", "ts", "event_type", "value"]},
     )
     rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        read_parquet(spark, f"{sf_dir}/events.parquet")
         .filter("event_id <= 100000")  # the bounded demo slice (see doc)
         .select("event_id", "user_id", "value")
         .orderBy("event_id")

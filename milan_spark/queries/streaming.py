@@ -235,10 +235,9 @@ WHERE p.event_type = 'purchase' AND v.event_type = 'view'
 """,
 )
 def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev_p = events_stream(spark, sf_dir)
-    ev_v = events_stream(spark, sf_dir)
+    ev = events_stream(spark, sf_dir)  # both sides: one source per microbatch
     p = (
-        ev_p.filter(F.col("event_type") == "purchase")
+        ev.filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             "user_id",
@@ -248,7 +247,7 @@ def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("p_ts", "1 day")
     )
     v = (
-        ev_v.filter(F.col("event_type") == "view")
+        ev.filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
             F.col("user_id").alias("v_user"),

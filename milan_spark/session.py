@@ -9,8 +9,15 @@ the Pandas-UDF slow path.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Name of the monotonic arrival-order column used by order-sensitive operators
@@ -19,6 +26,68 @@ from pyspark.sql import SparkSession
 SEQ_COL = "__seq"
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# the ``file:`` FileSystem every session gets (see get_spark)
+NO_FORK_FS = "milan_spark.jvm.NoForkLocalFileSystem"
+_NO_FORK_SRC = os.path.join(_PACKAGE_ROOT, "milan_spark", "jvm", "NoForkLocalFileSystem.java")
+
+
+def no_fork_fs_classpath() -> str | None:
+    """The directory holding :data:`NO_FORK_FS` compiled against pyspark's
+    Hadoop, or ``None`` (with a warning) where it cannot be built.
+
+    It is compiled once, with ``javac --release 17``, into
+    ``${XDG_CACHE_HOME:-~/.cache}/milan_spark/jvm/<key>/``, keyed by the
+    source and the ``hadoop-client-api`` jar's name; a build goes to a temp
+    dir that is then renamed, so concurrent first sessions cannot see half
+    a build. Starts no JVM but ``javac``'s, and that only on a cold cache."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")))
+    if not jars:
+        warnings.warn("no hadoop-client-api jar in pyspark: Hadoop forks chmod per file")
+        return None
+    with open(_NO_FORK_SRC, "rb") as f:
+        key = hashlib.sha256(f.read() + os.path.basename(jars[-1]).encode()).hexdigest()[:16]
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    out = os.path.join(cache, "milan_spark", "jvm", key)
+    if os.path.isfile(os.path.join(out, *NO_FORK_FS.split(".")) + ".class"):
+        return out
+    javac = shutil.which("javac")
+    if javac is None:
+        warnings.warn("no javac: Hadoop's local file system forks chmod per file it creates")
+        return None
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=".build-", dir=os.path.dirname(out))
+    try:
+        subprocess.run(
+            [javac, "--release", "17", "-cp", jars[-1], "-d", tmp, _NO_FORK_SRC],
+            check=True, capture_output=True,
+        )
+        os.rename(tmp, out)
+    except subprocess.CalledProcessError as e:
+        warnings.warn(f"javac failed, Hadoop forks chmod per file: {e.stderr.decode()[-500:]}")
+        return None
+    except OSError:  # another process renamed its build in first
+        if not os.path.isdir(out):
+            raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
+def _no_fork_fs_confs() -> dict[str, str]:
+    """Confs that make :data:`NO_FORK_FS` the session's ``file:`` FileSystem,
+    for a JVM this builder launches: a running one (``spark-submit``'s
+    included) keeps the classpath it started with."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return {}
+    if "--driver-class-path" in os.environ.get("PYSPARK_SUBMIT_ARGS", ""):
+        return {}  # it would replace the classpath set here
+    cp = no_fork_fs_classpath()
+    if cp is None:
+        return {}
+    return {"spark.driver.extraClassPath": cp, "spark.hadoop.fs.file.impl": NO_FORK_FS}
 
 
 def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -50,6 +119,23 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
     failing expression; the error class and message stay. PySpark reads the
     conf once per process, at the first wrapped call with an active
     session, so it must be set before any session builds a column.
+
+    The ``file:`` FileSystem (``spark.hadoop.fs.file.impl``) is
+    :data:`NO_FORK_FS`, ``milan_spark/jvm/NoForkLocalFileSystem.java``:
+    Hadoop's checksummed local file system over a raw store whose
+    ``setPermission`` sets the same mode bits with
+    ``Files.setPosixFilePermissions``. Without libhadoop the stock one forks
+    ``chmod`` (3–5 ms from the driver JVM) for every file and directory it
+    creates: streaming offset, commit and state files with their ``.crc``
+    sidecars (40 forks per warm ``streaming_last_per_key`` run at 4 task
+    slots), file and versioned sinks, staged microbatch files. A sticky-bit
+    mode, a target carrying a setuid/setgid bit, or a non-POSIX store still
+    goes to ``chmod``, so every mode lands as before. The class is compiled
+    once into a cache (:func:`no_fork_fs_classpath`) and put on
+    ``spark.driver.extraClassPath``, so it applies to a JVM this call
+    starts. Without ``javac`` (and no cached build) the session starts with
+    the stock file system and one warning. FileContext users (named streaming checkpoints) build their
+    own raw local file system and still fork.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
@@ -82,6 +168,8 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
+    for k, v in _no_fork_fs_confs().items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

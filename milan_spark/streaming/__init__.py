@@ -88,12 +88,16 @@ def _start(
     - the checkpoint file manager: a private checkpoint writes its offsets,
       commits and state deltas through the FileSystem manager, a temp file
       plus one ``rename(2)``, still atomic with the one writer it has.
-      Spark's default FileContext manager forks a shell per file when
-      Hadoop's native library is missing (``readlink`` per rename, ``chmod``
-      per create). A file source's own log is opened on the query's thread,
-      racing the restore, so it may get either manager. A named checkpoint
-      keeps FileContext: its no-overwrite rename is what detects a second
-      writer on a checkpoint shared across restarts.
+      When Hadoop's native library is missing, Spark's default FileContext
+      manager forks ``readlink`` per rename and ``chmod`` per created file
+      and directory. The FileSystem manager drops the ``readlink``s; its
+      ``chmod``s go with the session's ``file:`` FileSystem, which sets
+      modes in-process (``session.NO_FORK_FS``). A file source's own log is
+      opened on the query's thread, racing the restore, so it may get
+      either manager. A named checkpoint keeps FileContext, which builds
+      its own local file system and still forks both: its no-overwrite
+      rename is what detects a second writer on a checkpoint shared across
+      restarts.
     """
     spark = sdf.sparkSession
     n = state_partitions or min(8, spark.sparkContext.defaultParallelism)

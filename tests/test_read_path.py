@@ -21,8 +21,9 @@ from milan_spark.sources import parquet_schema, read_parquet, table
 from tests.conftest import SF_SMOKE
 
 
-def _jobs(spark, fn):
-    """Run ``fn()`` in a fresh job group; returns (result, jobs it ran)."""
+def _jobs(spark, fn, stage_prefix=""):
+    """Run ``fn()`` in a fresh job group; returns (result, jobs it ran
+    whose first stage's name starts with ``stage_prefix``)."""
     sc = spark.sparkContext
     group = f"read_path_{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -30,7 +31,9 @@ def _jobs(spark, fn):
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    st = sc.statusTracker()
+    firsts = [st.getStageInfo(min(st.getJobInfo(j).stageIds)) for j in st.getJobIdsForGroup(group)]
+    return out, sum(s is not None and s.name.startswith(stage_prefix) for s in firsts)
 
 
 def test_rewritten_file_is_inferred_again(spark, tmp_path):
@@ -106,6 +109,17 @@ def test_second_table_read_launches_no_job(spark, tmp_path):
     assert jobs2 == 0
     assert second.schema == first.schema
     assert dict(second.dtypes)["ts"] == "timestamp"
+
+
+def test_ewma_event_backend_warm_build_infers_no_schema(spark, tmp_path):
+    from milan_spark.catalog import queries
+
+    shutil.copy(f"{SF_SMOKE}/events.parquet", tmp_path / "events.parquet")
+    build = queries()["ewma_smoothing_event_backend"]
+    _, cold = _jobs(spark, lambda: build(spark, str(tmp_path)), "parquet at")
+    out, warm = _jobs(spark, lambda: build(spark, str(tmp_path)), "parquet at")
+    assert (cold, warm) == (1, 0)
+    assert out.count() > 0
 
 
 def test_non_local_and_missing_paths_read_as_spark_does(spark, tmp_path):

@@ -3,8 +3,8 @@ to the session's task slots, an explicit ``state_partitions`` honoured, a
 private checkpoint written through the FileSystem checkpoint manager while a
 named one keeps FileContext, a timed-out bounded run (or any query that
 cannot finish) stopped and reported by name, a progress record that fails
-to parse surfaced as such, and the tagged-union enrichment joins reading the
-events stream once per microbatch."""
+to parse surfaced as such, and the tagged-union enrichment joins and the
+interval self-join reading the events stream once per microbatch."""
 
 from __future__ import annotations
 
@@ -168,9 +168,10 @@ def test_await_finished_stops_an_unbounded_query_and_raises(spark):
         "streaming_left_enrichment_join",
         "streaming_full_enrichment_join",
         "streaming_left_inner_enrichment_join",
+        "streaming_interval_join",
     ],
 )
-def test_enrichment_join_reads_events_stream_once(spark, name):
+def test_join_reads_events_stream_once(spark, name):
     assert QS[name](spark, SF).count() > 0
     progress = last_progress()
     assert progress

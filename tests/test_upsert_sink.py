@@ -37,7 +37,6 @@ def _stage_batches(spark, batches):
     return stage
 
 
-@pytest.mark.slow
 def test_upsert_sink_matches_sequential_merge(spark):
     batches = [
         [(1, "a", 1), (2, "b", 2)],
@@ -57,7 +56,6 @@ def test_upsert_sink_matches_sequential_merge(spark):
     assert got == {(1, "A"), (2, "B"), (3, "c"), (4, "d")}
 
 
-@pytest.mark.slow
 def test_upsert_sink_seq_resolves_in_batch_duplicates(spark):
     batches = [[(1, "x", 1), (1, "y", 9), (2, "b", 2)]]
     stage = _stage_batches(spark, batches)

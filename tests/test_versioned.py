@@ -148,7 +148,6 @@ def test_named_errors(spark, tbl):
         vacuum(tbl, keep_from=9)
 
 
-@pytest.mark.slow
 def test_manifest_link_is_the_commit_point(spark, tbl, monkeypatch):
     """Crash protocol: the manifest hard-link IS the commit. Dying before it
     leaves nothing visible; dying after it (hint never advanced) leaves a
@@ -194,7 +193,6 @@ def test_manifest_link_is_the_commit_point(spark, tbl, monkeypatch):
     assert current_version(tbl) == 3
 
 
-@pytest.mark.slow
 def test_concurrent_commit_loser_raises_and_publishes_nothing(
     spark, tbl, monkeypatch
 ):
@@ -480,7 +478,6 @@ def test_bloom_string_keys_and_all_null_file(spark, tbl):
     assert gone["files_kept"] == 0
 
 
-@pytest.mark.slow
 def test_stream_appends_tails_commits_exactly_once(spark, tbl, tmp_path):
     """Streaming tail: publish_appends + a checkpointed file-source query
     deliver each append commit's rows exactly once across a full query
