@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from milan_spark import fixpoint
 from milan_spark.errors import MilanAnalysisError
+from milan_spark.session import sql
 
 
 def symmetrize(df: DataFrame, a: Column, b: Column, u: str = "u", v: str = "v") -> DataFrame:
@@ -296,18 +297,32 @@ def pagerank_scaled(
     return ranks.select("node", "rank")
 
 
-def _orient(und: DataFrame, hint=lambda df: df) -> "tuple[DataFrame, DataFrame]":
-    """Orient a canonical (u < v) edge set from each edge's lower-(degree,
-    id) endpoint ``lo`` to ``hi``; ``hint`` wraps the degree sides of the two
-    rank joins. Returns ``(deg, oriented)``: ``(n, count)`` and ``(lo, hi)``."""
-    deg = und.select(F.explode(F.array("u", "v")).alias("n")).groupBy("n").count()
-    du = deg.select(F.col("n").alias("u"), F.col("count").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("count").alias("dv"))
-    lo_is_u = F.struct("du", "u") < F.struct("dv", "v")  # (degree, id) order
-    return deg, und.join(hint(du), "u").join(hint(dv), "v").select(
-        F.when(lo_is_u, F.col("u")).otherwise(F.col("v")).alias("lo"),
-        F.when(lo_is_u, F.col("v")).otherwise(F.col("u")).alias("hi"),
-    )
+def _canonical_sql(a_col: str, b_col: str) -> str:
+    """SQL over the ``{e}`` relation: its canonical (u < v) edge set, self
+    loops and duplicates removed."""
+    a, b = f"`{a_col}`", f"`{b_col}`"
+    return f"SELECT DISTINCT least({a}, {b}) AS u, greatest({a}, {b}) AS v FROM {{e}} WHERE {a} != {b}"
+
+
+def _deg_sql(edges: str) -> str:
+    """SQL relation: the degrees ``(n, d)`` of the canonical edge relation
+    ``edges``, from one in-row explode."""
+    return f"(SELECT n, count(1) AS d FROM (SELECT explode(array(u, v)) AS n FROM {edges}) GROUP BY n)"
+
+
+def _orient_sql(edges: str, broadcast: bool = False) -> str:
+    """SQL relation: the degree orientation ``(lo, hi)`` of the canonical
+    (u < v) edge relation ``edges``, each edge pointing from its
+    lower-(degree, id) endpoint ``lo`` to ``hi``. ``broadcast`` hints the
+    degree sides of the two rank joins. It is a subquery, not a ``WITH``:
+    a persisted frame whose plan holds a CTE was not served from the cache
+    when read by a statement with its own ``WITH`` clause."""
+    hint = "/*+ BROADCAST(du, dv) */ " if broadcast else ""
+    lo_is_u = "struct(du.d, e.u) < struct(dv.d, e.v)"  # (degree, id) order
+    deg = _deg_sql(edges)
+    return f"""(
+  SELECT {hint}IF({lo_is_u}, e.u, e.v) AS lo, IF({lo_is_u}, e.v, e.u) AS hi
+  FROM {edges} e JOIN {deg} du ON e.u = du.n JOIN {deg} dv ON e.v = dv.n)"""
 
 
 def triangle_count(
@@ -338,7 +353,9 @@ def triangle_count(
     at sf0.1 vs 3.4 s for this shape — same asymptotics, 4× less wall on
     the dense co-order graph, and the gap grows with density.)
 
-    The orientation is ``_orient``, shared with :func:`ktruss`.
+    The orientation is the SQL fragment ``_orient_sql``, shared with
+    :func:`ktruss`. The build is three SQL statements (the canonical edge
+    set, the oriented edges, the four counts), each analyzed once.
 
     ``edges`` is an undirected edge list, possibly with duplicates/self
     loops (both removed here). Output: single row (n_nodes, n_edges,
@@ -355,47 +372,32 @@ def triangle_count(
     Measured at sf0.1 on the 20k-node/1.2M-edge co-part graph: 12.8 →
     ~4 s.
     """
-    a, b = F.col(src), F.col(dst)
+    spark = edges.sparkSession
     # the canonical edge set feeds four consumers (degree agg, wedge build,
     # membership semi-join, edge count) — persist once rather than re-derive
     # from the raw pair stream each time
-    und = (
-        edges.filter(a != b)
-        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .distinct()
-        .persist()
-    )
-    hint = F.broadcast if small_graph else (lambda df: df)
-    deg, oriented = _orient(und, hint)
-    oriented = oriented.persist()  # adjacency build + edge iteration both read it
-    adj = oriented.groupBy("lo").agg(F.collect_list("hi").alias("nbrs"))
+    und = sql(spark, _canonical_sql(src, dst), e=edges).persist()
+    # adjacency build + edge iteration both read the oriented edges
+    oriented = sql(spark, f"SELECT lo, hi FROM {_orient_sql('{e}', small_graph)} o", e=und).persist()
+    hint = "/*+ BROADCAST(a, b) */ " if small_graph else ""
     # per-edge |N_out(lo) ∩ N_out(hi)| — the intersection is row-local JVM
     # work; only the O(m) adjacency-carrying joins shuffle
-    edge_nbrs = oriented.join(hint(adj), "lo").join(
-        hint(adj.select(F.col("lo").alias("hi"), F.col("nbrs").alias("nbrs_hi"))),
-        "hi",
-        "left",
-    )
-    tri_per_edge = F.when(F.col("nbrs_hi").isNull(), F.lit(0)).otherwise(
-        F.array_size(F.array_intersect("nbrs", "nbrs_hi"))
-    )
-    triangles = edge_nbrs.agg(
-        F.sum(tri_per_edge).cast("long").alias("n_triangles")
-    )
-    wedge_total = adj.agg(
-        F.sum(
-            (
-                F.array_size("nbrs").cast("long")
-                * (F.array_size("nbrs").cast("long") - 1)
-                / 2
-            ).cast("long")
-        ).alias("n_wedges")
-    )
-    return (
-        deg.agg(F.count(F.lit(1)).alias("n_nodes"))
-        .crossJoin(und.agg(F.count(F.lit(1)).alias("n_edges")))
-        .crossJoin(wedge_total)
-        .crossJoin(triangles)
+    return sql(
+        spark,
+        f"""WITH deg AS {_deg_sql('{u}')},
+adj AS (SELECT lo, collect_list(hi) AS nbrs FROM {{o}} GROUP BY lo)
+SELECT * FROM (SELECT count(1) AS n_nodes FROM deg)
+CROSS JOIN (SELECT count(1) AS n_edges FROM {{u}})
+CROSS JOIN (
+  SELECT sum(CAST(CAST(array_size(nbrs) AS BIGINT) * (CAST(array_size(nbrs) AS BIGINT) - 1) / 2
+             AS BIGINT)) AS n_wedges
+  FROM adj)
+CROSS JOIN (
+  SELECT {hint}CAST(sum(IF(b.nbrs IS NULL, 0, array_size(array_intersect(a.nbrs, b.nbrs))))
+         AS BIGINT) AS n_triangles
+  FROM {{o}} o JOIN adj a ON o.lo = a.lo LEFT JOIN adj b ON o.hi = b.lo)""",
+        u=und,
+        o=oriented,
     )
 
 
@@ -604,6 +606,23 @@ def kcore(
     )
 
 
+def _support_sql(edges: str) -> str:
+    """SQL CTEs over the canonical edge relation ``edges`` ending in
+    ``sup (u, v, support)``: each edge's triangle count, from the adjacency
+    rows of the shared orientation."""
+    credit = ", ".join(
+        f"named_struct('u', least({x}, {y}), 'v', greatest({x}, {y}))"
+        for x, y in (("lo", "hi"), ("lo", "w"), ("hi", "w"))
+    )
+    return f"""oriented AS {_orient_sql(edges)},
+adj AS (SELECT lo, collect_list(hi) AS nbrs FROM oriented GROUP BY lo),
+tri AS (
+  SELECT a.lo, a.hi, explode(array_intersect(a.nbrs, b.nbrs)) AS w
+  FROM (SELECT lo, nbrs, explode(nbrs) AS hi FROM adj) a JOIN adj b ON a.hi = b.lo),
+credits AS (SELECT inline(array({credit})) FROM tri),
+sup AS (SELECT u, v, count(1) AS support FROM credits GROUP BY u, v)"""
+
+
 def ktruss(
     pairs: DataFrame,
     k: int,
@@ -617,15 +636,15 @@ def ktruss(
     their support IN the surviving subgraph.
 
     Support shares :func:`triangle_count`'s degree-ordered orientation
-    (``_orient``, out-degree O(sqrt(m))), then takes triangles from the
-    adjacency rows: each (lo, nbrs) row explodes ``nbrs`` as ``hi`` (every
-    oriented edge once) and meets hi's row in ONE equi-join, where common
-    neighbors are a row-local ``array_intersect`` exploded to (lo, hi, w).
-    One in-row explode credits each triangle's three edges, and one
-    combinable (u, v) count yields support (O(triangles) rows). A round's
-    plan has no ``Union`` and reads its edge checkpoint 6 times. Edges with no
-    support row are deleted implicitly (support 0 < k-2; ``k < 3`` is
-    rejected). Lineage truncated per round; the edge set only shrinks.
+    (the SQL fragment ``_orient_sql``, out-degree O(sqrt(m))), then takes
+    triangles from the adjacency rows: each (lo, nbrs) row explodes ``nbrs``
+    as ``hi`` (every oriented edge once) and meets hi's row in ONE
+    equi-join, where common neighbors are a row-local ``array_intersect``
+    exploded to (lo, hi, w). One in-row explode credits each triangle's
+    three edges, and one combinable (u, v) count yields support
+    (O(triangles) rows). A round's plan has no ``Union`` and reads its edge
+    checkpoint 6 times. Edges with no support row are deleted implicitly
+    (support 0 < k-2; ``k < 3`` is rejected). Lineage truncated per round; the edge set only shrinks.
     Fixed round-count truncation is a pure set function of the input on
     both engine and oracle, so the trajectory is exact.
 
@@ -633,6 +652,13 @@ def ktruss(
     each round checkpoints its kept (u, v, support) rows with their count. A
     round that keeps every edge returns that checkpoint, so the final action
     is a scan; only the round cap recomputes support.
+
+    Each stage is one SQL statement, analyzed once: the canonical edge set,
+    and per round the whole support body (degrees, orientation, adjacency,
+    triangles, credits, the count) with ``support >= k-2`` applied. Built
+    from DataFrame calls, every ``select``/``join``/``agg`` re-analyzed the
+    plan so far (``ktruss_coparts`` at sf0.001: 913 → 135 py4j calls per warm
+    build).
 
     Output: (u, v, support) — canonical u < v edges of the truncated
     k-truss, support computed ON the final edge set (0 if triangle-free,
@@ -642,38 +668,23 @@ def ktruss(
         raise MilanAnalysisError(
             f"ktruss: k={k} < 3 is unsupported: triangle-free edges have no support row"
         )
-    a, b = F.col(a_col), F.col(b_col)
-    und, n = fixpoint.checkpoint_counted(
-        pairs.filter(a != b)
-        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .distinct()
-    )
-
-    def support(edges: DataFrame) -> DataFrame:
-        adj = _orient(edges)[1].groupBy("lo").agg(F.collect_list("hi").alias("nbrs"))
-        tri = (
-            adj.select("lo", "nbrs", F.explode("nbrs").alias("hi"))
-            .join(adj.withColumnsRenamed({"lo": "hi", "nbrs": "nbrs_hi"}), "hi")
-            .select("lo", "hi", F.explode(F.array_intersect("nbrs", "nbrs_hi")).alias("w"))
-        )
-        credits = tri.select(F.inline(F.array(*(
-            F.struct(F.least(x, y).alias("u"), F.greatest(x, y).alias("v"))
-            for x, y in (("lo", "hi"), ("lo", "w"), ("hi", "w"))
-        ))))
-        return credits.groupBy("u", "v").agg(F.count(F.lit(1)).alias("support"))
+    spark = pairs.sparkSession
+    und, n = fixpoint.checkpoint_counted(sql(spark, _canonical_sql(a_col, b_col), e=pairs))
+    kept_sql = f"WITH {_support_sql('{e}')} SELECT u, v, support FROM sup WHERE support >= {k - 2}"
 
     def step(state: tuple, _r: int) -> "tuple[tuple, bool]":
-        und, n, _ = state
-        kept, c = fixpoint.checkpoint_counted(support(und).filter(F.col("support") >= k - 2))
-        return (kept.select("u", "v"), c, kept), c == n
+        edges, n = state
+        kept, c = fixpoint.checkpoint_counted(sql(spark, kept_sql, e=edges))
+        return (kept, c), c == n
 
-    (und, _, kept), done = fixpoint.fixpoint(
-        step, (und, n, None), rounds, on_cap="return", what="ktruss rounds"
-    )
+    (edges, _), done = fixpoint.fixpoint(step, (und, n), rounds, on_cap="return", what="ktruss rounds")
     if done:
-        return kept
-    return und.join(support(und), ["u", "v"], "left").select(
-        "u", "v", F.coalesce("support", F.lit(0).cast("long")).alias("support")
+        return edges
+    return sql(
+        spark,
+        f"WITH {_support_sql('{e}')} SELECT u, v, coalesce(sup.support, 0L) AS support"
+        " FROM {e} LEFT JOIN sup USING (u, v)",
+        e=edges,
     )
 
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from milan_spark.session import sql
+
 QUANT = 1 << 20  # quantization grid: float -> round(x * 2^20) as int64
 
 
@@ -530,7 +532,7 @@ def pq_codebooks(
         best = sliced.join(F.broadcast(barr), "sub").select(
             "sub", pick["cell"].alias("cell"), "__v"
         )
-        cents = spark.sql(update_sql, best=best).localCheckpoint(eager=False)
+        cents = sql(spark, update_sql, best=best).localCheckpoint(eager=False)
     return cents.select("sub", "cell", "__cent")
 
 
@@ -602,7 +604,7 @@ def kmeans_cells_grouped(
     )
     for _ in range(iters):
         best = _assign_grouped(frame, cents, gid_cols)
-        cents = spark.sql(update_sql, best=best).localCheckpoint(eager=False)
+        cents = sql(spark, update_sql, best=best).localCheckpoint(eager=False)
     return cents
 
 
@@ -1022,20 +1024,20 @@ def random_projection(
     # quantize ONCE in a prior projection — as a shared subexpression of all
     # out_dim components it was re-evaluated per component (measured in the
     # plan: 16 copies of the transform), and the out_dim folds read the one
-    # materialized array. The sign matrix is computed inside the lambdas
-    # from the (p, d) indices, so the expression has the same size at any
-    # out_dim × in_dim (a literal per sign was 21k py4j calls to build);
-    # p and d cast to long first, since (p+1)·73856093 + (d+1)·19349663
-    # passes 2^31 and int arithmetic overflows under ANSI. zip_with pads a
-    # vector of the wrong length with NULL, so its components are NULL.
+    # materialized array. The sign matrix is one literal array(array(...))
+    # in the one expression: a single py4j call to build (a column per sign
+    # was 21k), folded to a constant, so no sign is computed per row. zip_with
+    # pads a vector of the wrong length with NULL, so its components are NULL.
     q = corpus.select(F.col(id_col), quantize(vec_col).alias("__q"))
-    sign = ("(2 * CAST(((CAST(p AS BIGINT) + 1) * 73856093 + (CAST(d AS BIGINT) + 1)"
-            " * 19349663) % 2000003 - 1000001 >= 0 AS BIGINT) - 1)")
-    proj = (
-        f"transform(sequence(0, {out_dim - 1}), p -> aggregate("
-        f"zip_with(__q, sequence(0, {in_dim - 1}), (x, d) -> x * {sign}),"
-        f" 0L, (acc, v) -> acc + v))"
+    rows = (
+        ", ".join(
+            "1" if ((p + 1) * 73856093 + (d + 1) * 19349663) % 2000003 - 1000001 >= 0 else "-1"
+            for d in range(in_dim)
+        )
+        for p in range(out_dim)
     )
+    signs = "array(" + ", ".join(f"array({r})" for r in rows) + ")"
+    proj = f"transform({signs}, s -> aggregate(zip_with(__q, s, (x, y) -> x * y), 0L, (acc, v) -> acc + v))"
     return q.select(F.col(id_col), F.expr(proj).alias("proj"))
 
 

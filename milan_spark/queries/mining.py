@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from milan_spark.catalog import register
+from milan_spark.session import sql
 from milan_spark.sources import table
 
 # the portable scrambled char-fold every sketch shares (operators/sketch.py)
@@ -150,21 +151,17 @@ def _copart_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     join sides) and emit the canonical pairs in-row from the <=13-element
     arrays — measured 2.5 -> 1.7 s at sf0.1 for the identical pair set.
     Per-order fan-out is C(|parts|, 2), bounded by the order schema, so the
-    explode cannot skew."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    grp = li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("ps"))
-    pairs = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + 2, F.array_size(F.col("ps"))),
-                lambda y: F.struct(
-                    F.least(x, y).alias("src"), F.greatest(x, y).alias("dst")
-                ),
-            ),
-        )
+    explode cannot skew. One SQL statement, so the pipeline is analyzed
+    once, not once per DataFrame call."""
+    return sql(
+        spark,
+        """SELECT p.src, p.dst FROM (
+  SELECT explode(flatten(transform(ps, (x, i) -> transform(
+    slice(ps, i + 2, array_size(ps)),
+    y -> named_struct('src', least(x, y), 'dst', greatest(x, y)))))) AS p
+  FROM (SELECT collect_set(l_partkey) AS ps FROM {li} GROUP BY l_orderkey))""",
+        li=table(spark, sf_dir, "lineitem"),
     )
-    return grp.select(F.explode(pairs).alias("p")).select("p.src", "p.dst")
 
 
 @register(
@@ -1296,7 +1293,10 @@ FROM e{R} e LEFT JOIN supf s ON e.u = s.u AND e.v = s.v"""
     "fewer than 10 triangles — the edge-cohesion analog of kcore_strong_"
     "coparts, completing the dense-subgraph family (components, "
     "PageRank, triangles, communities, BFS/SSSP, core, truss). Support "
-    "shares triangle_count's degree-ordered orientation; triangles come "
+    "shares triangle_count's degree-ordered orientation (one SQL fragment, "
+    "graph._orient_sql); each stage (the co-order pairs, the canonical "
+    "edge set, a round's support with its >= 10 filter) is one SQL "
+    "statement, analyzed once; triangles come "
     "from the adjacency rows (each row explodes its out-neighbors and "
     "meets their rows in one join, row-local array_intersect), and one "
     "in-row explode credits each triangle's three edges -> one combinable "

@@ -15,10 +15,11 @@ import os
 import shutil
 import subprocess
 import tempfile
+import uuid
 import warnings
 
 from pyspark import SparkContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Name of the monotonic arrival-order column used by order-sensitive operators
 # (scans, argmax ties, enrichment joins). Mirrors the reference's per-record
@@ -120,6 +121,13 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
     conf once per process, at the first wrapped call with an active
     session, so it must be set before any session builds a column.
 
+    ``spark.sql.ui.explainMode`` is ``simple``. Adaptive execution rebuilds
+    the whole plan's explain string in this mode on every stage completion
+    (``AdaptiveSparkPlanExec.onUpdatePlan``) and posts it to the listener
+    bus for the SQL UI; the default ``formatted`` string costs more to
+    build, and an iterative builder such as ``ktruss_coparts`` completes
+    many small stages. The UI is off here; event logs get the shorter plan.
+
     The ``file:`` FileSystem (``spark.hadoop.fs.file.impl``) is
     :data:`NO_FORK_FS`, ``milan_spark/jvm/NoForkLocalFileSystem.java``:
     Hadoop's checksummed local file system over a raw store whose
@@ -167,12 +175,33 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
         .config("spark.python.daemon.module", "milan_spark.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.ui.explainMode", "simple")
     )
     for k, v in _no_fork_fs_confs().items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def sql(spark: SparkSession, text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(text, **frames)``: ``{name}`` in ``text`` reads the frame
+    passed as ``name``, and the statement is analyzed once.
+
+    PySpark's own form drops each frame's temp view through
+    ``Catalog.dropTempView``, which also uncaches every cached plan equal to
+    the view's, so a persisted frame passed in silently loses its cache and
+    is recomputed by each reader. Here the views are dropped from the
+    session catalog alone, which leaves the cache manager untouched."""
+    views = {k: f"_milan_{uuid.uuid4().hex}" for k in frames}
+    for k, df in frames.items():
+        df.createOrReplaceTempView(views[k])
+    try:
+        return spark.sql(text.format(**views))
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for v in views.values():
+            catalog.dropTempView(v)
 
 
 def release_cached(spark: SparkSession) -> int:
@@ -188,11 +217,15 @@ def release_cached(spark: SparkSession) -> int:
     it. Harness layers (bench.py, tools/) call this between queries; user
     code with one query per session never needs it. Returns the number of
     RDDs released.
+
+    The RDDs are read by index from a Scala list of the persistent map's
+    values: iterating a py4j-converted Java map ends in a Java
+    ``NoSuchElementException``, which PySpark's captured-exception hook
+    converts at ~30 ms a call.
     """
     spark.catalog.clearCache()
-    sc = spark.sparkContext._jsc.sc()
-    jmap = spark._jvm.scala.collection.JavaConverters.mapAsJavaMap(sc.getPersistentRDDs())
-    rdds = list(jmap.values())
-    for rdd in rdds:
-        rdd.unpersist(True)  # blocking: blocks are gone before we return
-    return len(rdds)
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs().values().toList()
+    n = rdds.size()
+    for i in range(n):
+        rdds.apply(i).unpersist(True)  # blocking: blocks are gone before we return
+    return n

@@ -289,6 +289,29 @@ def test_ktruss_rejects_k_below_3(spark):
         ktruss(df, k=2)
 
 
+def test_ktruss_and_triangle_builds_stay_in_py4j_budget(spark, py4j_calls):
+    """Each stage is one SQL statement, analyzed once, so a warm k-truss
+    build (its canonical edge set and one checkpointed round) and a
+    triangle-count build each make at most 150 py4j calls; built from
+    DataFrame calls, ``ktruss_coparts`` made ~780-990."""
+    from milan_spark.operators import graph
+    from milan_spark.session import release_cached
+
+    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    pend = [(4, 5), (4, 6), (5, 6)]
+    df = spark.createDataFrame(k4 + pend, "src long, dst long")
+    graph.ktruss(df, k=4, rounds=2)  # warm-up
+    with py4j_calls() as calls:
+        out = graph.ktruss(df, k=4, rounds=2)
+    assert {(r["u"], r["v"]): r["support"] for r in out.collect()} == {e: 2 for e in k4}
+    assert calls.n <= 150, calls.n
+    with py4j_calls() as calls:
+        tri = graph.triangle_count(df, small_graph=True)
+    assert tri.collect()[0]["n_triangles"] == 5
+    assert calls.n <= 150, calls.n
+    release_cached(spark)
+
+
 def test_ktruss_round_plans_have_one_branch(spark, monkeypatch):
     """Every k-truss round is one branch per intermediate: degrees, credits
     and triangles come from in-row explodes, not self-unions, so a round's
