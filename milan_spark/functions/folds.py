@@ -11,7 +11,7 @@ contract::
     fold(state, record) -> (new_state, out_dict_or_None)
 
 ``record`` arrives as a named tuple (both backends use ``itertuples``;
-address columns as ``rec.col``), ``state`` must be JSON-serializable (it is
+address columns as ``rec.col``), ``state`` must be picklable (it is
 persisted as the per-key value state on the streaming backend), and ``out``
 is a dict keyed by the node's ``output_schema`` field names — ``None``
 suppresses emission (Milan's Option-output contract).

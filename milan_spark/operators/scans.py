@@ -29,6 +29,7 @@ bottleneck.
 
 from __future__ import annotations
 
+import copy
 from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
@@ -114,7 +115,8 @@ def scan(
     ``(state, record) -> (state, out_or_None)`` applied in arrival order per
     key; None outputs are suppressed (doc/Milan Operations.md:122-133).
     ``out`` must be a dict keyed by the output-schema field names (same
-    contract as the streaming twin); records arrive as named tuples.
+    contract as the streaming twin); records arrive as named tuples, and each
+    key folds from its own copy of ``initial_state``.
 
     Executed as hash-repartition on the key + per-partition sort +
     ``mapInPandas`` walking whole Arrow batches with a per-key state dict —
@@ -141,8 +143,10 @@ def scan(
             rows = []
             for rec in pdf.itertuples(index=False):
                 k = tuple(getattr(rec, c) for c in key_list) if key_list else ()
-                state, out = fold(states.get(k, initial_state), rec)
-                states[k] = state
+                # each key folds from its own copy: a fold may mutate its state
+                if k not in states:
+                    states[k] = copy.deepcopy(initial_state)
+                states[k], out = fold(states[k], rec)
                 if out is not None:
                     rows.append(out)
             # emitted rows are final the moment they are produced — flush per

@@ -50,6 +50,7 @@ streaming compiler when the data outgrows one process.
 
 from __future__ import annotations
 
+import copy
 from types import SimpleNamespace
 from typing import Callable, Mapping, Sequence
 
@@ -794,8 +795,9 @@ def _compile_scan_ref(n: Node, ins: list[_Op]) -> _Op:
 
     def step(idx, rec):
         key = tuple(rec[c] for c in keys)
-        st, out = fold(state.get(key, init), SimpleNamespace(**rec))
-        state[key] = st
+        if key not in state:
+            state[key] = copy.deepcopy(init)
+        state[key], out = fold(state[key], SimpleNamespace(**rec))
         return [dict(out)] if out is not None else []
 
     return _Op(out_cols, step)

@@ -16,9 +16,12 @@ key-grouped stream:
   ``flink/runtime/RecordWrapperEveryElementTrigger.scala:15-19``.
 
 Design: both sides are tagged and unioned into one keyed stream (the analog of
-Flink ``connect().keyBy()``); rows are carried as JSON structs so one state
-machine handles arbitrary schemas, and per-key state is a small struct of JSON
-strings — the exact shape of the reference's ValueState-of-record. Within a
+Flink ``connect().keyBy()``). Each side's rows cross into the state machine as
+JSON strings (``to_json``/``from_json`` with :data:`_JSON_OPTS`), so one
+machine handles arbitrary schemas. The payload stays JSON because a typed
+struct payload does not survive the Arrow boundary: the other side's null
+struct puts nulls in every field, pandas receives long fields as floats, and
+``GroupState.update`` then stores them as null without an error. Within a
 microbatch records are processed in ``(seq, side)`` order (right-before-left on
 ties, matching the batch realization in ``operators.joins``); across
 microbatches, arrival order *is* the order — which is precisely the reference's
@@ -36,7 +39,10 @@ state store, not this wrapper — same as Flink.
 State: every operator here runs as an ``applyInPandasWithState`` state
 machine through one driver (:func:`_drive`) with ``GroupStateTimeout.NoTimeout``
 — the ``mapGroupsWithState`` model of the Structured Streaming paper
-(SIGMOD'18). The enrichment joins and :func:`scan` take an optional
+(SIGMOD'18). A key's state is one pickled value in one binary field, the
+analog of the reference's serialized ``ValueState``/``ListState``, so a
+machine may hold any picklable value (decimals, timestamps and tuples come
+back exact). The enrichment joins and :func:`scan` take an optional
 ``state_ttl_ms``: per-key state older than that reads as absent (see
 :func:`_drive`).
 """
@@ -57,21 +63,23 @@ from milan_spark.session import SEQ_COL
 
 def _drive(
     df: DataFrame,
-    group_cols: Sequence,
+    group_cols: Sequence[str],
     process,
-    out_schema: StructType,
-    state_schema: StructType,
+    out_schema: StructType | str,
     *,
+    init,
     sort_by: Sequence[str],
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Run ``process(key, pdf, state_tuple_or_None) -> (new_state_tuple,
-    [pd.DataFrame])`` as a keyed value-state machine
-    (``applyInPandasWithState``).
+    """Run ``process(key, pdf, state) -> (state, rows)`` as a keyed
+    value-state machine (``applyInPandasWithState``), append mode.
 
-    ``pdf`` arrives sorted by ``sort_by``; the returned state tuple must match
-    ``state_schema`` and is persisted for the key (None leaves state
-    untouched). Emission is append-mode.
+    ``pdf`` arrives sorted by ``sort_by``. ``state`` is the value the key's
+    last call returned, or a fresh copy of ``init`` for a key with none; the
+    returned value is pickled into the key's one binary state field. ``rows``
+    (tuples or dicts, in ``out_schema`` order) are emitted. With no
+    ``group_cols`` the stream is one group over a constant ``__g`` column;
+    ``out_schema`` may be a DDL string.
 
     ``state_ttl_ms`` puts a processing-time TTL on the per-key state: the
     state carries the batch time it was last written at (an extra
@@ -83,10 +91,15 @@ def _drive(
     """
     import pandas as pd
 
+    if isinstance(out_schema, str):
+        out_schema = StructType.fromDDL(out_schema)
+    columns = out_schema.fieldNames()
+    if not group_cols:
+        df, group_cols = df.withColumn("__g", F.lit(1)), ["__g"]
+    state_fields = [StructField("state", BinaryType(), True)]
     if state_ttl_ms is not None:
-        state_schema = StructType(
-            state_schema.fields + [StructField("__written_ms", LongType(), True)]
-        )
+        state_fields.append(StructField("__written_ms", LongType(), True))
+    init_blob = pickle.dumps(init)
 
     def fn(key, pdf_iter: Iterator["pd.DataFrame"], state: GroupState):
         chunks = [p for p in pdf_iter if len(p)]
@@ -95,29 +108,21 @@ def _drive(
         pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
         if sort_by:
             pdf = pdf.sort_values(list(sort_by), kind="stable")
-        st = tuple(state.get) if state.exists else None
+        blob = state.get[0] if state.exists else init_blob
         if state_ttl_ms is not None:
             now = state.getCurrentProcessingTimeMs()
-            if st is not None:
-                st = st[:-1] if now - st[-1] <= state_ttl_ms else None
-        st, frames = process(key, pdf, st)
-        if st is not None:
-            state.update(tuple(st) if state_ttl_ms is None else (*st, now))
-        yield from frames
+            if state.exists and now - state.get[1] > state_ttl_ms:
+                blob = init_blob
+        st, rows = process(key, pdf, pickle.loads(blob))
+        blob = pickle.dumps(st)
+        state.update((blob,) if state_ttl_ms is None else (blob, now))
+        if rows:
+            yield pd.DataFrame(rows, columns=columns)
 
     return df.groupBy(*group_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, out_schema, StructType(state_fields), "append", GroupStateTimeout.NoTimeout
     )
 
-
-_STATE_1 = StructType([StructField("r", StringType(), True)])
-_STATE_2 = StructType(
-    [StructField("l", StringType(), True), StructField("r", StringType(), True)]
-)
-_STATE_BUF = StructType(
-    [StructField("r", StringType(), True), StructField("buf", StringType(), True)]
-)
-_STATE_PICKLE = StructType([StructField("buf", BinaryType(), True)])
 
 # the payload JSON both ways: Spark's default timestamp formats stop at
 # milliseconds, so a side's microseconds would not survive the round trip
@@ -150,18 +155,6 @@ def _tagged_union(
         F.to_json(F.struct(*right.columns), _JSON_OPTS).alias("__payload"),
     )
     return l.unionByName(r)
-
-
-def _key_fields(union_df: DataFrame, n_keys: int) -> list[StructField]:
-    schema = union_df.schema
-    return [schema[f"__key{i}"] for i in range(n_keys)]
-
-
-def _out_schema(key_fields: list[StructField]) -> StructType:
-    return StructType(
-        list(key_fields)
-        + [StructField("__l", StringType(), True), StructField("__r", StringType(), True)]
-    )
 
 
 def _pair_project(
@@ -198,36 +191,30 @@ def _run_state_machine(
     union_df: DataFrame,
     n_keys: int,
     step,
-    state_schema: StructType,
-    init_state: tuple,
+    init,
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Group by key and drive ``step(state_tuple, side, payload) ->
-    (state_tuple, [emitted (l_json, r_json)])`` over records in order."""
-    import pandas as pd
-
+    """Group by key and drive ``step(state, side, payload) -> (state,
+    [emitted (l_json, r_json)])`` over records in order; emits rows
+    ``(key…, __l, __r)``."""
     key_cols = [f"__key{i}" for i in range(n_keys)]
-    out_schema = _out_schema(_key_fields(union_df, n_keys))
+    schema = union_df.schema
+    out_schema = StructType(
+        [schema[c] for c in key_cols]
+        + [StructField("__l", StringType(), True), StructField("__r", StringType(), True)]
+    )
 
     # right (side=0) before left on seq ties — same order as the batch
     # window realization orderBy(__ord, __side)
     def process(key, pdf, st):
-        st = st if st is not None else init_state
-        out_l, out_r = [], []
+        rows = []
         for side, payload in zip(pdf["__side"], pdf["__payload"]):
             st, emitted = step(st, int(side), payload)
-            for l, r in emitted:
-                out_l.append(l)
-                out_r.append(r)
-        if not out_l:
-            return st, []
-        res = {c: [key[i]] * len(out_l) for i, c in enumerate(key_cols)}
-        res["__l"] = out_l
-        res["__r"] = out_r
-        return st, [pd.DataFrame(res)]
+            rows += [(*key, l, r) for l, r in emitted]
+        return st, rows
 
     return _drive(
-        union_df, key_cols, process, out_schema, state_schema,
+        union_df, key_cols, process, out_schema, init=init,
         sort_by=["__ord", "__side"], state_ttl_ms=state_ttl_ms,
     )
 
@@ -251,12 +238,12 @@ def left_enrichment_join(
     left_on, right_on = _normalize_on(on, left_on, right_on)
     u = _tagged_union(left, right, left_on, right_on, left_seq, right_seq)
 
-    def step(st, side, payload):
+    def step(last_r, side, payload):
         if side == 0:
-            return (payload,), []
-        return st, [(payload, st[0])]
+            return payload, []
+        return last_r, [(payload, last_r)]
 
-    paired = _run_state_machine(u, len(left_on), step, _STATE_1, (None,), state_ttl_ms)
+    paired = _run_state_machine(u, len(left_on), step, None, state_ttl_ms)
     return _pair_project(paired, left, right, left_on, right_on, right_prefix, residual)
 
 
@@ -287,7 +274,7 @@ def full_enrichment_join(
             last_r = payload
         return (last_l, last_r), [(last_l, last_r)]
 
-    paired = _run_state_machine(u, len(left_on), step, _STATE_2, (None, None), state_ttl_ms)
+    paired = _run_state_machine(u, len(left_on), step, (None, None), state_ttl_ms)
     return _pair_project(paired, left, right, left_on, right_on, right_prefix, residual)
 
 
@@ -304,8 +291,8 @@ def left_inner_enrichment_join(
     right_prefix: str = "r_",
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Streaming Milan LeftInnerJoin: lefts buffer (a JSON list in the key's
-    value state, the reference's ListState) until the first matching right;
+    """Streaming Milan LeftInnerJoin: lefts buffer (a list in the key's value
+    state, the reference's ListState) until the first matching right;
     afterwards lefts pair immediately with the latest right. Each left emits
     at most once (LeftInnerJoinKeyedCoProcessFunction.scala:40-103).
 
@@ -325,21 +312,20 @@ def left_inner_enrichment_join(
         return residual is None or bool(residual(json.loads(l), r))
 
     def step(st, side, payload):
-        last_r, buf_json = st
+        last_r, buf = st
         if side == 1:
             if last_r is not None and fits(payload, decode(last_r)):
                 return st, [(payload, last_r)]
-            buf = json.loads(buf_json) if buf_json else []
             buf.append(payload)
-            return (last_r, json.dumps(buf)), []
+            return st, []
         # one residual call per buffered left: it is either emitted or kept
         r = decode(payload)
         emitted, kept = [], []
-        for l in json.loads(buf_json) if buf_json else []:
+        for l in buf:
             (emitted if fits(l, r) else kept).append(l)
-        return (payload, json.dumps(kept) if kept else None), [(l, payload) for l in emitted]
+        return (payload, kept), [(l, payload) for l in emitted]
 
-    paired = _run_state_machine(u, len(left_on), step, _STATE_BUF, (None, None), state_ttl_ms)
+    paired = _run_state_machine(u, len(left_on), step, (None, []), state_ttl_ms)
     return _pair_project(paired, left, right, left_on, right_on, right_prefix, None)
 
 
@@ -355,41 +341,25 @@ def scan(
 ) -> DataFrame:
     """Streaming Milan Scan (ScanProcessFunction.scala:17,66): general user
     fold ``(state, record) -> (state, out_dict_or_None)`` in arrival order per
-    key; state persists across microbatches (per-key JSON value state, the
-    analog of the reference's serialized ValueState).
+    key; state persists across microbatches (per-key pickled value state,
+    the analog of the reference's serialized ValueState).
 
     Contract matches the batch ``operators.scans.scan``: records arrive as
-    named tuples, state must be JSON-serializable.
+    named tuples, state must be picklable, and each key starts from its own
+    copy of ``initial_state``.
     """
-    import pandas as pd
-
-    key_list = list(keys)
     payload_cols = list(sdf.columns)
-    out_schema = (
-        StructType.fromDDL(output_schema) if isinstance(output_schema, str) else output_schema
-    )
 
-    def process(key, pdf, st_t):
-        st = json.loads(st_t[0]) if st_t is not None else initial_state
+    def process(key, pdf, st):
         rows = []
         for rec in pdf[payload_cols].itertuples(index=False):
             st, out = fold(st, rec)
             if out is not None:
                 rows.append(out)
-        frames = (
-            [pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])]
-            if rows
-            else []
-        )
-        return (json.dumps(st),), frames
+        return st, rows
 
-    # a keyless fold runs as one group over a synthetic constant column
-    if key_list:
-        group_df, group_cols = sdf, key_list
-    else:
-        group_df, group_cols = sdf.withColumn("__g", F.lit(1)), ["__g"]
     return _drive(
-        group_df, group_cols, process, out_schema, _STATE_1,
+        sdf, list(keys), process, output_schema, init=initial_state,
         sort_by=[seq], state_ttl_ms=state_ttl_ms,
     )
 
@@ -412,19 +382,12 @@ def record_window_apply(
     ``fn(rows: list[dict]) -> dict | None`` — rows oldest-first; None emits
     nothing for that arrival. State is bounded at n rows per key by
     construction, the property that makes record windows safe at scale. The
-    buffer is held pickled in one binary state field, so decimal and
-    timestamp values reach ``fn`` exactly (JSON has neither).
+    buffer is pickled state, so decimal and timestamp values reach ``fn``
+    exactly.
     """
-    import pandas as pd
+    payload_cols = list(sdf.columns)
 
-    key_list = list(keys)
-    out_schema = (
-        StructType.fromDDL(output_schema) if isinstance(output_schema, str) else output_schema
-    )
-    payload_cols = [c for c in sdf.columns]
-
-    def process(key, pdf, st_t):
-        buf = pickle.loads(st_t[0]) if st_t is not None else []
+    def process(key, pdf, buf):
         rows = []
         for rec in pdf[payload_cols].to_dict("records"):
             buf.append(rec)
@@ -433,19 +396,9 @@ def record_window_apply(
             out = fn(list(buf))
             if out is not None:
                 rows.append(out)
-        frames = (
-            [pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])]
-            if rows
-            else []
-        )
-        return (pickle.dumps(buf),), frames
+        return buf, rows
 
-    # a keyless fold runs as one group over a synthetic constant column
-    if key_list:
-        group_df, group_cols = sdf, key_list
-    else:
-        group_df, group_cols = sdf.withColumn("__g", F.lit(1)), ["__g"]
-    return _drive(group_df, group_cols, process, out_schema, _STATE_PICKLE, sort_by=[seq])
+    return _drive(sdf, list(keys), process, output_schema, init=[], sort_by=[seq])
 
 
 def windowed_agg_per_record(
@@ -469,7 +422,9 @@ def windowed_agg_per_record(
     the state machine and must be integer-valued: the fold is then exact,
     and the full emission history is ANSI-SQL expressible — a cumulative
     window over (window, arrival order) — so even the refinement stream is
-    oracle-checkable.
+    oracle-checkable. A null argument is skipped, as SQL aggregates skip it:
+    a count stays where it was, and a sum, min or max stays null until the
+    first non-null argument.
 
     State per (window, key) is the fixed-width aggregate struct (the same
     size the reference's window ValueState holds); emission volume is one
@@ -498,29 +453,27 @@ def windowed_agg_per_record(
         + [StructField(name, LongType()) for name in aggs]
     )
 
-    def process(key, pdf, st_t):
-        st = json.loads(st_t[0]) if st_t is not None else {name: None for name in aggs}
-        head = {"window_start": key[0], **{k: key[i + 1] for i, k in enumerate(key_list)}}
+    def process(key, pdf, st):
         rows = []
         for rec in pdf.to_dict("records"):
             for name, (kind, _arg) in aggs.items():
-                cur = st[name]
-                if kind == "count":
-                    st[name] = (cur or 0) + 1
+                a, cur = rec[f"__a_{name}"], st[name]
+                if pd.isna(a):  # SQL aggregates skip a null argument
                     continue
-                a = int(rec[f"__a_{name}"])
-                if kind == "sum":
-                    st[name] = (cur or 0) + a
-                elif kind == "min":
-                    st[name] = a if cur is None else min(cur, a)
+                if kind == "count":
+                    st[name] = cur + 1
+                elif cur is None:
+                    st[name] = int(a)
+                elif kind == "sum":
+                    st[name] = cur + int(a)
                 else:
-                    st[name] = a if cur is None else max(cur, a)
-            rows.append({**head, "seq": rec["__seq_out"], **{n: st[n] for n in aggs}})
-        frames = [pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])]
-        return (json.dumps(st),), frames
+                    st[name] = (min if kind == "min" else max)(cur, int(a))
+            rows.append((*key, rec["__seq_out"], *st.values()))
+        return st, rows
 
+    init = {name: 0 if kind == "count" else None for name, (kind, _arg) in aggs.items()}
     return _drive(
-        base, ["window_start", *key_list], process, out_schema, _STATE_1,
+        base, ["window_start", *key_list], process, out_schema, init=init,
         sort_by=["__seq_out"],
     )
 
@@ -551,17 +504,11 @@ def left_windowed_join_apply(
     group-window flavor — bounded instead by the keyspace, which is why the
     record-window variant is the scale path).
     """
-    import pandas as pd
-
     left_on, right_on = _normalize_on(on, left_on, right_on)
     u = _tagged_union(left, right, left_on, right_on, left_seq, right_seq)
     key_cols = [f"__key{i}" for i in range(len(left_on))]
-    out_schema = (
-        StructType.fromDDL(output_schema) if isinstance(output_schema, str) else output_schema
-    )
 
-    def process(key, pdf, st_t):
-        buf = json.loads(st_t[0]) if st_t is not None else []
+    def process(key, pdf, buf):
         rows = []
         for side, payload in zip(pdf["__side"], pdf["__payload"]):
             if side == 0:
@@ -572,16 +519,9 @@ def left_windowed_join_apply(
                 out = fn(json.loads(payload), list(buf))
                 if out is not None:
                     rows.append(out)
-        frames = (
-            [pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])]
-            if rows
-            else []
-        )
-        return (json.dumps(buf),), frames
+        return buf, rows
 
-    return _drive(
-        u, key_cols, process, out_schema, _STATE_1, sort_by=["__ord", "__side"]
-    )
+    return _drive(u, key_cols, process, output_schema, init=[], sort_by=["__ord", "__side"])
 
 
 def streaming_heavy_hitters(
@@ -617,11 +557,6 @@ def streaming_heavy_hitters(
     Output: ``bucket int, version long, item string, lb long, bucket_rows
     long`` (one row set per bucket per microbatch that touched it).
     """
-    import pandas as pd
-
-    out_schema = StructType.fromDDL(
-        "bucket int, version long, item string, lb long, bucket_rows long"
-    )
     keyed = sdf.select(
         F.pmod(F.xxhash64(F.col(item).cast("string")), F.lit(n_buckets))
         .cast("int")
@@ -629,31 +564,22 @@ def streaming_heavy_hitters(
         F.col(item).cast("string").alias("__item"),
     ).where(F.col("__item").isNotNull())
 
-    def process(key, pdf, st_t):
-        st = json.loads(st_t[0]) if st_t is not None else {"v": 0, "n": 0, "c": {}}
-        counters: dict[str, int] = st["c"]
-        st["n"] += len(pdf)
-        for v, c in pdf["__item"].value_counts().items():
-            counters[v] = counters.get(v, 0) + int(c)
+    def process(key, pdf, st):
+        version, n, counters = st
+        for item, c in pdf["__item"].value_counts().items():
+            counters[item] = counters.get(item, 0) + int(c)
         if len(counters) > capacity:
             delta = sorted(counters.values(), reverse=True)[capacity]
             counters = {k: c - delta for k, c in counters.items() if c > delta}
-        st["v"] += 1
-        st["c"] = counters
-        frames = [
-            pd.DataFrame(
-                {
-                    "bucket": key[0],
-                    "version": st["v"],
-                    "item": list(counters.keys()),
-                    "lb": list(counters.values()),
-                    "bucket_rows": st["n"],
-                }
-            )
-        ]
-        return (json.dumps(st),), frames
+        version, n = version + 1, n + len(pdf)
+        rows = [(key[0], version, item, lb, n) for item, lb in counters.items()]
+        return (version, n, counters), rows
 
-    return _drive(keyed, ["__bucket"], process, out_schema, _STATE_1, sort_by=[])
+    return _drive(
+        keyed, ["__bucket"], process,
+        "bucket int, version long, item string, lb long, bucket_rows long",
+        init=(0, 0, {}), sort_by=[],
+    )
 
 
 def streaming_cms(
@@ -678,8 +604,6 @@ def streaming_cms(
 
     Output: ``r int, version long, i int, c long``.
     """
-    import pandas as pd
-
     from milan_spark.operators.sketch import _cms_fold, _cms_row_idx
 
     w_col = F.lit(1).cast("long") if weight is None else F.col(weight).cast("long")
@@ -697,28 +621,18 @@ def streaming_cms(
             ])
         ).alias("__cell"),
     ).select(F.col("__cell.r").alias("__r"), F.col("__cell.i").alias("__i"), "__w")
-    out_schema = StructType.fromDDL("r int, version long, i int, c long")
 
-    def process(key, pdf, st_t):
-        st = json.loads(st_t[0]) if st_t is not None else {"v": 0, "c": {}}
-        counters = st["c"]
+    def process(key, pdf, st):
+        version, counters = st
         for i, w in pdf.groupby("__i")["__w"].sum().items():
-            k = str(int(i))
-            counters[k] = counters.get(k, 0) + int(w)
-        st["v"] += 1
-        frames = [
-            pd.DataFrame(
-                {
-                    "r": key[0],
-                    "version": st["v"],
-                    "i": [int(k) for k in counters],
-                    "c": list(counters.values()),
-                }
-            )
-        ]
-        return (json.dumps(st),), frames
+            counters[int(i)] = counters.get(int(i), 0) + int(w)
+        version += 1
+        return (version, counters), [(key[0], version, i, c) for i, c in counters.items()]
 
-    return _drive(cells, ["__r"], process, out_schema, _STATE_1, sort_by=[])
+    return _drive(
+        cells, ["__r"], process, "r int, version long, i int, c long",
+        init=(0, {}), sort_by=[],
+    )
 
 
 def streaming_hll(sdf: DataFrame, value_col: str) -> DataFrame:
@@ -734,8 +648,6 @@ def streaming_hll(sdf: DataFrame, value_col: str) -> DataFrame:
     Output: ``reg int, version long, m int`` — latest version per reg is
     the complete sketch; fold with ``operators.sketch.hll_estimate``.
     """
-    import pandas as pd
-
     from milan_spark.operators.sketch import _HLL_M, _hll_rho, _kmv_hash
 
     h = _kmv_hash(F.col(value_col).cast("string")) - 1
@@ -743,15 +655,10 @@ def streaming_hll(sdf: DataFrame, value_col: str) -> DataFrame:
         (h % _HLL_M).cast("int").alias("__reg"),
         _hll_rho(F.floor(h / _HLL_M).cast("long")).cast("int").alias("__rho"),
     )
-    out_schema = StructType.fromDDL("reg int, version long, m int")
+    def process(key, pdf, st):
+        version, m = st[0] + 1, max(st[1], int(pdf["__rho"].max()))
+        return (version, m), [(key[0], version, m)]
 
-    def process(key, pdf, st_t):
-        st = json.loads(st_t[0]) if st_t is not None else {"v": 0, "m": 0}
-        st["m"] = max(st["m"], int(pdf["__rho"].max()))
-        st["v"] += 1
-        frames = [
-            pd.DataFrame({"reg": [key[0]], "version": [st["v"]], "m": [st["m"]]})
-        ]
-        return (json.dumps(st),), frames
-
-    return _drive(regs, ["__reg"], process, out_schema, _STATE_1, sort_by=[])
+    return _drive(
+        regs, ["__reg"], process, "reg int, version long, m int", init=(0, 0), sort_by=[]
+    )

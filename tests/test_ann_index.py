@@ -4,8 +4,6 @@ loaded index has no legitimate reason to differ)."""
 
 from __future__ import annotations
 
-import pytest
-
 from milan_spark.operators.similarity import (
     ann_ivfpq_residual,
     build_ivfpq_residual_index,
@@ -17,7 +15,6 @@ from milan_spark.operators.similarity import (
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
 
-@pytest.mark.slow
 def test_saved_and_loaded_index_queries_identically(spark, tmp_path):
     emb = spark.read.parquet(EMB)
     qids = list(range(5))

@@ -206,6 +206,43 @@ def test_opaque_scan_fold_three_backends(spark):
     assert got == _stream(spark, text, "ev3_opaque_scan", cols)
 
 
+def _append_rank_fold(state, rec):
+    # mutates its list state in place: a key that shared another key's
+    # initial list would count that key's records too
+    state.append(rec.event_id)
+    return state, {"event_id": rec.event_id, "user_id": rec.user_id, "rank": len(state)}
+
+
+def test_mutating_scan_fold_state_per_key_three_backends(spark):
+    """Each key folds from its own copy of ``initial_state`` on the batch,
+    streaming and event backends, even when the fold mutates it."""
+    s = (
+        Stream.from_parquet(spark, EV)
+        .map("event_id", "user_id")
+        .scan(
+            "tests.test_event_backend:_append_rank_fold",
+            initial_state=[],
+            output_schema="event_id long, user_id long, rank long",
+            keys=["user_id"],
+            seq="event_id",
+        )
+    )
+    text = to_json(s.node)
+    rows = _rows(spark)
+    ranks: dict = {}
+    want = []
+    for r in rows:
+        ranks[r["user_id"]] = ranks.get(r["user_id"], 0) + 1
+        want.append((r["event_id"], r["user_id"], ranks[r["user_id"]]))
+    want = sorted(want, key=_key)
+    assert len(ranks) > 1
+    handler = compile_event(from_json(text), schemas={EV: EV_COLS})
+    cols = handler.columns
+    assert _as_tuples(handler.process_many(rows), cols) == want
+    assert _batch(spark, text, cols) == want
+    assert _stream(spark, text, "ev3_mutating_scan", cols) == want
+
+
 def test_stream_max_by_three_backends(spark):
     s = (
         Stream.from_parquet(spark, EV)

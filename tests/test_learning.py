@@ -5,8 +5,6 @@ contract every iterative-numeric operator carries)."""
 
 from __future__ import annotations
 
-import pytest
-
 from milan_spark.operators.learning import (
     _trunc_div,
     perceptron_margins,
@@ -62,7 +60,6 @@ def test_margins_and_gate(spark):
     assert rows[3]["margin"] == 0 and not rows[3]["keep"] and rows[3]["correct"]
 
 
-@pytest.mark.slow
 def test_partition_invariance(spark):
     import random
 

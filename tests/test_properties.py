@@ -10,8 +10,6 @@ so equality is exact. Examples are capped: every example is a Spark job.
 
 from __future__ import annotations
 
-import pytest
-
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -119,7 +117,6 @@ def test_record_window_is_trailing_n_sum(spark, rows, n):
 
 @given(arrivals)
 @settings(**SETTINGS)
-@pytest.mark.slow
 def test_left_inner_join_buffers_until_first_right(spark, evs):
     from milan_spark.operators.joins import left_inner_enrichment_join
 
@@ -153,7 +150,6 @@ docs_corpus = st.lists(
 
 @given(docs_corpus, st.sampled_from([0.4, 0.6, 0.8]))
 @settings(**SETTINGS)
-@pytest.mark.slow
 def test_ngram_jaccard_both_regimes_match_model(spark, corpus, thr):
     """Prefix-filtered inverted index (sparse) and broadcast matmul (dense)
     both equal the definitional per-pair Jaccard on random corpora."""

@@ -7,8 +7,6 @@ same rows. Examples are capped: every example is several Spark jobs."""
 
 from __future__ import annotations
 
-import pytest
-
 import tempfile
 
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -92,7 +90,6 @@ def _matches(row, preds):
 
 @given(rows_st, preds_st, st.integers(1, 4))
 @settings(**SETTINGS)
-@pytest.mark.slow
 def test_pruned_read_and_count_match_reference(spark, rows, raw_preds, chunks):
     preds = _norm_preds(raw_preds)
     path = tempfile.mkdtemp(prefix="milan_prop_vt_")

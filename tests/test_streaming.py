@@ -75,7 +75,6 @@ def _sorted_rows(df, cols):
     return [tuple(r) for r in df.select(*cols).orderBy(*cols).collect()]
 
 
-@pytest.mark.slow
 def test_streaming_left_enrichment_matches_batch(spark, sides):
     ls, rs, lb, rb = sides
     got = run_to_memory(stateful.left_enrichment_join(ls, rs, on="k"), "s_left_enrich")
@@ -85,7 +84,6 @@ def test_streaming_left_enrichment_matches_batch(spark, sides):
     assert got.count() == lb.count()  # one output per left arrival
 
 
-@pytest.mark.slow
 def test_streaming_full_enrichment_matches_batch(spark, sides):
     ls, rs, lb, rb = sides
     got = run_to_memory(stateful.full_enrichment_join(ls, rs, on="k"), "s_full_enrich")
@@ -95,7 +93,6 @@ def test_streaming_full_enrichment_matches_batch(spark, sides):
     assert got.count() == lb.count() + rb.count()  # every arrival emits
 
 
-@pytest.mark.slow
 def test_streaming_left_inner_matches_batch(spark, sides):
     ls, rs, lb, rb = sides
     got = run_to_memory(stateful.left_inner_enrichment_join(ls, rs, on="k"), "s_li_enrich")
@@ -104,7 +101,6 @@ def test_streaming_left_inner_matches_batch(spark, sides):
     assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
 
 
-@pytest.mark.slow
 def test_streaming_left_inner_residual_rematch(spark, sides):
     """A buffered left failing the residual stays buffered for the next right
     — the stateful re-match the batch realization cannot express."""
@@ -283,7 +279,71 @@ def test_record_window_apply_decimal_and_timestamp(spark, tmp_path):
     assert got[1][0] == Decimal("5.500000")
 
 
-@pytest.mark.slow
+def test_scan_state_keeps_decimal_datetime_and_tuple(spark, tmp_path):
+    """A scan's state is pickled between microbatches, so a Decimal, a
+    datetime and a tuple come back as they went in."""
+    from decimal import Decimal
+
+    _write_chunks(
+        tmp_path / "s",
+        [
+            [(1, "0.000001", "2024-03-01 12:00:05.123456", 0), (2, "5.5", "2024-03-01 12:00:06", 1)],
+            [(1, "123456789012.000002", "1969-07-20 20:17:40.000007", 2)],
+        ],
+        ["k", "d", "t", "s"],
+    )
+    sdf = _typed_stream(
+        spark, tmp_path / "s", "k long, d string, t string, s long",
+        {"k": "k", "d": "CAST(d AS DECIMAL(18,6))", "t": "CAST(t AS TIMESTAMP)", "s": "s"},
+    )
+
+    def fold(st, rec):
+        total, first_t, seen = st
+        assert isinstance(seen, tuple)
+        st = (total + rec.d, first_t if first_t is not None else rec.t, seen + (rec.s,))
+        return st, {"k": rec.k, "total": st[0], "first_t": st[1], "seqs": ",".join(map(str, st[2]))}
+
+    out = stateful.scan(
+        sdf, fold, initial_state=(Decimal(0), None, ()),
+        output_schema="k long, total decimal(18,6), first_t timestamp, seqs string",
+        keys=["k"], seq="s",
+    )
+    got = {r.seqs: (r.k, r.total, r.first_t) for r in run_to_memory(out, "s_scan_codec").collect()}
+    t0 = spark.sql("SELECT CAST('2024-03-01 12:00:05.123456' AS TIMESTAMP) AS t").first().t
+    assert got["0,2"] == (1, Decimal("123456789012.000003"), t0)  # second microbatch
+    assert got["0"] == (1, Decimal("0.000001"), t0)
+    assert got["1"][:2] == (2, Decimal("5.500000"))
+
+
+def test_windowed_agg_per_record_skips_null_arguments(spark, tmp_path):
+    """A null argument leaves count, sum, min and max where they were, as a
+    SQL aggregate skips it, across two microbatches."""
+    _write_chunks(
+        tmp_path / "s",
+        [
+            [("2024-03-01 00:00:01", None, 0), ("2024-03-01 00:00:02", "5", 1)],
+            [("2024-03-01 00:00:03", None, 2), ("2024-03-01 00:00:04", "3", 3)],
+        ],
+        ["t", "x", "s"],
+    )
+    sdf = _typed_stream(
+        spark, tmp_path / "s", "t string, x string, s long",
+        {"ts": "CAST(t AS TIMESTAMP)", "x": "CAST(x AS BIGINT)", "s": "s"},
+    )
+    aggs = {"n": ("count", "x"), "total": ("sum", "x"), "lo": ("min", "x"), "hi": ("max", "x")}
+    out = stateful.windowed_agg_per_record(sdf, "ts", "1 day", aggs, seq="s")
+    got = sorted(
+        (r.seq, r.n, r.total, r.lo, r.hi)
+        for r in run_to_memory(out, "s_wapr_nulls").collect()
+    )
+    assert got == [
+        (0, 0, None, None, None),
+        (1, 1, 5, 5, 5),
+        (2, 1, 5, 5, 5),
+        (3, 2, 8, 3, 5),
+    ]
+
+
 def test_streaming_scan_matches_batch(spark, sides):
     ls, _, lb, _ = sides
 
@@ -304,7 +364,6 @@ def test_streaming_scan_matches_batch(spark, sides):
     assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
 
 
-@pytest.mark.slow
 def test_streaming_windowed_agg_matches_batch(spark, tmp_path):
     ev = table(spark, "/root/testdata/sf0.001", "events")
     ev.write.parquet(str(tmp_path / "events"))
@@ -353,7 +412,6 @@ def test_foreach_batch_sink(spark, tmp_path):
     assert sum(seen) == 50
 
 
-@pytest.mark.slow
 def test_streaming_left_windowed_join_apply(spark, sides):
     """Each left pairs with the rights that arrived before it (temporal
     window state), bounded to the trailing window_n."""

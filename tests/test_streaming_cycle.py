@@ -14,7 +14,6 @@ from milan_spark.streaming.cycle import (
 )
 
 
-@pytest.mark.slow
 def test_streaming_cycle_countdown(spark, tmp_path):
     seed = spark.createDataFrame([(10, 3), (20, 2)], "id long, n long")
 
@@ -30,7 +29,6 @@ def test_streaming_cycle_countdown(spark, tmp_path):
     )
 
 
-@pytest.mark.slow
 def test_streaming_cycle_diverging_body_trips_fuse(spark, tmp_path):
     seed = spark.createDataFrame([(0,)], "x long")
 
@@ -44,7 +42,6 @@ def test_streaming_cycle_diverging_body_trips_fuse(spark, tmp_path):
     assert "max_batches" in str(ei.value) or isinstance(ei.value, MilanRoundCapError)
 
 
-@pytest.mark.slow
 def test_streaming_components_match_batch_cycle(spark, tmp_path):
     # two chains and a singleton-free triangle: {1-2-3-4}, {10-11}, {20-21-22}
     pair_rows = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)]
@@ -66,7 +63,6 @@ def test_streaming_components_match_batch_cycle(spark, tmp_path):
     assert got == batch
 
 
-@pytest.mark.slow
 def test_streaming_cycle_history_io_bounded(spark, tmp_path):
     # per-hop dedup must NOT re-read the growing feedback dir: history file
     # scans stay at 1 (the seed) no matter how many hops run
@@ -85,7 +81,6 @@ def test_streaming_cycle_history_io_bounded(spark, tmp_path):
     assert stats["history_file_reads"] == 1
 
 
-@pytest.mark.slow
 def test_streaming_cycle_history_frames_bounded(spark, tmp_path):
     """Long cycles must compact: the delta list folds into one frame every
     compact_every hops, so the per-hop anti-join input is a bounded number of
@@ -105,7 +100,6 @@ def test_streaming_cycle_history_frames_bounded(spark, tmp_path):
     assert stats["max_history_frames"] <= 3
 
 
-@pytest.mark.slow
 def test_streaming_cycle_null_rows_dedupe(spark, tmp_path):
     # NULL-bearing records must dedupe against history (null-safe equality);
     # with plain equality this body re-emits (1, NULL) forever and trips the

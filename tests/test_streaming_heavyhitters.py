@@ -71,7 +71,6 @@ def test_state_is_bounded(snapshots):
     assert len(cur) <= N_BUCKETS * CAPACITY
 
 
-@pytest.mark.slow
 def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
     """The streamed CMS folded across 3 microbatches must equal the batch
     cms_build of the full multiset, cell for cell — the mergeable-state

@@ -51,7 +51,6 @@ def test_window_aggregate_same_json_both_backends(spark):
     assert b == st and len(b) > 0
 
 
-@pytest.mark.slow
 def test_enrichment_join_same_json_both_backends(spark):
     left = (
         Stream.from_parquet(spark, EV)
@@ -259,7 +258,6 @@ def test_asof_join_forward_rejected_streaming(spark):
         compile_node_streaming(from_json(to_json(j.node)), spark)
 
 
-@pytest.mark.slow
 def test_stream_stream_join_same_json_both_backends(spark):
     """relational_join with watermarks + time-range condition: Spark's
     native stream-stream join on the streaming backend, the identical
@@ -348,7 +346,6 @@ def test_left_windowed_join_same_json_both_backends(spark):
     assert b == st and len(b) > 0
 
 
-@pytest.mark.slow
 def test_left_outer_stream_stream_join_same_json_both_backends(spark, tmp_path):
     """relational_join how=left_outer from ONE JSON: streaming runs Spark's
     native watermarked outer join (mtime-ordered staged slices guarantee
@@ -413,7 +410,6 @@ def test_left_outer_stream_stream_join_same_json_both_backends(spark, tmp_path):
     assert any(r[2] is None for r in b)  # null-padded unmatched lefts exist
 
 
-@pytest.mark.slow
 def test_stream_stream_semi_join_same_json_both_backends(spark):
     """relational_join how=left_semi: matched left rows emit exactly once
     on the streaming backend (no eviction dependency), and the batch
@@ -455,7 +451,6 @@ def test_stream_stream_semi_join_same_json_both_backends(spark):
     assert len(b) == len(set(b))
 
 
-@pytest.mark.slow
 def test_opaque_scan_fold_ref_same_json_both_backends(spark):
     """scan_fold carrying a dotted-path fold_ref (the FunctionReference
     mechanism): the SAME serialized plan runs the non-associative EWMA fold

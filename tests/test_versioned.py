@@ -113,7 +113,6 @@ def test_snapshot_isolation_across_concurrent_commit(spark, tbl):
     assert _snap(read_version(spark, tbl)) == [(2, "b")]
 
 
-@pytest.mark.slow
 def test_compact_folds_dirs_result_identical(spark, tbl):
     for i in range(4):
         commit_append(_df(spark, [(i, str(i))]), tbl)
@@ -251,7 +250,6 @@ def test_commit_with_retry_wins_after_race(spark, tbl):
         )
 
 
-@pytest.mark.slow
 def test_zone_map_pruning_skips_files_result_exact(spark, tbl):
     """Per-file manifest stats prune non-matching files driver-side; the
     read still applies the exact predicate, so results == WHERE semantics."""
@@ -286,7 +284,6 @@ def test_zone_map_pruning_skips_files_result_exact(spark, tbl):
     assert empty.columns == ["k", "m"]
 
 
-@pytest.mark.slow
 def test_zone_map_pruning_null_and_statless_files(spark, tbl):
     from milan_spark.operators.versioned import prune_files, read_pruned
 
@@ -455,7 +452,6 @@ def test_bloom_point_lookup_prunes_hash_distributed_files(spark, tbl):
     assert miss["files_kept"] <= 1
 
 
-@pytest.mark.slow
 def test_bloom_string_keys_and_all_null_file(spark, tbl):
     from milan_spark.operators.versioned import prune_files, read_pruned
 
@@ -523,7 +519,6 @@ def test_stream_appends_tails_commits_exactly_once(spark, tbl, tmp_path):
         publish_appends(tbl, staging)
 
 
-@pytest.mark.slow
 def test_maybe_compact_policy(spark, tbl):
     from milan_spark.operators.versioned import maybe_compact, table_stats
 
@@ -665,7 +660,6 @@ def test_targeted_update_rewrites_only_matching_files(spark, tbl):
     assert cv(tbl) == v
 
 
-@pytest.mark.slow
 def test_clone_table_zero_copy_independent_evolution(spark, tbl, tmp_path):
     from milan_spark.operators.versioned import (
         clone_table,
@@ -749,7 +743,6 @@ def test_rollback_restores_snapshot_metadata_only(spark, tbl):
         rollback(tbl, 7)
 
 
-@pytest.mark.slow
 def test_count_where_metadata_pushdown(spark, tbl):
     from milan_spark.operators.versioned import count_where
 
